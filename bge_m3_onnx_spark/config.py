@@ -54,7 +54,9 @@ class EngineConfig:
 
     # --- query ---
     default_k: int = 10
-    # Blocks per term scanned in the WAND phase-1 threshold estimation pass.
+    # Blocks per term decoded by the WAND phase-1 seed θ (floor; scaled to
+    # max(·, k) per query). Used only on merged, uncompacted indexes: fresh and
+    # compacted ones take θ from block maxima without decoding (plans/wand.py).
     wand_seed_blocks: int = 2
     # Route to the exact path when the query terms' total posting count (Σ df,
     # known on the driver after the first metadata lookup) is below this: WAND's

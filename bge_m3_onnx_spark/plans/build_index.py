@@ -221,6 +221,9 @@ def write_stats(index_dir: str, idx: InvertedIndex) -> None:
                 "k1": idx.cfg.k1,
                 "b": idx.cfg.b,
                 "block_size": idx.cfg.block_size,
+                # block maxima are ε-inflated bounds while > 0: the WAND
+                # metadata-only θ must not trust them (plans/wand.py)
+                "merges_since_compaction": idx.merges_since_compaction,
             },
             f,
             indent=2,
@@ -266,6 +269,7 @@ def load_index(
         avgdl=float(stats["avgdl"]),
         cfg=cfg,
         blocks=blocks,
+        merges_since_compaction=int(stats.get("merges_since_compaction", 0)),
     )
 
 
@@ -306,7 +310,8 @@ def write_index_iceberg(
         f"ALTER TABLE {table_prefix}_postings SET TBLPROPERTIES ("
         f"'engine.n_docs'='{idx.n_docs}', 'engine.avgdl'='{idx.avgdl}', "
         f"'engine.k1'='{idx.cfg.k1}', 'engine.b'='{idx.cfg.b}', "
-        f"'engine.block_size'='{idx.cfg.block_size}')"
+        f"'engine.block_size'='{idx.cfg.block_size}', "
+        f"'engine.merges_since_compaction'='{idx.merges_since_compaction}')"
     )
 
 
@@ -355,6 +360,7 @@ def write_index_bucketed(
         f"'engine.n_docs'='{idx.n_docs}', 'engine.avgdl'='{idx.avgdl}', "
         f"'engine.k1'='{idx.cfg.k1}', 'engine.b'='{idx.cfg.b}', "
         f"'engine.block_size'='{idx.cfg.block_size}', "
+        f"'engine.merges_since_compaction'='{idx.merges_since_compaction}', "
         f"'engine.has_blocks'='{idx.blocks is not None}')"
     )
 
@@ -408,6 +414,7 @@ def load_index_bucketed(
         avgdl=float(props["engine.avgdl"]),
         cfg=cfg,
         blocks=blocks,
+        merges_since_compaction=int(props.get("engine.merges_since_compaction", 0)),
     )
 
 

@@ -5,15 +5,26 @@ set-oriented formulation. Three phases, with a provably safe pruning rule
 (rank-identity preserved — tests assert equality with the exact path on every
 fixture):
 
-  Phase 1 (θ estimation): decode only the top ``wand_seed_blocks`` blocks per query
-    term (by block_max_score), score those postings, take each query's top-k docs
-    by PARTIAL score, then exact-rescore just those ≤ k·|q| docs (their covering
-    blocks are a pure function of the stored block ranges — same trick as phase 3)
-    and set θ to the k-th best EXACT score. Safety: the k-th best exact score of
-    any k-doc subset is ≤ the true k-th best overall, so θ ≤ true k-th → lossless;
-    and exact ≥ partial, so this θ dominates the r1 partial-score θ (which was so
-    weak on multi-term queries — θ ≈ best single-term score ≈ Σmax of the other
-    term — that the phase-2 bound pruned nothing).
+  Phase 1 (θ estimation): two sources, both lossless (θ ≤ the true k-th best).
+    * Block maxima (``theta_source == "block_max"``) on every index whose blocks
+      were cut under the current corpus stats (``merges_since_compaction == 0``:
+      fresh or compacted). Metadata only, no decode: θ = max over the query's
+      terms t of the k-th largest block_max_score of t, minus a 1e-6 pad. Each
+      block max is the exact score of one real posting, a term's blocks hold
+      disjoint docs, and every BM25 term contribution is ≥ 0 — so k distinct
+      docs score at least that much. A term with < k blocks contributes
+      nothing; a query where no term has k blocks gets θ = −inf (no pruning).
+      This is the "safe cutoff from summary statistics before touching the
+      payload" idea of External Merge Sort for Top-K Queries (SIGMOD 2020),
+      with the block-max list as the histogram.
+    * Seed blocks (``theta_source == "seed"``) on merged, uncompacted indexes,
+      whose ε-inflated maxima are upper bounds no posting actually scores:
+      decode the top ``max(wand_seed_blocks, k)`` blocks per query term (by
+      block_max_score), take each query's top-k docs by PARTIAL score, exact-
+      rescore those ≤ k·|q| docs (their covering blocks are a pure function of
+      the stored block ranges — same trick as phase 3) and set θ to the k-th
+      best EXACT score. The k-th best exact score of any k-doc subset is ≤ the
+      true k-th best overall.
 
   Phase 2 (block pruning): ordinal-aligned segment bound. Each term's blocks tile
     the doc-ordinal axis (block_id = ord // range_t), so the metadata upper bound
@@ -58,8 +69,9 @@ current corpus stats), so blocks written under an older (N, df) — kept across 
 incremental merge — still map candidate ordinals to the right block_id.
 
 At 10^12 scale: the blocks scan is term-pruned by the bucketed layout (pushed
-isin), phase 1 touches O(|q|·seed_blocks·block_size) postings, phase 3 only
-surviving + candidate-covering blocks.
+isin), phase 1 decodes nothing on fresh indexes and O(|q|·seed_blocks·
+block_size) postings on merged ones, phase 3 only surviving + candidate-covering
+blocks.
 """
 
 from __future__ import annotations
@@ -89,6 +101,47 @@ _BLOCK_COLS = ["term", "block_id", "n", "first_ord", "ords_vb", "tfs_vb", "dls_v
 # decode-volume-aware width note in _run_queries_wand_forced). Module-level so
 # experiments/tests can pin it.
 _DECODE_ROWS_PER_TASK = 100_000
+# Estimated metadata rows (Σ_t blocks of t) up to which phase 2 runs on the
+# driver and the seed pre-rank skips its salted pass. Module-level so tests can
+# pin it to 0 and force the distributed branches on a fresh index.
+_PHASE2_DRIVER_CAP = 200_000
+
+
+def _block_max_theta(
+    blk_lists: dict[str, list[tuple[int, float]]],
+    terms_by_qid: dict[int, list[str]],
+    k: int,
+) -> dict[int, float]:
+    """Metadata-only θ per query (module docstring, phase 1): the max over the
+    query's terms of the term's k-th largest block max, minus a 1e-6 pad (the
+    block maxima were computed by the build's NumPy kernel and can sit an ulp
+    above the query plan's score of the same posting). Only valid when every
+    block max is the exact score of a real posting (merges_since_compaction ==
+    0). ``blk_lists`` may hold just each term's top-k blocks. Queries where no
+    term has k blocks get −inf: no pruning, still exact."""
+    import heapq
+
+    kth = {
+        t: heapq.nlargest(k, (m for _, m in pairs))[-1]
+        for t, pairs in blk_lists.items()
+        if len(pairs) >= k
+    }
+    theta = {}
+    for qid, qterms in terms_by_qid.items():
+        vals = [kth[t] for t in qterms if t in kth]
+        theta[qid] = max(vals) - 1e-6 if vals else float("-inf")
+    return theta
+
+
+def _fmt_plan(df: DataFrame) -> str:
+    """Formatted physical plan of ``df`` (the ``capture_plans`` audit hook)."""
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def _phase2_driver(
@@ -160,9 +213,19 @@ def run_queries_wand(
     stats_out: dict | None = None,
 ) -> DataFrame:
     """``stats_out`` (diagnostic): when a dict is passed, it is filled with
-    {routed, blocks_total, blocks_surviving, blocks_rescored} — deterministic,
-    machine-independent evidence of how much the bound pruning skips (the extra
-    count jobs only run when requested)."""
+    ``routed`` and ``router_choice`` ("exact" or "wand") and, on the WAND path,
+    with deterministic, machine-independent evidence of what the pruning did
+    (the extra count jobs only run when requested):
+
+    - ``theta_source``: "block_max" (metadata-only θ) or "seed" (seed-block
+      decode; merged, uncompacted indexes only);
+    - ``theta``: {query_id: θ}; ``essential_terms``: {query_id: [terms]};
+    - ``blocks_total``, ``blocks_surviving``, ``blocks_extra_decoded``;
+    - ``n_candidates``, ``n_strong``;
+    - ``t_theta_sec`` (the θ collect) and ``t_final_sec`` (everything after).
+
+    With ``stats_out["capture_plans"]`` set it also records the formatted
+    plans ``plan_theta``, ``plan_surviving`` and ``plan_final``."""
     assert idx.blocks is not None, "index has no compressed blocks; build with with_blocks=True"
     cfg = cfg or idx.cfg
     k = k or cfg.default_k
@@ -353,135 +416,11 @@ def _run_queries_wand_forced(
         # materialized in the bucketed layout (partition pruning at the scan).
         qblocks = idx.pruned_blocks(qterms_list).coalesce(_width).persist()
         _persisted.append(qblocks)
-        # Slim metadata twin of qblocks (no varbyte buffer columns): the phase-1/2
-        # machinery makes ~a dozen metadata passes (windows, bounds, surviving
-        # keys, broadcast subtrees), and each pass over the buffer-carrying cache
-        # paid for deserializing MBs of block payloads to read 4 scalar columns —
-        # the event-log profile showed ~25 broadcast subjobs at 0.3-1.2 s each
-        # doing exactly that. Decode steps still read qblocks (they need buffers).
-        qmeta = (
-            idx.pruned_blocks(qterms_list)
-            .select("term", "block_id", "block_range", "block_max_score")
-            .coalesce(_width)
-            .persist()
-        )
-        _persisted.append(qmeta)
-
-        # Seeds must plausibly contain k strong docs per query or θ collapses to a
-        # mid-pack score: the top-k docs concentrate in the top block-max blocks, so
-        # decode at least k seed blocks per term (≥1 doc each, typically ~block_size).
-        n_seed = max(cfg.wand_seed_blocks, k)
-        # ---- phase 1 (fused into ONE driver round-trip — r2 measured ~9 s of fixed
-        # machinery cost, much of it driver job latency): seed selection stays
-        # DISTRIBUTED (no metadata collect); the only collect is the θ job below,
-        # which carries the per-term metadata (global max, block_range) along as
-        # tagged rows in the same result.
-        # rk=1 row doubles as the per-term global max AND carries the stored
-        # block_range (constant within a term) — one pass gives seeds, tmax, ranges.
-        # Two-phase (salted) top-S: a 10^12-scale stopword term has millions of
-        # block-metadata rows, and a plain partitionBy(term) window would funnel
-        # them through ONE task. Phase A takes top-S per (term, salt) — 32-way
-        # parallel per term; phase B re-ranks the ≤ 32·S survivors per term.
-        # The phase-A pass is SKIPPED when the driver's block estimate (the
-        # same order-of-magnitude bound the phase-2 gate uses — see below) says
-        # the whole metadata relation is small: w_seed alone computes the
-        # identical top-S then, and the salted pre-rank is one whole
-        # shuffle+sort of pure overhead per query (r6; same-result proof:
-        # phase A only pre-filters rows that cannot be in phase B's top-S).
-        _PHASE2_DRIVER_CAP = 200_000
-        _est_blocks = sum(
-            min(d, -(-n // max(cfg.block_range_for_term(d, n), 1)))
-            for d in _df_by_term.values()
-        )
-        w_seed = Window.partitionBy("term").orderBy(F.desc("block_max_score"), F.asc("block_id"))
-        seed_src = qmeta
-        # same trust condition as the phase-2 gate: merged uncompacted indexes
-        # can hold blocks cut at a smaller stored range than the estimate
-        # assumes, so the estimate can undercount — keep the salted pre-rank
-        # whenever the estimate is untrustworthy (review finding, r6)
-        if _est_blocks > _PHASE2_DRIVER_CAP or idx.merges_since_compaction > 0:
-            w_pre = Window.partitionBy("term", "__salt").orderBy(
-                F.desc("block_max_score"), F.asc("block_id")
-            )
-            seed_src = (
-                seed_src.withColumn("__salt", F.pmod(F.xxhash64("block_id"), F.lit(32)))
-                .withColumn("rk1", F.row_number().over(w_pre))
-                .filter(F.col("rk1") <= n_seed)
-                .drop("__salt", "rk1")
-            )
-        seed_sel = (
-            seed_src
-            .withColumn("rk", F.row_number().over(w_seed))
-            .filter(F.col("rk") <= n_seed)
-            .select("term", "block_id", "block_range", "block_max_score", "rk")
-            .persist()
-        )
-        _persisted.append(seed_sel)
-        ranges_sel = seed_sel.filter(F.col("rk") == 1).select(
-            "term",
-            F.col("block_range").cast("long").alias("rng"),
-            F.col("block_max_score").alias("tmax"),
-        )
-
-        # ---- θ from seed candidates, EXACT-rescored ----
-        # Partial seed sums pick the candidates; their covering blocks (pure function
-        # of the stored ranges, ≤ k·|q|·|terms| blocks) are decoded and the candidates
-        # scored exactly. θ = k-th best exact score — a lower bound of the true k-th
-        # (k-doc-subset argument) that is dramatically tighter than the r1 partial θ.
-        seed_blocks = qblocks.join(
-            F.broadcast(seed_sel.select("term", "block_id")), ["term", "block_id"], "left_semi"
-        ).select(*_BLOCK_COLS)
-        seed_scores = _score_decoded_lit(decode_blocks(seed_blocks), all_qids_map)
-        w_theta = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_ord"))
-        seed_top = (
-            seed_scores.withColumn("rk", F.row_number().over(w_theta))
-            .filter(F.col("rk") <= k)
-            .select("query_id", "doc_ord")
-        )
-        seed_needed = (
-            # query→terms via literal explode; only the per-term rng (still
-            # distributed pre-collect) needs a real broadcast join here
-            seed_top.select(
-                "doc_ord", F.explode(F.element_at(q2terms_lit, F.col("query_id"))).alias("term")
-            )
-            .join(F.broadcast(ranges_sel.select("term", "rng")), "term")
-            .select(
-                "term",
-                F.floor(F.col("doc_ord") / F.col("rng")).cast("long").alias("block_id"),
-            )
-            .dropDuplicates(["term", "block_id"])
-        )
-        seed_cover = qblocks.join(seed_needed, ["term", "block_id"], "left_semi")
-        seed_exact = _score_decoded_lit(decode_blocks(seed_cover.select(*_BLOCK_COLS)), all_qids_map).join(
-            seed_top, ["query_id", "doc_ord"], "left_semi"
-        )
-        # ONE collect for θ AND the per-term metadata (tagged union) — the scalars
-        # phases 2-3 need on the driver to build literal map expressions.
-        theta_rows = (
-            seed_exact.withColumn("rk", F.row_number().over(w_theta))
-            .filter(F.col("rk") == k)
-            .select(
-                F.lit("theta").alias("tag"),
-                F.col("query_id").cast("long").alias("qid"),
-                F.lit(None).cast("string").alias("term"),
-                F.col("score").alias("v1"),
-                F.lit(None).cast("long").alias("v2"),
-            )
-        )
-        meta_rows = ranges_sel.select(
-            F.lit("meta").alias("tag"),
-            F.lit(None).cast("long").alias("qid"),
-            "term",
-            F.col("tmax").alias("v1"),
-            F.col("rng").alias("v2"),
-        )
         # ---- driver-side phase 2 gate (r4) ----
         # Phase 2 is pure metadata math over Σ_t n_blocks(t) rows — bounded and
-        # driver-estimable BEFORE the collect (df is known; block_range_for_term
-        # is the deterministic cut rule; merges can keep older/smaller stored
-        # ranges, so this is an order-of-magnitude gate, not an exact count).
-        # When it fits, the per-block metadata rides the SAME tagged-union
-        # collect as θ and phase 2 runs in NumPy on the driver: the r4 profile
+        # driver-estimable BEFORE any job (df is known; block_range_for_term is
+        # the deterministic cut rule). When it fits, the per-block metadata IS
+        # the θ collect and phase 2 runs in NumPy on the driver: the r4 profile
         # showed the distributed phase-2/3 tree cost ~2.9 s of pure Catalyst
         # planning plus ~10 broadcast-exchange subjobs per batch — none of
         # which touches data that isn't already driver-sized.
@@ -491,42 +430,170 @@ def _run_queries_wand_forced(
         # ~range postings per block and underestimates by ~n/d for mid-frequency
         # terms whose postings are spread one-per-block — at df=10^9 over n=10^12
         # that reads ~8k where the actual count is ~8M, letting the cap pass and
-        # the tagged-union collect pull millions of rows to the driver. Merges can
-        # keep older (smaller-range) stored blocks, so this stays an
-        # order-of-magnitude gate with known slack in that direction.
-        # (_est_blocks itself is computed once, above the seed selection, which
-        # reuses it to skip the salted pre-rank on small metadata.)
+        # the collect pull millions of rows to the driver.
         # Merged indexes can retain blocks cut at a SMALLER stored range than
-        # the current cfg predicts, so the tiling bound above can undercount
-        # non-empty blocks and let the cap admit oversized collects (ADVICE
-        # r5). The distributed phase 2 is lossless and unconditionally safe —
-        # take it whenever uncompacted merges make the estimate untrustworthy.
-        _driver_phase2 = (
-            _est_blocks <= _PHASE2_DRIVER_CAP and idx.merges_since_compaction == 0
+        # the current cfg predicts, so the tiling bound can undercount non-empty
+        # blocks and let the cap admit oversized collects (ADVICE r5). The
+        # distributed phase 2 is lossless and unconditionally safe — take it
+        # whenever uncompacted merges make the estimate untrustworthy.
+        _est_blocks = sum(
+            min(d, -(-n // max(cfg.block_range_for_term(d, n), 1)))
+            for d in _df_by_term.values()
         )
-        union_rows = theta_rows.unionByName(meta_rows)
-        if _driver_phase2:
-            block_rows = qmeta.select(
-                F.lit("block").alias("tag"),
+        _fresh = idx.merges_since_compaction == 0
+        _driver_phase2 = _fresh and _est_blocks <= _PHASE2_DRIVER_CAP
+        if stats_out is not None:
+            stats_out["theta_source"] = "block_max" if _fresh else "seed"
+
+        # Slim metadata twin of qblocks (no varbyte buffer columns): the phase-1/2
+        # machinery makes ~a dozen metadata passes (windows, bounds, surviving
+        # keys, broadcast subtrees), and each pass over the buffer-carrying cache
+        # paid for deserializing MBs of block payloads to read 4 scalar columns —
+        # the event-log profile showed ~25 broadcast subjobs at 0.3-1.2 s each
+        # doing exactly that. Decode steps still read qblocks (they need buffers).
+        # Driver phase 2 reads it exactly once (the θ collect): no cache then.
+        qmeta = (
+            idx.pruned_blocks(qterms_list)
+            .select("term", "block_id", "block_range", "block_max_score")
+            .coalesce(_width)
+        )
+        if not _driver_phase2:
+            qmeta = qmeta.persist()
+            _persisted.append(qmeta)
+
+        def _top_blocks(n_top: int) -> DataFrame:
+            """Each term's top-``n_top`` blocks by block max, ranked ``rk``.
+            Two-phase (salted) top-S: a 10^12-scale stopword term has millions
+            of block-metadata rows, and a plain partitionBy(term) window would
+            funnel them through ONE task. Phase A takes top-S per (term, salt)
+            — 32-way parallel per term; phase B re-ranks the ≤ 32·S survivors
+            per term. Phase A is SKIPPED when the driver's block estimate says
+            the whole metadata relation is small: w_top alone computes the
+            identical top-S then, and the salted pre-rank is one whole
+            shuffle+sort of pure overhead per query (r6; phase A only
+            pre-filters rows that cannot be in phase B's top-S). The estimate
+            is untrustworthy on merged indexes (see the gate above), so they
+            keep phase A."""
+            w_top = Window.partitionBy("term").orderBy(
+                F.desc("block_max_score"), F.asc("block_id")
+            )
+            src = qmeta
+            if _est_blocks > _PHASE2_DRIVER_CAP or not _fresh:
+                w_pre = Window.partitionBy("term", "__salt").orderBy(
+                    F.desc("block_max_score"), F.asc("block_id")
+                )
+                src = (
+                    src.withColumn("__salt", F.pmod(F.xxhash64("block_id"), F.lit(32)))
+                    .withColumn("rk1", F.row_number().over(w_pre))
+                    .filter(F.col("rk1") <= n_top)
+                    .drop("__salt", "rk1")
+                )
+            return (
+                src.withColumn("rk", F.row_number().over(w_top))
+                .filter(F.col("rk") <= n_top)
+                .select("term", "block_id", "block_range", "block_max_score", "rk")
+            )
+
+        # ---- phase 1: θ, the per-term maxima and the stored ranges in ONE
+        # driver round-trip (r2 measured ~9 s of fixed machinery cost, much of
+        # it driver job latency) ----
+        _blk_lists: dict[str, list[tuple[int, float]]] = {}
+        if _fresh:
+            # Metadata-only θ (module docstring): driver phase 2 collects every
+            # query-term block row anyway; the distributed branch collects only
+            # each term's top-k. θ, tmax and ranges come from the same rows —
+            # no decode, no rescore.
+            theta_df = (qmeta if _driver_phase2 else _top_blocks(k)).select(
+                "term", "block_id", "block_range", "block_max_score"
+            )
+        else:
+            # ---- θ from seed candidates, EXACT-rescored (merged indexes) ----
+            # Seeds must plausibly contain k strong docs per query or θ
+            # collapses to a mid-pack score: the top-k docs concentrate in the
+            # top block-max blocks, so decode at least k seed blocks per term
+            # (≥1 doc each, typically ~block_size). Partial seed sums pick the
+            # candidates; their covering blocks (pure function of the stored
+            # ranges, ≤ k·|q|·|terms| blocks) are decoded and the candidates
+            # scored exactly. θ = k-th best exact score — a lower bound of the
+            # true k-th (k-doc-subset argument).
+            seed_sel = _top_blocks(max(cfg.wand_seed_blocks, k)).persist()
+            _persisted.append(seed_sel)
+            # rk=1 row doubles as the per-term global max AND carries the
+            # stored block_range (constant within a term)
+            ranges_sel = seed_sel.filter(F.col("rk") == 1).select(
+                "term",
+                F.col("block_range").cast("long").alias("rng"),
+                F.col("block_max_score").alias("tmax"),
+            )
+            seed_blocks = qblocks.join(
+                F.broadcast(seed_sel.select("term", "block_id")), ["term", "block_id"], "left_semi"
+            ).select(*_BLOCK_COLS)
+            seed_scores = _score_decoded_lit(decode_blocks(seed_blocks), all_qids_map)
+            w_theta = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_ord"))
+            seed_top = (
+                seed_scores.withColumn("rk", F.row_number().over(w_theta))
+                .filter(F.col("rk") <= k)
+                .select("query_id", "doc_ord")
+            )
+            seed_needed = (
+                # query→terms via literal explode; only the per-term rng (still
+                # distributed pre-collect) needs a real broadcast join here
+                seed_top.select(
+                    "doc_ord", F.explode(F.element_at(q2terms_lit, F.col("query_id"))).alias("term")
+                )
+                .join(F.broadcast(ranges_sel.select("term", "rng")), "term")
+                .select(
+                    "term",
+                    F.floor(F.col("doc_ord") / F.col("rng")).cast("long").alias("block_id"),
+                )
+                .dropDuplicates(["term", "block_id"])
+            )
+            seed_cover = qblocks.join(seed_needed, ["term", "block_id"], "left_semi")
+            seed_exact = _score_decoded_lit(
+                decode_blocks(seed_cover.select(*_BLOCK_COLS)), all_qids_map
+            ).join(seed_top, ["query_id", "doc_ord"], "left_semi")
+            # ONE collect for θ AND the per-term metadata (tagged union) — the
+            # scalars phases 2-3 need on the driver to build literal maps.
+            theta_rows = (
+                seed_exact.withColumn("rk", F.row_number().over(w_theta))
+                .filter(F.col("rk") == k)
+                .select(
+                    F.lit("theta").alias("tag"),
+                    F.col("query_id").cast("long").alias("qid"),
+                    F.lit(None).cast("string").alias("term"),
+                    F.col("score").alias("v1"),
+                    F.lit(None).cast("long").alias("v2"),
+                )
+            )
+            meta_rows = ranges_sel.select(
+                F.lit("meta").alias("tag"),
                 F.lit(None).cast("long").alias("qid"),
                 "term",
-                F.col("block_max_score").alias("v1"),
-                F.col("block_id").cast("long").alias("v2"),
+                F.col("tmax").alias("v1"),
+                F.col("rng").alias("v2"),
             )
-            union_rows = union_rows.unionByName(block_rows)
+            theta_df = theta_rows.unionByName(meta_rows)
+        if stats_out is not None and stats_out.get("capture_plans"):
+            stats_out["plan_theta"] = _fmt_plan(theta_df)
         _t0_theta = time.monotonic()
-        collected = union_rows.collect()
+        collected = theta_df.collect()
         _t_theta = time.monotonic() - _t0_theta
         _t0_final = time.monotonic()
-        seed_sel.unpersist()
-        theta = {int(r["qid"]): r["v1"] for r in collected if r["tag"] == "theta"}
-        tmax = {r["term"]: r["v1"] for r in collected if r["tag"] == "meta"}
-        range_by_term = {r["term"]: int(r["v2"]) for r in collected if r["tag"] == "meta"}
-        _blk_lists: dict[str, list[tuple[int, float]]] = {}
-        if _driver_phase2:
-            for r in collected:
-                if r["tag"] == "block":
-                    _blk_lists.setdefault(r["term"], []).append((int(r["v2"]), float(r["v1"])))
+        if _fresh:
+            by_term: dict[str, list[tuple[int, float]]] = {}
+            range_by_term: dict[str, int] = {}
+            for t, bid, rng, bmax in collected:
+                by_term.setdefault(t, []).append((int(bid), float(bmax)))
+                range_by_term[t] = int(rng)
+            tmax = {t: max(m for _, m in pairs) for t, pairs in by_term.items()}
+            theta = _block_max_theta(by_term, _terms_by_qid, k)
+            if _driver_phase2:
+                _blk_lists = by_term
+        else:
+            seed_sel.unpersist()
+            theta = {int(r["qid"]): r["v1"] for r in collected if r["tag"] == "theta"}
+            tmax = {r["term"]: r["v1"] for r in collected if r["tag"] == "meta"}
+            range_by_term = {r["term"]: int(r["v2"]) for r in collected if r["tag"] == "meta"}
 
         # ---- phase 2: ordinal-aligned segment pruning (exact, lossless) ----
         # Every term's blocks TILE the doc-ordinal axis (block_id = ord // range), so
@@ -563,6 +630,12 @@ def _run_queries_wand_forced(
             block_meta = qmeta.select(
                 "term", "block_id", (F.col("block_id") * F.col("block_range")).alias("x"), "block_max_score"
             )
+            # Same 1e-6 pad as the driver branch: block maxima come from the
+            # build's NumPy kernel and the seed θ from the query plan's score
+            # expression, so a top-k doc's own block max can sit an ulp BELOW
+            # θ (measured on a merged skewed index: the 10th doc of "the" was
+            # pruned). The pad only admits blocks — lossless.
+            theta_padded = F.element_at(theta_map, F.col("query_id")) - F.lit(1e-6)
             # distinct segment boundaries per query (starts of any query term's blocks),
             # PRE-FILTERED by the classic bound before the ×|q| fan-out (r2 advisor: a
             # stopword term contributes millions of boundaries, and expanding every one
@@ -597,7 +670,7 @@ def _run_queries_wand_forced(
                         - F.element_at(tmax_map, F.col("term"))
                     ).alias("classic_bound")
                 )
-                .filter(F.col("classic_bound") >= F.element_at(theta_map, F.col("query_id")))
+                .filter(F.col("classic_bound") >= theta_padded)
                 .select("query_id", "x")
             )
             # active block of EVERY query term at each boundary; inner join drops terms
@@ -619,7 +692,7 @@ def _run_queries_wand_forced(
             surviving_x = (
                 active.groupBy("query_id", "x")
                 .agg(F.sum("block_max_score").alias("s"))
-                .filter(F.col("s") >= F.element_at(theta_map, F.col("query_id")))
+                .filter(F.col("s") >= theta_padded)
             )
         # ---- MaxScore essential-term partition (driver-side, from θ + tmax) ----
         # Sort each query's terms by global max ascending; the maximal prefix whose
@@ -938,15 +1011,6 @@ def _run_queries_wand_forced(
             # plan-audit hook (tools/explain_audit.py): the returned frame is
             # localCheckpointed below, so its own explain() is opaque — capture
             # the pre-checkpoint formatted plans on request only.
-            import io
-            from contextlib import redirect_stdout
-
-            def _fmt_plan(df_: DataFrame) -> str:
-                buf = io.StringIO()
-                with redirect_stdout(buf):
-                    df_.explain("formatted")
-                return buf.getvalue()
-
             stats_out["plan_surviving"] = _fmt_plan(surviving)
             stats_out["plan_final"] = _fmt_plan(final_df)
         # Materialize the k·|q|-row result NOW (localCheckpoint is eager): the final

@@ -337,3 +337,32 @@ def test_bucketed_load_restores_built_cfg(spark):
     finally:
         for t in ("postings", "terms", "docs", "blocks"):
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+
+
+def test_bucketed_roundtrip_keeps_merge_clock(spark):
+    """A merged index's block maxima are ε-inflated bounds, and WAND takes θ
+    from block maxima only when merges_since_compaction == 0 — so a write and
+    load must not reset the clock."""
+    import dataclasses
+
+    from bge_m3_onnx_spark.plans.build_index import (
+        load_index_bucketed,
+        write_index_bucketed,
+    )
+
+    idx = dataclasses.replace(
+        build_index(
+            synth_transcripts(spark, n_convs=10, turns_per_conv=5),
+            with_ordinals=True,
+            with_blocks=True,
+            cache=False,
+        ),
+        merges_since_compaction=3,
+    )
+    prefix = "bkt_clock"
+    try:
+        write_index_bucketed(idx, prefix, n_buckets=4)
+        assert load_index_bucketed(spark, prefix).merges_since_compaction == 3
+    finally:
+        for t in ("postings", "terms", "docs", "blocks"):
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")

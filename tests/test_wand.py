@@ -15,6 +15,17 @@ def built(spark, tiny_transcripts):
     return build_index(tiny_transcripts, with_blocks=True)
 
 
+@pytest.fixture(scope="module")
+def skewed(spark):
+    """Fresh index over a corpus with realistic score variance (spiky tf,
+    varied dl) — the flat fixture corpus cannot discriminate pruning."""
+    from bge_m3_onnx_spark.sources.transcripts import synth_transcripts_skewed
+
+    return build_index(
+        synth_transcripts_skewed(spark, n_convs=2000, turns_per_conv=10), with_blocks=True
+    )
+
+
 def _collect(df):
     out = {}
     for r in df.collect():
@@ -63,16 +74,12 @@ def test_wand_stats_report_pruning(spark, built, query_set):
     assert routed["routed"] is True
 
 
-def test_wand_actually_prunes_on_skewed_corpus(spark):
+def test_wand_actually_prunes_on_skewed_corpus(spark, skewed):
     """On a corpus with realistic score variance (spiky tf, varied dl) the
     segment bound must skip most blocks for a hot single-term query — AND stay
     lossless. The flat fixture corpus can't discriminate (every block max == θ),
     which is exactly why this fixture exists."""
-    from bge_m3_onnx_spark.sources.transcripts import synth_transcripts_skewed
-
-    idx = build_index(
-        synth_transcripts_skewed(spark, n_convs=2000, turns_per_conv=10), with_blocks=True
-    )
+    idx = skewed
     stats: dict = {}
     wand = _collect(
         run_queries_wand(spark, idx, {1: "the"}, k=10, force_wand=True, stats_out=stats)
@@ -175,3 +182,94 @@ def test_wand_one_doc_attains_every_term_max(spark):
     wand = _collect(run_queries_wand(spark, idx, q, k=1, force_wand=True))
     assert wand == exact
     assert wand[1][0][1] == "conv-a:0"
+
+
+def _runs(plan: str, node: str) -> bool:
+    """True iff the formatted plan runs a ``node`` operator of its own. Nodes
+    listed below an ``InMemoryRelation`` are the lineage of a cached relation
+    (e.g. the index build's encode kernel and ordinal window) and are skipped.
+    ``MapInArrow`` is the block decode kernel."""
+    tree = plan.split("\n\n")[0].splitlines()[1:]
+    cached_col = None
+    for line in tree:
+        col = len(line) - len(line.lstrip(" :+-*"))
+        if cached_col is not None and col > cached_col:
+            continue
+        cached_col = col if "InMemoryRelation" in line else None
+        if node in line:
+            return True
+    return False
+
+
+@pytest.mark.parametrize(
+    "text,k",
+    [
+        ("the", 10),
+        ("iceberg3", 1),
+        ("iceberg3 the", 10),
+        ("the of the zzz-not-in-corpus", 10),
+        ("iceberg3 colbert7", 50),
+    ],
+    ids=["hot_k10", "tail_k1", "rare_hot_k10", "repeated_absent_k10", "k_above_blocks"],
+)
+def test_block_max_theta_is_lossless(spark, skewed, text, k):
+    """Fresh index: θ comes from block metadata alone (no decode before the θ
+    collect), never exceeds the true k-th score, and forced WAND stays
+    bit-identical to the exact plan."""
+    q = {1: text}
+    stats: dict = {"capture_plans": True}
+    wand = _collect(run_queries_wand(spark, skewed, q, k=k, force_wand=True, stats_out=stats))
+    exact = _collect(run_queries(spark, skewed, q, k=k))
+    assert wand == exact  # (rank, doc_id, score) per query, floats unrounded
+    assert stats["theta_source"] == "block_max"
+    assert not _runs(stats["plan_theta"], "MapInArrow")
+    assert not _runs(stats["plan_theta"], "Window")  # driver phase 2: a plain scan
+    kth = [score for rank, _, score in exact.get(1, []) if rank == k]
+    theta = stats["theta"][1]
+    if kth:
+        assert theta <= kth[0]
+    else:  # fewer than k matches → no term can have k blocks
+        assert theta == float("-inf")
+    if text == "iceberg3 colbert7":
+        assert theta == float("-inf"), "expected every term to hold fewer than k blocks"
+
+
+def test_merged_index_keeps_seed_theta(spark, skewed):
+    """ε-inflated maxima of a merged, uncompacted index are upper bounds no
+    posting scores, so θ must come from the seed decode there; compaction
+    re-cuts the blocks and restores the metadata-only θ. Both stay exact."""
+    from bge_m3_onnx_spark.sources.transcripts import synth_transcripts_skewed
+    from bge_m3_onnx_spark.streaming.incremental import compact_index, merge_delta
+
+    delta = synth_transcripts_skewed(spark, n_convs=2100, turns_per_conv=10).filter(
+        "conv_id >= 'conv-002000'"
+    )
+    merged = merge_delta(spark, skewed, delta)
+    assert merged.merges_since_compaction == 1
+    q = {1: "the", 2: "iceberg3 the"}
+    try:
+        for idx, source in ((merged, "seed"), (compact_index(merged), "block_max")):
+            stats: dict = {"capture_plans": True}
+            wand = _collect(run_queries_wand(spark, idx, q, k=10, force_wand=True, stats_out=stats))
+            assert stats["theta_source"] == source
+            if source == "seed":  # the no-decode assertions elsewhere can fail
+                assert _runs(stats["plan_theta"], "MapInArrow")
+            assert wand == _collect(run_queries(spark, idx, q, k=10))
+    finally:
+        merged.release()
+
+
+def test_distributed_phase2_with_block_max_theta(spark, skewed, monkeypatch):
+    """Pinning the driver cap to 0 sends a fresh index through the rare
+    branches: salted top-k pre-rank, metadata θ from each term's top-k
+    blocks, distributed phase 2 — still bit-identical to exact."""
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+
+    monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", 0)
+    q = {1: "the", 2: "iceberg3 the", 3: "iceberg3", 4: "the of"}
+    stats: dict = {"capture_plans": True}
+    wand = _collect(run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats))
+    assert stats["theta_source"] == "block_max"
+    assert not _runs(stats["plan_theta"], "MapInArrow")
+    assert _runs(stats["plan_theta"], "Window")  # per-term top-k, not a full collect
+    assert wand == _collect(run_queries(spark, skewed, q, k=10))

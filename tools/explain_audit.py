@@ -150,6 +150,20 @@ def main() -> None:
     ).collect()
     sections.append(
         (
+            f"WAND θ collect (theta_source = {st['theta_source']})",
+            st["plan_theta"],
+            [
+                "Fresh index (merges_since_compaction == 0): θ comes from block maxima "
+                "alone — NO MapInArrow (block decode) node, no rescore join, no window; "
+                "the plan is the metadata scan the driver-side phase 2 reads anyway",
+                "ReadSchema contains ONLY term/block_id/block_range/block_max_score",
+                "Merged, uncompacted indexes take the seed-decode θ instead "
+                "(theta_source = seed), whose plan does decode",
+            ],
+        )
+    )
+    sections.append(
+        (
             "WAND phase-2/3 surviving-block filter (literal IN over cached query-blocks)",
             st["plan_surviving"],
             [
