@@ -197,7 +197,7 @@ SQL_BM25 = _sql(
 def q_bm25_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AND-semantics BM25 top-10: a doc must contain EVERY query term (a query
     with an unindexed term matches nothing). Same one-job exact plan — the
-    all-terms filter rides the score aggregate (operators/bm25.py)."""
+    all-terms filter rides the score aggregate (plans/query.py)."""
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
     res = run_queries(spark, idx, ENTRY_QUERIES, k=10, conjunctive=True)
     return res.select(

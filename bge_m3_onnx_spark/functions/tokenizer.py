@@ -91,37 +91,6 @@ def tokenize_udf(max_tokens: int = 8192, special_terms: Iterable[str] = ()):  # 
     return _tok
 
 
-def token_count_udf(max_tokens: int = 8192, special_terms: Iterable[str] = ()):  # noqa: ANN201
-    """text → int32 token count == ``len(tokenize_text(text, ...))``.
-
-    The build's pass-1 statistics job (ordinal bucket counts, Σdl, avgdl —
-    plans/build_index.py) needs ONLY dl per doc, but it historically ran the
-    full :func:`term_counts_udf` kernel and shipped every (term, tf) struct
-    back through Arrow just to aggregate its length. This kernel counts regex
-    matches vectorized (``Series.str.count``) and returns 4 bytes per doc —
-    no Counter, no struct array, no JVM-side nested-array conversion. With a
-    non-empty special-terms set the clamp-then-filter order forces real
-    tokenization, so that path falls back to findall (tests assert both equal
-    the oracle tokenizer's length on every edge fixture)."""
-    specials = frozenset(special_terms)
-
-    @F.pandas_udf(IntegerType())
-    def _tok_n(s: pd.Series) -> pd.Series:
-        filled = s.fillna("")
-        norm = filled.str.normalize("NFKC").str.lower()
-        if specials:
-            toks = norm.str.findall(_TOKEN_RE)
-            if max_tokens is not None:
-                toks = toks.map(lambda xs: xs[:max_tokens] if len(xs) > max_tokens else xs)
-            return toks.map(lambda xs: sum(1 for t in xs if t not in specials)).astype("int32")
-        n = norm.str.count(TOKEN_PATTERN)
-        if max_tokens is not None:
-            n = n.clip(upper=max_tokens)
-        return n.astype("int32")
-
-    return _tok_n
-
-
 # ---------------------------------------------------------------------------
 # Arrow-native batch kernels (r6, guide §4.2): the pandas_udf kernels above pay
 # two per-row Python conversions per batch — input strings materialize as
@@ -221,6 +190,21 @@ def _split_ascii(rb, text_col: str = "text"):
     return txt, isa
 
 
+def _int32_offsets(offs):  # noqa: ANN001, ANN202
+    """int64 list offsets → the int32 array ``pa.ListArray`` takes, or a
+    ValueError naming the limit. The output schema is ``list<...>``, whose
+    offsets are int32, so one Arrow batch holds < 2**31 (term, tf) entries."""
+    import pyarrow as pa
+
+    if len(offs) and int(offs[-1]) >= 2**31:
+        raise ValueError(
+            f"tokenizer batch holds {int(offs[-1])} (term, tf) entries; the "
+            "per-batch bound is 2**31 - 1 (int32 list offsets). Lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch."
+        )
+    return pa.array(offs, type=pa.int64()).cast(pa.int32())
+
+
 def term_counts_arrow_kernel(max_tokens: int = 8192, special_terms: Iterable[str] = ()):  # noqa: ANN201
     """mapInArrow kernel: (doc_id, text) batches → (doc_id, term_tfs, dl)
     batches — the SPIMI in-mapper combine of :func:`term_counts_udf` with the
@@ -290,9 +274,7 @@ def term_counts_arrow_kernel(max_tokens: int = 8192, special_terms: Iterable[str
                 [terms, pa.array(tfs.astype(np.int32))],
                 fields=list(out_schema.field("term_tfs").type.value_type),
             )
-            lst = pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int64()).cast(pa.int32()), struct
-            )
+            lst = pa.ListArray.from_arrays(_int32_offsets(offs), struct)
             yield pa.record_batch(
                 [rb.column(rb.schema.get_field_index("doc_id")), lst, pa.array(dl)],
                 schema=out_schema,

@@ -88,54 +88,6 @@ def score_postings(
     return sum_scores_deterministic(per_term, ["query_id", "doc_id"])
 
 
-def score_postings_conjunctive(
-    postings: DataFrame,
-    query_terms: DataFrame,
-    n_terms_per_query: dict[int, int],
-    n_docs: int,
-    avgdl: float,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    agg_partitions: int | None = None,
-) -> DataFrame:
-    """AND-semantics BM25: only docs containing EVERY query term are candidates.
-
-    ``n_terms_per_query`` counts ALL distinct tokenized terms of each query —
-    including terms absent from the corpus, so a query with an unindexed term
-    matches nothing (classic conjunctive behavior). The matched-term count rides
-    the same partial+final hash aggregate as the score sum (postings are unique
-    per (term, doc), so count(*) == distinct matched terms): the AND filter adds
-    ZERO extra shuffles or joins over the disjunctive plan, and at 10^12 scale
-    it cuts the top-k window's input to the (much smaller) all-terms docs.
-    """
-    qt = query_terms.select(
-        "query_id", "term", idf_col(F.col("df").cast("double"), n_docs).alias("idf")
-    )
-    matched = postings.join(F.broadcast(qt), "term")
-    per_term = matched.select(
-        "query_id",
-        "doc_id",
-        "term",
-        bm25_term_score(F.col("tf"), F.col("dl"), F.col("idf"), avgdl, cfg).alias("s"),
-    )
-    need = F.create_map(
-        *[x for q, n in sorted(n_terms_per_query.items()) for x in (F.lit(int(q)), F.lit(int(n)))]
-    )
-    if agg_partitions is not None:
-        per_term = per_term.repartition(agg_partitions, "query_id", "doc_id")
-    # same deterministic term-sorted fold as score_postings (see
-    # sum_scores_deterministic); the matched-term count rides as size(cs)
-    return (
-        per_term.groupBy("query_id", "doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("term", "s"))).alias("cs"))
-        .filter(F.size("cs") == F.element_at(need, F.col("query_id")))
-        .select(
-            "query_id",
-            "doc_id",
-            F.aggregate("cs", F.lit(0.0), lambda a, x: a + x["s"]).alias("score"),
-        )
-    )
-
-
 def exclude_docs_with_terms(
     scored: DataFrame, postings: DataFrame, terms: list[str]
 ) -> DataFrame:

@@ -74,6 +74,11 @@ def assign_dense_ordinals_with_aggs(
     the tokenizer UDF out of both) and the per-bucket counts. Driver memory is
     bounded at ``max_boundary_sample`` keys.
 
+    ``num_partitions`` sets the ranking-window width (default: the cluster's
+    ``defaultParallelism``). The key is cut into 4× that many buckets, so the
+    bucket count is ``4 * num_partitions``; ordinal values do not depend on
+    either number.
+
     ``stats_df`` (optional): a CHEAPER relation with the SAME key multiset and
     any columns ``extra_aggs`` reference — the sample and the counts job run on
     it instead of ``df`` (guide §4.1: the counts job needs per-doc scalars, not
@@ -176,6 +181,9 @@ def assign_dense_ordinals(
     stats_df: DataFrame | None = None,
     key_df: DataFrame | None = None,
 ) -> DataFrame:
+    """:func:`assign_dense_ordinals_with_aggs` without the aggregates: ``df``
+    with ``out`` = dense 0-based ordinal of ``key``. ``num_partitions`` sets the
+    ranking-window width; the bucket count is 4× that."""
     out_df, _n, _aggs = assign_dense_ordinals_with_aggs(
         df, key, out, num_partitions, max_boundary_sample=max_boundary_sample,
         stats_df=stats_df, key_df=key_df,

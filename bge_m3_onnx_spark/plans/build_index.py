@@ -416,20 +416,3 @@ def load_index_bucketed(
         blocks=blocks,
         merges_since_compaction=int(props.get("engine.merges_since_compaction", 0)),
     )
-
-
-def write_postings_bucketed(
-    postings: DataFrame, path: str, n_buckets: int = 32
-) -> None:
-    """Term-partitioned layout: co-locates each term's postings so query-time term
-    lookups prune. bucket = pmod(xxhash64(term), B) as a partition column — the
-    Parquet analog of Iceberg ``bucket(B, term)``; readers filter on the same
-    expression (see plans/query.py) and Catalyst prunes directories."""
-    (
-        postings.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-        .repartition("bucket")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )

@@ -142,8 +142,7 @@ def run_queries(
         )
         # same deterministic term-sorted fold as the disjunctive path; the
         # matched-term count rides as size(cs) — the AND filter adds ZERO
-        # extra shuffles (operators/bm25.py score_postings_conjunctive kept
-        # the same shape).
+        # extra shuffles over the disjunctive plan.
         scored = (
             per_term.groupBy("query_id", "doc_id")
             .agg(F.array_sort(F.collect_list(F.struct("term", "s"))).alias("cs"))

@@ -47,6 +47,14 @@ fixture):
     window. For "rare_term the"-shaped queries this is the difference between
     decoding ~all of "the" and decoding a handful of its blocks: the rare
     term's wide ordinal tiles otherwise carry its high max into every segment.
+    After driver-side phase 2, 3a's completion is skipped
+    (``ess_completion == "skipped"``) when it is provably empty: either every
+    block of every essential term survived, or each query has one essential
+    term t. In the second case a candidate (q, d) came from t's block
+    d // range_t, which is the one block q's completion would ask for, and it
+    is already decoded. The candidates are then the decoded essential
+    postings themselves: phase 3a decodes once, with no candidate shuffle and
+    no covering-block joins.
 
 Driver/executor split: per-query scalars (term maxima, Σmax, θ, essential sets)
 are O(|q|·terms) rows — they are COLLECTED to the driver (ONE fused collect, r3)
@@ -203,6 +211,17 @@ def _phase2_driver(
     return {t: sorted(v) for t, v in keys.items()}
 
 
+def _ess_completion(ess_by_qid: dict[int, list[str]], full_survival: bool) -> str:
+    """Whether phase 3a's covering-block completion can be skipped after
+    driver phase 2 (module docstring, phase 3): "skipped" when every block of
+    every essential term survived, or when no query has more than one
+    essential term; "decoded" otherwise. Essential terms always have blocks
+    (the partition is drawn from the collected maxima)."""
+    if full_survival or all(len(ts) <= 1 for ts in ess_by_qid.values()):
+        return "skipped"
+    return "decoded"
+
+
 def run_queries_wand(
     spark: SparkSession,
     idx: InvertedIndex,
@@ -220,6 +239,9 @@ def run_queries_wand(
     - ``theta_source``: "block_max" (metadata-only θ) or "seed" (seed-block
       decode; merged, uncompacted indexes only);
     - ``theta``: {query_id: θ}; ``essential_terms``: {query_id: [terms]};
+    - ``ess_completion``: "skipped" when phase 3a's covering-block completion
+      was provably empty and not built (full survival, or one essential term
+      per query, after driver-side phase 2), else "decoded";
     - ``blocks_total``, ``blocks_surviving``, ``blocks_extra_decoded``;
     - ``n_candidates``, ``n_strong``;
     - ``t_theta_sec`` (the θ collect) and ``t_final_sec`` (everything after).
@@ -895,15 +917,27 @@ def _run_queries_wand_forced(
         # surviving remainder is decoded on top.
         decoded = decode_blocks(surviving.select(*_BLOCK_COLS)).persist()
         _persisted.append(decoded)
-        if _full_survival:
-            # Every block of every essential term survived, so (proof in-line):
-            # candidates = {(q, d): d in a surviving block of a term essential
-            # to q} = exactly the (q, d) pairs _score_decoded_lit's explode over
-            # ess_qids_map generates from decoded — the dropDuplicates shuffle,
-            # the doc_ord equi-join and the left-semi are identities; and the
-            # covering-block completion needed_ess ⊆ (all essential blocks) =
-            # surviving, so extra_ess = ∅ and full_ess = decoded (second persist
-            # skipped). s_ess is the plain scored aggregate of decoded.
+        ess_completion = (
+            _ess_completion(_ess_by_qid, _full_survival) if _blk_lists else "decoded"
+        )
+        if stats_out is not None:
+            stats_out["ess_completion"] = ess_completion
+        if ess_completion == "skipped":
+            # The covering-block completion is empty, so it is skipped (proof
+            # in-line). The candidate set {(q, d): d in a decoded block of a
+            # term essential to q} is exactly the (q, d) pairs that
+            # _score_decoded_lit's explode over ess_qids_map generates from
+            # decoded, so the dropDuplicates shuffle, the doc_ord equi-join and
+            # the left-semi are identities. needed_ess ⊆ surviving holds in
+            # either case the helper admits:
+            # * full survival: needed_ess ⊆ (all essential blocks) = surviving;
+            # * one essential term t per query: a candidate (q, d) came from
+            #   t's block d // range_t, and that same block is the only one
+            #   q's completion asks for. Per query, so for the batch too
+            #   (surv_by_term is a union over the batch).
+            # Hence extra_ess = ∅, full_ess = decoded (second persist skipped)
+            # and s_ess is the plain scored aggregate of decoded. Driver phase
+            # 2 only: there range_by_term is each term's one stored range.
             candidates = None
             extra_ess = None
             full_ess = decoded

@@ -103,25 +103,35 @@ def test_term_counts_udf_matches_counter(spark):
 def test_token_count_kernel_matches_full_tokenizer():
     """doc_len_docs' count-only kernel (r6 light statistics pass) must produce
     EXACTLY len(tokenize_text(...)) — dl feeds avgdl/ordinal counts, and any
-    drift vs the fat kernel would silently skew every BM25 score."""
-    from bge_m3_onnx_spark.functions.tokenizer import _TOKEN_RE, TOKEN_PATTERN
+    drift vs the fat kernel would silently skew every BM25 score. The kernel
+    runs here on a plain Arrow batch, no Spark."""
+    import pyarrow as pa
+
+    from bge_m3_onnx_spark.functions.tokenizer import token_count_arrow_kernel
 
     texts = EDGE_CASES + [" ".join(f"w{i}" for i in range(100))]
-    s = pd.Series(texts, dtype=object)
+    rb = pa.record_batch(
+        [pa.array([f"d{i}" for i in range(len(texts))]), pa.array(texts, type=pa.string())],
+        names=["doc_id", "text"],
+    )
     for max_tokens, specials in [(8192, frozenset()), (10, frozenset()),
                                  (8192, frozenset({"the", "12345"})),
                                  (3, frozenset({"w1"}))]:
         want = [len(tokenize_text(t, max_tokens, specials)) for t in texts]
-        # replicate the pandas kernel body (the UDF wrapper is Spark-side only)
-        filled = s.fillna("")
-        norm = filled.str.normalize("NFKC").str.lower()
-        if specials:
-            toks = norm.str.findall(_TOKEN_RE)
-            toks = toks.map(lambda xs: xs[:max_tokens] if len(xs) > max_tokens else xs)
-            got = toks.map(lambda xs: sum(1 for t in xs if t not in specials))
-        else:
-            got = norm.str.count(TOKEN_PATTERN).clip(upper=max_tokens)
-        assert list(got.astype(int)) == want, (max_tokens, specials)
+        (out,) = token_count_arrow_kernel(max_tokens, specials)(iter([rb]))
+        assert out.column(1).to_pylist() == want, (max_tokens, specials)
+
+
+def test_term_counts_kernel_offsets_bound_is_loud():
+    """A batch past the int32 list-offset bound fails with a ValueError that
+    names the limit and the conf that sets the batch size."""
+    import numpy as np
+
+    from bge_m3_onnx_spark.functions.tokenizer import _int32_offsets
+
+    assert _int32_offsets(np.array([0, 3, 2**31 - 1], dtype=np.int64)).to_pylist()[-1] == 2**31 - 1
+    with pytest.raises(ValueError, match="maxRecordsPerBatch"):
+        _int32_offsets(np.array([0, 2**31], dtype=np.int64))
 
 
 def test_doc_len_docs_matches_counted_docs(spark):

@@ -272,4 +272,51 @@ def test_distributed_phase2_with_block_max_theta(spark, skewed, monkeypatch):
     assert stats["theta_source"] == "block_max"
     assert not _runs(stats["plan_theta"], "MapInArrow")
     assert _runs(stats["plan_theta"], "Window")  # per-term top-k, not a full collect
+    assert stats["ess_completion"] == "decoded"  # the full chain, unchanged
     assert wand == _collect(run_queries(spark, skewed, q, k=10))
+
+
+def _decode_nodes(plan: str) -> int:
+    """Distinct block-decode ``MapInArrow`` operators in a formatted plan. A
+    cached relation lists its lineage once per reader under one node id, so
+    ids are counted, not lines; the build's own kernels (encode, tokenize)
+    are told apart by their function name."""
+    import re
+
+    return len(set(re.findall(r"^\((\d+)\) MapInArrow\n[^\n]*\nArguments: decode_batches\(", plan, re.M)))
+
+
+@pytest.mark.parametrize(
+    "q,k",
+    [
+        ({1: "the"}, 10),
+        ({1: "the"}, 1),
+        ({1: "the", 2: "iceberg3"}, 10),
+    ],
+    ids=["hot_k10", "hot_k1", "two_single_term_queries"],
+)
+def test_one_essential_term_skips_completion(spark, skewed, q, k):
+    """With one essential term per query, phase 3a's covering-block
+    completion is provably empty: the final plan decodes once, and forced WAND
+    stays bit-identical to the exact plan."""
+    stats: dict = {"capture_plans": True}
+    wand = _collect(run_queries_wand(spark, skewed, q, k=k, force_wand=True, stats_out=stats))
+    assert all(len(ts) == 1 for ts in stats["essential_terms"].values()), stats["essential_terms"]
+    if len(q) == 2:
+        assert stats["essential_terms"][1] != stats["essential_terms"][2]
+    assert stats["ess_completion"] == "skipped"
+    assert stats["blocks_extra_decoded"] == 0
+    assert _decode_nodes(stats["plan_final"]) == 1
+    assert wand == _collect(run_queries(spark, skewed, q, k=k))
+
+
+def test_ess_completion_rule():
+    """The skip rule on hand-built essential sets (no Spark)."""
+    from bge_m3_onnx_spark.plans.wand import _ess_completion
+
+    assert _ess_completion({1: ["the"]}, full_survival=False) == "skipped"
+    assert _ess_completion({1: ["the"], 2: ["iceberg3"]}, full_survival=False) == "skipped"
+    assert _ess_completion({}, full_survival=False) == "skipped"
+    assert _ess_completion({1: ["iceberg3", "the"]}, full_survival=False) == "decoded"
+    assert _ess_completion({1: ["the"], 2: ["iceberg3", "the"]}, full_survival=False) == "decoded"
+    assert _ess_completion({1: ["iceberg3", "the"]}, full_survival=True) == "skipped"

@@ -176,7 +176,7 @@ def main() -> None:
     )
     sections.append(
         (
-            "WAND final scoring plan (pre-checkpoint)",
+            f"WAND final scoring plan (pre-checkpoint, ess_completion = {st['ess_completion']})",
             st["plan_final"],
             [
                 "Per-term qids/idf/range lookups are literal create_map expressions — zero "
@@ -189,6 +189,30 @@ def main() -> None:
                 "Candidate-bounded side is the BROADCAST side of the doc_id resolution join "
                 "(docs relation never shuffles)",
                 "TakeOrderedAndProject for the final top-k — no global sort",
+                "A batch whose queries have several essential terms each, without full "
+                "survival, takes the covering-block completion (ess_completion = decoded): "
+                "an extra MapInArrow then decodes the needed blocks that did not survive "
+                "phase 2. The Union's second MapInArrow here is phase 3b's non-essential "
+                "decode",
+            ],
+        )
+    )
+    st1: dict = {"capture_plans": True}
+    run_queries_wand(
+        spark, idx, {1: "the"}, k=10, force_wand=True, stats_out=st1,
+    ).collect()
+    sections.append(
+        (
+            "WAND final scoring plan, one essential term per query "
+            f"(ess_completion = {st1['ess_completion']})",
+            st1["plan_final"],
+            [
+                "Exactly ONE MapInArrow (the surviving-block decode): a candidate of a "
+                "one-essential-term query came from the one block its completion would "
+                "ask for, so the covering-block completion is provably empty and not built "
+                "(a query that also has non-essential terms adds phase 3b's decode)",
+                "No candidates dropDuplicates exchange, no needed-blocks semi-join, no "
+                "second persist: the essential score is the plain aggregate of the decode",
             ],
         )
     )

@@ -86,7 +86,7 @@ def _assert_identical(spark, idx, queries, label, results: list):
     w = run_queries_wand(spark, idx, queries, k=10, force_wand=True, stats_out=st).collect()
     t_wand = time.monotonic() - t0
     assert sorted(map(_key, w)) == sorted(map(_key, e)), f"{label}: WAND != exact (bit compare)"
-    pruning = {k: v for k, v in st.items() if k in ("blocks_total", "blocks_surviving", "blocks_extra_decoded")}
+    pruning = {k: v for k, v in st.items() if k in ("blocks_total", "blocks_surviving", "blocks_extra_decoded", "ess_completion")}
     print(f"PASS {label}: WAND == exact bit-identical ({len(e)} rows); pruning {pruning}")
     results.append(
         {
