@@ -190,21 +190,6 @@ def _split_ascii(rb, text_col: str = "text"):
     return txt, isa
 
 
-def _int32_offsets(offs):  # noqa: ANN001, ANN202
-    """int64 list offsets → the int32 array ``pa.ListArray`` takes, or a
-    ValueError naming the limit. The output schema is ``list<...>``, whose
-    offsets are int32, so one Arrow batch holds < 2**31 (term, tf) entries."""
-    import pyarrow as pa
-
-    if len(offs) and int(offs[-1]) >= 2**31:
-        raise ValueError(
-            f"tokenizer batch holds {int(offs[-1])} (term, tf) entries; the "
-            "per-batch bound is 2**31 - 1 (int32 list offsets). Lower "
-            "spark.sql.execution.arrow.maxRecordsPerBatch."
-        )
-    return pa.array(offs, type=pa.int64()).cast(pa.int32())
-
-
 def term_counts_arrow_kernel(max_tokens: int = 8192, special_terms: Iterable[str] = ()):  # noqa: ANN201
     """mapInArrow kernel: (doc_id, text) batches → (doc_id, term_tfs, dl)
     batches — the SPIMI in-mapper combine of :func:`term_counts_udf` with the
@@ -274,7 +259,11 @@ def term_counts_arrow_kernel(max_tokens: int = 8192, special_terms: Iterable[str
                 [terms, pa.array(tfs.astype(np.int32))],
                 fields=list(out_schema.field("term_tfs").type.value_type),
             )
-            lst = pa.ListArray.from_arrays(_int32_offsets(offs), struct)
+            # list<...> offsets are int32: one batch holds < 2**31 (term, tf)
+            # entries. The safe cast raises ArrowInvalid past that bound.
+            lst = pa.ListArray.from_arrays(
+                pa.array(offs, type=pa.int64()).cast(pa.int32()), struct
+            )
             yield pa.record_batch(
                 [rb.column(rb.schema.get_field_index("doc_id")), lst, pa.array(dl)],
                 schema=out_schema,

@@ -47,14 +47,19 @@ fixture):
     window. For "rare_term the"-shaped queries this is the difference between
     decoding ~all of "the" and decoding a handful of its blocks: the rare
     term's wide ordinal tiles otherwise carry its high max into every segment.
-    After driver-side phase 2, 3a's completion is skipped
-    (``ess_completion == "skipped"``) when it is provably empty: either every
-    block of every essential term survived, or each query has one essential
-    term t. In the second case a candidate (q, d) came from t's block
-    d // range_t, which is the one block q's completion would ask for, and it
-    is already decoded. The candidates are then the decoded essential
-    postings themselves: phase 3a decodes once, with no candidate shuffle and
-    no covering-block joins.
+    After driver-side phase 2 (fresh or compacted index) 3a's completion is
+    not built (``ess_completion == "skipped"``): it cannot change the top-k.
+    Driver phase 2 cuts each query's segments at every block start of its
+    terms, so inside a segment each term has exactly one block. A doc d whose
+    score reaches the k-th has a surviving segment, so every essential block
+    holding d survived and its essential score over the surviving decode is
+    exact. A candidate missing an essential block sits in a pruned segment:
+    its true score is below θ − 1e-6, under the k-th, and its partial score
+    is lower still. With one essential term per query, or full survival, no
+    candidate misses a block at all. The candidates are then the decoded
+    essential postings themselves: phase 3a decodes once, with no candidate
+    shuffle and no covering-block joins. Distributed phase 2 (and so every
+    merged index) keeps the completion.
 
 Driver/executor split: per-query scalars (term maxima, Σmax, θ, essential sets)
 are O(|q|·terms) rows — they are COLLECTED to the driver (ONE fused collect, r3)
@@ -211,17 +216,6 @@ def _phase2_driver(
     return {t: sorted(v) for t, v in keys.items()}
 
 
-def _ess_completion(ess_by_qid: dict[int, list[str]], full_survival: bool) -> str:
-    """Whether phase 3a's covering-block completion can be skipped after
-    driver phase 2 (module docstring, phase 3): "skipped" when every block of
-    every essential term survived, or when no query has more than one
-    essential term; "decoded" otherwise. Essential terms always have blocks
-    (the partition is drawn from the collected maxima)."""
-    if full_survival or all(len(ts) <= 1 for ts in ess_by_qid.values()):
-        return "skipped"
-    return "decoded"
-
-
 def run_queries_wand(
     spark: SparkSession,
     idx: InvertedIndex,
@@ -240,8 +234,9 @@ def run_queries_wand(
       decode; merged, uncompacted indexes only);
     - ``theta``: {query_id: θ}; ``essential_terms``: {query_id: [terms]};
     - ``ess_completion``: "skipped" when phase 3a's covering-block completion
-      was provably empty and not built (full survival, or one essential term
-      per query, after driver-side phase 2), else "decoded";
+      was not built (after driver-side phase 2, where it cannot change the
+      top-k; module docstring), "decoded" when it ran (distributed phase 2,
+      merged indexes);
     - ``blocks_total``, ``blocks_surviving``, ``blocks_extra_decoded``;
     - ``n_candidates``, ``n_strong``;
     - ``t_theta_sec`` (the θ collect) and ``t_final_sec`` (everything after).
@@ -823,11 +818,8 @@ def _run_queries_wand_forced(
             # here): when EVERY block of EVERY essential term survived phase 2
             # (the unprunable regime — e.g. forced WAND on a corpus where each
             # block max equals θ), the surviving set is exactly "all blocks of
-            # the essential terms", so (a) the block-key filter collapses to a
-            # term IN predicate, and (b) downstream, the candidate set equals
-            # the decode's own explode pairs and the covering-block completion
-            # is empty — three shuffles and two persists become identities and
-            # are skipped below.
+            # the essential terms", so the block-key filter collapses to a
+            # term IN predicate.
             _ess_terms_all = sorted(
                 {t for ts in _ess_by_qid.values() for t in ts if t in _blk_lists}
             )
@@ -917,27 +909,35 @@ def _run_queries_wand_forced(
         # surviving remainder is decoded on top.
         decoded = decode_blocks(surviving.select(*_BLOCK_COLS)).persist()
         _persisted.append(decoded)
-        ess_completion = (
-            _ess_completion(_ess_by_qid, _full_survival) if _blk_lists else "decoded"
-        )
+        ess_completion = "skipped" if _blk_lists else "decoded"
         if stats_out is not None:
             stats_out["ess_completion"] = ess_completion
         if ess_completion == "skipped":
-            # The covering-block completion is empty, so it is skipped (proof
-            # in-line). The candidate set {(q, d): d in a decoded block of a
-            # term essential to q} is exactly the (q, d) pairs that
+            # After driver phase 2 the covering-block completion cannot change
+            # the top-k, so it is not built (proof in-line):
+            # * driver phase 2 cuts each query's segments at every block start
+            #   of its terms, so inside a segment each term has one block: the
+            #   one holding any doc of that segment;
+            # * a doc d whose score reaches the k-th (≥ θ + 1e-6: θ is a k-th
+            #   block max minus the pad) has s_q(ord(d)) ≥ score(d), so its
+            #   segment survives, every essential block holding d is in
+            #   surviving, and s_ess(d) over decoded is exact;
+            # * a candidate missing an essential block therefore sits in a
+            #   pruned segment: its true score is < θ − 1e-6, below the k-th,
+            #   and its partial s_ess is lower still. Only such candidates'
+            #   scores differ from the completed chain's, and they cannot
+            #   enter the top-k.
+            # Per query, so for the batch too (surv_by_term is a union over
+            # the batch; extra blocks only add candidates of the third kind).
+            # With one essential term per query, or full survival, no candidate
+            # misses a block at all. The candidate set {(q, d): d in a decoded
+            # block of a term essential to q} is exactly the (q, d) pairs that
             # _score_decoded_lit's explode over ess_qids_map generates from
             # decoded, so the dropDuplicates shuffle, the doc_ord equi-join and
-            # the left-semi are identities. needed_ess ⊆ surviving holds in
-            # either case the helper admits:
-            # * full survival: needed_ess ⊆ (all essential blocks) = surviving;
-            # * one essential term t per query: a candidate (q, d) came from
-            #   t's block d // range_t, and that same block is the only one
-            #   q's completion asks for. Per query, so for the batch too
-            #   (surv_by_term is a union over the batch).
-            # Hence extra_ess = ∅, full_ess = decoded (second persist skipped)
-            # and s_ess is the plain scored aggregate of decoded. Driver phase
-            # 2 only: there range_by_term is each term's one stored range.
+            # the left-semi are identities. Hence full_ess = decoded (second
+            # persist skipped) and s_ess is the plain scored aggregate of
+            # decoded. Distributed phase 2 (every merged index, and any batch
+            # over _PHASE2_DRIVER_CAP metadata rows) keeps the chain.
             candidates = None
             extra_ess = None
             full_ess = decoded

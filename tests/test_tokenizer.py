@@ -122,18 +122,6 @@ def test_token_count_kernel_matches_full_tokenizer():
         assert out.column(1).to_pylist() == want, (max_tokens, specials)
 
 
-def test_term_counts_kernel_offsets_bound_is_loud():
-    """A batch past the int32 list-offset bound fails with a ValueError that
-    names the limit and the conf that sets the batch size."""
-    import numpy as np
-
-    from bge_m3_onnx_spark.functions.tokenizer import _int32_offsets
-
-    assert _int32_offsets(np.array([0, 3, 2**31 - 1], dtype=np.int64)).to_pylist()[-1] == 2**31 - 1
-    with pytest.raises(ValueError, match="maxRecordsPerBatch"):
-        _int32_offsets(np.array([0, 2**31], dtype=np.int64))
-
-
 def test_doc_len_docs_matches_counted_docs(spark):
     from bge_m3_onnx_spark.operators.postings import counted_docs, doc_len_docs
     from bge_m3_onnx_spark.sources.transcripts import synth_transcripts

@@ -201,37 +201,98 @@ def _runs(plan: str, node: str) -> bool:
     return False
 
 
+def _decode_nodes(plan: str) -> int:
+    """Distinct block-decode ``MapInArrow`` operators in a formatted plan. A
+    cached relation lists its lineage once per reader under one node id, so
+    ids are counted, not lines; the build's own kernels (encode, tokenize)
+    are told apart by their function name."""
+    import re
+
+    return len(set(re.findall(r"^\((\d+)\) MapInArrow\n[^\n]*\nArguments: decode_batches\(", plan, re.M)))
+
+
 @pytest.mark.parametrize(
-    "text,k",
+    "q,k",
     [
-        ("the", 10),
-        ("iceberg3", 1),
-        ("iceberg3 the", 10),
-        ("the of the zzz-not-in-corpus", 10),
-        ("iceberg3 colbert7", 50),
+        ({1: "the"}, 10),
+        ({1: "the"}, 1),
+        ({1: "iceberg3"}, 1),
+        ({1: "iceberg3 the"}, 10),
+        ({1: "the of the zzz-not-in-corpus"}, 10),
+        ({1: "iceberg3 colbert7"}, 50),
+        ({1: "the", 2: "iceberg3"}, 10),
     ],
-    ids=["hot_k10", "tail_k1", "rare_hot_k10", "repeated_absent_k10", "k_above_blocks"],
+    ids=[
+        "hot_k10", "hot_k1", "tail_k1", "rare_hot_k10", "repeated_absent_k10",
+        "k_above_blocks", "two_single_term_queries",
+    ],
 )
-def test_block_max_theta_is_lossless(spark, skewed, text, k):
+def test_block_max_theta_is_lossless(spark, skewed, q, k):
     """Fresh index: θ comes from block metadata alone (no decode before the θ
     collect), never exceeds the true k-th score, and forced WAND stays
-    bit-identical to the exact plan."""
-    q = {1: text}
+    bit-identical to the exact plan. Driver phase 2 builds no covering-block
+    completion, so single-term queries decode exactly once."""
     stats: dict = {"capture_plans": True}
     wand = _collect(run_queries_wand(spark, skewed, q, k=k, force_wand=True, stats_out=stats))
     exact = _collect(run_queries(spark, skewed, q, k=k))
     assert wand == exact  # (rank, doc_id, score) per query, floats unrounded
     assert stats["theta_source"] == "block_max"
+    assert stats["ess_completion"] == "skipped"
     assert not _runs(stats["plan_theta"], "MapInArrow")
     assert not _runs(stats["plan_theta"], "Window")  # driver phase 2: a plain scan
-    kth = [score for rank, _, score in exact.get(1, []) if rank == k]
-    theta = stats["theta"][1]
-    if kth:
-        assert theta <= kth[0]
-    else:  # fewer than k matches → no term can have k blocks
-        assert theta == float("-inf")
-    if text == "iceberg3 colbert7":
-        assert theta == float("-inf"), "expected every term to hold fewer than k blocks"
+    if all(" " not in text for text in q.values()):
+        assert stats["essential_terms"] == {qid: [text] for qid, text in q.items()}
+        assert stats["blocks_extra_decoded"] == 0
+        assert _decode_nodes(stats["plan_final"]) == 1
+    for qid in q:
+        kth = [score for rank, _, score in exact.get(qid, []) if rank == k]
+        if kth:
+            assert stats["theta"][qid] <= kth[0]
+        else:  # fewer than k matches → no term can have k blocks
+            assert stats["theta"][qid] == float("-inf")
+    if q[1] == "iceberg3 colbert7":
+        assert stats["theta"][1] == float("-inf"), "expected every term to hold fewer than k blocks"
+
+
+def test_skipped_completion_with_pruned_essential_block(spark, monkeypatch):
+    """Two essential terms, one of whose blocks is pruned while a candidate
+    from the other term's surviving block still holds a posting in it. The
+    distributed phase 2 decodes that block in its covering-block completion;
+    driver phase 2 does not build the completion. Both stay bit-identical to
+    the exact plan.
+
+    block_size 2 over 16 docs (ordinal = rank of doc_id): "aa" (df 4) has
+    blocks [0, 8) and [8, 16), "bb" (df 8) four blocks of 4. "bb"'s block
+    [4, 8) holds only long docs, so the segment [4, 8) stays below θ (the
+    2nd-largest "bb" block max), while "aa"'s block [0, 8) survives through
+    [0, 4). c04 holds both terms in [4, 8)."""
+    import dataclasses
+    import datetime as _dt
+
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+    from bge_m3_onnx_spark.config import DEFAULT_CONFIG
+
+    long = " zz" * 40
+    texts = [
+        "bb", "aa" + long, "bb zz", "zz", "aa bb" + long, "bb" + long, "zz", "zz",
+        "aa", "bb", "bb zz", "aa zz", "bb", "bb zz", "zz", "zz",
+    ]
+    ts = _dt.datetime(2026, 1, 1)
+    t = spark.createDataFrame(
+        [(f"c{i:02d}", 0, "user", x, None, ts) for i, x in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    idx = build_index(t, cfg=dataclasses.replace(DEFAULT_CONFIG, block_size=2), with_blocks=True)
+    q = {1: "aa bb"}
+    exact = _collect(run_queries(spark, idx, q, k=2))
+    for cap, completion, extra in ((wand_mod._PHASE2_DRIVER_CAP, "skipped", 0), (0, "decoded", 1)):
+        monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", cap)
+        stats: dict = {}
+        wand = _collect(run_queries_wand(spark, idx, q, k=2, force_wand=True, stats_out=stats))
+        assert stats["essential_terms"] == {1: ["aa", "bb"]}
+        assert (stats["blocks_total"], stats["blocks_surviving"]) == (6, 5)
+        assert (stats["ess_completion"], stats["blocks_extra_decoded"]) == (completion, extra)
+        assert wand == exact
 
 
 def test_merged_index_keeps_seed_theta(spark, skewed):
@@ -274,49 +335,3 @@ def test_distributed_phase2_with_block_max_theta(spark, skewed, monkeypatch):
     assert _runs(stats["plan_theta"], "Window")  # per-term top-k, not a full collect
     assert stats["ess_completion"] == "decoded"  # the full chain, unchanged
     assert wand == _collect(run_queries(spark, skewed, q, k=10))
-
-
-def _decode_nodes(plan: str) -> int:
-    """Distinct block-decode ``MapInArrow`` operators in a formatted plan. A
-    cached relation lists its lineage once per reader under one node id, so
-    ids are counted, not lines; the build's own kernels (encode, tokenize)
-    are told apart by their function name."""
-    import re
-
-    return len(set(re.findall(r"^\((\d+)\) MapInArrow\n[^\n]*\nArguments: decode_batches\(", plan, re.M)))
-
-
-@pytest.mark.parametrize(
-    "q,k",
-    [
-        ({1: "the"}, 10),
-        ({1: "the"}, 1),
-        ({1: "the", 2: "iceberg3"}, 10),
-    ],
-    ids=["hot_k10", "hot_k1", "two_single_term_queries"],
-)
-def test_one_essential_term_skips_completion(spark, skewed, q, k):
-    """With one essential term per query, phase 3a's covering-block
-    completion is provably empty: the final plan decodes once, and forced WAND
-    stays bit-identical to the exact plan."""
-    stats: dict = {"capture_plans": True}
-    wand = _collect(run_queries_wand(spark, skewed, q, k=k, force_wand=True, stats_out=stats))
-    assert all(len(ts) == 1 for ts in stats["essential_terms"].values()), stats["essential_terms"]
-    if len(q) == 2:
-        assert stats["essential_terms"][1] != stats["essential_terms"][2]
-    assert stats["ess_completion"] == "skipped"
-    assert stats["blocks_extra_decoded"] == 0
-    assert _decode_nodes(stats["plan_final"]) == 1
-    assert wand == _collect(run_queries(spark, skewed, q, k=k))
-
-
-def test_ess_completion_rule():
-    """The skip rule on hand-built essential sets (no Spark)."""
-    from bge_m3_onnx_spark.plans.wand import _ess_completion
-
-    assert _ess_completion({1: ["the"]}, full_survival=False) == "skipped"
-    assert _ess_completion({1: ["the"], 2: ["iceberg3"]}, full_survival=False) == "skipped"
-    assert _ess_completion({}, full_survival=False) == "skipped"
-    assert _ess_completion({1: ["iceberg3", "the"]}, full_survival=False) == "decoded"
-    assert _ess_completion({1: ["the"], 2: ["iceberg3", "the"]}, full_survival=False) == "decoded"
-    assert _ess_completion({1: ["iceberg3", "the"]}, full_survival=True) == "skipped"

@@ -189,11 +189,11 @@ def main() -> None:
                 "Candidate-bounded side is the BROADCAST side of the doc_id resolution join "
                 "(docs relation never shuffles)",
                 "TakeOrderedAndProject for the final top-k — no global sort",
-                "A batch whose queries have several essential terms each, without full "
-                "survival, takes the covering-block completion (ess_completion = decoded): "
-                "an extra MapInArrow then decodes the needed blocks that did not survive "
-                "phase 2. The Union's second MapInArrow here is phase 3b's non-essential "
-                "decode",
+                "After driver-side phase 2 (ess_completion = skipped) no covering-block "
+                "completion is built: it cannot change the top-k. Distributed phase 2 "
+                "(ess_completion = decoded, e.g. merged indexes) adds a MapInArrow that "
+                "decodes the needed blocks that did not survive phase 2. The Union's "
+                "second MapInArrow here is phase 3b's non-essential decode",
             ],
         )
     )
@@ -207,10 +207,9 @@ def main() -> None:
             f"(ess_completion = {st1['ess_completion']})",
             st1["plan_final"],
             [
-                "Exactly ONE MapInArrow (the surviving-block decode): a candidate of a "
-                "one-essential-term query came from the one block its completion would "
-                "ask for, so the covering-block completion is provably empty and not built "
-                "(a query that also has non-essential terms adds phase 3b's decode)",
+                "Exactly ONE MapInArrow (the surviving-block decode): driver phase 2 "
+                "builds no covering-block completion, and a single-term query has no "
+                "non-essential term for phase 3b to decode",
                 "No candidates dropDuplicates exchange, no needed-blocks semi-join, no "
                 "second persist: the essential score is the plain aggregate of the decode",
             ],
