@@ -25,8 +25,14 @@ per-term rank is needed. This replaces the reference's single-document dict loop
 (/root/reference/samples/python/bge_m3_embedder.py:133-143) with an embarrassingly
 parallel groupBy + Arrow kernel.
 
-Storing dl per posting makes blocks self-scoring: the WAND phases never join the
-10^12-row docs table (SURVEY.md §3.4 query lifecycle).
+Who reads what: WAND (plans/wand.py) reads only the metadata columns (term,
+block_id, block_range, block_max_score). No query reads the varbyte payload: a
+block's postings are read from the postings relation, keyed by the same
+``floor(doc_ord / block_range)`` as ``build_blocks`` below, with no Python task on
+the query path. ``decode_blocks`` stays as the codec's inverse that tests compare
+against (tests/test_compress.py pins decoded payload == keyed postings on fresh,
+merged and compacted indexes). The payload is still written and measured
+(``bench.py``, enginebench's ``compress.payload_bytes_per_posting``).
 
 Python-boundary design (r6, guide §4.2): both kernels are ``mapInArrow``, not
 ``mapInPandas``. The r5 pandas kernels spent ~3 s of a 4.4 s blocks stage (2M

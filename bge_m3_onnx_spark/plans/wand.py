@@ -19,7 +19,7 @@ fixture):
       with the block-max list as the histogram.
     * Seed blocks (``theta_source == "seed"``) on merged, uncompacted indexes,
       whose ε-inflated maxima are upper bounds no posting actually scores:
-      decode the top ``max(wand_seed_blocks, k)`` blocks per query term (by
+      read the top ``max(wand_seed_blocks, k)`` blocks per query term (by
       block_max_score), take each query's top-k docs by PARTIAL score, exact-
       rescore those ≤ k·|q| docs (their covering blocks are a pure function of
       the stored block ranges — same trick as phase 3) and set θ to the k-th
@@ -40,36 +40,44 @@ fixture):
     cumulative Σmax stays below θ is NON-ESSENTIAL (those terms alone cannot
     lift any doc to θ — Turtle & Flood's MaxScore, set-oriented). Candidates
     come from ESSENTIAL surviving blocks only; 3a completes candidates'
-    essential postings (covering-block decode: block_id = doc_ord //
+    essential postings (covering blocks: block_id = doc_ord //
     block_range(term) is a pure function of stored ranges) and filters on
-    s_ess(d) + Σ_{non-ess} tmax ≥ θ; 3b decodes non-essential blocks only for
+    s_ess(d) + Σ_{non-ess} tmax ≥ θ; 3b reads non-essential blocks only for
     the filtered candidates, rescores exactly, then the deterministic top-k
     window. For "rare_term the"-shaped queries this is the difference between
-    decoding ~all of "the" and decoding a handful of its blocks: the rare
+    scoring ~all of "the" and scoring a handful of its blocks: the rare
     term's wide ordinal tiles otherwise carry its high max into every segment.
     After driver-side phase 2 (fresh or compacted index) 3a's completion is
     not built (``ess_completion == "skipped"``): it cannot change the top-k.
     Driver phase 2 cuts each query's segments at every block start of its
     terms, so inside a segment each term has exactly one block. A doc d whose
     score reaches the k-th has a surviving segment, so every essential block
-    holding d survived and its essential score over the surviving decode is
+    holding d survived and its essential score over the surviving postings is
     exact. A candidate missing an essential block sits in a pruned segment:
     its true score is below θ − 1e-6, under the k-th, and its partial score
     is lower still. With one essential term per query, or full survival, no
-    candidate misses a block at all. The candidates are then the decoded
-    essential postings themselves: phase 3a decodes once, with no candidate
+    candidate misses a block at all. The candidates are then the surviving
+    essential postings themselves: phase 3a reads them once, with no candidate
     shuffle and no covering-block joins. Distributed phase 2 (and so every
     merged index) keeps the completion.
+
+  Reading a block: every phase reads a block's postings from the postings
+    relation by (term, block_id = floor(doc_ord / STORED range)), the key the
+    build cut it by, so no Python task runs on the query path. A merge keeps
+    an untouched term's postings and blocks together and a compaction re-cuts
+    both, so those rows equal the block's varbyte payload on every index
+    (tests/test_compress.py). Key sets are metadata-sized and broadcast;
+    posting rows are first shuffled by the score aggregation.
 
 Driver/executor split: per-query scalars (term maxima, Σmax, θ, essential sets)
 are O(|q|·terms) rows — they are COLLECTED to the driver (ONE fused collect, r3)
 and re-broadcast as literal relations, so the distributed plan sees only: one
-metadata scan with a pushed bound filter, bounded decodes, hash aggregations,
-one tiny window. Blocks are self-scoring (tf + dl stored — operators/compress.py),
-so no phase joins the docs table; only the final k·|q| rows join back for doc_id.
+metadata scan with a pushed bound filter, block-filtered postings scans, hash
+aggregations, one tiny window. Postings carry dl, so no phase joins the docs
+table; only the final k·|q| rows join back for doc_id.
 
 Routing (r2, calibrated r3): WAND's driver round-trips (2 jobs) only pay off
-when pruning skips far more decode work than the round-trips cost. Σ df over the
+when pruning skips far more scoring work than the round-trips cost. Σ df over the
 query terms is known on the driver after the FIRST metadata lookup; below
 ``cfg.wand_route_min_postings`` the plan delegates to the exact one-job broadcast
 path (plans/query.py), which scans those same Σ df postings outright. Stopword
@@ -81,17 +89,17 @@ Phase 3 uses the ``block_range`` stored IN the block rows (not recomputed from
 current corpus stats), so blocks written under an older (N, df) — kept across an
 incremental merge — still map candidate ordinals to the right block_id.
 
-At 10^12 scale: the blocks scan is term-pruned by the bucketed layout (pushed
-isin), phase 1 decodes nothing on fresh indexes and O(|q|·seed_blocks·
-block_size) postings on merged ones, phase 3 only surviving + candidate-covering
-blocks.
+At 10^12 scale: the blocks and postings scans are term-pruned by the bucketed
+layout (pushed isin); the postings scan covers the query terms' postings and
+filters them to the wanted blocks in whole-stage codegen. Phase 1 reads only
+metadata on fresh indexes; phase 3 scores only surviving + covering blocks.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -105,15 +113,14 @@ from pyspark.sql.types import (
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
 from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
 from bge_m3_onnx_spark.operators.bm25 import bm25_term_score, idf_col, sum_scores_deterministic, topk
-from bge_m3_onnx_spark.operators.compress import decode_blocks
 from bge_m3_onnx_spark.plans.build_index import InvertedIndex
 
-_BLOCK_COLS = ["term", "block_id", "n", "first_ord", "ords_vb", "tfs_vb", "dls_vb"]
+_KEYS = ["term", "block_id"]
 
-# Target decoded-postings per task for the post-phase-2 width bump (see the
-# decode-volume-aware width note in _run_queries_wand_forced). Module-level so
+# Target scored postings per task for the post-phase-2 width bump (see the
+# scoring-volume-aware width note in _run_queries_wand_forced). Module-level so
 # experiments/tests can pin it.
-_DECODE_ROWS_PER_TASK = 100_000
+_SCORE_ROWS_PER_TASK = 100_000
 # Estimated metadata rows (Σ_t blocks of t) up to which phase 2 runs on the
 # driver and the seed pre-rank skips its salted pass. Module-level so tests can
 # pin it to 0 and force the distributed branches on a fresh index.
@@ -146,6 +153,20 @@ def _block_max_theta(
     return theta
 
 
+def _block_of(ords: Column, rng: Column) -> Column:
+    """Block key of an ordinal under a term's STORED range: the build's own
+    ``floor(doc_ord / block_range)`` (operators/compress.py), so it also maps
+    ordinals into blocks a merge kept from older corpus stats."""
+    return F.floor(ords / rng).cast("long").alias("block_id")
+
+
+def _blocks_of(postings: DataFrame, keys: DataFrame) -> DataFrame:
+    """The rows of ``postings`` (keyed by ``block_id``) that fall in the
+    (term, block_id) ``keys``. The key side is metadata-sized and BROADCAST:
+    posting rows are never shuffled before the score aggregation."""
+    return postings.join(F.broadcast(keys.select(*_KEYS)), _KEYS, "left_semi")
+
+
 def _fmt_plan(df: DataFrame) -> str:
     """Formatted physical plan of ``df`` (the ``capture_plans`` audit hook)."""
     import io
@@ -155,6 +176,24 @@ def _fmt_plan(df: DataFrame) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_runs(plan: str, node: str) -> bool:
+    """True iff the formatted plan ``plan`` runs a ``node`` operator of its
+    own. Nodes listed below an ``InMemoryRelation`` are the lineage of a cached
+    relation (e.g. the index build's encode kernel and ordinal window) and are
+    skipped. The plan audits (tests, tools/explain_audit.py) use it to check
+    that no WAND plan runs a ``MapInArrow`` Python task."""
+    tree = plan.split("\n\n")[0].splitlines()[1:]
+    cached_col = None
+    for line in tree:
+        col = len(line) - len(line.lstrip(" :+-*"))
+        if cached_col is not None and col > cached_col:
+            continue
+        cached_col = col if "InMemoryRelation" in line else None
+        if node in line:
+            return True
+    return False
 
 
 def _phase2_driver(
@@ -231,13 +270,15 @@ def run_queries_wand(
     (the extra count jobs only run when requested):
 
     - ``theta_source``: "block_max" (metadata-only θ) or "seed" (seed-block
-      decode; merged, uncompacted indexes only);
+      rescore; merged, uncompacted indexes only);
     - ``theta``: {query_id: θ}; ``essential_terms``: {query_id: [terms]};
     - ``ess_completion``: "skipped" when phase 3a's covering-block completion
       was not built (after driver-side phase 2, where it cannot change the
       top-k; module docstring), "decoded" when it ran (distributed phase 2,
       merged indexes);
-    - ``blocks_total``, ``blocks_surviving``, ``blocks_extra_decoded``;
+    - ``blocks_total``, ``blocks_surviving``, ``blocks_extra_decoded`` (extra
+      blocks READ beyond the survivors — phase 3a's completion plus phase 3b;
+      the key name predates reading blocks from the postings relation);
     - ``n_candidates``, ``n_strong``;
     - ``t_theta_sec`` (the θ collect) and ``t_final_sec`` (everything after).
 
@@ -308,9 +349,9 @@ def run_queries_wand(
     # function, so a scoped conf set/restore covers the whole plan.
     _old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     # Width from Σdf/1M, not Σdf/100k: WAND's shuffles carry METADATA and
-    # PRUNED decode output, which is normally ≪ Σdf — the exact path's
+    # PRUNED postings, which are normally ≪ Σdf — the exact path's
     # rows-per-task model over-parallelizes every tiny stage here (worst case,
-    # an unprunable stopword batch, still gets ~1M decoded postings per task).
+    # an unprunable stopword batch, still gets ~1M scored postings per task).
     try:
         _cap = int(_old_sp)
     except (TypeError, ValueError):
@@ -399,11 +440,11 @@ def _run_queries_wand_forced(
         ]
     )
 
-    def _score_decoded_lit(decoded: DataFrame, qids_map) -> DataFrame:
-        """decoded (term, doc_ord, tf, dl) × literal query-term map → per-doc
-        sums, via explode instead of a broadcast join. Summation stays the
-        term-sorted deterministic fold shared with the exact path."""
-        per_term = decoded.select(
+    def _score_postings_lit(postings: DataFrame, qids_map) -> DataFrame:
+        """block postings (term, doc_ord, tf, dl) × literal query-term map →
+        per-doc sums, via explode instead of a broadcast join. Summation stays
+        the term-sorted deterministic fold shared with the exact path."""
+        per_term = postings.select(
             F.explode(F.element_at(qids_map, F.col("term"))).alias("query_id"),
             "doc_ord",
             "term",
@@ -417,22 +458,15 @@ def _run_queries_wand_forced(
         )
         return sum_scores_deterministic(per_term, ["query_id", "doc_ord"])
 
-    # blocks restricted to query terms: pushed isin → partition/row-group pruning.
-    # Coalesced to the Σdf-sized width (spark.sql.shuffle.partitions was scoped
-    # to it by the caller): the source relation keeps the BUILD's partitioning,
-    # and without the coalesce every downstream decode/join stage spins that
-    # many near-empty tasks — with 4 mapInPandas decodes per query the per-task
-    # Python/Arrow round-trips dominated the machinery cost (measured).
+    # every block's postings ("Reading a block", module docstring); block_id
+    # is attached once the stored ranges are known
+    qpostings = idx.pruned_postings(qterms_list).select("term", "doc_ord", "tf", "dl")
     _width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Every persisted frame is registered so an exception anywhere in the
     # phases below cannot leak cached partitions (ADVICE r3); unpersist is
-    # idempotent, so the early-exit branches' explicit unpersists are fine.
+    # idempotent, so seed_sel's early release is fine.
     _persisted: list[DataFrame] = []
     try:
-        # pruned_blocks pushes term IN always, and bucket IN when the index is
-        # materialized in the bucketed layout (partition pruning at the scan).
-        qblocks = idx.pruned_blocks(qterms_list).coalesce(_width).persist()
-        _persisted.append(qblocks)
         # ---- driver-side phase 2 gate (r4) ----
         # Phase 2 is pure metadata math over Σ_t n_blocks(t) rows — bounded and
         # driver-estimable BEFORE any job (df is known; block_range_for_term is
@@ -462,13 +496,10 @@ def _run_queries_wand_forced(
         if stats_out is not None:
             stats_out["theta_source"] = "block_max" if _fresh else "seed"
 
-        # Slim metadata twin of qblocks (no varbyte buffer columns): the phase-1/2
-        # machinery makes ~a dozen metadata passes (windows, bounds, surviving
-        # keys, broadcast subtrees), and each pass over the buffer-carrying cache
-        # paid for deserializing MBs of block payloads to read 4 scalar columns —
-        # the event-log profile showed ~25 broadcast subjobs at 0.3-1.2 s each
-        # doing exactly that. Decode steps still read qblocks (they need buffers).
-        # Driver phase 2 reads it exactly once (the θ collect): no cache then.
+        # The query's only blocks relation, metadata columns alone, coalesced to
+        # the Σdf-sized width (the source keeps the BUILD's partitioning). The
+        # distributed phases make ~a dozen passes over it: cached then. Driver
+        # phase 2 reads it exactly once (the θ collect): no cache.
         qmeta = (
             idx.pruned_blocks(qterms_list)
             .select("term", "block_id", "block_range", "block_max_score")
@@ -519,7 +550,7 @@ def _run_queries_wand_forced(
             # Metadata-only θ (module docstring): driver phase 2 collects every
             # query-term block row anyway; the distributed branch collects only
             # each term's top-k. θ, tmax and ranges come from the same rows —
-            # no decode, no rescore.
+            # no block read, no rescore.
             theta_df = (qmeta if _driver_phase2 else _top_blocks(k)).select(
                 "term", "block_id", "block_range", "block_max_score"
             )
@@ -527,10 +558,10 @@ def _run_queries_wand_forced(
             # ---- θ from seed candidates, EXACT-rescored (merged indexes) ----
             # Seeds must plausibly contain k strong docs per query or θ
             # collapses to a mid-pack score: the top-k docs concentrate in the
-            # top block-max blocks, so decode at least k seed blocks per term
+            # top block-max blocks, so read at least k seed blocks per term
             # (≥1 doc each, typically ~block_size). Partial seed sums pick the
             # candidates; their covering blocks (pure function of the stored
-            # ranges, ≤ k·|q|·|terms| blocks) are decoded and the candidates
+            # ranges, ≤ k·|q|·|terms| blocks) are read and the candidates
             # scored exactly. θ = k-th best exact score — a lower bound of the
             # true k-th (k-doc-subset argument).
             seed_sel = _top_blocks(max(cfg.wand_seed_blocks, k)).persist()
@@ -542,10 +573,12 @@ def _run_queries_wand_forced(
                 F.col("block_range").cast("long").alias("rng"),
                 F.col("block_max_score").alias("tmax"),
             )
-            seed_blocks = qblocks.join(
-                F.broadcast(seed_sel.select("term", "block_id")), ["term", "block_id"], "left_semi"
-            ).select(*_BLOCK_COLS)
-            seed_scores = _score_decoded_lit(decode_blocks(seed_blocks), all_qids_map)
+            # the stored ranges are still distributed here: block_id comes from
+            # a broadcast join of the per-term ranges (|terms| rows)
+            seed_post = qpostings.join(
+                F.broadcast(ranges_sel.select("term", "rng")), "term"
+            ).select("term", "doc_ord", "tf", "dl", _block_of(F.col("doc_ord"), F.col("rng")))
+            seed_scores = _score_postings_lit(_blocks_of(seed_post, seed_sel), all_qids_map)
             w_theta = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_ord"))
             seed_top = (
                 seed_scores.withColumn("rk", F.row_number().over(w_theta))
@@ -559,15 +592,11 @@ def _run_queries_wand_forced(
                     "doc_ord", F.explode(F.element_at(q2terms_lit, F.col("query_id"))).alias("term")
                 )
                 .join(F.broadcast(ranges_sel.select("term", "rng")), "term")
-                .select(
-                    "term",
-                    F.floor(F.col("doc_ord") / F.col("rng")).cast("long").alias("block_id"),
-                )
-                .dropDuplicates(["term", "block_id"])
+                .select("term", _block_of(F.col("doc_ord"), F.col("rng")))
+                .dropDuplicates(_KEYS)
             )
-            seed_cover = qblocks.join(seed_needed, ["term", "block_id"], "left_semi")
-            seed_exact = _score_decoded_lit(
-                decode_blocks(seed_cover.select(*_BLOCK_COLS)), all_qids_map
+            seed_exact = _score_postings_lit(
+                _blocks_of(seed_post, seed_needed), all_qids_map
             ).join(seed_top, ["query_id", "doc_ord"], "left_semi")
             # ONE collect for θ AND the per-term metadata (tagged union) — the
             # scalars phases 2-3 need on the driver to build literal maps.
@@ -627,8 +656,6 @@ def _run_queries_wand_forced(
         # boundaries → active block per (boundary, term) via x // range — no range
         # join, no window, safe for stopword terms with millions of blocks.
         if not tmax:  # no query term has any block → empty result
-            qblocks.unpersist()
-            qmeta.unpersist()
             return spark.createDataFrame(
                 [],
                 "query_id int, rank int, doc_id string, score double",
@@ -640,10 +667,14 @@ def _run_queries_wand_forced(
                 for x in (F.lit(int(qid)), F.lit(float(theta.get(qid, float("-inf")))))
             ]
         )
+        range_map = F.create_map(
+            *[x for t, r in sorted(range_by_term.items()) for x in (F.lit(t), F.lit(r).cast("long"))]
+        )
+        # the query terms' postings keyed by their block under the stored range
+        qpost = qpostings.select(
+            "*", _block_of(F.col("doc_ord"), F.element_at(range_map, F.col("term")))
+        )
         if not _blk_lists:
-            range_map = F.create_map(
-                *[x for t, r in sorted(range_by_term.items()) for x in (F.lit(t), F.lit(int(r)))]
-            )
             block_meta = qmeta.select(
                 "term", "block_id", (F.col("block_id") * F.col("block_range")).alias("x"), "block_max_score"
             )
@@ -700,11 +731,9 @@ def _run_queries_wand_forced(
                     "query_id",
                     "x",
                     "term",
-                    F.floor(F.col("x") / F.element_at(range_map, F.col("term")))
-                    .cast("long")
-                    .alias("block_id"),
+                    _block_of(F.col("x"), F.element_at(range_map, F.col("term"))),
                 )
-                .join(block_meta.select("term", "block_id", "block_max_score"), ["term", "block_id"])
+                .join(block_meta.select("term", "block_id", "block_max_score"), _KEYS)
             )
             surviving_x = (
                 active.groupBy("query_id", "x")
@@ -716,10 +745,10 @@ def _run_queries_wand_forced(
         # cumulative Σtmax stays BELOW θ is NON-ESSENTIAL: those terms alone cannot
         # lift any doc to θ, so every top-k doc contains ≥1 essential term.
         # Candidates therefore come from ESSENTIAL surviving blocks only, and
-        # non-essential terms are decoded later, only for candidates that can still
+        # non-essential terms are read later, only for candidates that can still
         # clear θ. This is what makes mixed rare+hot queries cheap: for
         # "rare_term the", θ (driven by the rare term's idf) exceeds tmax("the"),
-        # so "the" is non-essential and its millions of postings are decoded only
+        # so "the" is non-essential and its millions of postings are read only
         # for the handful of rare-term candidates within reach of θ — the
         # ordinal-tiled segment bound alone cannot do this, because the rare term's
         # wide tiles carry its high max into every segment (measured: 618/682
@@ -802,6 +831,7 @@ def _run_queries_wand_forced(
         # ESSENTIAL term (candidate sources; non-essential blocks are never
         # candidate sources — see the MaxScore argument above)
         _full_survival = False
+        _surv_expr = None  # literal surviving-block predicate, else surviving_keys
         if _blk_lists:
             # ---- phase 2 on the driver (NumPy over the collected metadata) ----
             # Semantics identical to the distributed branch below: per query,
@@ -832,83 +862,61 @@ def _run_queries_wand_forced(
             # and wrecked codegen — past the cap a broadcast semi-join against a
             # driver-built relation is one cheap subjob instead.
             if _full_survival:
-                _surv_term_expr = F.col("term").isin(_ess_terms_all)
-                surviving = qblocks.filter(_surv_term_expr)
-
-                def _not_surv(df_: DataFrame) -> DataFrame:
-                    return df_.filter(~_surv_term_expr)
-
+                _surv_expr = F.col("term").isin(_ess_terms_all)
             elif _n_keys <= 2_000:
-                # literal IN-filters on the cached qblocks: no join, no
-                # broadcast-exchange subjob, tiny plan tree
+                # literal IN-filters: no join, no broadcast-exchange subjob
                 _surv_expr = F.lit(False)
                 for _t2, _ids in sorted(surv_by_term.items()):
                     _surv_expr = _surv_expr | (
                         (F.col("term") == F.lit(_t2)) & F.col("block_id").isin(_ids)
                     )
-                surviving = qblocks.filter(_surv_expr)
-
-                def _not_surv(df_: DataFrame) -> DataFrame:
-                    return df_.filter(~_surv_expr)
-
             else:
-                _sk = spark.createDataFrame(
+                surviving_keys = spark.createDataFrame(
                     [(t2, int(b2)) for t2, ids2 in sorted(surv_by_term.items()) for b2 in ids2],
                     "term string, block_id long",
                 )
-                surviving = qblocks.join(F.broadcast(_sk), ["term", "block_id"], "left_semi")
-
-                def _not_surv(df_: DataFrame) -> DataFrame:
-                    return df_.join(F.broadcast(_sk), ["term", "block_id"], "left_anti")
-
         else:
             surviving_keys = (
                 surviving_x.select(
                     "x", F.explode(F.element_at(q2ess_terms_lit, F.col("query_id"))).alias("term")
                 )
-                .select(
-                    "term",
-                    F.floor(F.col("x") / F.element_at(range_map, F.col("term")))
-                    .cast("long")
-                    .alias("block_id"),
-                )
-                .dropDuplicates(["term", "block_id"])
+                .select("term", _block_of(F.col("x"), F.element_at(range_map, F.col("term"))))
+                .dropDuplicates(_KEYS)
             )
-            surviving = qblocks.join(surviving_keys, ["term", "block_id"], "left_semi")
+        if _surv_expr is not None:
+            surviving = qpost.filter(_surv_expr)
+        else:
+            surviving = _blocks_of(qpost, surviving_keys)
 
-            def _not_surv(df_: DataFrame) -> DataFrame:
-                return df_.join(
-                    surviving.select("term", "block_id"), ["term", "block_id"], "left_anti"
-                )
+        def _not_surv(keys: DataFrame) -> DataFrame:
+            if _surv_expr is not None:
+                return keys.filter(~_surv_expr)
+            return keys.join(F.broadcast(surviving_keys), _KEYS, "left_anti")
 
-        # ---- decode-volume-aware width (r6, guide §2.5: partitioning derived
-        # from actual data size, not a constant) ----
+        # ---- scoring-volume-aware width (r6: partitioning from data size) ----
         # The session width was scoped to Σdf//1M for the METADATA jobs, which
-        # is right in the routed regime (tiny decode) but single-threads the
-        # unprunable/forced regime, where phase 3 decodes ~every posting of the
-        # query terms on 1-3 tasks. After driver-side phase 2 the survival is
-        # KNOWN: widen every later exchange to the estimated decode volume and
-        # spread the surviving block rows to match (block rows are ~KB — the
-        # repartition moves metadata+payload once, then decode/score run wide).
+        # single-threads the unprunable/forced regime, where phase 3 scores
+        # ~every posting of the query terms. After driver-side phase 2 the
+        # survival is KNOWN: widen the score aggregation to the estimated
+        # volume. Posting rows are filtered in the scan's own partitions.
         if _blk_lists:
             if _full_survival:
                 _est_rows = sum(_df_by_term.get(t, 0) for t in _ess_terms_all)
             else:
-                _est_rows = sum(len(v) for v in surv_by_term.values()) * cfg.block_size
+                _est_rows = _n_keys * cfg.block_size
             _w2 = max(
                 _width,
-                min(spark.sparkContext.defaultParallelism, _est_rows // _DECODE_ROWS_PER_TASK),
+                min(spark.sparkContext.defaultParallelism, _est_rows // _SCORE_ROWS_PER_TASK),
             )
             if _w2 > _width:
                 spark.conf.set("spark.sql.shuffle.partitions", str(_w2))
-                surviving = surviving.repartition(_w2, "term", "block_id")
 
         # ---- phase 3a: candidates + exact ESSENTIAL score ----
-        # decoded is persisted: it feeds the candidate derivation AND is REUSED as
-        # the bulk of the essential-rescore input — only the needed-but-not-
-        # surviving remainder is decoded on top.
-        decoded = decode_blocks(surviving.select(*_BLOCK_COLS)).persist()
-        _persisted.append(decoded)
+        # surviving's postings are persisted: they feed the candidate derivation
+        # AND are the bulk of the essential-rescore input — only the needed-but-
+        # not-surviving remainder is read on top (_not_surv drops surviving keys).
+        surv_post = surviving.persist()
+        _persisted.append(surv_post)
         ess_completion = "skipped" if _blk_lists else "decoded"
         if stats_out is not None:
             stats_out["ess_completion"] = ess_completion
@@ -921,7 +929,7 @@ def _run_queries_wand_forced(
             # * a doc d whose score reaches the k-th (≥ θ + 1e-6: θ is a k-th
             #   block max minus the pad) has s_q(ord(d)) ≥ score(d), so its
             #   segment survives, every essential block holding d is in
-            #   surviving, and s_ess(d) over decoded is exact;
+            #   surviving, and s_ess(d) over surv_post is exact;
             # * a candidate missing an essential block therefore sits in a
             #   pruned segment: its true score is < θ − 1e-6, below the k-th,
             #   and its partial s_ess is lower still. Only such candidates'
@@ -930,23 +938,23 @@ def _run_queries_wand_forced(
             # Per query, so for the batch too (surv_by_term is a union over
             # the batch; extra blocks only add candidates of the third kind).
             # With one essential term per query, or full survival, no candidate
-            # misses a block at all. The candidate set {(q, d): d in a decoded
+            # misses a block at all. The candidate set {(q, d): d in a surviving
             # block of a term essential to q} is exactly the (q, d) pairs that
-            # _score_decoded_lit's explode over ess_qids_map generates from
-            # decoded, so the dropDuplicates shuffle, the doc_ord equi-join and
-            # the left-semi are identities. Hence full_ess = decoded (second
-            # persist skipped) and s_ess is the plain scored aggregate of
-            # decoded. Distributed phase 2 (every merged index, and any batch
-            # over _PHASE2_DRIVER_CAP metadata rows) keeps the chain.
+            # _score_postings_lit's explode over ess_qids_map generates from
+            # surv_post, so the dropDuplicates shuffle, the doc_ord equi-join
+            # and the left-semi are identities. Hence full_ess = surv_post
+            # (second persist skipped) and s_ess is the plain scored aggregate
+            # of surv_post. Distributed phase 2 (every merged index, and any
+            # batch over _PHASE2_DRIVER_CAP metadata rows) keeps the chain.
             candidates = None
-            extra_ess = None
-            full_ess = decoded
-            s_ess = _score_decoded_lit(decoded, ess_qids_map)
+            extra_keys = None
+            full_ess = surv_post
+            s_ess = _score_postings_lit(surv_post, ess_qids_map)
         else:
             # per-query candidates: docs in any surviving block of a term ESSENTIAL
             # to that query. Lazily persisted (no eager count — VERDICT r1).
             candidates = (
-                decoded.select(
+                surv_post.select(
                     F.explode(F.element_at(ess_qids_map, F.col("term"))).alias("query_id"), "doc_ord"
                 )
                 .dropDuplicates(["query_id", "doc_ord"])
@@ -962,22 +970,21 @@ def _run_queries_wand_forced(
                     "doc_ord", F.explode(F.element_at(q2ess_tr_lit, F.col("query_id"))).alias("tr")
                 )
                 .select(
-                    F.col("tr.term").alias("term"),
-                    F.floor(F.col("doc_ord") / F.col("tr.rng")).cast("long").alias("block_id"),
+                    F.col("tr.term").alias("term"), _block_of(F.col("doc_ord"), F.col("tr.rng"))
                 )
-                .dropDuplicates(["term", "block_id"])
+                .dropDuplicates(_KEYS)
             )
-            extra_ess = _not_surv(qblocks.join(needed_ess, ["term", "block_id"], "left_semi"))
-            full_ess = decoded.unionByName(decode_blocks(extra_ess.select(*_BLOCK_COLS))).persist()
+            extra_keys = _not_surv(needed_ess)
+            full_ess = surv_post.unionByName(_blocks_of(qpost, extra_keys)).persist()
             _persisted.append(full_ess)
-            s_ess = _score_decoded_lit(
+            s_ess = _score_postings_lit(
                 full_ess.join(candidates.select("doc_ord").distinct(), "doc_ord"), ess_qids_map
             ).join(candidates, ["query_id", "doc_ord"], "left_semi")
 
         # ---- θ-filter before the non-essential completion ----
         # score(d) = s_ess(d) + s_ness(d) ≤ s_ess(d) + Σ_{t non-ess} tmax(t), so a
         # candidate below θ on that bound can never reach the top-k; only the
-        # survivors pay the non-essential decode. ε pads the float comparison
+        # survivors pay the non-essential read. ε pads the float comparison
         # (scores are O(10); 1e-6 admits a few extra candidates, never drops one).
         _strong_cond = (
             F.col("score") + F.element_at(ness_map, F.col("query_id"))
@@ -990,7 +997,7 @@ def _run_queries_wand_forced(
         # essential): the 3b subplan otherwise adds ~6 broadcast-exchange subjobs
         # and real Catalyst planning time for provably-empty relations, and
         # s_ess over the essential completion IS the full exact score.
-        non_blocks = None
+        non_keys = None
         strong = None
         if ness_pairs_rows:
             strong = s_ess.filter(_strong_cond).select("query_id", "doc_ord").persist()
@@ -1002,24 +1009,19 @@ def _run_queries_wand_forced(
                     F.explode(F.element_at(q2ness_tr_lit, F.col("query_id"))).alias("tr"),
                 )
                 .select(
-                    F.col("tr.term").alias("term"),
-                    F.floor(F.col("doc_ord") / F.col("tr.rng")).cast("long").alias("block_id"),
+                    F.col("tr.term").alias("term"), _block_of(F.col("doc_ord"), F.col("tr.rng"))
                 )
-                .dropDuplicates(["term", "block_id"])
+                .dropDuplicates(_KEYS)
             )
             # a term can be essential for one query and non-essential for another —
-            # excluding EVERYTHING already decoded (surviving via _not_surv,
+            # excluding EVERY block already read (surviving via _not_surv,
             # extras via the anti-join) keeps postings duplicate-free (a
             # duplicated posting would double-count in the fold)
-            non_blocks = _not_surv(
-                qblocks.join(needed_non, ["term", "block_id"], "left_semi")
-            )
-            if extra_ess is not None:
-                non_blocks = non_blocks.join(
-                    extra_ess.select("term", "block_id"), ["term", "block_id"], "left_anti"
-                )
-            full = full_ess.unionByName(decode_blocks(non_blocks.select(*_BLOCK_COLS)))
-            scored = _score_decoded_lit(
+            non_keys = _not_surv(needed_non)
+            if extra_keys is not None:
+                non_keys = non_keys.join(F.broadcast(extra_keys), _KEYS, "left_anti")
+            full = full_ess.unionByName(_blocks_of(qpost, non_keys))
+            scored = _score_postings_lit(
                 full.join(strong.select("doc_ord").distinct(), "doc_ord"), all_qids_map
             )
             scored = scored.join(strong, ["query_id", "doc_ord"], "left_semi")
@@ -1048,9 +1050,9 @@ def _run_queries_wand_forced(
             stats_out["plan_surviving"] = _fmt_plan(surviving)
             stats_out["plan_final"] = _fmt_plan(final_df)
         # Materialize the k·|q|-row result NOW (localCheckpoint is eager): the final
-        # job must run WHILE the qblocks/decoded/candidates caches are alive — an
-        # unpersist before the caller's collect would silently recompute both decode
-        # branches. The returned frame reads the checkpointed rows, lineage-free.
+        # job must run WHILE the surv_post/candidates caches are alive — an
+        # unpersist before the caller's collect would silently recompute phase 3.
+        # The returned frame reads the checkpointed rows, lineage-free.
         result = final_df.localCheckpoint(eager=True)
         if stats_out is not None:
             # diagnostic counts AFTER the final materialization: they reuse the
@@ -1068,10 +1070,13 @@ def _run_queries_wand_forced(
                 )
             else:
                 stats_out["blocks_total"] = qmeta.count()
-                stats_out["blocks_surviving"] = surviving.count()
-            stats_out["blocks_extra_decoded"] = (
-                extra_ess.count() if extra_ess is not None else 0
-            ) + (non_blocks.count() if non_blocks is not None else 0)
+                stats_out["blocks_surviving"] = qmeta.join(surviving_keys, _KEYS, "left_semi").count()
+            # extra blocks READ; key relations may name absent blocks: count via qmeta
+            stats_out["blocks_extra_decoded"] = sum(
+                qmeta.join(keys, _KEYS, "left_semi").count()
+                for keys in (extra_keys, non_keys)
+                if keys is not None
+            )
             # full-survival fast path: candidates == s_ess's (q, d) pairs (the
             # identity the fast path rests on) — count those instead.
             stats_out["n_candidates"] = (
@@ -1088,14 +1093,6 @@ def _run_queries_wand_forced(
             stats_out["theta"] = dict(theta)
             stats_out["t_theta_sec"] = round(_t_theta, 3)
             stats_out["t_final_sec"] = round(time.monotonic() - _t0_final, 3)
-        qblocks.unpersist()
-        qmeta.unpersist()
-        decoded.unpersist()
-        full_ess.unpersist()
-        if candidates is not None:
-            candidates.unpersist()
-        if strong is not None:
-            strong.unpersist()
         return result
 
     finally:

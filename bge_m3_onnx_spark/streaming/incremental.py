@@ -260,7 +260,10 @@ def compact_index(idx: InvertedIndex, cfg: EngineConfig | None = None) -> Invert
     bucketed layout compacts incrementally.
     """
     cfg = cfg or idx.cfg
-    blocks = build_blocks(idx.postings, idx.terms, idx.n_docs, idx.avgdl, cfg)
+    # persisted like merge_delta's blocks: every query reads them, and an
+    # uncached relation re-runs the blocks build (its Python encode kernel
+    # included) inside each query
+    blocks = build_blocks(idx.postings, idx.terms, idx.n_docs, idx.avgdl, cfg).persist()
     return InvertedIndex(
         postings=idx.postings,
         terms=idx.terms,

@@ -106,21 +106,67 @@ def test_ordinal_boundary_sample_is_capped(spark, tiny_transcripts, monkeypatch)
     assert {r["doc_id"]: r["doc_ord"] for r in rows} == expect
 
 
-def test_blocks_roundtrip_to_postings(spark, tiny_transcripts):
-    """Compression is lossless: decode(blocks) == postings (on ordinals)."""
+@pytest.mark.parametrize("variant", ["fresh", "merged", "compacted"])
+def test_blocks_roundtrip_to_postings(spark, tiny_transcripts, variant):
+    """Compression is lossless, and a block's postings are exactly the postings
+    keyed by its STORED range: decode(blocks) and postings with block_id =
+    doc_ord // block_range hold the same (term, block_id, doc_ord, tf, dl)
+    multiset. WAND reads blocks from the postings relation on this premise
+    (plans/wand.py), so it is pinned on a fresh index, after a merge that
+    keeps untouched terms' blocks (cut under older stats), and after a
+    compaction that re-cuts them."""
+    import dataclasses
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from bge_m3_onnx_spark.config import DEFAULT_CONFIG
     from bge_m3_onnx_spark.operators.compress import decode_blocks
     from bge_m3_onnx_spark.plans.build_index import build_index
+    from bge_m3_onnx_spark.sources.transcripts import synth_transcripts
+    from bge_m3_onnx_spark.streaming.incremental import compact_index, merge_delta
 
-    idx = build_index(tiny_transcripts, with_blocks=True)
-    orig = {
-        (r["term"], r["doc_ord"]): (r["tf"], r["dl"])
-        for r in idx.postings.select("term", "doc_ord", "tf", "dl").collect()
-    }
-    dec = {
-        (r["term"], r["doc_ord"]): (r["tf"], r["dl"])
-        for r in decode_blocks(idx.blocks).collect()
-    }
-    assert dec == orig
+    # small blocks: several per term, so a stale range would re-key postings
+    cfg = dataclasses.replace(DEFAULT_CONFIG, block_size=4)
+    gens = [build_index(tiny_transcripts, cfg=cfg, with_ordinals=True, with_blocks=True)]
+    if variant != "fresh":
+        delta = synth_transcripts(spark, n_convs=21, turns_per_conv=10).filter(
+            "conv_id >= 'conv-000020'"
+        )
+        gens.append(merge_delta(spark, gens[0], delta))
+        assert gens[-1].merges_since_compaction == 1  # untouched terms' blocks were kept
+        if variant == "compacted":
+            gens.append(compact_index(gens[-1]))
+    idx = gens[-1]
+    try:
+        ranges = {}
+        for r in idx.blocks.select("term", "block_range").distinct().collect():
+            assert r["term"] not in ranges, "block_range must be constant within a term"
+            ranges[r["term"]] = r["block_range"]
+        df_by_term = {r["term"]: r["df"] for r in idx.terms.collect()}
+        # only kept blocks carry a range the current stats would not cut
+        stale = {
+            t for t, rng in ranges.items()
+            if rng != cfg.block_range_for_term(df_by_term[t], idx.n_docs)
+        }
+        assert bool(stale) == (variant == "merged")
+        # decode each block under a (term, block_id) tag: the decode kernel
+        # keeps the term column, so the tag survives it
+        tagged = idx.blocks.withColumn(
+            "term", F.concat_ws("\x00", "term", F.col("block_id").cast("string"))
+        )
+        decoded = Counter()
+        for r in decode_blocks(tagged).collect():
+            term, bid = r["term"].split("\x00")
+            decoded[(term, int(bid), r["doc_ord"], r["tf"], r["dl"])] += 1
+        postings = Counter(
+            (r["term"], r["doc_ord"] // ranges[r["term"]], r["doc_ord"], r["tf"], r["dl"])
+            for r in idx.postings.select("term", "doc_ord", "tf", "dl").collect()
+        )
+        assert decoded == postings
+    finally:
+        for g in gens:
+            g.release()
 
 
 def test_block_max_is_true_upper_bound(spark, tiny_transcripts):

@@ -7,7 +7,7 @@ import pytest
 
 from bge_m3_onnx_spark.plans.build_index import build_index
 from bge_m3_onnx_spark.plans.query import run_queries
-from bge_m3_onnx_spark.plans.wand import run_queries_wand
+from bge_m3_onnx_spark.plans.wand import plan_runs, run_queries_wand
 
 
 @pytest.fixture(scope="module")
@@ -67,7 +67,7 @@ def test_wand_stats_report_pruning(spark, built, query_set):
     res.collect()
     assert stats["routed"] is False
     assert 0 < stats["blocks_surviving"] <= stats["blocks_total"]
-    # phase 3 never re-decodes what phase 2 already decoded
+    # phase 3 never re-reads a block phase 2 already read
     assert 0 <= stats["blocks_extra_decoded"] <= stats["blocks_total"] - stats["blocks_surviving"]
     routed: dict = {}
     run_queries_wand(spark, built, {1: query_set[1]}, k=1, stats_out=routed).collect()
@@ -184,33 +184,6 @@ def test_wand_one_doc_attains_every_term_max(spark):
     assert wand[1][0][1] == "conv-a:0"
 
 
-def _runs(plan: str, node: str) -> bool:
-    """True iff the formatted plan runs a ``node`` operator of its own. Nodes
-    listed below an ``InMemoryRelation`` are the lineage of a cached relation
-    (e.g. the index build's encode kernel and ordinal window) and are skipped.
-    ``MapInArrow`` is the block decode kernel."""
-    tree = plan.split("\n\n")[0].splitlines()[1:]
-    cached_col = None
-    for line in tree:
-        col = len(line) - len(line.lstrip(" :+-*"))
-        if cached_col is not None and col > cached_col:
-            continue
-        cached_col = col if "InMemoryRelation" in line else None
-        if node in line:
-            return True
-    return False
-
-
-def _decode_nodes(plan: str) -> int:
-    """Distinct block-decode ``MapInArrow`` operators in a formatted plan. A
-    cached relation lists its lineage once per reader under one node id, so
-    ids are counted, not lines; the build's own kernels (encode, tokenize)
-    are told apart by their function name."""
-    import re
-
-    return len(set(re.findall(r"^\((\d+)\) MapInArrow\n[^\n]*\nArguments: decode_batches\(", plan, re.M)))
-
-
 @pytest.mark.parametrize(
     "q,k",
     [
@@ -228,22 +201,23 @@ def _decode_nodes(plan: str) -> int:
     ],
 )
 def test_block_max_theta_is_lossless(spark, skewed, q, k):
-    """Fresh index: θ comes from block metadata alone (no decode before the θ
+    """Fresh index: θ comes from block metadata alone (no block read before the θ
     collect), never exceeds the true k-th score, and forced WAND stays
     bit-identical to the exact plan. Driver phase 2 builds no covering-block
-    completion, so single-term queries decode exactly once."""
+    completion, and block postings are read from the postings relation: no
+    plan runs a Python task."""
     stats: dict = {"capture_plans": True}
     wand = _collect(run_queries_wand(spark, skewed, q, k=k, force_wand=True, stats_out=stats))
     exact = _collect(run_queries(spark, skewed, q, k=k))
     assert wand == exact  # (rank, doc_id, score) per query, floats unrounded
     assert stats["theta_source"] == "block_max"
     assert stats["ess_completion"] == "skipped"
-    assert not _runs(stats["plan_theta"], "MapInArrow")
-    assert not _runs(stats["plan_theta"], "Window")  # driver phase 2: a plain scan
+    assert not plan_runs(stats["plan_theta"], "MapInArrow")
+    assert not plan_runs(stats["plan_theta"], "Window")  # driver phase 2: a plain scan
+    assert not plan_runs(stats["plan_final"], "MapInArrow")
     if all(" " not in text for text in q.values()):
         assert stats["essential_terms"] == {qid: [text] for qid, text in q.items()}
         assert stats["blocks_extra_decoded"] == 0
-        assert _decode_nodes(stats["plan_final"]) == 1
     for qid in q:
         kth = [score for rank, _, score in exact.get(qid, []) if rank == k]
         if kth:
@@ -257,9 +231,9 @@ def test_block_max_theta_is_lossless(spark, skewed, q, k):
 def test_skipped_completion_with_pruned_essential_block(spark, monkeypatch):
     """Two essential terms, one of whose blocks is pruned while a candidate
     from the other term's surviving block still holds a posting in it. The
-    distributed phase 2 decodes that block in its covering-block completion;
+    distributed phase 2 reads that block in its covering-block completion;
     driver phase 2 does not build the completion. Both stay bit-identical to
-    the exact plan.
+    the exact plan, and neither runs a Python task.
 
     block_size 2 over 16 docs (ordinal = rank of doc_id): "aa" (df 4) has
     blocks [0, 8) and [8, 16), "bb" (df 8) four blocks of 4. "bb"'s block
@@ -287,8 +261,10 @@ def test_skipped_completion_with_pruned_essential_block(spark, monkeypatch):
     exact = _collect(run_queries(spark, idx, q, k=2))
     for cap, completion, extra in ((wand_mod._PHASE2_DRIVER_CAP, "skipped", 0), (0, "decoded", 1)):
         monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", cap)
-        stats: dict = {}
+        stats: dict = {"capture_plans": True}
         wand = _collect(run_queries_wand(spark, idx, q, k=2, force_wand=True, stats_out=stats))
+        assert not plan_runs(stats["plan_theta"], "MapInArrow")
+        assert not plan_runs(stats["plan_final"], "MapInArrow")
         assert stats["essential_terms"] == {1: ["aa", "bb"]}
         assert (stats["blocks_total"], stats["blocks_surviving"]) == (6, 5)
         assert (stats["ess_completion"], stats["blocks_extra_decoded"]) == (completion, extra)
@@ -297,8 +273,9 @@ def test_skipped_completion_with_pruned_essential_block(spark, monkeypatch):
 
 def test_merged_index_keeps_seed_theta(spark, skewed):
     """ε-inflated maxima of a merged, uncompacted index are upper bounds no
-    posting scores, so θ must come from the seed decode there; compaction
-    re-cuts the blocks and restores the metadata-only θ. Both stay exact."""
+    posting scores, so θ must come from the seed blocks' postings there;
+    compaction re-cuts the blocks and restores the metadata-only θ. Both stay
+    exact, and neither runs a Python task."""
     from bge_m3_onnx_spark.sources.transcripts import synth_transcripts_skewed
     from bge_m3_onnx_spark.streaming.incremental import compact_index, merge_delta
 
@@ -307,17 +284,55 @@ def test_merged_index_keeps_seed_theta(spark, skewed):
     )
     merged = merge_delta(spark, skewed, delta)
     assert merged.merges_since_compaction == 1
+    compacted = compact_index(merged)
     q = {1: "the", 2: "iceberg3 the"}
     try:
-        for idx, source in ((merged, "seed"), (compact_index(merged), "block_max")):
+        for idx, source in ((merged, "seed"), (compacted, "block_max")):
             stats: dict = {"capture_plans": True}
             wand = _collect(run_queries_wand(spark, idx, q, k=10, force_wand=True, stats_out=stats))
             assert stats["theta_source"] == source
-            if source == "seed":  # the no-decode assertions elsewhere can fail
-                assert _runs(stats["plan_theta"], "MapInArrow")
+            assert not plan_runs(stats["plan_theta"], "MapInArrow")
+            assert not plan_runs(stats["plan_final"], "MapInArrow")
             assert wand == _collect(run_queries(spark, idx, q, k=10))
     finally:
         merged.release()
+        compacted.release()
+
+
+def test_wand_keys_kept_blocks_by_stored_range(spark, tiny_transcripts):
+    """A merge keeps an untouched term's blocks, cut under the old corpus
+    stats. WAND reads those blocks' postings by block_id = doc_ord // STORED
+    range; keyed by the range today's stats give, the same postings land in
+    other blocks. Small blocks give the kept terms several blocks each."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    from bge_m3_onnx_spark.config import DEFAULT_CONFIG
+    from bge_m3_onnx_spark.sources.transcripts import synth_transcripts
+    from bge_m3_onnx_spark.streaming.incremental import merge_delta
+
+    cfg = dataclasses.replace(DEFAULT_CONFIG, block_size=2)
+    base = build_index(tiny_transcripts, cfg=cfg, with_ordinals=True, with_blocks=True)
+    delta = synth_transcripts(spark, n_convs=21, turns_per_conv=10).filter("conv_id >= 'conv-000020'")
+    merged = merge_delta(spark, base, delta)
+    try:
+        df = {r["term"]: r["df"] for r in merged.terms.collect()}
+        n_blocks, stale = max(
+            (r["n"], r["term"])
+            for r in merged.blocks.groupBy("term")
+            .agg(F.count("*").alias("n"), F.first("block_range").alias("rng"))
+            .collect()
+            if r["rng"] != cfg.block_range_for_term(df[r["term"]], merged.n_docs)
+        )
+        assert n_blocks > 1
+        for k in (1, 3):
+            q = {1: stale, 2: f"{stale} spark"}
+            wand = _collect(run_queries_wand(spark, merged, q, k=k, force_wand=True))
+            assert wand == _collect(run_queries(spark, merged, q, k=k))
+    finally:
+        merged.release()
+        base.release()
 
 
 def test_distributed_phase2_with_block_max_theta(spark, skewed, monkeypatch):
@@ -331,7 +346,8 @@ def test_distributed_phase2_with_block_max_theta(spark, skewed, monkeypatch):
     stats: dict = {"capture_plans": True}
     wand = _collect(run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats))
     assert stats["theta_source"] == "block_max"
-    assert not _runs(stats["plan_theta"], "MapInArrow")
-    assert _runs(stats["plan_theta"], "Window")  # per-term top-k, not a full collect
+    assert not plan_runs(stats["plan_theta"], "MapInArrow")
+    assert plan_runs(stats["plan_theta"], "Window")  # per-term top-k, not a full collect
+    assert not plan_runs(stats["plan_final"], "MapInArrow")
     assert stats["ess_completion"] == "decoded"  # the full chain, unchanged
     assert wand == _collect(run_queries(spark, skewed, q, k=10))

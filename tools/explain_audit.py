@@ -2,7 +2,10 @@
 
 Audit goals (SCALE.md): broadcast joins where intended, pushed filters on the
 blocks/postings scans, column pruning (no text column at query time, no varbyte
-payloads in the WAND metadata pass), partial aggregation, no global sorts.
+payloads read by WAND), partial aggregation, no global sorts, and no Python task
+(``MapInArrow``) in any WAND query plan — the script exits 1 if one does.
+
+Run: ``python tools/explain_audit.py`` (writes EXPLAIN.md at the repo root).
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from bge_m3_onnx_spark.plans.checkpoint import load_materialized, materialize_index  # noqa: E402
+from bge_m3_onnx_spark.plans.wand import plan_runs  # noqa: E402
 from bge_m3_onnx_spark.session import get_spark  # noqa: E402
 from bge_m3_onnx_spark.sources.transcripts import synth_transcripts  # noqa: E402
 
@@ -154,23 +158,28 @@ def main() -> None:
             st["plan_theta"],
             [
                 "Fresh index (merges_since_compaction == 0): θ comes from block maxima "
-                "alone — NO MapInArrow (block decode) node, no rescore join, no window; "
-                "the plan is the metadata scan the driver-side phase 2 reads anyway",
+                "alone — no postings read, no rescore join, no window; the plan is the "
+                "metadata scan the driver-side phase 2 reads anyway",
                 "ReadSchema contains ONLY term/block_id/block_range/block_max_score",
-                "Merged, uncompacted indexes take the seed-decode θ instead "
-                "(theta_source = seed), whose plan does decode",
+                "Merged, uncompacted indexes take the seed θ instead (theta_source = "
+                "seed): its plan reads the seed blocks' postings from the postings "
+                "relation, still with no MapInArrow",
             ],
         )
     )
     sections.append(
         (
-            "WAND phase-2/3 surviving-block filter (literal IN over cached query-blocks)",
+            "WAND phase-2/3 surviving-block filter (literal IN over the query terms' postings)",
             st["plan_surviving"],
             [
-                "Filter is a literal (term = t AND block_id IN (...)) disjunction over the "
-                "cached qblocks relation — NO BroadcastExchange subjob for the surviving keys",
-                "InMemoryTableScan of qblocks (cached pushed-In(term) scan) — the parquet scan "
-                "below it reads only metadata columns",
+                "Filter is a literal predicate on the postings scan: term IN (essential "
+                "terms) when every block of those terms survives (as here), else a (term = t "
+                "AND block_id IN (...)) disjunction — NO BroadcastExchange subjob for the "
+                "surviving keys, NO MapInArrow",
+                "block_id = FLOOR(doc_ord / stored range), with the ranges as a literal map",
+                "The postings scan takes bucket IN partition pruning and pushes In(term); it "
+                "reads term/doc_ord/tf/dl only — the blocks' varbyte payload is never read. "
+                "The scan is cached (InMemoryRelation): phase 3 reads it more than once",
             ],
         )
     )
@@ -189,11 +198,14 @@ def main() -> None:
                 "Candidate-bounded side is the BROADCAST side of the doc_id resolution join "
                 "(docs relation never shuffles)",
                 "TakeOrderedAndProject for the final top-k — no global sort",
+                "NO MapInArrow: every block is read from the postings relation. Phase "
+                "3b's non-essential blocks are a left-semi join of the postings against "
+                "a BROADCAST (term, block_id) keyset; no Exchange repartitions posting "
+                "rows before the score aggregation",
                 "After driver-side phase 2 (ess_completion = skipped) no covering-block "
                 "completion is built: it cannot change the top-k. Distributed phase 2 "
-                "(ess_completion = decoded, e.g. merged indexes) adds a MapInArrow that "
-                "decodes the needed blocks that did not survive phase 2. The Union's "
-                "second MapInArrow here is phase 3b's non-essential decode",
+                "(ess_completion = decoded, e.g. merged indexes) adds one more such "
+                "semi-join for the needed blocks that did not survive phase 2",
             ],
         )
     )
@@ -207,11 +219,12 @@ def main() -> None:
             f"(ess_completion = {st1['ess_completion']})",
             st1["plan_final"],
             [
-                "Exactly ONE MapInArrow (the surviving-block decode): driver phase 2 "
-                "builds no covering-block completion, and a single-term query has no "
-                "non-essential term for phase 3b to decode",
+                "NO MapInArrow and ONE postings read (the cached surviving postings): "
+                "driver phase 2 builds no covering-block completion, and a single-term "
+                "query has no non-essential term for phase 3b to read",
                 "No candidates dropDuplicates exchange, no needed-blocks semi-join, no "
-                "second persist: the essential score is the plain aggregate of the decode",
+                "second persist: the essential score is the plain aggregate of the "
+                "surviving postings",
             ],
         )
     )
@@ -278,6 +291,10 @@ def main() -> None:
             f.write("\n```\n" + plan + "```\n")
     print("wrote EXPLAIN.md")
     spark.stop()
+    python_tasks = [t for t, plan, _ in sections if t.startswith("WAND") and plan_runs(plan, "MapInArrow")]
+    if python_tasks:
+        print("WAND plans running a MapInArrow:", *python_tasks, sep="\n  ", file=sys.stderr)
+        sys.exit(1)
 
 
 if __name__ == "__main__":
