@@ -576,7 +576,7 @@ def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "term",
             "df_t",
-            (F.col("tf") * idf_col(F.col("df_t").cast("double"), idx.n_docs)).alias("tfidf"),
+            (F.col("tf") * F.expr(idf_col("CAST(df_t AS DOUBLE)", idx.n_docs))).alias("tfidf"),
         )
         .orderBy(F.desc("tfidf"), F.asc("term"))
         .limit(_MLT_TOP_TERMS)
@@ -930,7 +930,7 @@ def q_score_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     qt = query_terms_df(spark, _EXPLAIN_QUERY, CFG).join(idx.terms, "term")
     scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
     top1 = topk(scored, k=1).select("doc_id")
-    qt2 = qt.select("term", idf_col(F.col("df").cast("double"), idx.n_docs).alias("idf"), "df")
+    qt2 = qt.selectExpr("term", f"{idf_col('CAST(df AS DOUBLE)', idx.n_docs)} AS idf", "df")
     per_term = idx.postings.join(F.broadcast(qt2), "term").join(F.broadcast(top1), "doc_id")
     return per_term.select(
         "doc_id",
@@ -939,7 +939,7 @@ def q_score_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "df",
         F.round("idf", 5).alias("idf_r"),
         F.round(
-            bm25_term_score(F.col("tf"), F.col("dl"), F.col("idf"), idx.avgdl, CFG), 5
+            F.expr(bm25_term_score("tf", "dl", "idf", idx.avgdl, CFG)), 5
         ).alias("contrib_r"),
     )
 
@@ -1221,7 +1221,7 @@ def q_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = conv_tf.join(tdf, "term").select(
         "conv_id",
         "term",
-        (F.col("ctf") * idf_col(F.col("df").cast("double"), n_docs)).alias("w"),
+        (F.col("ctf") * F.expr(idf_col("CAST(df AS DOUBLE)", n_docs))).alias("w"),
     )
     win = Window.partitionBy("conv_id").orderBy(F.desc("w"), F.asc("term"))
     return (

@@ -142,8 +142,8 @@ def score_bm25f(
     broadcast. Two hash aggregates over the candidate set: per-(query, term, doc)
     pseudo-frequency sum across fields, then per-(query, doc) saturated-idf sum."""
     fw = field_weights or DEFAULT_FIELD_WEIGHTS
-    qt = query_terms.select(
-        "query_id", "term", idf_col(F.col("df").cast("double"), n_docs).alias("idf")
+    qt = query_terms.selectExpr(
+        "query_id", "term", f"{idf_col('CAST(df AS DOUBLE)', n_docs)} AS idf"
     )
     matched = fpostings.join(F.broadcast(qt), "term")
     contrib = matched.select(

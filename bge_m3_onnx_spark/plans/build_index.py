@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
+from bge_m3_onnx_spark.functions.sql_literal import sql_in
 from bge_m3_onnx_spark.operators import postings as P
 
 
@@ -67,16 +68,18 @@ class InvertedIndex:
         """Postings restricted to ``terms``: pushed ``term IN`` always; plus
         pushed ``bucket IN`` partition pruning when the index is materialized
         in the bucketed layout. Identical rows either way (bucket is a pure
-        function of term, pinned against Spark by tests/test_hashing.py)."""
+        function of term, pinned against Spark by tests/test_hashing.py). The
+        predicate is one SQL expression (functions/sql_literal.py), not one
+        py4j call per term."""
         if not terms:
             return self.postings.filter(F.lit(False))
-        pred = F.col("term").isin(list(terms))
+        pred = sql_in("term", terms)
         if self.term_buckets and self.postings_bucketed is not None:
             from bge_m3_onnx_spark.functions.hashing import term_bucket
 
             bs = sorted({term_bucket(t, self.term_buckets) for t in terms})
             return self.postings_bucketed.filter(
-                F.col("bucket").isin(bs) & pred
+                f"{sql_in('bucket', bs)} AND {pred}"
             ).drop("bucket")
         return self.postings.filter(pred)
 
@@ -86,13 +89,13 @@ class InvertedIndex:
         assert self.blocks is not None
         if not terms:
             return self.blocks.filter(F.lit(False))
-        pred = F.col("term").isin(list(terms))
+        pred = sql_in("term", terms)
         if self.term_buckets and self.blocks_bucketed is not None:
             from bge_m3_onnx_spark.functions.hashing import term_bucket
 
             bs = sorted({term_bucket(t, self.term_buckets) for t in terms})
             return self.blocks_bucketed.filter(
-                F.col("bucket").isin(bs) & pred
+                f"{sql_in('bucket', bs)} AND {pred}"
             ).drop("bucket")
         return self.blocks.filter(pred)
 
@@ -123,7 +126,7 @@ class InvertedIndex:
         NEW index), so staleness is impossible."""
         missing = [t for t in term_list if t not in self._df_memo]
         if missing:
-            for r in self.terms.filter(F.col("term").isin(missing)).collect():
+            for r in self.terms.filter(sql_in("term", missing)).collect():
                 self._df_memo[r["term"]] = int(r["df"])
             for t in missing:
                 self._df_memo.setdefault(t, 0)

@@ -12,9 +12,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
+from bge_m3_onnx_spark.functions.sql_literal import sql_literal
 from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
 from bge_m3_onnx_spark.operators.bm25 import (
+    TERM_SORTED_CONTRIBS,
     bm25_term_score,
+    fold_contribs,
     idf_col,
     sum_scores_deterministic,
     topk,
@@ -98,30 +101,19 @@ def run_queries(
     qids_by_term: dict[str, list[int]] = {}
     for qid, t, _ in qt_rows:
         qids_by_term.setdefault(t, []).append(qid)
-    qids_map = F.create_map(
-        *[
-            x
-            for t, qs in sorted(qids_by_term.items())
-            for x in (F.lit(t), F.array(*[F.lit(int(q)) for q in sorted(qs)]))
-        ]
-    )
+    # Each literal relation is ONE SQL expression (functions/sql_literal.py):
+    # built from per-value F.lit calls it costs a py4j round trip per value.
+    qids_map = sql_literal({t: sorted(qs) for t, qs in sorted(qids_by_term.items())})
     # df as a DOUBLE literal per term: idf is then computed with the SAME
     # Spark-side idf_col expression as before (df column cast to double), so
     # scores stay bit-identical to the r5 broadcast-join plan.
-    df_lit = F.create_map(
-        *[x for t in hit_terms for x in (F.lit(t), F.lit(float(df_map[t])))]
-    )
-    per_term = postings.select(
-        F.explode(F.element_at(qids_map, F.col("term"))).alias("query_id"),
+    df_lit = sql_literal({t: float(df_map[t]) for t in hit_terms})
+    idf = idf_col(f"element_at({df_lit}, term)", idx.n_docs)
+    per_term = postings.selectExpr(
+        f"explode(element_at({qids_map}, term)) AS query_id",
         "doc_id",
         "term",
-        bm25_term_score(
-            F.col("tf"),
-            F.col("dl"),
-            idf_col(F.element_at(df_lit, F.col("term")), idx.n_docs),
-            idx.avgdl,
-            cfg,
-        ).alias("s"),
+        f"{bm25_term_score('tf', 'dl', idf, idx.avgdl, cfg)} AS s",
     )
     # Driver-sized exchange: an explicit hash repartition on the agg keys
     # replaces the session-default exchange — the aggregate reuses this
@@ -133,25 +125,15 @@ def run_queries(
             int(qid): len(set(tokenize_text(qtext, cfg.max_tokens, cfg.special_terms)))
             for qid, qtext in queries.items()
         }
-        need = F.create_map(
-            *[
-                x
-                for q, n_q in sorted(n_terms.items())
-                for x in (F.lit(int(q)), F.lit(int(n_q)))
-            ]
-        )
+        need = sql_literal({q: n_q for q, n_q in sorted(n_terms.items())})
         # same deterministic term-sorted fold as the disjunctive path; the
         # matched-term count rides as size(cs) — the AND filter adds ZERO
         # extra shuffles over the disjunctive plan.
         scored = (
             per_term.groupBy("query_id", "doc_id")
-            .agg(F.array_sort(F.collect_list(F.struct("term", "s"))).alias("cs"))
-            .filter(F.size("cs") == F.element_at(need, F.col("query_id")))
-            .select(
-                "query_id",
-                "doc_id",
-                F.aggregate("cs", F.lit(0.0), lambda a, x: a + x["s"]).alias("score"),
-            )
+            .agg(F.expr(f"{TERM_SORTED_CONTRIBS} AS cs"))
+            .filter(f"size(cs) = element_at({need}, query_id)")
+            .selectExpr("query_id", "doc_id", f"{fold_contribs('cs')} AS score")
         )
     else:
         scored = sum_scores_deterministic(per_term, ["query_id", "doc_id"])

@@ -71,10 +71,13 @@ fixture):
 
 Driver/executor split: per-query scalars (term maxima, Σmax, θ, essential sets)
 are O(|q|·terms) rows — they are COLLECTED to the driver (ONE fused collect, r3)
-and re-broadcast as literal relations, so the distributed plan sees only: one
-metadata scan with a pushed bound filter, block-filtered postings scans, hash
-aggregations, one tiny window. Postings carry dl, so no phase joins the docs
-table; only the final k·|q| rows join back for doc_id.
+and re-enter the plan as literal relations, each ONE SQL expression rendered by
+functions/sql_literal.py (one JVM call per relation, not one per value), so the
+distributed plan sees only: one metadata scan with a pushed bound filter,
+block-filtered postings scans, hash aggregations, one tiny window. Postings
+carry dl and doc_id, so no phase joins the docs table: the fold groups by
+(query_id, doc_ord, doc_id) — doc_id is a function of doc_ord — and the top-k
+ranks (score DESC, doc_id ASC) on those rows directly.
 
 Routing (r2, calibrated r3): WAND's driver round-trips (2 jobs) only pay off
 when pruning skips far more scoring work than the round-trips cost. Σ df over the
@@ -99,18 +102,18 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
+from bge_m3_onnx_spark.functions.sql_literal import sql_in, sql_literal
 from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
 from bge_m3_onnx_spark.operators.bm25 import bm25_term_score, idf_col, sum_scores_deterministic, topk
 from bge_m3_onnx_spark.plans.build_index import InvertedIndex
@@ -153,11 +156,11 @@ def _block_max_theta(
     return theta
 
 
-def _block_of(ords: Column, rng: Column) -> Column:
-    """Block key of an ordinal under a term's STORED range: the build's own
-    ``floor(doc_ord / block_range)`` (operators/compress.py), so it also maps
-    ordinals into blocks a merge kept from older corpus stats."""
-    return F.floor(ords / rng).cast("long").alias("block_id")
+def _block_of(ords: str, rng: str) -> str:
+    """SQL text of the block key of an ordinal under a term's STORED range: the
+    build's own ``floor(doc_ord / block_range)`` (operators/compress.py), so it
+    also maps ordinals into blocks a merge kept from older corpus stats."""
+    return f"CAST(floor({ords} / {rng}) AS BIGINT) AS block_id"
 
 
 def _blocks_of(postings: DataFrame, keys: DataFrame) -> DataFrame:
@@ -194,6 +197,20 @@ def plan_runs(plan: str, node: str) -> bool:
         if node in line:
             return True
     return False
+
+
+def plan_reads(plan: str, rel: DataFrame) -> bool:
+    """True iff the formatted plan ``plan`` scans the source of relation
+    ``rel``: its cached relation (named by its attribute ids) or the files of
+    its Parquet layout. The plan audits use it to check that no WAND plan reads
+    the docs relation."""
+    lines = _fmt_plan(rel).splitlines()
+    for i, line in enumerate(lines):
+        if line.startswith("Location: "):
+            return line in plan
+        if line.endswith(") InMemoryRelation") and lines[i + 1].startswith("Arguments: ["):
+            return lines[i + 1].split("], ")[0] + "]" in plan
+    raise ValueError("relation has neither a cached nor a file source")
 
 
 def _phase2_driver(
@@ -396,15 +413,16 @@ def _run_queries_wand_forced(
     qt_stats_rows = [(r["query_id"], r["term"], int(r["df"])) for r in qt_rows]
     qterms_list = sorted({t for _, t, _ in qt_stats_rows})
 
-    # ---- driver-known LITERAL relations (r4 machinery-constant cut) ----
-    # The r3 event-log profile (WAND_CAL_r03.json) showed the per-batch cost is
-    # a ~10-25 s CONSTANT: ~25 broadcast-exchange subjobs (~6 s) + ~4 s of
-    # Catalyst planning, invariant to corpus size. Most of those exchanges were
-    # tiny createDataFrame sides (query terms, essential sets, per-term ranges)
-    # being broadcast-joined. Every one of those relations is already known on
-    # the driver, so it is inlined as a map/array literal instead:
-    # explode(element_at(map, key)) IS the inner join against a driver-known
-    # relation — no exchange, no subjob, and a much smaller plan tree.
+    # ---- driver-known LITERAL relations ----
+    # Every relation already known on the driver (query terms, df, θ, ranges,
+    # maxima, essential sets, surviving blocks) enters the plan as a literal,
+    # never as a createDataFrame side: explode(element_at(map, key)) IS the
+    # inner join against a driver-known relation, with no exchange and no
+    # subjob (the r3 profile, WAND_CAL_r03.json, found ~25 such broadcast
+    # subjobs per batch). Each literal relation is ONE SQL expression rendered
+    # by functions/sql_literal.py and parsed in one JVM call: built from
+    # per-value F.lit calls, the same maps, Column trees and IN lists cost ~1,500
+    # py4j round trips per request, most of a warm request's driver time.
     # (Measured anti-optimization note: coalesce(1) on parallelized tiny
     # relations REGRESSED the machinery 3x — literals sidestep that entirely.)
     _terms_by_qid: dict[int, list[str]] = {}
@@ -415,52 +433,39 @@ def _run_queries_wand_forced(
         _qids_by_term.setdefault(_t, []).append(int(_q))
         _df_by_term[_t] = int(_d)
 
-    def _qids_map_lit(by_term: dict[str, list[int]]):
-        return F.create_map(
-            *[
-                x
-                for t, qs in sorted(by_term.items())
-                for x in (F.lit(t), F.array(*[F.lit(int(q)) for q in sorted(qs)]))
-            ]
-        )
+    def _list_map(by_key: dict) -> str:
+        """{key: [values]} as one SQL map literal, keys and values sorted."""
+        return sql_literal({key: sorted(vs) for key, vs in sorted(by_key.items())})
 
-    all_qids_map = _qids_map_lit(_qids_by_term)
+    all_qids_map = _list_map(_qids_by_term)
+    q2terms_lit = _list_map(_terms_by_qid)
     # df as a DOUBLE literal per term: idf is then computed with the SAME
     # Spark-side idf_col expression the exact path uses — java.lang.Math.log
     # and Python math.log can disagree at the last ulp, and WAND's
     # rank-identity with the exact plan must not depend on libm flavor.
-    df_map_lit = F.create_map(
-        *[x for t, d in sorted(_df_by_term.items()) for x in (F.lit(t), F.lit(float(d)))]
-    )
-    q2terms_lit = F.create_map(
-        *[
-            x
-            for qid, ts in sorted(_terms_by_qid.items())
-            for x in (F.lit(int(qid)), F.array(*[F.lit(t) for t in sorted(ts)]))
-        ]
+    df_map_lit = sql_literal({t: float(d) for t, d in sorted(_df_by_term.items())})
+    score_sql = bm25_term_score(
+        "tf", "dl", idf_col(f"element_at({df_map_lit}, term)", n), avgdl, cfg
     )
 
-    def _score_postings_lit(postings: DataFrame, qids_map) -> DataFrame:
-        """block postings (term, doc_ord, tf, dl) × literal query-term map →
-        per-doc sums, via explode instead of a broadcast join. Summation stays
-        the term-sorted deterministic fold shared with the exact path."""
-        per_term = postings.select(
-            F.explode(F.element_at(qids_map, F.col("term"))).alias("query_id"),
+    def _score_postings_lit(postings: DataFrame, qids_map: str) -> DataFrame:
+        """block postings (term, doc_id, doc_ord, tf, dl) × literal query-term
+        map → per-doc sums, via explode instead of a broadcast join. doc_id
+        rides along as a group key (it is a function of doc_ord), so no phase
+        ever joins the docs relation. Summation stays the term-sorted
+        deterministic fold shared with the exact path."""
+        per_term = postings.selectExpr(
+            f"explode(element_at({qids_map}, term)) AS query_id",
             "doc_ord",
+            "doc_id",
             "term",
-            bm25_term_score(
-                F.col("tf"),
-                F.col("dl"),
-                idf_col(F.element_at(df_map_lit, F.col("term")), n),
-                avgdl,
-                cfg,
-            ).alias("s"),
+            f"{score_sql} AS s",
         )
-        return sum_scores_deterministic(per_term, ["query_id", "doc_ord"])
+        return sum_scores_deterministic(per_term, ["query_id", "doc_ord", "doc_id"])
 
     # every block's postings ("Reading a block", module docstring); block_id
     # is attached once the stored ranges are known
-    qpostings = idx.pruned_postings(qterms_list).select("term", "doc_ord", "tf", "dl")
+    qpostings = idx.pruned_postings(qterms_list)
     _width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Every persisted frame is registered so an exception anywhere in the
     # phases below cannot leak cached partitions (ADVICE r3); unpersist is
@@ -551,9 +556,7 @@ def _run_queries_wand_forced(
             # query-term block row anyway; the distributed branch collects only
             # each term's top-k. θ, tmax and ranges come from the same rows —
             # no block read, no rescore.
-            theta_df = (qmeta if _driver_phase2 else _top_blocks(k)).select(
-                "term", "block_id", "block_range", "block_max_score"
-            )
+            theta_df = qmeta if _driver_phase2 else _top_blocks(k).drop("rk")
         else:
             # ---- θ from seed candidates, EXACT-rescored (merged indexes) ----
             # Seeds must plausibly contain k strong docs per query or θ
@@ -577,22 +580,24 @@ def _run_queries_wand_forced(
             # a broadcast join of the per-term ranges (|terms| rows)
             seed_post = qpostings.join(
                 F.broadcast(ranges_sel.select("term", "rng")), "term"
-            ).select("term", "doc_ord", "tf", "dl", _block_of(F.col("doc_ord"), F.col("rng")))
+            ).selectExpr("term", "doc_id", "doc_ord", "tf", "dl", _block_of("doc_ord", "rng"))
             seed_scores = _score_postings_lit(_blocks_of(seed_post, seed_sel), all_qids_map)
-            w_theta = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_ord"))
+            rk_theta = (
+                "row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_ord ASC) AS rk"
+            )
             seed_top = (
-                seed_scores.withColumn("rk", F.row_number().over(w_theta))
-                .filter(F.col("rk") <= k)
+                seed_scores.selectExpr("*", rk_theta)
+                .filter(f"rk <= {int(k)}")
                 .select("query_id", "doc_ord")
             )
             seed_needed = (
                 # query→terms via literal explode; only the per-term rng (still
                 # distributed pre-collect) needs a real broadcast join here
-                seed_top.select(
-                    "doc_ord", F.explode(F.element_at(q2terms_lit, F.col("query_id"))).alias("term")
+                seed_top.selectExpr(
+                    "doc_ord", f"explode(element_at({q2terms_lit}, query_id)) AS term"
                 )
                 .join(F.broadcast(ranges_sel.select("term", "rng")), "term")
-                .select("term", _block_of(F.col("doc_ord"), F.col("rng")))
+                .selectExpr("term", _block_of("doc_ord", "rng"))
                 .dropDuplicates(_KEYS)
             )
             seed_exact = _score_postings_lit(
@@ -601,22 +606,18 @@ def _run_queries_wand_forced(
             # ONE collect for θ AND the per-term metadata (tagged union) — the
             # scalars phases 2-3 need on the driver to build literal maps.
             theta_rows = (
-                seed_exact.withColumn("rk", F.row_number().over(w_theta))
-                .filter(F.col("rk") == k)
-                .select(
-                    F.lit("theta").alias("tag"),
-                    F.col("query_id").cast("long").alias("qid"),
-                    F.lit(None).cast("string").alias("term"),
-                    F.col("score").alias("v1"),
-                    F.lit(None).cast("long").alias("v2"),
+                seed_exact.selectExpr("*", rk_theta)
+                .filter(f"rk = {int(k)}")
+                .selectExpr(
+                    "'theta' AS tag",
+                    "CAST(query_id AS BIGINT) AS qid",
+                    "CAST(NULL AS STRING) AS term",
+                    "score AS v1",
+                    "CAST(NULL AS BIGINT) AS v2",
                 )
             )
-            meta_rows = ranges_sel.select(
-                F.lit("meta").alias("tag"),
-                F.lit(None).cast("long").alias("qid"),
-                "term",
-                F.col("tmax").alias("v1"),
-                F.col("rng").alias("v2"),
+            meta_rows = ranges_sel.selectExpr(
+                "'meta' AS tag", "CAST(NULL AS BIGINT) AS qid", "term", "tmax AS v1", "rng AS v2"
             )
             theta_df = theta_rows.unionByName(meta_rows)
         if stats_out is not None and stats_out.get("capture_plans"):
@@ -660,30 +661,31 @@ def _run_queries_wand_forced(
                 [],
                 "query_id int, rank int, doc_id string, score double",
             )
-        theta_map = F.create_map(
-            *[
-                x
+        theta_map = sql_literal(
+            {
+                qid: float(theta.get(qid, float("-inf")))
                 for qid in sorted({q for q, _, _ in qt_stats_rows})
-                for x in (F.lit(int(qid)), F.lit(float(theta.get(qid, float("-inf")))))
-            ]
+            }
         )
-        range_map = F.create_map(
-            *[x for t, r in sorted(range_by_term.items()) for x in (F.lit(t), F.lit(r).cast("long"))]
+        # the stored ranges stay BIGINT, as the build's .cast("long") made them
+        range_map = (
+            f"CAST({sql_literal(dict(sorted(range_by_term.items())))} AS MAP<STRING, BIGINT>)"
         )
+        range_of_term = f"element_at({range_map}, term)"
         # the query terms' postings keyed by their block under the stored range
-        qpost = qpostings.select(
-            "*", _block_of(F.col("doc_ord"), F.element_at(range_map, F.col("term")))
+        qpost = qpostings.selectExpr(
+            "term", "doc_id", "doc_ord", "tf", "dl", _block_of("doc_ord", range_of_term)
         )
         if not _blk_lists:
-            block_meta = qmeta.select(
-                "term", "block_id", (F.col("block_id") * F.col("block_range")).alias("x"), "block_max_score"
+            block_meta = qmeta.selectExpr(
+                "term", "block_id", "block_id * block_range AS x", "block_max_score"
             )
             # Same 1e-6 pad as the driver branch: block maxima come from the
             # build's NumPy kernel and the seed θ from the query plan's score
             # expression, so a top-k doc's own block max can sit an ulp BELOW
             # θ (measured on a merged skewed index: the 10th doc of "the" was
             # pruned). The pad only admits blocks — lossless.
-            theta_padded = F.element_at(theta_map, F.col("query_id")) - F.lit(1e-6)
+            theta_padded = f"element_at({theta_map}, query_id) - {sql_literal(1e-6)}"
             # distinct segment boundaries per query (starts of any query term's blocks),
             # PRE-FILTERED by the classic bound before the ×|q| fan-out (r2 advisor: a
             # stopword term contributes millions of boundaries, and expanding every one
@@ -693,52 +695,43 @@ def _run_queries_wand_forced(
             # so s_q(x) ≥ θ implies EVERY contributing term's classic bound clears θ —
             # filtering on min(classic) ≥ θ is lossless and removes the fan-out for
             # segments only a weak stopword block opened.
-            tmax_map = F.create_map(
-                *[x for t, m in sorted(tmax.items()) for x in (F.lit(t), F.lit(float(m)))]
-            )
-            qsum = {
-                qid: sum(tmax.get(t, 0.0) for q2, t, _ in qt_stats_rows if q2 == qid)
-                for qid in sorted({q for q, _, _ in qt_stats_rows})
-            }
-            qsum_map = F.create_map(
-                *[x for qid, s in sorted(qsum.items()) for x in (F.lit(int(qid)), F.lit(float(s)))]
+            tmax_map = sql_literal({t: float(m) for t, m in sorted(tmax.items())})
+            qsum_map = sql_literal(
+                {
+                    qid: float(sum(tmax.get(t, 0.0) for q2, t, _ in qt_stats_rows if q2 == qid))
+                    for qid in sorted({q for q, _, _ in qt_stats_rows})
+                }
             )
             bounds = (
-                block_meta.select(
+                block_meta.selectExpr(
                     "term",
                     "x",
                     "block_max_score",
-                    F.explode(F.element_at(all_qids_map, F.col("term"))).alias("query_id"),
+                    f"explode(element_at({all_qids_map}, term)) AS query_id",
                 )
                 .groupBy("query_id", "x")
                 .agg(
-                    F.min(
-                        F.col("block_max_score")
-                        + F.element_at(qsum_map, F.col("query_id"))
-                        - F.element_at(tmax_map, F.col("term"))
-                    ).alias("classic_bound")
+                    F.expr(
+                        f"min(block_max_score + element_at({qsum_map}, query_id)"
+                        f" - element_at({tmax_map}, term)) AS classic_bound"
+                    )
                 )
-                .filter(F.col("classic_bound") >= theta_padded)
+                .filter(f"classic_bound >= {theta_padded}")
                 .select("query_id", "x")
             )
             # active block of EVERY query term at each boundary; inner join drops terms
             # with no block there (they contribute 0 to the sum — correct)
             active = (
-                bounds.select(
-                    "query_id", "x", F.explode(F.element_at(q2terms_lit, F.col("query_id"))).alias("term")
+                bounds.selectExpr(
+                    "query_id", "x", f"explode(element_at({q2terms_lit}, query_id)) AS term"
                 )
-                .select(
-                    "query_id",
-                    "x",
-                    "term",
-                    _block_of(F.col("x"), F.element_at(range_map, F.col("term"))),
-                )
+                .selectExpr("query_id", "x", "term", _block_of("x", range_of_term))
                 .join(block_meta.select("term", "block_id", "block_max_score"), _KEYS)
             )
             surviving_x = (
                 active.groupBy("query_id", "x")
-                .agg(F.sum("block_max_score").alias("s"))
-                .filter(F.col("s") >= theta_padded)
+                .agg(F.expr("sum(block_max_score) AS s"))
+                .filter(f"s >= {theta_padded}")
             )
         # ---- MaxScore essential-term partition (driver-side, from θ + tmax) ----
         # Sort each query's terms by global max ascending; the maximal prefix whose
@@ -780,13 +773,11 @@ def _run_queries_wand_forced(
             ness_sum[qid] = cum
             ness_pairs_rows += [(qid, t) for _, t in tq[:n_ness]]
             ess_pairs_rows += [(qid, t) for _, t in tq[n_ness:]]
-        ness_map = F.create_map(
-            *[x for qid in qids for x in (F.lit(int(qid)), F.lit(float(ness_sum[qid])))]
-        )
+        ness_map = sql_literal({qid: float(ness_sum[qid]) for qid in qids})
         # essential/non-essential sets as LITERALS (driver-computed above):
-        # term → qids it is essential for; qid → its essential terms; and, with
-        # the collected per-term ranges, qid → array<struct<term, rng>> so the
-        # covering-block derivations below are pure projections, not joins.
+        # term → qids it is essential for; qid → its essential terms. With the
+        # range map, the covering-block derivations below are pure
+        # projections, not joins.
         _ess_by_term: dict[str, list[int]] = {}
         _ess_by_qid: dict[int, list[str]] = {}
         for _q, _t in ess_pairs_rows:
@@ -795,37 +786,19 @@ def _run_queries_wand_forced(
         _ness_by_qid: dict[int, list[str]] = {}
         for _q, _t in ness_pairs_rows:
             _ness_by_qid.setdefault(_q, []).append(_t)
-        ess_qids_map = _qids_map_lit(_ess_by_term)
+        ess_qids_map = _list_map(_ess_by_term)
+        q2ess_terms_lit = _list_map(_ess_by_qid)
 
-        def _term_rng_map_lit(by_qid: dict[int, list[str]]):
-            return F.create_map(
-                *[
-                    x
-                    for qid2, ts in sorted(by_qid.items())
-                    for x in (
-                        F.lit(int(qid2)),
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(t).alias("term"),
-                                    F.lit(int(range_by_term[t])).alias("rng"),
-                                )
-                                for t in sorted(ts)
-                                if t in range_by_term
-                            ]
-                        ),
-                    )
-                ]
+        def _covering_keys(docs: DataFrame, q2terms: str) -> DataFrame:
+            """(term, block_id) of every block that can hold a posting of a
+            (query_id, doc_ord) row for the query's ``q2terms`` terms: block_id
+            = doc_ord // the term's STORED range — valid even for blocks kept
+            across incremental merges under older corpus stats."""
+            return (
+                docs.selectExpr("doc_ord", f"explode(element_at({q2terms}, query_id)) AS term")
+                .selectExpr("term", _block_of("doc_ord", range_of_term))
+                .dropDuplicates(_KEYS)
             )
-
-        q2ess_tr_lit = _term_rng_map_lit(_ess_by_qid)
-        q2ess_terms_lit = F.create_map(
-            *[
-                x
-                for qid2, ts in sorted(_ess_by_qid.items())
-                for x in (F.lit(int(qid2)), F.array(*[F.lit(t) for t in sorted(ts)]))
-            ]
-        )
 
         # back to block keys: the boundary x lies in block x // range_t of each
         # ESSENTIAL term (candidate sources; non-essential blocks are never
@@ -862,14 +835,13 @@ def _run_queries_wand_forced(
             # and wrecked codegen — past the cap a broadcast semi-join against a
             # driver-built relation is one cheap subjob instead.
             if _full_survival:
-                _surv_expr = F.col("term").isin(_ess_terms_all)
+                _surv_expr = sql_in("term", _ess_terms_all)
             elif _n_keys <= 2_000:
                 # literal IN-filters: no join, no broadcast-exchange subjob
-                _surv_expr = F.lit(False)
-                for _t2, _ids in sorted(surv_by_term.items()):
-                    _surv_expr = _surv_expr | (
-                        (F.col("term") == F.lit(_t2)) & F.col("block_id").isin(_ids)
-                    )
+                _surv_expr = " OR ".join(
+                    f"(term = {sql_literal(_t2)} AND {sql_in('block_id', _ids)})"
+                    for _t2, _ids in sorted(surv_by_term.items())
+                ) or "false"
             else:
                 surviving_keys = spark.createDataFrame(
                     [(t2, int(b2)) for t2, ids2 in sorted(surv_by_term.items()) for b2 in ids2],
@@ -877,10 +849,10 @@ def _run_queries_wand_forced(
                 )
         else:
             surviving_keys = (
-                surviving_x.select(
-                    "x", F.explode(F.element_at(q2ess_terms_lit, F.col("query_id"))).alias("term")
+                surviving_x.selectExpr(
+                    "x", f"explode(element_at({q2ess_terms_lit}, query_id)) AS term"
                 )
-                .select("term", _block_of(F.col("x"), F.element_at(range_map, F.col("term"))))
+                .selectExpr("term", _block_of("x", range_of_term))
                 .dropDuplicates(_KEYS)
             )
         if _surv_expr is not None:
@@ -890,7 +862,7 @@ def _run_queries_wand_forced(
 
         def _not_surv(keys: DataFrame) -> DataFrame:
             if _surv_expr is not None:
-                return keys.filter(~_surv_expr)
+                return keys.filter(f"NOT ({_surv_expr})")
             return keys.join(F.broadcast(surviving_keys), _KEYS, "left_anti")
 
         # ---- scoring-volume-aware width (r6: partitioning from data size) ----
@@ -912,12 +884,17 @@ def _run_queries_wand_forced(
                 spark.conf.set("spark.sql.shuffle.partitions", str(_w2))
 
         # ---- phase 3a: candidates + exact ESSENTIAL score ----
-        # surviving's postings are persisted: they feed the candidate derivation
-        # AND are the bulk of the essential-rescore input — only the needed-but-
-        # not-surviving remainder is read on top (_not_surv drops surviving keys).
-        surv_post = surviving.persist()
-        _persisted.append(surv_post)
+        # surviving's postings are persisted when phase 3 reads them twice: the
+        # completion chain derives candidates from them and rescores them, and
+        # phase 3b unions them with the non-essential blocks — only the
+        # needed-but-not-surviving remainder is read on top (_not_surv drops
+        # surviving keys). Read once (skipped completion, no non-essential
+        # term), a persist only adds cache registration and a cache write.
         ess_completion = "skipped" if _blk_lists else "decoded"
+        surv_post = surviving
+        if ess_completion == "decoded" or ness_pairs_rows:
+            surv_post = surviving.persist()
+            _persisted.append(surv_post)
         if stats_out is not None:
             stats_out["ess_completion"] = ess_completion
         if ess_completion == "skipped":
@@ -954,27 +931,15 @@ def _run_queries_wand_forced(
             # per-query candidates: docs in any surviving block of a term ESSENTIAL
             # to that query. Lazily persisted (no eager count — VERDICT r1).
             candidates = (
-                surv_post.select(
-                    F.explode(F.element_at(ess_qids_map, F.col("term"))).alias("query_id"), "doc_ord"
+                surv_post.selectExpr(
+                    f"explode(element_at({ess_qids_map}, term)) AS query_id", "doc_ord"
                 )
                 .dropDuplicates(["query_id", "doc_ord"])
                 .persist()
             )
             _persisted.append(candidates)
-            # blocks that can hold any posting of a candidate: block_id = ord // range
-            # with the range STORED in the blocks themselves (collected at rk=1 above)
-            # — valid even for blocks kept across incremental merges under older
-            # corpus stats.
-            needed_ess = (
-                candidates.select(
-                    "doc_ord", F.explode(F.element_at(q2ess_tr_lit, F.col("query_id"))).alias("tr")
-                )
-                .select(
-                    F.col("tr.term").alias("term"), _block_of(F.col("doc_ord"), F.col("tr.rng"))
-                )
-                .dropDuplicates(_KEYS)
-            )
-            extra_keys = _not_surv(needed_ess)
+            # blocks that can hold any essential posting of a candidate
+            extra_keys = _not_surv(_covering_keys(candidates, q2ess_terms_lit))
             full_ess = surv_post.unionByName(_blocks_of(qpost, extra_keys)).persist()
             _persisted.append(full_ess)
             s_ess = _score_postings_lit(
@@ -987,8 +952,8 @@ def _run_queries_wand_forced(
         # survivors pay the non-essential read. ε pads the float comparison
         # (scores are O(10); 1e-6 admits a few extra candidates, never drops one).
         _strong_cond = (
-            F.col("score") + F.element_at(ness_map, F.col("query_id"))
-            >= F.element_at(theta_map, F.col("query_id")) - F.lit(1e-6)
+            f"score + element_at({ness_map}, query_id)"
+            f" >= element_at({theta_map}, query_id) - {sql_literal(1e-6)}"
         )
 
         # ---- phase 3b: non-essential completion for the strong candidates ----
@@ -1002,17 +967,7 @@ def _run_queries_wand_forced(
         if ness_pairs_rows:
             strong = s_ess.filter(_strong_cond).select("query_id", "doc_ord").persist()
             _persisted.append(strong)
-            q2ness_tr_lit = _term_rng_map_lit(_ness_by_qid)
-            needed_non = (
-                strong.select(
-                    "doc_ord",
-                    F.explode(F.element_at(q2ness_tr_lit, F.col("query_id"))).alias("tr"),
-                )
-                .select(
-                    F.col("tr.term").alias("term"), _block_of(F.col("doc_ord"), F.col("tr.rng"))
-                )
-                .dropDuplicates(_KEYS)
-            )
+            needed_non = _covering_keys(strong, _list_map(_ness_by_qid))
             # a term can be essential for one query and non-essential for another —
             # excluding EVERY block already read (surviving via _not_surv,
             # extras via the anti-join) keeps postings duplicate-free (a
@@ -1038,11 +993,8 @@ def _run_queries_wand_forced(
                 scored = scored.persist()
                 _persisted.append(scored)
 
-        # map ordinals back to docIDs: scored is candidate-bounded (small), so it is
-        # BROADCAST against the docs relation — no shuffle of the 10^12-row docs table.
-        docs = idx.docs.select("doc_id", "doc_ord")
-        out = F.broadcast(scored).join(docs, "doc_ord").select("query_id", "doc_id", "score")
-        final_df = topk(out, k)
+        # doc_id came with the postings: the top-k reads no docs relation
+        final_df = topk(scored, k)
         if stats_out is not None and stats_out.get("capture_plans"):
             # plan-audit hook (tools/explain_audit.py): the returned frame is
             # localCheckpointed below, so its own explain() is opaque — capture

@@ -4,10 +4,11 @@ fixture query — block-max pruning is lossless (SURVEY.md §4.2)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from bge_m3_onnx_spark.plans.build_index import build_index
 from bge_m3_onnx_spark.plans.query import run_queries
-from bge_m3_onnx_spark.plans.wand import plan_runs, run_queries_wand
+from bge_m3_onnx_spark.plans.wand import plan_reads, plan_runs, run_queries_wand
 
 
 @pytest.fixture(scope="module")
@@ -205,7 +206,9 @@ def test_block_max_theta_is_lossless(spark, skewed, q, k):
     collect), never exceeds the true k-th score, and forced WAND stays
     bit-identical to the exact plan. Driver phase 2 builds no covering-block
     completion, and block postings are read from the postings relation: no
-    plan runs a Python task."""
+    plan runs a Python task. doc_id comes with the postings: the final plan
+    never reads the docs relation, and a batch of single-term queries (driver
+    phase 2, literal relations only) broadcasts nothing."""
     stats: dict = {"capture_plans": True}
     wand = _collect(run_queries_wand(spark, skewed, q, k=k, force_wand=True, stats_out=stats))
     exact = _collect(run_queries(spark, skewed, q, k=k))
@@ -215,9 +218,11 @@ def test_block_max_theta_is_lossless(spark, skewed, q, k):
     assert not plan_runs(stats["plan_theta"], "MapInArrow")
     assert not plan_runs(stats["plan_theta"], "Window")  # driver phase 2: a plain scan
     assert not plan_runs(stats["plan_final"], "MapInArrow")
+    assert not plan_reads(stats["plan_final"], skewed.docs)
     if all(" " not in text for text in q.values()):
         assert stats["essential_terms"] == {qid: [text] for qid, text in q.items()}
         assert stats["blocks_extra_decoded"] == 0
+        assert not plan_runs(stats["plan_final"], "BroadcastExchange")
     for qid in q:
         kth = [score for rank, _, score in exact.get(qid, []) if rank == k]
         if kth:
@@ -293,6 +298,7 @@ def test_merged_index_keeps_seed_theta(spark, skewed):
             assert stats["theta_source"] == source
             assert not plan_runs(stats["plan_theta"], "MapInArrow")
             assert not plan_runs(stats["plan_final"], "MapInArrow")
+            assert not plan_reads(stats["plan_final"], idx.docs)
             assert wand == _collect(run_queries(spark, idx, q, k=10))
     finally:
         merged.release()
@@ -305,8 +311,6 @@ def test_wand_keys_kept_blocks_by_stored_range(spark, tiny_transcripts):
     range; keyed by the range today's stats give, the same postings land in
     other blocks. Small blocks give the kept terms several blocks each."""
     import dataclasses
-
-    from pyspark.sql import functions as F
 
     from bge_m3_onnx_spark.config import DEFAULT_CONFIG
     from bge_m3_onnx_spark.sources.transcripts import synth_transcripts
@@ -349,5 +353,40 @@ def test_distributed_phase2_with_block_max_theta(spark, skewed, monkeypatch):
     assert not plan_runs(stats["plan_theta"], "MapInArrow")
     assert plan_runs(stats["plan_theta"], "Window")  # per-term top-k, not a full collect
     assert not plan_runs(stats["plan_final"], "MapInArrow")
+    assert not plan_reads(stats["plan_final"], skewed.docs)
     assert stats["ess_completion"] == "decoded"  # the full chain, unchanged
     assert wand == _collect(run_queries(spark, skewed, q, k=10))
+
+
+def test_py4j_round_trips_do_not_grow_with_the_batch(spark, built):
+    """Every driver-known relation enters the WAND plan as one SQL expression,
+    so the JVM round trips a forced request makes do not grow with the number
+    of literals: one single-term query and a batch of eight cost the same up
+    to a small constant (one py4j call per literal would add hundreds)."""
+    terms = [
+        r["term"]
+        for r in built.terms.orderBy(F.desc("df"), F.asc("term")).limit(8).collect()
+    ]
+    client = spark.sparkContext._gateway._gateway_client
+
+    def round_trips(queries: dict[int, str]) -> int:
+        run_queries_wand(spark, built, queries, k=10, force_wand=True)  # warm the df memo
+        send, calls = client.send_command, [0]
+
+        def counting(command, *args, **kwargs):
+            # releases of Java objects ("m\nd\n…") follow Python's garbage,
+            # much of it left by earlier calls: not counted
+            calls[0] += not command.startswith("m\nd\n")
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            run_queries_wand(spark, built, queries, k=10, force_wand=True)
+        finally:
+            del client.send_command  # back to the class's method
+        return calls[0]
+
+    one = round_trips({1: terms[0]})
+    eight = round_trips({i + 1: t for i, t in enumerate(terms)})
+    assert len(terms) == 8 and one > 0
+    assert abs(eight - one) <= 10, (one, eight)

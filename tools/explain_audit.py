@@ -2,16 +2,19 @@
 
 Audit goals (SCALE.md): broadcast joins where intended, pushed filters on the
 blocks/postings scans, column pruning (no text column at query time, no varbyte
-payloads read by WAND), partial aggregation, no global sorts, and no Python task
-(``MapInArrow``) in any WAND query plan — the script exits 1 if one does.
+payloads read by WAND), partial aggregation, no global sorts, no Python task
+(``MapInArrow``) and no read of the docs relation in any WAND query plan — the
+script exits 1 if one does.
 
-Run: ``python tools/explain_audit.py`` (writes EXPLAIN.md at the repo root).
+Run: ``python tools/explain_audit.py`` (writes EXPLAIN.md at the repo root,
+stamped with the commit it was generated at).
 """
 
 from __future__ import annotations
 
 import io
 import os
+import subprocess
 import sys
 from contextlib import redirect_stdout
 
@@ -21,7 +24,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from bge_m3_onnx_spark.plans.checkpoint import load_materialized, materialize_index  # noqa: E402
-from bge_m3_onnx_spark.plans.wand import plan_runs  # noqa: E402
+from bge_m3_onnx_spark.plans.wand import plan_reads, plan_runs  # noqa: E402
 from bge_m3_onnx_spark.session import get_spark  # noqa: E402
 from bge_m3_onnx_spark.sources.transcripts import synth_transcripts  # noqa: E402
 
@@ -31,6 +34,22 @@ def fmt(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def source_revision() -> str:
+    """``git rev-parse HEAD``, marked when the working tree differs from it."""
+
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
+        ).stdout.strip()
+
+    try:
+        head = git("rev-parse", "HEAD")
+        dirty = git("status", "--porcelain", "--untracked-files=no")
+    except (OSError, subprocess.CalledProcessError):
+        return "unknown (not a git checkout)"
+    return head + (" with uncommitted changes" if dirty else "")
 
 
 def main() -> None:
@@ -178,8 +197,9 @@ def main() -> None:
                 "surviving keys, NO MapInArrow",
                 "block_id = FLOOR(doc_ord / stored range), with the ranges as a literal map",
                 "The postings scan takes bucket IN partition pruning and pushes In(term); it "
-                "reads term/doc_ord/tf/dl only — the blocks' varbyte payload is never read. "
-                "The scan is cached (InMemoryRelation): phase 3 reads it more than once",
+                "reads term/doc_id/tf/dl/doc_ord only — the blocks' varbyte payload is never "
+                "read, and doc_id comes with the postings. Phase 3 caches these rows only "
+                "when it reads them twice (distributed completion, or a non-essential term)",
             ],
         )
     )
@@ -188,15 +208,15 @@ def main() -> None:
             f"WAND final scoring plan (pre-checkpoint, ess_completion = {st['ess_completion']})",
             st["plan_final"],
             [
-                "Per-term qids/idf/range lookups are literal create_map expressions — zero "
-                "broadcasts of query METADATA (the r2-era plan had ~25 tiny-relation "
-                "BroadcastExchange subjobs for these; r4 rewrite removed them)",
+                "Per-term qids/idf/range/θ lookups are literal maps, each parsed from ONE "
+                "SQL expression (functions/sql_literal.py): map(keys: [...], values: "
+                "[...]) below — zero broadcasts of query METADATA and one py4j call per "
+                "relation, not one per value",
                 "Every remaining BroadcastExchange carries a CANDIDATE-BOUNDED relation: "
                 "(term, block_id) surviving/needed keysets, (query_id, doc_ord) candidates, "
-                "strong doc_ords, and the final scored rows — all ≤ candidate volume, "
-                "never corpus-sized",
-                "Candidate-bounded side is the BROADCAST side of the doc_id resolution join "
-                "(docs relation never shuffles)",
+                "strong doc_ords — all ≤ candidate volume, never corpus-sized",
+                "NO docs relation scan and no doc_id resolution join: doc_id is read with "
+                "the postings and carried through the (query_id, doc_ord, doc_id) fold",
                 "TakeOrderedAndProject for the final top-k — no global sort",
                 "NO MapInArrow: every block is read from the postings relation. Phase "
                 "3b's non-essential blocks are a left-semi join of the postings against "
@@ -225,6 +245,8 @@ def main() -> None:
                 "No candidates dropDuplicates exchange, no needed-blocks semi-join, no "
                 "second persist: the essential score is the plain aggregate of the "
                 "surviving postings",
+                "NO BroadcastExchange at all: every driver-known relation is a literal, "
+                "and doc_id comes with the postings",
             ],
         )
     )
@@ -283,17 +305,25 @@ def main() -> None:
 
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("# EXPLAIN audit — key physical plans\n\n")
-        f.write("Generated by tools/explain_audit.py over a materialized index.\n")
+        f.write(
+            "Generated by tools/explain_audit.py over a materialized index at commit "
+            f"{source_revision()}.\n"
+        )
         for title, plan, checks in sections:
             f.write(f"\n## {title}\n\nChecklist:\n")
             for c in checks:
                 f.write(f"- {c}\n")
             f.write("\n```\n" + plan + "```\n")
     print("wrote EXPLAIN.md")
+    wand = [(t, plan) for t, plan, _ in sections if t.startswith("WAND")]
+    python_tasks = [t for t, plan in wand if plan_runs(plan, "MapInArrow")]
+    docs_reads = [t for t, plan in wand if plan_reads(plan, idx.docs)]
     spark.stop()
-    python_tasks = [t for t, plan, _ in sections if t.startswith("WAND") and plan_runs(plan, "MapInArrow")]
     if python_tasks:
         print("WAND plans running a MapInArrow:", *python_tasks, sep="\n  ", file=sys.stderr)
+    if docs_reads:
+        print("WAND plans reading the docs relation:", *docs_reads, sep="\n  ", file=sys.stderr)
+    if python_tasks or docs_reads:
         sys.exit(1)
 
 
