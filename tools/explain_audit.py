@@ -303,11 +303,12 @@ def main() -> None:
         )
     )
 
+    revision = source_revision()  # before EXPLAIN.md itself is rewritten
     with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("# EXPLAIN audit — key physical plans\n\n")
         f.write(
             "Generated by tools/explain_audit.py over a materialized index at commit "
-            f"{source_revision()}.\n"
+            f"{revision}.\n"
         )
         for title, plan, checks in sections:
             f.write(f"\n## {title}\n\nChecklist:\n")
