@@ -217,7 +217,8 @@ def main() -> None:
                 "strong doc_ords — all ≤ candidate volume, never corpus-sized",
                 "NO docs relation scan and no doc_id resolution join: doc_id is read with "
                 "the postings and carried through the (query_id, doc_ord, doc_id) fold",
-                "TakeOrderedAndProject for the final top-k — no global sort",
+                "WindowGroupLimit pre-prunes each query's rows before the rank window — "
+                "no global sort",
                 "NO MapInArrow: every block is read from the postings relation. Phase "
                 "3b's non-essential blocks are a left-semi join of the postings against "
                 "a BROADCAST (term, block_id) keyset; no Exchange repartitions posting "
@@ -239,9 +240,11 @@ def main() -> None:
             f"(ess_completion = {st1['ess_completion']})",
             st1["plan_final"],
             [
-                "NO MapInArrow and ONE postings read (the cached surviving postings): "
-                "driver phase 2 builds no covering-block completion, and a single-term "
-                "query has no non-essential term for phase 3b to read",
+                "NO MapInArrow and ONE postings read (the surviving postings, not cached: "
+                "read once): driver phase 2 builds no covering-block completion, and a "
+                "single-term query has no non-essential term for phase 3b to read. The "
+                "cached relation below is the scored rows, persisted only because "
+                "stats_out asks for diagnostic counts",
                 "No candidates dropDuplicates exchange, no needed-blocks semi-join, no "
                 "second persist: the essential score is the plain aggregate of the "
                 "surviving postings",
