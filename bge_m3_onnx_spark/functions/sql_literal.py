@@ -66,5 +66,9 @@ def sql_literal(value) -> str:
 
 
 def sql_in(column: str, values) -> str:
-    """``column IN (v1, v2, ...)`` over rendered ``values`` (non-empty)."""
+    """``column IN (v1, v2, ...)`` over rendered ``values``; ``false`` when
+    ``values`` is empty (SQL's ``IN ()`` does not parse), as ``isin([])``."""
+    values = list(values)
+    if not values:
+        return "false"
     return f"{column} IN ({', '.join(sql_literal(v) for v in values)})"

@@ -268,7 +268,8 @@ def _phase2_driver(
             q = np.unique(surv_x // int(range_by_term[t]))
             pos = np.minimum(np.searchsorted(bids, q), len(bids) - 1)
             exist = q[bids[pos] == q]
-            keys.setdefault(t, set()).update(int(v) for v in exist)
+            if len(exist):  # an essential term may have no block left at all
+                keys.setdefault(t, set()).update(int(v) for v in exist)
     return {t: sorted(v) for t, v in keys.items()}
 
 
@@ -884,17 +885,12 @@ def _run_queries_wand_forced(
                 spark.conf.set("spark.sql.shuffle.partitions", str(_w2))
 
         # ---- phase 3a: candidates + exact ESSENTIAL score ----
-        # surviving's postings are persisted when phase 3 reads them twice: the
-        # completion chain derives candidates from them and rescores them, and
-        # phase 3b unions them with the non-essential blocks — only the
-        # needed-but-not-surviving remainder is read on top (_not_surv drops
-        # surviving keys). Read once (skipped completion, no non-essential
-        # term), a persist only adds cache registration and a cache write.
+        # surviving's postings are persisted: they feed the candidate derivation
+        # AND are the bulk of the essential-rescore input — only the needed-but-
+        # not-surviving remainder is read on top (_not_surv drops surviving keys).
+        surv_post = surviving.persist()
+        _persisted.append(surv_post)
         ess_completion = "skipped" if _blk_lists else "decoded"
-        surv_post = surviving
-        if ess_completion == "decoded" or ness_pairs_rows:
-            surv_post = surviving.persist()
-            _persisted.append(surv_post)
         if stats_out is not None:
             stats_out["ess_completion"] = ess_completion
         if ess_completion == "skipped":

@@ -89,6 +89,9 @@ def test_strings_ignore_escaped_string_literals(spark):
 def test_in_predicate(spark):
     df = spark.createDataFrame([("it's",), ("x",), ("y\\",)], "term string")
     assert sorted(r[0] for r in df.filter(sql_in("term", ["it's", "y\\"])).collect()) == ["it's", "y\\"]
+    # an empty list is an always-false predicate (``IN ()`` does not parse)
+    assert df.filter(sql_in("term", [])).count() == 0
+    assert df.filter(f"NOT ({sql_in('term', [])})").count() == 3
 
 
 @pytest.mark.parametrize(

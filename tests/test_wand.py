@@ -276,6 +276,43 @@ def test_skipped_completion_with_pruned_essential_block(spark, monkeypatch):
         assert wand == exact
 
 
+def test_essential_term_with_every_block_pruned(spark, monkeypatch):
+    """An essential term whose every block lies in pruned segments leaves no
+    surviving block of its own; the surviving-block predicate must still be a
+    valid (and lossless) filter on both phase-2 branches.
+
+    block_size 2 over 32 docs (ordinal = rank of doc_id). "tt" (df 8) has one
+    block, [0, 8), and nothing else lives there, so that segment's bound is
+    tmax(tt) < θ = the 2nd "uu" block max. "aa" (long docs in [16, 32)) is
+    non-essential, and tmax(aa) + tmax(tt) ≥ θ makes "tt" essential."""
+    import dataclasses
+    import datetime as _dt
+
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+    from bge_m3_onnx_spark.config import DEFAULT_CONFIG
+
+    long = " zz" * 40
+    texts = (
+        ["tt zz zz zz zz"] + ["tt" + long] * 7 + ["zz"] * 8
+        + ["uu", "uu zz", "aa" + long, "uu" + long, "aa" + long, "zz", "uu zz", "zz"] * 2
+    )
+    ts = _dt.datetime(2026, 1, 1)
+    t = spark.createDataFrame(
+        [(f"c{i:02d}", 0, "user", x, None, ts) for i, x in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    idx = build_index(t, cfg=dataclasses.replace(DEFAULT_CONFIG, block_size=2), with_blocks=True)
+    q = {1: "aa tt uu"}
+    exact = _collect(run_queries(spark, idx, q, k=2))
+    for cap in (wand_mod._PHASE2_DRIVER_CAP, 0):
+        monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", cap)
+        stats: dict = {}
+        wand = _collect(run_queries_wand(spark, idx, q, k=2, force_wand=True, stats_out=stats))
+        assert stats["essential_terms"] == {1: ["tt", "uu"]}
+        assert (stats["blocks_total"], stats["blocks_surviving"]) == (4, 2)
+        assert wand == exact
+
+
 def test_merged_index_keeps_seed_theta(spark, skewed):
     """ε-inflated maxima of a merged, uncompacted index are upper bounds no
     posting scores, so θ must come from the seed blocks' postings there;

@@ -198,8 +198,8 @@ def main() -> None:
                 "block_id = FLOOR(doc_ord / stored range), with the ranges as a literal map",
                 "The postings scan takes bucket IN partition pruning and pushes In(term); it "
                 "reads term/doc_id/tf/dl/doc_ord only — the blocks' varbyte payload is never "
-                "read, and doc_id comes with the postings. Phase 3 caches these rows only "
-                "when it reads them twice (distributed completion, or a non-essential term)",
+                "read, and doc_id comes with the postings. The scan is cached "
+                "(InMemoryRelation): phase 3 reads it",
             ],
         )
     )
@@ -240,11 +240,9 @@ def main() -> None:
             f"(ess_completion = {st1['ess_completion']})",
             st1["plan_final"],
             [
-                "NO MapInArrow and ONE postings read (the surviving postings, not cached: "
-                "read once): driver phase 2 builds no covering-block completion, and a "
-                "single-term query has no non-essential term for phase 3b to read. The "
-                "cached relation below is the scored rows, persisted only because "
-                "stats_out asks for diagnostic counts",
+                "NO MapInArrow and ONE postings read (the cached surviving postings): "
+                "driver phase 2 builds no covering-block completion, and a single-term "
+                "query has no non-essential term for phase 3b to read",
                 "No candidates dropDuplicates exchange, no needed-blocks semi-join, no "
                 "second persist: the essential score is the plain aggregate of the "
                 "surviving postings",
