@@ -85,6 +85,6 @@ def xxhash64(data: bytes, seed: int = 42) -> int:
 
 def term_bucket(term: str, n_buckets: int) -> int:
     """``pmod(xxhash64(term), n_buckets)`` exactly as Spark computes it for the
-    bucket partition column (plans/checkpoint.py st_postings/st_blocks)."""
+    bucket partition column (plans/checkpoint.py write_term_buckets)."""
     h = xxhash64(term.encode("utf-8"))
     return ((h % n_buckets) + n_buckets) % n_buckets

@@ -3,27 +3,30 @@
 Milestone-1 path (`build_index`) keeps everything as DataFrames; the materialized
 path (`materialize_index`, plans/checkpoint.py drives it stage-by-stage) writes:
 
-    <index_dir>/postings/   (term, doc_id, tf, dl)      partitioned: bucket-by-term
+    <index_dir>/postings/   (term, doc_id, doc_ord, tf, dl)  bucket=N/ dirs
     <index_dir>/terms/      (term, df)
-    <index_dir>/docs/       (doc_id, dl)
-    <index_dir>/blocks/     compressed blocks (operators/compress.py)
-    <index_dir>/stats.json  {n_docs, avgdl, k1, b, ...}
+    <index_dir>/docs/       (doc_id, doc_ord, dl)
+    <index_dir>/blocks/     compressed blocks (operators/compress.py)  bucket=N/ dirs
+    <index_dir>/stats.json  index scalars, every field of :class:`IndexManifest`
     <index_dir>/_manifest/  per-stage, per-partition lineage + metrics
 
-On a real cluster the index is Iceberg tables bucketed by term — see
-:func:`write_index_iceberg` (``writeTo(...).partitionedBy(bucket(B, 'term'))``;
-jar-gated in this sandbox) — so query-time term predicates prune to B' << B
-buckets. Plain Parquet here gets the same effect with ``repartition(B, 'term')``
-+ min/max column stats + pushed term filters.
+Postings and blocks are written ``partitionBy("bucket")`` with
+``bucket = pmod(xxhash64(term), B)``; a query hashes its terms on the driver
+and pushes ``bucket IN (...)``, so the scan partition-prunes to B' << B
+directories (:meth:`InvertedIndex.pruned_postings`). On a real cluster the same
+idea is Iceberg tables bucketed by term — see :func:`write_index_iceberg`
+(``writeTo(...).partitionedBy(bucket(B, 'term'))``; needs the Iceberg jar).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
+import warnings
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
@@ -51,9 +54,9 @@ class InvertedIndex:
     # intermediate cached relations owned by this index generation (e.g. the
     # tokenized-delta relation a merge persisted); released with the index.
     _aux_cached: list = field(default_factory=list, repr=False)
-    # Materialized-layout partition-pruning hooks (set by load_materialized /
-    # load_index when the on-disk layout is bucket=pmod(xxhash64(term), B)
-    # partition directories): the SAME relations WITH the bucket partition
+    # Materialized-layout partition-pruning hooks (set by load_materialized,
+    # whose on-disk layout is bucket=pmod(xxhash64(term), B) partition
+    # directories): the SAME relations WITH the bucket partition
     # column, plus the modulus B. Query paths compute each query term's bucket
     # on the driver (functions/hashing.py — the pure-Python XXH64 twin) and
     # push ``bucket IN (...)`` into the scan, so Catalyst partition-prunes
@@ -71,33 +74,24 @@ class InvertedIndex:
         function of term, pinned against Spark by tests/test_hashing.py). The
         predicate is one SQL expression (functions/sql_literal.py), not one
         py4j call per term."""
-        if not terms:
-            return self.postings.filter(F.lit(False))
-        pred = sql_in("term", terms)
-        if self.term_buckets and self.postings_bucketed is not None:
-            from bge_m3_onnx_spark.functions.hashing import term_bucket
-
-            bs = sorted({term_bucket(t, self.term_buckets) for t in terms})
-            return self.postings_bucketed.filter(
-                f"{sql_in('bucket', bs)} AND {pred}"
-            ).drop("bucket")
-        return self.postings.filter(pred)
+        return self._pruned(self.postings, self.postings_bucketed, terms)
 
     def pruned_blocks(self, terms: list[str]) -> DataFrame:
         """Compressed blocks restricted to ``terms`` — same bucket-pruning
         contract as :meth:`pruned_postings`."""
         assert self.blocks is not None
+        return self._pruned(self.blocks, self.blocks_bucketed, terms)
+
+    def _pruned(self, rel: DataFrame, bucketed: DataFrame | None, terms: list[str]) -> DataFrame:
         if not terms:
-            return self.blocks.filter(F.lit(False))
+            return rel.filter(F.lit(False))
         pred = sql_in("term", terms)
-        if self.term_buckets and self.blocks_bucketed is not None:
+        if self.term_buckets and bucketed is not None:
             from bge_m3_onnx_spark.functions.hashing import term_bucket
 
             bs = sorted({term_bucket(t, self.term_buckets) for t in terms})
-            return self.blocks_bucketed.filter(
-                f"{sql_in('bucket', bs)} AND {pred}"
-            ).drop("bucket")
-        return self.blocks.filter(pred)
+            return bucketed.filter(f"{sql_in('bucket', bs)} AND {pred}").drop("bucket")
+        return rel.filter(pred)
 
     def release(self) -> None:
         """Unpersist every cached relation this index generation owns.
@@ -210,70 +204,81 @@ def build_index(
     )
 
 
-def _stats_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "stats.json")
+@dataclass(frozen=True)
+class IndexManifest:
+    """The index scalars, and the one format of ``<index_dir>/stats.json``.
 
+    ``write`` and ``read`` are the only code that touches the file; the
+    Iceberg writer renders its ``engine.*`` table properties from the same
+    fields. A read fails loudly on a missing required field or a field this
+    class does not know, so a file from a newer or older layout is never
+    half-understood."""
 
-def write_stats(index_dir: str, idx: InvertedIndex) -> None:
-    os.makedirs(index_dir, exist_ok=True)
-    with open(_stats_path(index_dir), "w") as f:
-        json.dump(
-            {
-                "n_docs": idx.n_docs,
-                "avgdl": idx.avgdl,
-                "k1": idx.cfg.k1,
-                "b": idx.cfg.b,
-                "block_size": idx.cfg.block_size,
-                # block maxima are ε-inflated bounds while > 0: the WAND
-                # metadata-only θ must not trust them (plans/wand.py)
-                "merges_since_compaction": idx.merges_since_compaction,
-            },
-            f,
-            indent=2,
+    n_docs: int
+    avgdl: float
+    k1: float
+    b: float
+    block_size: int
+    # modulus B of the ``bucket = pmod(xxhash64(term), B)`` partition layout
+    # of postings/blocks (materialize_index). Persisted because an empty
+    # bucket writes no directory, so B cannot be inferred from the bucket=*
+    # dirs. None: the relations are not laid out that way.
+    term_buckets: int | None = None
+    # block maxima are ε-inflated bounds while > 0: the WAND metadata-only θ
+    # must not trust them (plans/wand.py)
+    merges_since_compaction: int = 0
+
+    @classmethod
+    def of(cls, idx: InvertedIndex) -> IndexManifest:
+        return cls(
+            n_docs=idx.n_docs,
+            avgdl=idx.avgdl,
+            k1=idx.cfg.k1,
+            b=idx.cfg.b,
+            block_size=idx.cfg.block_size,
+            term_buckets=idx.term_buckets,
+            merges_since_compaction=idx.merges_since_compaction,
         )
 
+    def write(self, index_dir: str) -> None:
+        os.makedirs(index_dir, exist_ok=True)
+        with open(os.path.join(index_dir, "stats.json"), "w") as f:
+            json.dump(dataclasses.asdict(self), f, indent=2)
 
-def reconcile_cfg(cfg: EngineConfig, stats: dict, index_dir: str) -> EngineConfig:
-    """An index must be queried with the k1/b/block_size it was BUILT with —
-    stats.json persists them for exactly this purpose. Score math (k1/b) and the
-    WAND block coverage (block_size) silently break on mismatch, so the loaded
-    config always adopts the stored values; drift from the caller's cfg is loud."""
-    import dataclasses
+    @classmethod
+    def read(cls, index_dir: str) -> IndexManifest:
+        path = os.path.join(index_dir, "stats.json")
+        with open(path) as f:
+            stored = json.load(f)
+        fields = dataclasses.fields(cls)
+        unknown = sorted(set(stored) - {f.name for f in fields})
+        if unknown:
+            raise ValueError(f"{path}: unknown index manifest field(s) {unknown}")
+        missing = [
+            f.name for f in fields
+            if f.default is dataclasses.MISSING and f.name not in stored
+        ]
+        if missing:
+            raise ValueError(f"{path}: missing index manifest field(s) {missing}")
+        return cls(**stored)
 
-    stored = {k: stats[k] for k in ("k1", "b", "block_size") if k in stats}
-    mismatches = {
-        k: (getattr(cfg, k), v) for k, v in stored.items() if getattr(cfg, k) != v
-    }
-    if mismatches:
-        import warnings
-
-        warnings.warn(
-            f"EngineConfig passed to load for {index_dir!r} disagrees with stats.json "
-            f"on {mismatches} (passed, stored); using the STORED values — an index is "
-            "only valid under the parameters it was built with.",
-            stacklevel=3,
-        )
-    return dataclasses.replace(cfg, **stored)
-
-
-def load_index(
-    spark: SparkSession, index_dir: str, cfg: EngineConfig = DEFAULT_CONFIG
-) -> InvertedIndex:
-    with open(_stats_path(index_dir)) as f:
-        stats = json.load(f)
-    cfg = reconcile_cfg(cfg, stats, index_dir)
-    blocks_dir = os.path.join(index_dir, "blocks")
-    blocks = spark.read.parquet(blocks_dir) if os.path.isdir(blocks_dir) else None
-    return InvertedIndex(
-        postings=spark.read.parquet(os.path.join(index_dir, "postings")),
-        terms=spark.read.parquet(os.path.join(index_dir, "terms")),
-        docs=spark.read.parquet(os.path.join(index_dir, "docs")),
-        n_docs=int(stats["n_docs"]),
-        avgdl=float(stats["avgdl"]),
-        cfg=cfg,
-        blocks=blocks,
-        merges_since_compaction=int(stats.get("merges_since_compaction", 0)),
-    )
+    def reconcile_cfg(self, cfg: EngineConfig, index_dir: str) -> EngineConfig:
+        """An index must be queried with the k1/b/block_size it was BUILT
+        with. Score math (k1/b) and the WAND block coverage (block_size)
+        silently break on mismatch, so the loaded config always adopts the
+        stored values; drift from the caller's cfg is loud."""
+        stored = {"k1": self.k1, "b": self.b, "block_size": self.block_size}
+        mismatches = {
+            k: (getattr(cfg, k), v) for k, v in stored.items() if getattr(cfg, k) != v
+        }
+        if mismatches:
+            warnings.warn(
+                f"EngineConfig passed to load for {index_dir!r} disagrees with stats.json "
+                f"on {mismatches} (passed, stored); using the STORED values — an index is "
+                "only valid under the parameters it was built with.",
+                stacklevel=3,
+            )
+        return dataclasses.replace(cfg, **stored)
 
 
 def write_index_iceberg(
@@ -308,114 +313,12 @@ def write_index_iceberg(
             .using("iceberg")
             .createOrReplace()
         )
-    spark = idx.postings.sparkSession
-    spark.sql(
+    props = dataclasses.asdict(IndexManifest.of(idx))
+    # term_buckets stays unset: Iceberg's bucket(B, term) transform is not
+    # the pmod(xxhash64(term), B) layout that field describes
+    del props["term_buckets"]
+    idx.postings.sparkSession.sql(
         f"ALTER TABLE {table_prefix}_postings SET TBLPROPERTIES ("
-        f"'engine.n_docs'='{idx.n_docs}', 'engine.avgdl'='{idx.avgdl}', "
-        f"'engine.k1'='{idx.cfg.k1}', 'engine.b'='{idx.cfg.b}', "
-        f"'engine.block_size'='{idx.cfg.block_size}', "
-        f"'engine.merges_since_compaction'='{idx.merges_since_compaction}')"
-    )
-
-
-def write_index_bucketed(
-    idx: InvertedIndex, table_prefix: str, n_buckets: int = 256
-) -> None:
-    """SparkSessionExtensions-free analog of :func:`write_index_iceberg`: the
-    same bucket-by-term layout through plain Parquet ``bucketBy`` managed
-    tables, which the session catalog supports with no extra jar. Hash-bucketed
-    on the join/agg keys (postings/blocks by term, docs by doc_id), so
-    term-equality lookups bucket-prune (``SelectedBucketsCount`` in the scan)
-    and term-keyed aggregations need no exchange. Engine scalars ride on the
-    postings table's TBLPROPERTIES exactly as the Iceberg path stores them.
-
-    Unlike Iceberg's ``bucket(B, term)`` transform this is Spark's own bucketed
-    format (metastore-described, not snapshot-versioned) — the layout contract
-    (co-located terms, pruned lookups) is identical, which is what SCALE.md's
-    bucket-pruning claim needs executed evidence for in this jar-less sandbox.
-    """
-    spark = idx.postings.sparkSession
-    (
-        idx.postings.write.bucketBy(n_buckets, "term")
-        .sortBy("term")
-        .format("parquet")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_postings")
-    )
-    idx.terms.write.format("parquet").mode("overwrite").saveAsTable(f"{table_prefix}_terms")
-    (
-        idx.docs.write.bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .format("parquet")
-        .mode("overwrite")
-        .saveAsTable(f"{table_prefix}_docs")
-    )
-    if idx.blocks is not None:
-        (
-            idx.blocks.write.bucketBy(n_buckets, "term")
-            .sortBy("term")
-            .format("parquet")
-            .mode("overwrite")
-            .saveAsTable(f"{table_prefix}_blocks")
-        )
-    spark.sql(
-        f"ALTER TABLE {table_prefix}_postings SET TBLPROPERTIES ("
-        f"'engine.n_docs'='{idx.n_docs}', 'engine.avgdl'='{idx.avgdl}', "
-        f"'engine.k1'='{idx.cfg.k1}', 'engine.b'='{idx.cfg.b}', "
-        f"'engine.block_size'='{idx.cfg.block_size}', "
-        f"'engine.merges_since_compaction'='{idx.merges_since_compaction}', "
-        f"'engine.has_blocks'='{idx.blocks is not None}')"
-    )
-
-
-def load_index_bucketed(
-    spark: SparkSession, table_prefix: str, cfg: EngineConfig | None = None
-) -> InvertedIndex:
-    """Rehydrate an :class:`InvertedIndex` from :func:`write_index_bucketed`
-    tables. Scans inherit the bucket spec, so downstream term-keyed joins/aggs
-    skip the shuffle and term-equality filters bucket-prune.
-
-    Like the file-based :func:`load_index`, the scoring parameters come from the
-    STORED TBLPROPERTIES, not the caller's cfg: an index must be queried with
-    the k1/b/block_size it was BUILT with, or scores mis-rank and the stored
-    block_max_score no longer upper-bounds query-time scores (WAND's lossless
-    pruning breaks). ``reconcile_cfg`` warns loudly on any drift."""
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table_prefix}_postings").collect()
-    }
-    stored = {}
-    if "engine.k1" in props:
-        stored["k1"] = float(props["engine.k1"])
-    if "engine.b" in props:
-        stored["b"] = float(props["engine.b"])
-    if "engine.block_size" in props:
-        stored["block_size"] = int(props["engine.block_size"])
-    missing = {"engine.k1", "engine.b", "engine.block_size"} - set(props)
-    if missing and props.get("engine.has_blocks") == "True":
-        # tables written before these properties existed fall through to the
-        # caller's cfg SILENTLY — exactly the mismatch class (stored
-        # block_max_score no longer bounding query scores) reconcile_cfg
-        # exists to make loud (ADVICE r5)
-        import warnings
-
-        warnings.warn(
-            f"bucketed index {table_prefix!r} has compressed blocks but lacks "
-            f"TBLPROPERTIES {sorted(missing)}; falling back to the caller's cfg — "
-            "queries are only valid if it matches the build-time parameters",
-            stacklevel=2,
-        )
-    cfg = reconcile_cfg(cfg or DEFAULT_CONFIG, stored, table_prefix)
-    blocks = None
-    if props.get("engine.has_blocks") == "True":
-        blocks = spark.table(f"{table_prefix}_blocks")
-    return InvertedIndex(
-        postings=spark.table(f"{table_prefix}_postings"),
-        terms=spark.table(f"{table_prefix}_terms"),
-        docs=spark.table(f"{table_prefix}_docs"),
-        n_docs=int(props["engine.n_docs"]),
-        avgdl=float(props["engine.avgdl"]),
-        cfg=cfg,
-        blocks=blocks,
-        merges_since_compaction=int(props.get("engine.merges_since_compaction", 0)),
+        + ", ".join(f"'engine.{k}'='{v}'" for k, v in props.items())
+        + ")"
     )

@@ -7,10 +7,10 @@ directory and recorded in ``_manifest/manifest.json``:
 
     tokenized   (doc_id, doc_ord, dl, terms)   -- the one expensive UDF pass
     docs        (doc_id, doc_ord, dl)          -- sorted by doc_ord (ord→id lookups prune)
-    postings    (term, doc_id, doc_ord, tf, dl)-- bucketed by hash(term) (term pruning)
+    postings    (term, doc_id, doc_ord, tf, dl)-- bucket=pmod(xxhash64(term), B) dirs
     terms       (term, df)
-    stats       stats.json (N, avgdl, k1, b)
-    blocks      compressed block rows           -- bucketed by hash(term)
+    stats       stats.json: every field of plans/build_index.py:IndexManifest
+    blocks      compressed block rows           -- bucket=pmod(xxhash64(term), B) dirs
 
 Restarting after a failure skips every stage whose manifest entry is ``done`` and
 whose Parquet commit marker (_SUCCESS) exists — downstream stages read the
@@ -40,6 +40,7 @@ from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
 from bge_m3_onnx_spark.operators import postings as P
 from bge_m3_onnx_spark.operators.compress import build_blocks
 from bge_m3_onnx_spark.operators.ordinals import assign_dense_ordinals
+from bge_m3_onnx_spark.plans.build_index import IndexManifest, InvertedIndex
 
 STAGES = ["tokenized", "docs", "postings", "terms", "stats", "blocks"]
 
@@ -48,7 +49,7 @@ class StageFailure(RuntimeError):
     """Injected by tests to simulate a mid-build crash."""
 
 
-def _file_lineage(path: str) -> list[dict]:
+def _file_lineage(path: str, prefix: str = "") -> list[dict]:
     """Per-partition metrics from Parquet footers: (file, rows, bytes)."""
     import pyarrow.parquet as pq
 
@@ -58,22 +59,13 @@ def _file_lineage(path: str) -> list[dict]:
         if name.endswith(".parquet") and os.path.isfile(full):
             out.append(
                 {
-                    "file": name,
+                    "file": prefix + name,
                     "rows": pq.ParquetFile(full).metadata.num_rows,
                     "bytes": os.path.getsize(full),
                 }
             )
-        elif os.path.isdir(full):  # partitioned layout (bucket=N/...)
-            for sub in sorted(os.listdir(full)):
-                if sub.endswith(".parquet"):
-                    fp = os.path.join(full, sub)
-                    out.append(
-                        {
-                            "file": f"{name}/{sub}",
-                            "rows": pq.ParquetFile(fp).metadata.num_rows,
-                            "bytes": os.path.getsize(fp),
-                        }
-                    )
+        elif os.path.isdir(full) and not prefix:  # partitioned layout (bucket=N/...)
+            out += _file_lineage(full, f"{name}/")
     return out
 
 
@@ -90,14 +82,13 @@ class BuildManifest:
 
     @classmethod
     def load_or_new(cls, index_dir: str, input_path: str, snapshot_id: int | None) -> "BuildManifest":
-        p = os.path.join(index_dir, "_manifest", "manifest.json")
-        if os.path.exists(p):
-            with open(p) as f:
+        man = cls(index_dir=index_dir, input_path=input_path, snapshot_id=snapshot_id)
+        if os.path.exists(man.path):
+            with open(man.path) as f:
                 d = json.load(f)
             if d.get("input_path") == input_path and d.get("snapshot_id") == snapshot_id:
-                return cls(index_dir=index_dir, input_path=input_path,
-                           snapshot_id=snapshot_id, stages=d.get("stages", {}))
-        return cls(index_dir=index_dir, input_path=input_path, snapshot_id=snapshot_id)
+                man.stages = d.get("stages", {})
+        return man
 
     def save(self) -> None:
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
@@ -169,7 +160,6 @@ def materialize_index(
     post_path = os.path.join(index_dir, "postings")
     terms_path = os.path.join(index_dir, "terms")
     blocks_path = os.path.join(index_dir, "blocks")
-    stats_path = os.path.join(index_dir, "stats.json")
 
     def st_tokenized():
         # boundary sample + bucket counts run on the light count-only twin —
@@ -195,18 +185,21 @@ def materialize_index(
         )
         return docs_path, None
 
-    def st_postings():
-        tok = spark.read.parquet(tok_path)
-        posts = P.postings_from_counted(tok).withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        )
+    def write_term_buckets(df: DataFrame, path: str, order: str) -> None:
+        # the one partition layout of postings and blocks; its modulus is
+        # the manifest's term_buckets
         (
-            posts.repartition("bucket")
-            .sortWithinPartitions("term", "doc_ord")
+            df.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+            .repartition("bucket")
+            .sortWithinPartitions("term", order)
             .write.mode("overwrite")
             .partitionBy("bucket")
-            .parquet(post_path)
+            .parquet(path)
         )
+
+    def st_postings():
+        tok = spark.read.parquet(tok_path)
+        write_term_buckets(P.postings_from_counted(tok), post_path, "doc_ord")
         return post_path, None
 
     def st_terms():
@@ -219,39 +212,22 @@ def materialize_index(
     def st_stats():
         docs = spark.read.parquet(docs_path)
         row = docs.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-        with open(stats_path, "w") as f:
-            json.dump(
-                {
-                    "n_docs": int(row["n"]),
-                    "avgdl": float(row["avgdl"] or 0.0),
-                    "k1": cfg.k1,
-                    "b": cfg.b,
-                    "block_size": cfg.block_size,
-                    # bucket modulus of the postings/blocks partition layout —
-                    # needed at load time for driver-side bucket pruning (an
-                    # empty bucket writes NO directory, so the layout cannot be
-                    # inferred from the bucket=* dirs)
-                    "term_buckets": n_buckets,
-                },
-                f,
-                indent=2,
-            )
+        IndexManifest(
+            n_docs=int(row["n"]),
+            avgdl=float(row["avgdl"] or 0.0),
+            k1=cfg.k1,
+            b=cfg.b,
+            block_size=cfg.block_size,
+            term_buckets=n_buckets,
+        ).write(index_dir)
         return None, {"rows": int(row["n"])}
 
     def st_blocks():
         posts = spark.read.parquet(post_path)
         terms = spark.read.parquet(terms_path)
-        with open(stats_path) as f:
-            stats = json.load(f)
-        blocks = build_blocks(posts, terms, stats["n_docs"], stats["avgdl"], cfg)
-        (
-            blocks.withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-            .repartition("bucket")
-            .sortWithinPartitions("term", "block_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(blocks_path)
-        )
+        man = IndexManifest.read(index_dir)
+        blocks = build_blocks(posts, terms, man.n_docs, man.avgdl, cfg)
+        write_term_buckets(blocks, blocks_path, "block_id")
         return blocks_path, None
 
     stage("tokenized", st_tokenized)
@@ -263,32 +239,31 @@ def materialize_index(
     return man
 
 
-def load_materialized(spark: SparkSession, index_dir: str, cfg: EngineConfig = DEFAULT_CONFIG):
-    from bge_m3_onnx_spark.plans.build_index import InvertedIndex, reconcile_cfg
-
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
-    cfg = reconcile_cfg(cfg, stats, index_dir)
+def load_materialized(
+    spark: SparkSession, index_dir: str, cfg: EngineConfig = DEFAULT_CONFIG
+) -> InvertedIndex:
+    man = IndexManifest.read(index_dir)
+    cfg = man.reconcile_cfg(cfg, index_dir)
     post_path = os.path.join(index_dir, "postings")
     blocks_path = os.path.join(index_dir, "blocks")
     postings_b = spark.read.parquet(post_path)
     blocks_b = spark.read.parquet(blocks_path)
-    # bucket modulus from stats.json (st_stats persists it — an EMPTY bucket
-    # writes no directory, so the dir listing cannot recover the modulus).
     # Query paths push ``bucket IN (driver-hashed term buckets)`` so the scan
     # partition-prunes; the bucket-free ``postings``/``blocks`` keep every
     # other consumer (merges, unions) on the unchanged schema. Indexes
-    # materialized before this field existed load with pruning disabled.
-    n_buckets = int(stats.get("term_buckets") or 0)
+    # materialized before term_buckets was persisted load with pruning
+    # disabled.
+    n_buckets = man.term_buckets
     return InvertedIndex(
         postings=postings_b.drop("bucket"),
         terms=spark.read.parquet(os.path.join(index_dir, "terms")),
         docs=spark.read.parquet(os.path.join(index_dir, "docs")),
-        n_docs=int(stats["n_docs"]),
-        avgdl=float(stats["avgdl"]),
+        n_docs=man.n_docs,
+        avgdl=man.avgdl,
         cfg=cfg,
         blocks=blocks_b.drop("bucket"),
-        term_buckets=n_buckets or None,
+        merges_since_compaction=man.merges_since_compaction,
+        term_buckets=n_buckets,
         postings_bucketed=postings_b if n_buckets else None,
         blocks_bucketed=blocks_b if n_buckets else None,
     )

@@ -232,137 +232,3 @@ def test_auto_compaction_after_k_merges(spark, tmp_path):
     assert _topk_map(run_queries(spark, idx, queries, k=10)) == _topk_map(
         run_queries(spark, full, queries, k=10)
     )
-
-
-def test_bucketed_parquet_layout_roundtrip_and_pruning(spark, tmp_path):
-    """VERDICT r3 #10: the bucket-by-term layout claim needs an EXECUTED analog
-    in this Iceberg-jar-less sandbox. Round-trips the index through plain
-    Parquet bucketBy managed tables and asserts the three contract properties:
-    (1) rehydrated index answers queries identically, (2) a term-equality scan
-    bucket-prunes (SelectedBucketsCount < total), (3) a term-keyed aggregation
-    over the bucketed postings plans with NO shuffle exchange."""
-    from bge_m3_onnx_spark.plans.build_index import (
-        load_index_bucketed,
-        write_index_bucketed,
-    )
-
-    idx = build_index(
-        synth_transcripts(spark, n_convs=30, turns_per_conv=5),
-        with_ordinals=True,
-        with_blocks=True,
-        cache=False,
-    )
-    prefix = "bkt_rt"
-    try:
-        write_index_bucketed(idx, prefix, n_buckets=8)
-        loaded = load_index_bucketed(spark, prefix)
-        assert (loaded.n_docs, round(loaded.avgdl, 9)) == (idx.n_docs, round(idx.avgdl, 9))
-        queries = {1: "spark shuffle", 2: "the"}
-        want = _topk_map(run_queries(spark, idx, queries, k=10))
-        got = _topk_map(run_queries(spark, loaded, queries, k=10))
-        assert got == want
-
-        # (2) bucket pruning on a term-equality filter. Spark's planner skips
-        # bucketed scans when a query has no join/agg to exploit them
-        # ("Bucketed: false (disabled by query planner)"), so pin the scan on
-        # for the pruning probe — real term-lookup plans carry the agg anyway.
-        spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        plan = (
-            spark.table(f"{prefix}_postings")
-            .filter("term = 'spark'")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "SelectedBucketsCount" in plan, plan
-        import re
-
-        m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-        assert m and int(m.group(1)) < int(m.group(2)), m.group(0)
-
-        # (3) groupBy on the bucket key needs no exchange
-        agg_plan = (
-            spark.table(f"{prefix}_postings")
-            .groupBy("term")
-            .count()
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in agg_plan, agg_plan
-    finally:
-        spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-        for t in ("postings", "terms", "docs", "blocks"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-
-
-def test_bucketed_load_restores_built_cfg(spark):
-    """ADVICE r4: an index must be queried with the k1/b/block_size it was
-    BUILT with — load_index_bucketed must rehydrate them from TBLPROPERTIES
-    (like the file-based load_index does from stats.json), not silently adopt
-    the caller's cfg: a mismatched k1/b mis-scores, and stored block_max_score
-    would no longer upper-bound query scores (breaks WAND's lossless pruning)."""
-    import dataclasses
-    import warnings
-
-    from bge_m3_onnx_spark.config import DEFAULT_CONFIG
-    from bge_m3_onnx_spark.plans.build_index import (
-        load_index_bucketed,
-        write_index_bucketed,
-    )
-
-    custom = dataclasses.replace(DEFAULT_CONFIG, k1=0.9, b=0.4, block_size=64)
-    idx = build_index(
-        synth_transcripts(spark, n_convs=10, turns_per_conv=3),
-        cfg=custom,
-        with_ordinals=True,
-        with_blocks=True,
-        cache=False,
-    )
-    prefix = "bkt_cfg"
-    try:
-        write_index_bucketed(idx, prefix, n_buckets=4)
-        # default cfg passed in → stored values must win, loudly
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            loaded = load_index_bucketed(spark, prefix)
-        assert (loaded.cfg.k1, loaded.cfg.b, loaded.cfg.block_size) == (0.9, 0.4, 64)
-        assert any("STORED" in str(x.message) for x in w)
-        # matching cfg passed in → no reconcile warning (unrelated library
-        # warnings may fire; filter to the contract's message)
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            load_index_bucketed(spark, prefix, cfg=custom)
-        assert not [x for x in w if "STORED" in str(x.message)]
-    finally:
-        for t in ("postings", "terms", "docs", "blocks"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
-
-
-def test_bucketed_roundtrip_keeps_merge_clock(spark):
-    """A merged index's block maxima are ε-inflated bounds, and WAND takes θ
-    from block maxima only when merges_since_compaction == 0 — so a write and
-    load must not reset the clock."""
-    import dataclasses
-
-    from bge_m3_onnx_spark.plans.build_index import (
-        load_index_bucketed,
-        write_index_bucketed,
-    )
-
-    idx = dataclasses.replace(
-        build_index(
-            synth_transcripts(spark, n_convs=10, turns_per_conv=5),
-            with_ordinals=True,
-            with_blocks=True,
-            cache=False,
-        ),
-        merges_since_compaction=3,
-    )
-    prefix = "bkt_clock"
-    try:
-        write_index_bucketed(idx, prefix, n_buckets=4)
-        assert load_index_bucketed(spark, prefix).merges_since_compaction == 3
-    finally:
-        for t in ("postings", "terms", "docs", "blocks"):
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")

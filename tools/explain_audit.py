@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import io
 import os
-import subprocess
 import sys
 from contextlib import redirect_stdout
 
@@ -27,6 +26,7 @@ from bge_m3_onnx_spark.plans.checkpoint import load_materialized, materialize_in
 from bge_m3_onnx_spark.plans.wand import plan_reads, plan_runs  # noqa: E402
 from bge_m3_onnx_spark.session import get_spark  # noqa: E402
 from bge_m3_onnx_spark.sources.transcripts import synth_transcripts  # noqa: E402
+from tools.revision import source_revision  # noqa: E402
 
 
 def fmt(df) -> str:
@@ -34,22 +34,6 @@ def fmt(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def source_revision() -> str:
-    """``git rev-parse HEAD``, marked when the working tree differs from it."""
-
-    def git(*args: str) -> str:
-        return subprocess.run(
-            ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
-        ).stdout.strip()
-
-    try:
-        head = git("rev-parse", "HEAD")
-        dirty = git("status", "--porcelain", "--untracked-files=no")
-    except (OSError, subprocess.CalledProcessError):
-        return "unknown (not a git checkout)"
-    return head + (" with uncommitted changes" if dirty else "")
 
 
 def main() -> None:

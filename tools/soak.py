@@ -42,6 +42,7 @@ from bge_m3_onnx_spark.sources.transcripts import (  # noqa: E402
     synth_transcripts_skewed,
 )
 from bge_m3_onnx_spark.streaming.incremental import merge_delta  # noqa: E402
+from tools.revision import source_revision  # noqa: E402
 
 
 def _key(r):
@@ -100,13 +101,14 @@ def _assert_identical(spark, idx, queries, label, results: list):
     )
 
 
-def _flush(json_out, n_turns, results, t_mat=None, done=False):
+def _flush(json_out, n_turns, results, run, t_mat=None, done=False):
     """Write the artifact after every check: a soak that dies mid-run (OOM, VM
     reap, round cutoff) still leaves the evidence for the checks it passed."""
     if not json_out:
         return
     payload = {
         "n_turns": n_turns,
+        **run,
         "invariant": "forced-WAND == exact, bit-identical (rank, doc_id, score)",
         "checks": results,
         "complete": done,
@@ -125,9 +127,10 @@ def main() -> int:
     results: list = []
     # broadcastTimeout: WAND probes against a K-merge index compute metadata
     # broadcasts over lineage that can exceed the 300 s default on this VM.
+    # The master is get_spark's default: local[$SPARK_GRAFT_CPUS], else every
+    # core. The artifact records it with the source revision.
     spark = get_spark(
         app_name="soak",
-        master="local[32]",
         shuffle_partitions=64,
         extra_conf={
             "spark.sql.broadcastTimeout": "1800",
@@ -151,6 +154,7 @@ def main() -> int:
             "spark.python.worker.reuse": "false",
         },
     )
+    run = {"master": spark.sparkContext.master, "source_revision": source_revision()}
 
     # 1. flat corpus through the FULL staged/materialized path
     mat_dir = tempfile.mkdtemp(prefix="soak_idx_")
@@ -169,7 +173,7 @@ def main() -> int:
             f"flat {n_turns} materialized",
             results,
         )
-        _flush(json_out, n_turns, results, t_mat=t_mat)
+        _flush(json_out, n_turns, results, run, t_mat=t_mat)
     finally:
         shutil.rmtree(mat_dir, ignore_errors=True)
 
@@ -180,7 +184,7 @@ def main() -> int:
     _assert_identical(
         spark, skew, {1: "the", 2: "the spark checkpoint", 3: "iceberg"}, f"skewed {n_turns}", results
     )
-    _flush(json_out, n_turns, results)
+    _flush(json_out, n_turns, results, run)
     skew.release()
 
     # 3. incremental merge: 5% delta, invariant must survive the block keep/rebuild split
@@ -199,7 +203,7 @@ def main() -> int:
     _assert_identical(
         spark, merged, {1: "spark shuffle partition", 2: "the index"}, "post-merge", results
     )
-    _flush(json_out, n_turns, results)
+    _flush(json_out, n_turns, results, run)
     # drop check-3 caches before the K-merge chain: base+merged together hold
     # ~2 full postings relations; at 10M turns leaving them cached puts the
     # executor store within range of OOM once check 4 persists its own chain
@@ -256,7 +260,7 @@ def main() -> int:
     assert cur.merges_since_compaction == k_merges, cur.merges_since_compaction
     frac_merged, _ = pruning_fraction(cur, f"after {k_merges} merges")
     _assert_identical(spark, cur, probe, f"after {k_merges} e-drift merges", results)
-    _flush(json_out, n_turns, results)
+    _flush(json_out, n_turns, results, run)
     t0 = time.monotonic()
     compacted = compact_index(cur)
     frac_compacted, st_c = pruning_fraction(compacted, "post-compaction")
@@ -300,7 +304,7 @@ def main() -> int:
         shutil.rmtree(prev_seg_dir, ignore_errors=True)
     spark.stop()
     print("SOAK: all invariants hold")
-    _flush(json_out, n_turns, results, t_mat=t_mat, done=True)
+    _flush(json_out, n_turns, results, run, t_mat=t_mat, done=True)
     if json_out:
         print(f"wrote {json_out}")
     return 0
