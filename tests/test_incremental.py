@@ -128,6 +128,42 @@ def test_write_index_iceberg_path(spark):
             write_index_iceberg(idx, "local.db.test_idx", n_buckets=4)
 
 
+def test_bucketed_load_restores_built_cfg(spark, tmp_path):
+    """An index must be queried with the k1/b/block_size it was BUILT with —
+    loading the term-bucketed materialized layout must rehydrate them from
+    stats.json, not silently adopt the caller's cfg: a mismatched k1/b
+    mis-scores, and stored block_max_score would no longer upper-bound query
+    scores (breaks WAND's lossless pruning)."""
+    import dataclasses
+    import warnings
+
+    from bge_m3_onnx_spark.config import DEFAULT_CONFIG
+    from bge_m3_onnx_spark.plans.checkpoint import load_materialized, materialize_index
+
+    custom = dataclasses.replace(DEFAULT_CONFIG, k1=0.9, b=0.4, block_size=64)
+    index_dir = str(tmp_path / "bkt_cfg")
+    materialize_index(
+        spark,
+        synth_transcripts(spark, n_convs=10, turns_per_conv=3),
+        index_dir,
+        cfg=custom,
+        input_path="synth",
+        n_buckets=4,
+    )
+    # default cfg passed in → stored values must win, loudly
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        loaded = load_materialized(spark, index_dir)
+    assert (loaded.cfg.k1, loaded.cfg.b, loaded.cfg.block_size) == (0.9, 0.4, 64)
+    assert any("STORED" in str(x.message) for x in w)
+    # matching cfg passed in → no reconcile warning (unrelated library
+    # warnings may fire; filter to the contract's message)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        load_materialized(spark, index_dir, cfg=custom)
+    assert not [x for x in w if "STORED" in str(x.message)]
+
+
 def test_index_snapshot_range_incremental(spark, tmp_path):
     from pyspark.sql import functions as F
 
