@@ -38,26 +38,8 @@ class EngineConfig:
     # extra pass over a tiny (term, salt) relation, so no df threshold gates it.
     hot_term_salts: int = 16
 
-    # --- incremental merge (streaming/incremental.py) ---
-    # Untouched terms keep their compressed blocks across a delta merge as long as
-    # corpus drift stays within this bound: old block_max_score values are inflated
-    # by the exact per-term idf ratio x the avgdl norm ratio (still upper bounds →
-    # WAND stays lossless). Beyond the bound the inflation would be too loose to
-    # prune anything, so blocks are fully rebuilt instead.
-    merge_drift_eps: float = 0.25
-    # After this many consecutive ε-drift merges, index_snapshot_range runs
-    # compact_index automatically: every merge multiplies untouched terms'
-    # pruning bounds by ≥1, so WAND pruning weakens monotonically until a
-    # compaction re-cuts blocks under exact stats (the Lucene merge-policy
-    # analog; off the query path).
-    compact_every_merges: int = 8
-
     # --- query ---
     default_k: int = 10
-    # Blocks per term decoded by the WAND phase-1 seed θ (floor; scaled to
-    # max(·, k) per query). Used only on merged, uncompacted indexes: fresh and
-    # compacted ones take θ from block maxima without decoding (plans/wand.py).
-    wand_seed_blocks: int = 2
     # Route to the exact path when the query terms' total posting count (Σ df,
     # known on the driver after the first metadata lookup) is below this: WAND's
     # extra driver round-trips only pay off when pruning skips far more posting

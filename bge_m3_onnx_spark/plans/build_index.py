@@ -44,12 +44,9 @@ class InvertedIndex:
     n_docs: int
     avgdl: float
     cfg: EngineConfig
-    blocks: DataFrame | None = None  # compressed (set by materialize/compress step)
-    # ε-drift merges since the blocks were last cut under exact corpus stats —
-    # drives the after-K-merges auto-compaction policy (streaming/incremental.py:
-    # each kept-block merge multiplies untouched terms' pruning bounds by ≥1, so
-    # pruning weakens monotonically until a compaction resets it)
-    merges_since_compaction: int = 0
+    # compressed blocks (set by the compress step); every block_max_score is
+    # the exact score of a real posting under (n_docs, avgdl), merged or not
+    blocks: DataFrame | None = None
     _df_memo: dict = field(default_factory=dict, repr=False)
     # intermediate cached relations owned by this index generation (e.g. the
     # tokenized-delta relation a merge persisted); released with the index.
@@ -212,7 +209,9 @@ class IndexManifest:
     Iceberg writer renders its ``engine.*`` table properties from the same
     fields. A read fails loudly on a missing required field or a field this
     class does not know, so a file from a newer or older layout is never
-    half-understood."""
+    half-understood. One retired field is still read: files written while
+    merges kept a clock carry ``"merges_since_compaction": 0``, which is
+    dropped (any other value is an error)."""
 
     n_docs: int
     avgdl: float
@@ -224,9 +223,6 @@ class IndexManifest:
     # bucket writes no directory, so B cannot be inferred from the bucket=*
     # dirs. None: the relations are not laid out that way.
     term_buckets: int | None = None
-    # block maxima are ε-inflated bounds while > 0: the WAND metadata-only θ
-    # must not trust them (plans/wand.py)
-    merges_since_compaction: int = 0
 
     @classmethod
     def of(cls, idx: InvertedIndex) -> IndexManifest:
@@ -237,7 +233,6 @@ class IndexManifest:
             b=idx.cfg.b,
             block_size=idx.cfg.block_size,
             term_buckets=idx.term_buckets,
-            merges_since_compaction=idx.merges_since_compaction,
         )
 
     def write(self, index_dir: str) -> None:
@@ -250,6 +245,13 @@ class IndexManifest:
         path = os.path.join(index_dir, "stats.json")
         with open(path) as f:
             stored = json.load(f)
+        # 0: blocks cut under the stored stats, as every index has them now
+        clock = stored.pop("merges_since_compaction", 0)
+        if clock != 0:
+            raise ValueError(
+                f"{path}: merges_since_compaction={clock!r}: the block maxima are "
+                "inflated bounds, which no reader accepts; rebuild the index"
+            )
         fields = dataclasses.fields(cls)
         unknown = sorted(set(stored) - {f.name for f in fields})
         if unknown:

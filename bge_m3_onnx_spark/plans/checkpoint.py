@@ -14,7 +14,9 @@ directory and recorded in ``_manifest/manifest.json``:
 
 Restarting after a failure skips every stage whose manifest entry is ``done`` and
 whose Parquet commit marker (_SUCCESS) exists — downstream stages read the
-materialized output of upstream stages, never recompute them. Lineage per stage
+materialized output of upstream stages, never recompute them. A restart with
+another input, snapshot or build parameter (``n_buckets`` and the cfg fields
+the stages read) reuses nothing: every stage runs again. Lineage per stage
 records the pinned input snapshot, wall time, and per-output-file rows/bytes read
 straight from the Parquet footers (the per-partition metrics: one file per output
 partition).
@@ -74,6 +76,8 @@ class BuildManifest:
     index_dir: str
     input_path: str = ""
     snapshot_id: int | None = None
+    # the build parameters the stage outputs depend on (materialize_index)
+    params: dict = field(default_factory=dict)
     stages: dict = field(default_factory=dict)
 
     @property
@@ -81,12 +85,15 @@ class BuildManifest:
         return os.path.join(self.index_dir, "_manifest", "manifest.json")
 
     @classmethod
-    def load_or_new(cls, index_dir: str, input_path: str, snapshot_id: int | None) -> "BuildManifest":
-        man = cls(index_dir=index_dir, input_path=input_path, snapshot_id=snapshot_id)
+    def load_or_new(
+        cls, index_dir: str, input_path: str, snapshot_id: int | None, params: dict
+    ) -> "BuildManifest":
+        man = cls(index_dir=index_dir, input_path=input_path, snapshot_id=snapshot_id, params=params)
         if os.path.exists(man.path):
             with open(man.path) as f:
                 d = json.load(f)
-            if d.get("input_path") == input_path and d.get("snapshot_id") == snapshot_id:
+            key = (d.get("input_path"), d.get("snapshot_id"), d.get("params"))
+            if key == (input_path, snapshot_id, params):
                 man.stages = d.get("stages", {})
         return man
 
@@ -98,6 +105,7 @@ class BuildManifest:
                 {
                     "input_path": self.input_path,
                     "snapshot_id": self.snapshot_id,
+                    "params": self.params,
                     "stages": self.stages,
                 },
                 f,
@@ -142,7 +150,18 @@ def materialize_index(
     """Run (or resume) the staged build. ``fail_after`` injects a crash after the
     named stage commits — the resume test kills and restarts the build with it."""
     os.makedirs(index_dir, exist_ok=True)
-    man = BuildManifest.load_or_new(index_dir, input_path, snapshot_id)
+    # everything a stage reads besides its input: tokenizer (max_tokens,
+    # special_terms), bucket layout, block cut and block maxima (k1, b,
+    # block_size). Stored as JSON, compared as JSON.
+    params = {
+        "n_buckets": n_buckets,
+        "max_tokens": cfg.max_tokens,
+        "special_terms": sorted(cfg.special_terms),
+        "k1": cfg.k1,
+        "b": cfg.b,
+        "block_size": cfg.block_size,
+    }
+    man = BuildManifest.load_or_new(index_dir, input_path, snapshot_id, params)
 
     def stage(name: str, fn: Callable[[], tuple[str | None, dict | None]]) -> None:
         if man.is_done(name):
@@ -262,7 +281,6 @@ def load_materialized(
         avgdl=man.avgdl,
         cfg=cfg,
         blocks=blocks_b.drop("bucket"),
-        merges_since_compaction=man.merges_since_compaction,
         term_buckets=n_buckets,
         postings_bucketed=postings_b if n_buckets else None,
         blocks_bucketed=blocks_b if n_buckets else None,

@@ -5,26 +5,17 @@ set-oriented formulation. Three phases, with a provably safe pruning rule
 (rank-identity preserved — tests assert equality with the exact path on every
 fixture):
 
-  Phase 1 (θ estimation): two sources, both lossless (θ ≤ the true k-th best).
-    * Block maxima (``theta_source == "block_max"``) on every index whose blocks
-      were cut under the current corpus stats (``merges_since_compaction == 0``:
-      fresh or compacted). Metadata only, no decode: θ = max over the query's
-      terms t of the k-th largest block_max_score of t, minus a 1e-6 pad. Each
-      block max is the exact score of one real posting, a term's blocks hold
-      disjoint docs, and every BM25 term contribution is ≥ 0 — so k distinct
-      docs score at least that much. A term with < k blocks contributes
-      nothing; a query where no term has k blocks gets θ = −inf (no pruning).
-      This is the "safe cutoff from summary statistics before touching the
-      payload" idea of External Merge Sort for Top-K Queries (SIGMOD 2020),
-      with the block-max list as the histogram.
-    * Seed blocks (``theta_source == "seed"``) on merged, uncompacted indexes,
-      whose ε-inflated maxima are upper bounds no posting actually scores:
-      read the top ``max(wand_seed_blocks, k)`` blocks per query term (by
-      block_max_score), take each query's top-k docs by PARTIAL score, exact-
-      rescore those ≤ k·|q| docs (their covering blocks are a pure function of
-      the stored block ranges — same trick as phase 3) and set θ to the k-th
-      best EXACT score. The k-th best exact score of any k-doc subset is ≤ the
-      true k-th best overall.
+  Phase 1 (θ estimation, lossless: θ ≤ the true k-th best): block maxima,
+    metadata only, no block read. θ = max over the query's terms t of the
+    k-th largest block_max_score of t, minus a 1e-6 pad. On every index,
+    fresh or merged, each block max is the exact score of one real posting
+    (a merge recomputes kept blocks' maxima, streaming/incremental.py), a
+    term's blocks hold disjoint docs, and every BM25 term contribution is
+    ≥ 0 — so k distinct docs score at least that much. A term with < k blocks
+    contributes nothing; a query where no term has k blocks gets θ = −inf (no
+    pruning). This is the "safe cutoff from summary statistics before
+    touching the payload" idea of External Merge Sort for Top-K Queries
+    (SIGMOD 2020), with the block-max list as the histogram.
 
   Phase 2 (block pruning): ordinal-aligned segment bound. Each term's blocks tile
     the doc-ordinal axis (block_id = ord // range_t), so the metadata upper bound
@@ -47,8 +38,7 @@ fixture):
     window. For "rare_term the"-shaped queries this is the difference between
     scoring ~all of "the" and scoring a handful of its blocks: the rare
     term's wide ordinal tiles otherwise carry its high max into every segment.
-    After driver-side phase 2 (fresh or compacted index) 3a's completion is
-    not built (``ess_completion == "skipped"``): it cannot change the top-k.
+    After driver-side phase 2 3a's completion is not built (``ess_completion == "skipped"``): it cannot change the top-k.
     Driver phase 2 cuts each query's segments at every block start of its
     terms, so inside a segment each term has exactly one block. A doc d whose
     score reaches the k-th has a surviving segment, so every essential block
@@ -58,8 +48,8 @@ fixture):
     is lower still. With one essential term per query, or full survival, no
     candidate misses a block at all. The candidates are then the surviving
     essential postings themselves: phase 3a reads them once, with no candidate
-    shuffle and no covering-block joins. Distributed phase 2 (and so every
-    merged index) keeps the completion.
+    shuffle and no covering-block joins. Distributed phase 2 keeps the
+    completion.
 
   Reading a block: every phase reads a block's postings from the postings
     relation by (term, block_id = floor(doc_ord / STORED range)), the key the
@@ -95,7 +85,7 @@ incremental merge — still map candidate ordinals to the right block_id.
 At 10^12 scale: the blocks and postings scans are term-pruned by the bucketed
 layout (pushed isin); the postings scan covers the query terms' postings and
 filters them to the wanted blocks in whole-stage codegen. Phase 1 reads only
-metadata on fresh indexes; phase 3 scores only surviving + covering blocks.
+metadata; phase 3 scores only surviving + covering blocks.
 """
 
 from __future__ import annotations
@@ -125,8 +115,8 @@ _KEYS = ["term", "block_id"]
 # experiments/tests can pin it.
 _SCORE_ROWS_PER_TASK = 100_000
 # Estimated metadata rows (Σ_t blocks of t) up to which phase 2 runs on the
-# driver and the seed pre-rank skips its salted pass. Module-level so tests can
-# pin it to 0 and force the distributed branches on a fresh index.
+# driver. Module-level so tests can pin it to 0 and force the distributed
+# branches.
 _PHASE2_DRIVER_CAP = 200_000
 
 
@@ -138,9 +128,9 @@ def _block_max_theta(
     """Metadata-only θ per query (module docstring, phase 1): the max over the
     query's terms of the term's k-th largest block max, minus a 1e-6 pad (the
     block maxima were computed by the build's NumPy kernel and can sit an ulp
-    above the query plan's score of the same posting). Only valid when every
-    block max is the exact score of a real posting (merges_since_compaction ==
-    0). ``blk_lists`` may hold just each term's top-k blocks. Queries where no
+    above the query plan's score of the same posting). Valid because every
+    block max is the exact score of a real posting, on fresh and merged
+    indexes alike. ``blk_lists`` may hold just each term's top-k blocks. Queries where no
     term has k blocks get −inf: no pruning, still exact."""
     import heapq
 
@@ -287,13 +277,10 @@ def run_queries_wand(
     with deterministic, machine-independent evidence of what the pruning did
     (the extra count jobs only run when requested):
 
-    - ``theta_source``: "block_max" (metadata-only θ) or "seed" (seed-block
-      rescore; merged, uncompacted indexes only);
     - ``theta``: {query_id: θ}; ``essential_terms``: {query_id: [terms]};
     - ``ess_completion``: "skipped" when phase 3a's covering-block completion
       was not built (after driver-side phase 2, where it cannot change the
-      top-k; module docstring), "decoded" when it ran (distributed phase 2,
-      merged indexes);
+      top-k; module docstring), "decoded" when it ran (distributed phase 2);
     - ``blocks_total``, ``blocks_surviving``, ``blocks_extra_decoded`` (extra
       blocks READ beyond the survivors — phase 3a's completion plus phase 3b;
       the key name predates reading blocks from the postings relation);
@@ -469,8 +456,7 @@ def _run_queries_wand_forced(
     qpostings = idx.pruned_postings(qterms_list)
     _width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Every persisted frame is registered so an exception anywhere in the
-    # phases below cannot leak cached partitions (ADVICE r3); unpersist is
-    # idempotent, so seed_sel's early release is fine.
+    # phases below cannot leak cached partitions (ADVICE r3).
     _persisted: list[DataFrame] = []
     try:
         # ---- driver-side phase 2 gate (r4) ----
@@ -488,19 +474,14 @@ def _run_queries_wand_forced(
         # terms whose postings are spread one-per-block — at df=10^9 over n=10^12
         # that reads ~8k where the actual count is ~8M, letting the cap pass and
         # the collect pull millions of rows to the driver.
-        # Merged indexes can retain blocks cut at a SMALLER stored range than
-        # the current cfg predicts, so the tiling bound can undercount non-empty
-        # blocks and let the cap admit oversized collects (ADVICE r5). The
-        # distributed phase 2 is lossless and unconditionally safe — take it
-        # whenever uncompacted merges make the estimate untrustworthy.
+        # A merge keeps untouched terms' blocks at the range they were cut at,
+        # floor(n_cut·block_size/df) ≤ the current range, over ordinals
+        # [0, n_cut): at most ~1/block_size more blocks than this estimate.
         _est_blocks = sum(
             min(d, -(-n // max(cfg.block_range_for_term(d, n), 1)))
             for d in _df_by_term.values()
         )
-        _fresh = idx.merges_since_compaction == 0
-        _driver_phase2 = _fresh and _est_blocks <= _PHASE2_DRIVER_CAP
-        if stats_out is not None:
-            stats_out["theta_source"] = "block_max" if _fresh else "seed"
+        _driver_phase2 = _est_blocks <= _PHASE2_DRIVER_CAP
 
         # The query's only blocks relation, metadata columns alone, coalesced to
         # the Σdf-sized width (the source keeps the BUILD's partitioning). The
@@ -515,133 +496,44 @@ def _run_queries_wand_forced(
             qmeta = qmeta.persist()
             _persisted.append(qmeta)
 
-        def _top_blocks(n_top: int) -> DataFrame:
-            """Each term's top-``n_top`` blocks by block max, ranked ``rk``.
-            Two-phase (salted) top-S: a 10^12-scale stopword term has millions
-            of block-metadata rows, and a plain partitionBy(term) window would
-            funnel them through ONE task. Phase A takes top-S per (term, salt)
-            — 32-way parallel per term; phase B re-ranks the ≤ 32·S survivors
-            per term. Phase A is SKIPPED when the driver's block estimate says
-            the whole metadata relation is small: w_top alone computes the
-            identical top-S then, and the salted pre-rank is one whole
-            shuffle+sort of pure overhead per query (r6; phase A only
-            pre-filters rows that cannot be in phase B's top-S). The estimate
-            is untrustworthy on merged indexes (see the gate above), so they
-            keep phase A."""
-            w_top = Window.partitionBy("term").orderBy(
-                F.desc("block_max_score"), F.asc("block_id")
-            )
-            src = qmeta
-            if _est_blocks > _PHASE2_DRIVER_CAP or not _fresh:
-                w_pre = Window.partitionBy("term", "__salt").orderBy(
-                    F.desc("block_max_score"), F.asc("block_id")
-                )
-                src = (
-                    src.withColumn("__salt", F.pmod(F.xxhash64("block_id"), F.lit(32)))
-                    .withColumn("rk1", F.row_number().over(w_pre))
-                    .filter(F.col("rk1") <= n_top)
-                    .drop("__salt", "rk1")
-                )
-            return (
-                src.withColumn("rk", F.row_number().over(w_top))
-                .filter(F.col("rk") <= n_top)
-                .select("term", "block_id", "block_range", "block_max_score", "rk")
-            )
-
         # ---- phase 1: θ, the per-term maxima and the stored ranges in ONE
         # driver round-trip (r2 measured ~9 s of fixed machinery cost, much of
         # it driver job latency) ----
-        _blk_lists: dict[str, list[tuple[int, float]]] = {}
-        if _fresh:
-            # Metadata-only θ (module docstring): driver phase 2 collects every
-            # query-term block row anyway; the distributed branch collects only
-            # each term's top-k. θ, tmax and ranges come from the same rows —
-            # no block read, no rescore.
-            theta_df = qmeta if _driver_phase2 else _top_blocks(k).drop("rk")
-        else:
-            # ---- θ from seed candidates, EXACT-rescored (merged indexes) ----
-            # Seeds must plausibly contain k strong docs per query or θ
-            # collapses to a mid-pack score: the top-k docs concentrate in the
-            # top block-max blocks, so read at least k seed blocks per term
-            # (≥1 doc each, typically ~block_size). Partial seed sums pick the
-            # candidates; their covering blocks (pure function of the stored
-            # ranges, ≤ k·|q|·|terms| blocks) are read and the candidates
-            # scored exactly. θ = k-th best exact score — a lower bound of the
-            # true k-th (k-doc-subset argument).
-            seed_sel = _top_blocks(max(cfg.wand_seed_blocks, k)).persist()
-            _persisted.append(seed_sel)
-            # rk=1 row doubles as the per-term global max AND carries the
-            # stored block_range (constant within a term)
-            ranges_sel = seed_sel.filter(F.col("rk") == 1).select(
-                "term",
-                F.col("block_range").cast("long").alias("rng"),
-                F.col("block_max_score").alias("tmax"),
+        # Metadata-only θ (module docstring): driver phase 2 collects every
+        # query-term block row anyway; the distributed branch collects only
+        # each term's top-k. θ, tmax and ranges come from the same rows — no
+        # block read, no rescore.
+        theta_df = qmeta
+        if not _driver_phase2:
+            # Each term's top-k blocks by block max, as a two-phase (salted)
+            # top-k: past the driver cap a 10^12-scale stopword term has
+            # millions of block-metadata rows, and a plain partitionBy(term)
+            # window would funnel them through ONE task. Phase A takes top-k
+            # per (term, salt) — 32-way parallel per term; phase B re-ranks
+            # the ≤ 32·k survivors per term.
+            order = (F.desc("block_max_score"), F.asc("block_id"))
+            theta_df = (
+                qmeta.withColumn("__salt", F.pmod(F.xxhash64("block_id"), F.lit(32)))
+                .withColumn("rk", F.row_number().over(Window.partitionBy("term", "__salt").orderBy(*order)))
+                .filter(F.col("rk") <= k)
+                .withColumn("rk", F.row_number().over(Window.partitionBy("term").orderBy(*order)))
+                .filter(F.col("rk") <= k)
+                .select("term", "block_id", "block_range", "block_max_score")
             )
-            # the stored ranges are still distributed here: block_id comes from
-            # a broadcast join of the per-term ranges (|terms| rows)
-            seed_post = qpostings.join(
-                F.broadcast(ranges_sel.select("term", "rng")), "term"
-            ).selectExpr("term", "doc_id", "doc_ord", "tf", "dl", _block_of("doc_ord", "rng"))
-            seed_scores = _score_postings_lit(_blocks_of(seed_post, seed_sel), all_qids_map)
-            rk_theta = (
-                "row_number() OVER (PARTITION BY query_id ORDER BY score DESC, doc_ord ASC) AS rk"
-            )
-            seed_top = (
-                seed_scores.selectExpr("*", rk_theta)
-                .filter(f"rk <= {int(k)}")
-                .select("query_id", "doc_ord")
-            )
-            seed_needed = (
-                # query→terms via literal explode; only the per-term rng (still
-                # distributed pre-collect) needs a real broadcast join here
-                seed_top.selectExpr(
-                    "doc_ord", f"explode(element_at({q2terms_lit}, query_id)) AS term"
-                )
-                .join(F.broadcast(ranges_sel.select("term", "rng")), "term")
-                .selectExpr("term", _block_of("doc_ord", "rng"))
-                .dropDuplicates(_KEYS)
-            )
-            seed_exact = _score_postings_lit(
-                _blocks_of(seed_post, seed_needed), all_qids_map
-            ).join(seed_top, ["query_id", "doc_ord"], "left_semi")
-            # ONE collect for θ AND the per-term metadata (tagged union) — the
-            # scalars phases 2-3 need on the driver to build literal maps.
-            theta_rows = (
-                seed_exact.selectExpr("*", rk_theta)
-                .filter(f"rk = {int(k)}")
-                .selectExpr(
-                    "'theta' AS tag",
-                    "CAST(query_id AS BIGINT) AS qid",
-                    "CAST(NULL AS STRING) AS term",
-                    "score AS v1",
-                    "CAST(NULL AS BIGINT) AS v2",
-                )
-            )
-            meta_rows = ranges_sel.selectExpr(
-                "'meta' AS tag", "CAST(NULL AS BIGINT) AS qid", "term", "tmax AS v1", "rng AS v2"
-            )
-            theta_df = theta_rows.unionByName(meta_rows)
         if stats_out is not None and stats_out.get("capture_plans"):
             stats_out["plan_theta"] = _fmt_plan(theta_df)
         _t0_theta = time.monotonic()
         collected = theta_df.collect()
         _t_theta = time.monotonic() - _t0_theta
         _t0_final = time.monotonic()
-        if _fresh:
-            by_term: dict[str, list[tuple[int, float]]] = {}
-            range_by_term: dict[str, int] = {}
-            for t, bid, rng, bmax in collected:
-                by_term.setdefault(t, []).append((int(bid), float(bmax)))
-                range_by_term[t] = int(rng)
-            tmax = {t: max(m for _, m in pairs) for t, pairs in by_term.items()}
-            theta = _block_max_theta(by_term, _terms_by_qid, k)
-            if _driver_phase2:
-                _blk_lists = by_term
-        else:
-            seed_sel.unpersist()
-            theta = {int(r["qid"]): r["v1"] for r in collected if r["tag"] == "theta"}
-            tmax = {r["term"]: r["v1"] for r in collected if r["tag"] == "meta"}
-            range_by_term = {r["term"]: int(r["v2"]) for r in collected if r["tag"] == "meta"}
+        by_term: dict[str, list[tuple[int, float]]] = {}
+        range_by_term: dict[str, int] = {}
+        for t, bid, rng, bmax in collected:
+            by_term.setdefault(t, []).append((int(bid), float(bmax)))
+            range_by_term[t] = int(rng)
+        tmax = {t: max(m for _, m in pairs) for t, pairs in by_term.items()}
+        theta = _block_max_theta(by_term, _terms_by_qid, k)
+        _blk_lists = by_term if _driver_phase2 else {}
 
         # ---- phase 2: ordinal-aligned segment pruning (exact, lossless) ----
         # Every term's blocks TILE the doc-ordinal axis (block_id = ord // range), so
@@ -681,11 +573,11 @@ def _run_queries_wand_forced(
             block_meta = qmeta.selectExpr(
                 "term", "block_id", "block_id * block_range AS x", "block_max_score"
             )
-            # Same 1e-6 pad as the driver branch: block maxima come from the
-            # build's NumPy kernel and the seed θ from the query plan's score
-            # expression, so a top-k doc's own block max can sit an ulp BELOW
-            # θ (measured on a merged skewed index: the 10th doc of "the" was
-            # pruned). The pad only admits blocks — lossless.
+            # Same 1e-6 pad as the driver branch: θ is a block max from the
+            # build's NumPy kernel, which can sit an ulp above the query
+            # plan's score of the same posting, and the distributed sum's
+            # order is nondeterministic at the last ulp. The pad only admits
+            # blocks — lossless.
             theta_padded = f"element_at({theta_map}, query_id) - {sql_literal(1e-6)}"
             # distinct segment boundaries per query (starts of any query term's blocks),
             # PRE-FILTERED by the classic bound before the ×|q| fan-out (r2 advisor: a
@@ -917,8 +809,8 @@ def _run_queries_wand_forced(
             # surv_post, so the dropDuplicates shuffle, the doc_ord equi-join
             # and the left-semi are identities. Hence full_ess = surv_post
             # (second persist skipped) and s_ess is the plain scored aggregate
-            # of surv_post. Distributed phase 2 (every merged index, and any
-            # batch over _PHASE2_DRIVER_CAP metadata rows) keeps the chain.
+            # of surv_post. Distributed phase 2 (any batch over
+            # _PHASE2_DRIVER_CAP metadata rows) keeps the chain.
             candidates = None
             extra_keys = None
             full_ess = surv_post

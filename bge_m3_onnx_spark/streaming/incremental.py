@@ -21,25 +21,22 @@ Merge semantics (exactly equivalent to a full rebuild, tests assert it):
     stats'    = recomputed from docs'   (N, avgdl shift → idf/norms shift, so BM25
                                          scores are always w.r.t. the full corpus)
 
-Block delta-maintenance (r2 — no full rebuild): the delta's term set gets exact
+Block delta-maintenance (no full rebuild): the delta's term set gets exact
 new blocks (df changed → block_range changed → those terms' blocks are re-cut);
-every UNTOUCHED term keeps its existing block rows. Kept blocks stay correct
-because (a) the block_id ↔ ordinal mapping is self-described — ``block_range`` is
-stored per block row and readers (plans/wand.py phase 3) use the stored value, and
-(b) ``block_max_score`` is inflated by the exact per-term drift bound
-
-    bound' = bound · [idf_{N'}(df) / idf_N(df)] · max(1, avgdl'/avgdl)
-
-which dominates the true new max: idf is doc-independent, and the norm ratio
-(tf + k1(1−b+b·dl/avgdl)) / (tf + k1(1−b+b·dl/avgdl')) ≤ max(1, avgdl'/avgdl)
-for all tf, dl ≥ 0. Upper bounds keep WAND lossless (scores are always recomputed
-exactly from decoded tf/dl under CURRENT stats; bounds only gate pruning). When
-drift exceeds cfg.merge_drift_eps the inflated bounds would be too loose to prune,
-so blocks are rebuilt outright — a tightness knob, never a correctness one.
+every UNTOUCHED term keeps its existing block rows and payload. Kept blocks stay
+correct because (a) the block_id ↔ ordinal mapping is self-described —
+``block_range`` is stored per block row and readers (plans/wand.py) use the
+stored value — and (b) their ``block_max_score`` is recomputed under the merged
+(N, avgdl): the max, over the block's postings keyed by
+``floor(doc_ord / stored block_range)``, of the query path's own SQL score
+expression (operators/bm25.py). So on every index, merged or fresh, each stored
+block max is the exact score of a real posting, and WAND treats a merged index
+exactly like a fresh one.
 
 At 10^12 scale an hourly increment touches a tiny fraction of the vocabulary; the
 delta-term rebuild reads only those terms' postings via the bucketed layout's term
-pruning, and the kept blocks are a metadata-only column rewrite.
+pruning, and the kept blocks cost one JVM aggregation over the untouched terms'
+postings — no decode, no Python task.
 """
 
 from __future__ import annotations
@@ -49,9 +46,11 @@ from pyspark.sql import functions as F
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
 from bge_m3_onnx_spark.operators import postings as P
+from bge_m3_onnx_spark.operators.bm25 import bm25_term_score, idf_col
 from bge_m3_onnx_spark.operators.compress import build_blocks
 from bge_m3_onnx_spark.operators.ordinals import assign_dense_ordinals
 from bge_m3_onnx_spark.plans.build_index import InvertedIndex
+from bge_m3_onnx_spark.plans.wand import _KEYS, _block_of
 
 
 def merge_delta(
@@ -118,11 +117,9 @@ def merge_delta(
     row = docs.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
     n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
 
-    blocks, kept_bounds = None, False
+    blocks = None
     if idx.blocks is not None and has_ord:
-        blocks, kept_bounds = _merge_blocks(
-            idx, delta_postings, postings, terms, n_docs, avgdl, cfg
-        )
+        blocks = _merge_blocks(idx, delta_postings, postings, terms, n_docs, avgdl, cfg)
         # Persist: blocks are metadata-sized (~block_size-th of the postings),
         # and every query touches them. Without this a K-deep merge chain keeps
         # the full union/anti-join lineage live — once the caller unpersists an
@@ -139,8 +136,6 @@ def merge_delta(
         avgdl=avgdl,
         cfg=cfg,
         blocks=blocks,
-        # a full re-cut (drift fallback / no blocks) resets the inflation clock
-        merges_since_compaction=(idx.merges_since_compaction + 1) if kept_bounds else 0,
         # the tokenized delta stays cached until this generation is released
         _aux_cached=[tok],
     )
@@ -154,20 +149,9 @@ def _merge_blocks(
     n_docs: int,
     avgdl: float,
     cfg: EngineConfig,
-) -> tuple[DataFrame, bool]:
-    """Delta-term rebuild + inflated-bound keep for untouched terms (module doc).
-
-    Returns (merged blocks relation, kept_inflated_bounds). Falls back to a full
-    rebuild when corpus drift exceeds cfg.merge_drift_eps (bound tightness, not
-    correctness) — that path returns kept_inflated_bounds=False so the caller's
-    compaction clock resets."""
-    n_old, avgdl_old = idx.n_docs, float(idx.avgdl)
-    if n_old <= 0 or avgdl_old <= 0.0:
-        return build_blocks(postings, terms, n_docs, avgdl, cfg), False
-    drift = max(n_docs / n_old - 1.0, abs(avgdl - avgdl_old) / avgdl_old)
-    if drift > cfg.merge_drift_eps:
-        return build_blocks(postings, terms, n_docs, avgdl, cfg), False
-
+) -> DataFrame:
+    """Delta-term re-cut + kept blocks with exact maxima for untouched terms
+    (module doc)."""
     delta_terms = delta_postings.select("term").distinct()
     # exact re-cut for terms whose df (→ block_range) changed; at scale the term
     # In-semi-join prunes the bucketed postings scan to the delta vocabulary.
@@ -178,21 +162,26 @@ def _merge_blocks(
         avgdl,
         cfg,
     )
-    # untouched terms: keep block rows; inflate the pruning bound by the exact
-    # per-term drift factor (df unchanged for untouched terms, so terms' NEW df
-    # equals the df the blocks were built under).
-    idf_new = F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    idf_old = F.log((F.lit(float(n_old)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    inflation = F.greatest(F.lit(1.0), idf_new / idf_old) * F.greatest(
-        F.lit(1.0), F.lit(float(avgdl)) / F.lit(avgdl_old)
+    # untouched terms: keep block rows and payload, and set block_max_score to
+    # the max of the query path's score expression over each block's postings
+    # under the merged (N, avgdl). An untouched term's df and postings are the
+    # ones its blocks were cut from, so keying them by the STORED range
+    # reproduces every kept block exactly.
+    kept = idx.blocks.join(F.broadcast(delta_terms), "term", "left_anti")
+    # the kept terms' stored ranges as a lineage-free (vocabulary-sized)
+    # relation: a second plain reference to ``kept`` would copy the previous
+    # generation's whole logical plan, doubling a K-merge chain's plan (and
+    # its planning time) with every merge
+    ranges = kept.select("term", "block_range").distinct().localCheckpoint(eager=False)
+    score = bm25_term_score("tf", "dl", idf_col("CAST(df AS DOUBLE)", n_docs), avgdl, cfg)
+    maxima = (
+        postings.join(ranges.join(terms, "term"), "term")
+        .selectExpr("term", _block_of("doc_ord", "block_range"), f"{score} AS s")
+        .groupBy(*_KEYS)
+        .agg(F.max("s").alias("block_max_score"))
     )
-    kept = (
-        idx.blocks.join(F.broadcast(delta_terms), "term", "left_anti")
-        .join(terms, "term")
-        .withColumn("block_max_score", F.col("block_max_score") * inflation)
-        .select(*[f.name for f in rebuilt.schema.fields])
-    )
-    return rebuilt.unionByName(kept), True
+    kept = kept.drop("block_max_score").join(maxima, _KEYS)
+    return rebuilt.unionByName(kept.select(*rebuilt.columns))
 
 
 def index_snapshot_range(
@@ -203,24 +192,15 @@ def index_snapshot_range(
     to_inclusive: int,
     cfg: EngineConfig = DEFAULT_CONFIG,
 ) -> InvertedIndex:
-    """Advance the index across a snapshot range — the checkpointed unit of work.
-
-    Compaction policy: after ``cfg.compact_every_merges`` consecutive ε-drift
-    merges the accumulated bound inflation is reset by an automatic
-    ``compact_index`` (the Lucene merge-policy analog — correctness never needs
-    it, WAND pruning tightness does)."""
+    """Advance the index across a snapshot range — the checkpointed unit of work."""
     delta = table.read_incremental(from_exclusive, to_inclusive)
     if idx is None:
         from bge_m3_onnx_spark.plans.build_index import build_index
 
         # with_blocks: this is the serving build path — the north rule's query
-        # side is block-max WAND, and the merge/compaction policy below only
-        # has meaning over compressed blocks.
+        # side is block-max WAND.
         return build_index(delta, cfg, with_ordinals=True, with_blocks=True)
-    merged = merge_delta(spark, idx, delta, cfg)
-    if merged.blocks is not None and merged.merges_since_compaction >= cfg.compact_every_merges:
-        merged = compact_index(merged, cfg)
-    return merged
+    return merge_delta(spark, idx, delta, cfg)
 
 
 def stream_build(
@@ -246,14 +226,11 @@ def stream_build(
 
 
 def compact_index(idx: InvertedIndex, cfg: EngineConfig | None = None) -> InvertedIndex:
-    """Maintenance compaction (the Lucene forceMerge analog): re-cut EVERY
-    term's blocks under the CURRENT (n_docs, avgdl, df) and drop the compounded
-    inflation factors that repeated ε-drift merges left on untouched terms'
-    pruning bounds. Correctness never requires this — inflated bounds are still
-    upper bounds — but each merge multiplies untouched terms' block_max_score
-    by ≥1, so WAND pruning gets monotonically weaker until a compaction resets
-    it. Run it like any segment-merge policy: off the query path, after every
-    K merges or when decoded-block fractions regress.
+    """Layout tidy-up (the Lucene forceMerge analog): re-cut EVERY term's
+    blocks under the CURRENT (n_docs, df), so kept terms' block ranges match
+    what a fresh build would cut. Neither correctness nor pruning needs it —
+    a merge already leaves exact block maxima — so run it off the query path,
+    whenever the layout should look fresh again.
 
     One build_blocks pass over the postings relation — the same term-partitioned
     shuffle as a fresh build; at 10^12 scale schedule per term-bucket so the
@@ -272,5 +249,4 @@ def compact_index(idx: InvertedIndex, cfg: EngineConfig | None = None) -> Invert
         avgdl=idx.avgdl,
         cfg=cfg,
         blocks=blocks,
-        merges_since_compaction=0,
     )

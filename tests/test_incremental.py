@@ -70,13 +70,15 @@ def test_merge_replay_is_noop(spark):
 
 
 def test_merge_keeps_untouched_blocks_wand_lossless(spark):
-    """Under drift ≤ ε the merge must NOT rebuild untouched terms' blocks — their
-    payload bytes stay identical, only the pruning bound inflates — and WAND over
-    the merged index must still equal the exact path (bounds stay upper bounds)."""
+    """The merge must NOT rebuild untouched terms' blocks — their payload bytes
+    and ranges stay identical — while their block max becomes the exact max of
+    the query's score expression under the merged stats; WAND over the merged
+    index must still equal the exact path."""
     from pyspark.sql import functions as F
 
     from bge_m3_onnx_spark.operators.postings import counted_docs, postings_from_counted
     from bge_m3_onnx_spark.plans.wand import run_queries_wand
+    from tests.test_merge_chain import recomputed_maxima
 
     base = synth_transcripts(spark, n_convs=30, turns_per_conv=5)
     delta = synth_transcripts(spark, n_convs=2, turns_per_conv=5).withColumn(
@@ -93,12 +95,13 @@ def test_merge_keeps_untouched_blocks_wand_lossless(spark):
     new = {(r["term"], r["block_id"]): r for r in merged.blocks.collect()}
     untouched = [key for key in old if key[0] not in dterms]
     assert untouched, "fixture must leave some terms untouched"
+    want = recomputed_maxima(merged)
     for key in untouched:
         o, nw = old[key], new[key]
         assert bytes(o["ords_vb"]) == bytes(nw["ords_vb"])  # payload NOT rebuilt
         assert bytes(o["tfs_vb"]) == bytes(nw["tfs_vb"])
         assert o["block_range"] == nw["block_range"]
-        assert nw["block_max_score"] >= o["block_max_score"] - 1e-12  # inflated bound
+        assert nw["block_max_score"] == want[key]  # exact, not a bound
 
     queries = {1: "spark shuffle", 2: "the varbyte block", 3: "checkpoint merge"}
     exact = _topk_map(run_queries(spark, merged, queries, k=10))
@@ -186,9 +189,9 @@ def test_index_snapshot_range_incremental(spark, tmp_path):
 
 
 def test_compaction_tightens_bounds_and_stays_lossless(spark):
-    """After merges, untouched terms carry inflated block bounds; compaction
-    re-cuts under current stats: Σ block_max_score strictly tightens (or holds)
-    per term, block coverage is identical, and WAND == exact afterwards."""
+    """Compaction re-cuts a merged index's kept blocks under current stats:
+    Σ block_max_score tightens (or holds) per term, block coverage is
+    identical, and WAND == exact afterwards."""
     import pyspark.sql.functions as F
 
     from bge_m3_onnx_spark.plans.build_index import build_index
@@ -216,7 +219,6 @@ def test_compaction_tightens_bounds_and_stays_lossless(spark):
     before, after = bound_sum(merged.blocks), bound_sum(compacted.blocks)
     assert set(before) == set(after)
     assert all(after[t] <= before[t] + 1e-9 for t in after)
-    assert any(after[t] < before[t] - 1e-12 for t in after)  # inflation actually dropped
 
     q = {1: "spark shuffle partition", 2: "the"}
     exact = run_queries(spark, compacted, q, k=5).collect()
@@ -225,23 +227,12 @@ def test_compaction_tightens_bounds_and_stays_lossless(spark):
     assert sorted(map(key, wand)) == sorted(map(key, exact))
 
 
-def test_auto_compaction_after_k_merges(spark, tmp_path):
-    """index_snapshot_range triggers compact_index automatically after
-    cfg.compact_every_merges consecutive ε-drift merges: the merge counter
-    resets, the accumulated bound inflation drops back to the exact re-cut
-    values, and results stay identical to a full rebuild."""
-    import dataclasses
-
-    import pyspark.sql.functions as F
-
-    from bge_m3_onnx_spark.config import DEFAULT_CONFIG
-    from bge_m3_onnx_spark.streaming.incremental import compact_index
-
-    cfg = dataclasses.replace(DEFAULT_CONFIG, compact_every_merges=2)
+def test_index_snapshot_range_three_merges(spark, tmp_path):
+    """Three consecutive index_snapshot_range merges answer like a full
+    rebuild of the same snapshots."""
     t = SnapshotTable(spark, str(tmp_path / "tbl3"))
     base = synth_transcripts(spark, n_convs=200, turns_per_conv=5)
     snaps = [t.append(base)]
-    # three tiny deltas (well under merge_drift_eps → kept-block merges)
     for i in range(3):
         lo, hi = 200 + i * 4, 200 + (i + 1) * 4
         d = synth_transcripts(spark, n_convs=hi, turns_per_conv=5).filter(
@@ -249,19 +240,9 @@ def test_auto_compaction_after_k_merges(spark, tmp_path):
         )
         snaps.append(t.append(d))
 
-    idx = index_snapshot_range(spark, t, None, None, snaps[0], cfg)
-    idx = index_snapshot_range(spark, t, idx, snaps[0], snaps[1], cfg)
-    assert idx.merges_since_compaction == 1  # merge #1: kept bounds, no compaction
-    idx = index_snapshot_range(spark, t, idx, snaps[1], snaps[2], cfg)
-    assert idx.merges_since_compaction == 0  # merge #2 hit the policy → compacted
-    # bounds equal an explicit compaction of the same logical index (re-cut
-    # under exact stats — no residual inflation anywhere)
-    explicit = compact_index(idx, cfg)
-    s_auto = idx.blocks.agg(F.sum("block_max_score")).collect()[0][0]
-    s_explicit = explicit.blocks.agg(F.sum("block_max_score")).collect()[0][0]
-    assert abs(s_auto - s_explicit) < 1e-9
-    idx = index_snapshot_range(spark, t, idx, snaps[2], snaps[3], cfg)
-    assert idx.merges_since_compaction == 1  # clock restarted
+    idx = index_snapshot_range(spark, t, None, None, snaps[0])
+    for prev, cur in zip(snaps, snaps[1:]):
+        idx = index_snapshot_range(spark, t, idx, prev, cur)
 
     full = build_index(t.read(snaps[3]))
     queries = {1: "spark shuffle", 2: "the merge"}

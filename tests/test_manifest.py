@@ -10,8 +10,7 @@ import pytest
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG
 from bge_m3_onnx_spark.plans.build_index import IndexManifest
 
-# a stats.json as materialize_index wrote it before the merge clock was
-# persisted: every required field, no merges_since_compaction
+# a stats.json as materialize_index writes it: every required field
 STORED = {"n_docs": 200, "avgdl": 11.35, "k1": 1.2, "b": 0.75, "block_size": 128, "term_buckets": 16}
 REQUIRED = ["n_docs", "avgdl", "k1", "b", "block_size"]
 
@@ -22,9 +21,7 @@ def _write(index_dir, stored: dict) -> None:
 
 
 def test_manifest_roundtrip_keeps_every_field(tmp_path):
-    """A merged index's block maxima are ε-inflated bounds, and WAND takes θ
-    from block maxima only when merges_since_compaction == 0 — so a write and
-    read must not reset the clock, nor any other field."""
+    """A write and a read keep every field."""
     man = IndexManifest(
         n_docs=12_345,
         avgdl=0.1 + 0.2,  # 0.30000000000000004: no short decimal prints it
@@ -32,7 +29,6 @@ def test_manifest_roundtrip_keeps_every_field(tmp_path):
         b=0.4,
         block_size=64,
         term_buckets=8,
-        merges_since_compaction=3,
     )
     # every field away from its default, so a field the writer drops fails
     for f in dataclasses.fields(man):
@@ -45,7 +41,25 @@ def test_manifest_roundtrip_keeps_every_field(tmp_path):
 def test_manifest_read_defaults_optional_fields(tmp_path):
     _write(tmp_path, STORED)
     man = IndexManifest.read(str(tmp_path))
-    assert dataclasses.asdict(man) == {**STORED, "merges_since_compaction": 0}
+    assert dataclasses.asdict(man) == STORED
+    man.write(str(tmp_path))
+    with open(tmp_path / "stats.json") as f:
+        assert json.load(f) == STORED  # the writer emits no merge clock
+
+
+def test_manifest_read_drops_a_zero_merge_clock(tmp_path):
+    """stats.json files written while indexes kept a merge clock carry
+    "merges_since_compaction": 0; they still load, and the field is gone."""
+    _write(tmp_path, {**STORED, "merges_since_compaction": 0})
+    assert dataclasses.asdict(IndexManifest.read(str(tmp_path))) == STORED
+
+
+def test_manifest_read_rejects_a_running_merge_clock(tmp_path):
+    """A nonzero clock marks block maxima that are inflated bounds, which no
+    reader trusts any more: the read fails and names the field."""
+    _write(tmp_path, {**STORED, "merges_since_compaction": 3})
+    with pytest.raises(ValueError, match="merges_since_compaction"):
+        IndexManifest.read(str(tmp_path))
 
 
 @pytest.mark.parametrize("field", REQUIRED)

@@ -213,7 +213,6 @@ def test_block_max_theta_is_lossless(spark, skewed, q, k):
     wand = _collect(run_queries_wand(spark, skewed, q, k=k, force_wand=True, stats_out=stats))
     exact = _collect(run_queries(spark, skewed, q, k=k))
     assert wand == exact  # (rank, doc_id, score) per query, floats unrounded
-    assert stats["theta_source"] == "block_max"
     assert stats["ess_completion"] == "skipped"
     assert not plan_runs(stats["plan_theta"], "MapInArrow")
     assert not plan_runs(stats["plan_theta"], "Window")  # driver phase 2: a plain scan
@@ -313,11 +312,11 @@ def test_essential_term_with_every_block_pruned(spark, monkeypatch):
         assert wand == exact
 
 
-def test_merged_index_keeps_seed_theta(spark, skewed):
-    """ε-inflated maxima of a merged, uncompacted index are upper bounds no
-    posting scores, so θ must come from the seed blocks' postings there;
-    compaction re-cuts the blocks and restores the metadata-only θ. Both stay
-    exact, and neither runs a Python task."""
+def test_merged_index_takes_the_fresh_path(spark, skewed):
+    """A merge leaves every block max the exact score of a real posting, so a
+    merged index takes the fresh path: metadata-only θ, driver phase 2 and no
+    covering-block completion. So does its compaction. Both stay exact, run
+    no Python task and read no docs relation."""
     from bge_m3_onnx_spark.sources.transcripts import synth_transcripts_skewed
     from bge_m3_onnx_spark.streaming.incremental import compact_index, merge_delta
 
@@ -325,15 +324,15 @@ def test_merged_index_keeps_seed_theta(spark, skewed):
         "conv_id >= 'conv-002000'"
     )
     merged = merge_delta(spark, skewed, delta)
-    assert merged.merges_since_compaction == 1
     compacted = compact_index(merged)
     q = {1: "the", 2: "iceberg3 the"}
     try:
-        for idx, source in ((merged, "seed"), (compacted, "block_max")):
+        for idx in (merged, compacted):
             stats: dict = {"capture_plans": True}
             wand = _collect(run_queries_wand(spark, idx, q, k=10, force_wand=True, stats_out=stats))
-            assert stats["theta_source"] == source
+            assert stats["ess_completion"] == "skipped"
             assert not plan_runs(stats["plan_theta"], "MapInArrow")
+            assert not plan_runs(stats["plan_theta"], "Window")  # driver phase 2: a plain scan
             assert not plan_runs(stats["plan_final"], "MapInArrow")
             assert not plan_reads(stats["plan_final"], idx.docs)
             assert wand == _collect(run_queries(spark, idx, q, k=10))
@@ -377,16 +376,15 @@ def test_wand_keys_kept_blocks_by_stored_range(spark, tiny_transcripts):
 
 
 def test_distributed_phase2_with_block_max_theta(spark, skewed, monkeypatch):
-    """Pinning the driver cap to 0 sends a fresh index through the rare
-    branches: salted top-k pre-rank, metadata θ from each term's top-k
-    blocks, distributed phase 2 — still bit-identical to exact."""
+    """Pinning the driver cap to 0 sends an index through the rare branches:
+    salted top-k pre-rank, metadata θ from each term's top-k blocks,
+    distributed phase 2 — still bit-identical to exact."""
     import bge_m3_onnx_spark.plans.wand as wand_mod
 
     monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", 0)
     q = {1: "the", 2: "iceberg3 the", 3: "iceberg3", 4: "the of"}
     stats: dict = {"capture_plans": True}
     wand = _collect(run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats))
-    assert stats["theta_source"] == "block_max"
     assert not plan_runs(stats["plan_theta"], "MapInArrow")
     assert plan_runs(stats["plan_theta"], "Window")  # per-term top-k, not a full collect
     assert not plan_runs(stats["plan_final"], "MapInArrow")

@@ -157,16 +157,14 @@ def main() -> None:
     ).collect()
     sections.append(
         (
-            f"WAND θ collect (theta_source = {st['theta_source']})",
+            "WAND θ collect (block maxima)",
             st["plan_theta"],
             [
-                "Fresh index (merges_since_compaction == 0): θ comes from block maxima "
-                "alone — no postings read, no rescore join, no window; the plan is the "
-                "metadata scan the driver-side phase 2 reads anyway",
+                "θ comes from block maxima alone — no postings read, no rescore join, "
+                "no window; the plan is the metadata scan the driver-side phase 2 reads "
+                "anyway. Every index takes this plan: a merge leaves each block max the "
+                "exact score of a real posting, as a fresh build does",
                 "ReadSchema contains ONLY term/block_id/block_range/block_max_score",
-                "Merged, uncompacted indexes take the seed θ instead (theta_source = "
-                "seed): its plan reads the seed blocks' postings from the postings "
-                "relation, still with no MapInArrow",
             ],
         )
     )
@@ -209,7 +207,7 @@ def main() -> None:
                 "rows before the score aggregation",
                 "After driver-side phase 2 (ess_completion = skipped) no covering-block "
                 "completion is built: it cannot change the top-k. Distributed phase 2 "
-                "(ess_completion = decoded, e.g. merged indexes) adds one more such "
+                "(ess_completion = decoded, past the driver cap) adds one more such "
                 "semi-join for the needed blocks that did not survive phase 2",
             ],
         )
