@@ -38,7 +38,8 @@ fixture):
     window. For "rare_term the"-shaped queries this is the difference between
     scoring ~all of "the" and scoring a handful of its blocks: the rare
     term's wide ordinal tiles otherwise carry its high max into every segment.
-    After driver-side phase 2 3a's completion is not built (``ess_completion == "skipped"``): it cannot change the top-k.
+    After driver-side phase 2, 3a's completion is not built
+    (``ess_completion == "skipped"``): it cannot change the top-k.
     Driver phase 2 cuts each query's segments at every block start of its
     terms, so inside a segment each term has exactly one block. A doc d whose
     score reaches the k-th has a surviving segment, so every essential block
@@ -130,8 +131,8 @@ def _block_max_theta(
     block maxima were computed by the build's NumPy kernel and can sit an ulp
     above the query plan's score of the same posting). Valid because every
     block max is the exact score of a real posting, on fresh and merged
-    indexes alike. ``blk_lists`` may hold just each term's top-k blocks. Queries where no
-    term has k blocks get −inf: no pruning, still exact."""
+    indexes alike. ``blk_lists`` may hold just each term's top-k blocks.
+    Queries where no term has k blocks get −inf: no pruning, still exact."""
     import heapq
 
     kth = {
@@ -512,11 +513,13 @@ def _run_queries_wand_forced(
             # per (term, salt) — 32-way parallel per term; phase B re-ranks
             # the ≤ 32·k survivors per term.
             order = (F.desc("block_max_score"), F.asc("block_id"))
+            w_pre = Window.partitionBy("term", "__salt").orderBy(*order)
+            w_top = Window.partitionBy("term").orderBy(*order)
             theta_df = (
                 qmeta.withColumn("__salt", F.pmod(F.xxhash64("block_id"), F.lit(32)))
-                .withColumn("rk", F.row_number().over(Window.partitionBy("term", "__salt").orderBy(*order)))
+                .withColumn("rk", F.row_number().over(w_pre))
                 .filter(F.col("rk") <= k)
-                .withColumn("rk", F.row_number().over(Window.partitionBy("term").orderBy(*order)))
+                .withColumn("rk", F.row_number().over(w_top))
                 .filter(F.col("rk") <= k)
                 .select("term", "block_id", "block_range", "block_max_score")
             )
