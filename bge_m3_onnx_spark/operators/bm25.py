@@ -86,7 +86,6 @@ def score_postings(
     n_docs: int,
     avgdl: float,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    agg_partitions: int | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score) for every candidate document.
 
@@ -105,12 +104,6 @@ def score_postings(
     per_term = matched.selectExpr(
         "query_id", "doc_id", "term", f"{bm25_term_score('tf', 'dl', 'idf', avgdl, cfg)} AS s"
     )
-    # Driver-sized exchange (plans/query.py:_agg_partitions): an explicit hash
-    # repartition on the agg keys replaces the session-default exchange — the
-    # aggregate reuses this partitioning, so it's the SAME single shuffle, just
-    # sized to the candidate volume instead of a fixed width.
-    if agg_partitions is not None:
-        per_term = per_term.repartition(agg_partitions, "query_id", "doc_id")
     return sum_scores_deterministic(per_term, ["query_id", "doc_id"])
 
 

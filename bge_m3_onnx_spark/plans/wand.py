@@ -30,27 +30,27 @@ fixture):
     query's terms by θ: sorted by global max ascending, the maximal prefix whose
     cumulative Σmax stays below θ is NON-ESSENTIAL (those terms alone cannot
     lift any doc to θ — Turtle & Flood's MaxScore, set-oriented). Candidates
-    come from ESSENTIAL surviving blocks only; 3a completes candidates'
-    essential postings (covering blocks: block_id = doc_ord //
-    block_range(term) is a pure function of stored ranges) and filters on
-    s_ess(d) + Σ_{non-ess} tmax ≥ θ; 3b reads non-essential blocks only for
-    the filtered candidates, rescores exactly, then the deterministic top-k
-    window. For "rare_term the"-shaped queries this is the difference between
-    scoring ~all of "the" and scoring a handful of its blocks: the rare
-    term's wide ordinal tiles otherwise carry its high max into every segment.
-    After driver-side phase 2, 3a's completion is not built
-    (``ess_completion == "skipped"``): it cannot change the top-k.
-    Driver phase 2 cuts each query's segments at every block start of its
-    terms, so inside a segment each term has exactly one block. A doc d whose
+    are the docs of ESSENTIAL surviving blocks only; 3a scores each candidate
+    over the surviving essential postings and filters on s_ess(d) +
+    Σ_{non-ess} tmax ≥ θ; 3b reads non-essential blocks only for the filtered
+    candidates (covering blocks: block_id = doc_ord // block_range(term) is a
+    pure function of stored ranges), rescores exactly, then the deterministic
+    top-k window. For "rare_term the"-shaped queries this is the difference
+    between scoring ~all of "the" and scoring a handful of its blocks: the
+    rare term's wide ordinal tiles otherwise carry its high max into every
+    segment.
+    3a reads no block beyond the survivors, after either phase-2 branch. Both
+    cut each query's segments at every block start of its terms (the
+    distributed branch's classic-bound pre-filter drops only segments below
+    θ), so inside a segment each term has exactly one block. A doc d whose
     score reaches the k-th has a surviving segment, so every essential block
     holding d survived and its essential score over the surviving postings is
     exact. A candidate missing an essential block sits in a pruned segment:
     its true score is below θ − 1e-6, under the k-th, and its partial score
-    is lower still. With one essential term per query, or full survival, no
-    candidate misses a block at all. The candidates are then the surviving
-    essential postings themselves: phase 3a reads them once, with no candidate
-    shuffle and no covering-block joins. Distributed phase 2 keeps the
-    completion.
+    is lower still. The candidates are therefore the surviving essential
+    postings themselves, read once, with no candidate shuffle and no
+    covering-block joins (the exact cutoff from summaries needs no second
+    pass over the data).
 
   Reading a block: every phase reads a block's postings from the postings
     relation by (term, block_id = floor(doc_ord / STORED range)), the key the
@@ -106,7 +106,13 @@ from pyspark.sql.types import (
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
 from bge_m3_onnx_spark.functions.sql_literal import sql_in, sql_literal
 from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
-from bge_m3_onnx_spark.operators.bm25 import bm25_term_score, idf_col, sum_scores_deterministic, topk
+from bge_m3_onnx_spark.operators.bm25 import (
+    bm25_term_score,
+    idf_col,
+    sum_scores_deterministic,
+    topk,
+    topk_single,
+)
 from bge_m3_onnx_spark.plans.build_index import InvertedIndex
 
 _KEYS = ["term", "block_id"]
@@ -279,12 +285,12 @@ def run_queries_wand(
     (the extra count jobs only run when requested):
 
     - ``theta``: {query_id: θ}; ``essential_terms``: {query_id: [terms]};
-    - ``ess_completion``: "skipped" when phase 3a's covering-block completion
-      was not built (after driver-side phase 2, where it cannot change the
-      top-k; module docstring), "decoded" when it ran (distributed phase 2);
+    - ``phase2``: "driver" when phase 2 ran in NumPy over the collected
+      metadata, "distributed" when the batch's estimated block rows exceeded
+      ``_PHASE2_DRIVER_CAP`` and it ran as Spark jobs;
     - ``blocks_total``, ``blocks_surviving``, ``blocks_extra_decoded`` (extra
-      blocks READ beyond the survivors — phase 3a's completion plus phase 3b;
-      the key name predates reading blocks from the postings relation);
+      blocks READ beyond the survivors — phase 3b's non-essential blocks; the
+      key name predates reading blocks from the postings relation);
     - ``n_candidates``, ``n_strong``;
     - ``t_theta_sec`` (the θ collect) and ``t_final_sec`` (everything after).
 
@@ -350,31 +356,21 @@ def run_queries_wand(
     # Size EVERY internal shuffle from driver-known Σdf: WAND's phases are
     # metadata-sized jobs, and running their ~dozen shuffles at the session
     # default (e.g. 64) puts hundreds of near-empty tasks on the latency path —
-    # measured ~10 s of fixed machinery cost at 100k turns before this. All
-    # actions (collects + the eager localCheckpoint) happen inside this
-    # function, so a scoped conf set/restore covers the whole plan.
-    _old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    # measured ~10 s of fixed machinery cost at 100k turns before this. Each
+    # exchange takes the width as an argument; the session conf is only read,
+    # so queries sharing a session never change each other's widths.
     # Width from Σdf/1M, not Σdf/100k: WAND's shuffles carry METADATA and
     # PRUNED postings, which are normally ≪ Σdf — the exact path's
     # rows-per-task model over-parallelizes every tiny stage here (worst case,
     # an unprunable stopword batch, still gets ~1M scored postings per task).
     try:
-        _cap = int(_old_sp)
+        _cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         # AQE-managed runtimes may set this to a non-numeric value ("auto");
         # fall back to the cluster's physical width (ADVICE r3).
         _cap = spark.sparkContext.defaultParallelism
-    _need = max(
-        1,
-        min(_cap, sum(r["df"] for r in qt_rows) // 1_000_000),
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(_need))
-    try:
-        return _run_queries_wand_forced(
-            spark, idx, queries, k, cfg, qt_rows, stats_out
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", _old_sp)
+    width = max(1, min(_cap, sum(r["df"] for r in qt_rows) // 1_000_000))
+    return _run_queries_wand_forced(spark, idx, queries, k, cfg, qt_rows, width, stats_out)
 
 
 def _run_queries_wand_forced(
@@ -384,6 +380,7 @@ def _run_queries_wand_forced(
     k: int,
     cfg: EngineConfig,
     qt_rows: list[dict],
+    width: int,
     stats_out: dict | None,
 ) -> DataFrame:
     if not qt_rows:
@@ -437,25 +434,26 @@ def _run_queries_wand_forced(
         "tf", "dl", idf_col(f"element_at({df_map_lit}, term)", n), avgdl, cfg
     )
 
-    def _score_postings_lit(postings: DataFrame, qids_map: str) -> DataFrame:
+    def _score_postings_lit(postings: DataFrame, qids_map: str, n_parts: int) -> DataFrame:
         """block postings (term, doc_id, doc_ord, tf, dl) × literal query-term
         map → per-doc sums, via explode instead of a broadcast join. doc_id
         rides along as a group key (it is a function of doc_ord), so no phase
         ever joins the docs relation. Summation stays the term-sorted
-        deterministic fold shared with the exact path."""
+        deterministic fold shared with the exact path, over ``n_parts``
+        partitions hashed on (query_id, doc_ord): the fold and phase 3b's
+        joins on those keys reuse that one exchange."""
         per_term = postings.selectExpr(
             f"explode(element_at({qids_map}, term)) AS query_id",
             "doc_ord",
             "doc_id",
             "term",
             f"{score_sql} AS s",
-        )
+        ).repartition(n_parts, "query_id", "doc_ord")
         return sum_scores_deterministic(per_term, ["query_id", "doc_ord", "doc_id"])
 
     # every block's postings ("Reading a block", module docstring); block_id
     # is attached once the stored ranges are known
     qpostings = idx.pruned_postings(qterms_list)
-    _width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Every persisted frame is registered so an exception anywhere in the
     # phases below cannot leak cached partitions (ADVICE r3).
     _persisted: list[DataFrame] = []
@@ -483,6 +481,8 @@ def _run_queries_wand_forced(
             for d in _df_by_term.values()
         )
         _driver_phase2 = _est_blocks <= _PHASE2_DRIVER_CAP
+        if stats_out is not None:
+            stats_out["phase2"] = "driver" if _driver_phase2 else "distributed"
 
         # The query's only blocks relation, metadata columns alone, coalesced to
         # the Σdf-sized width (the source keeps the BUILD's partitioning). The
@@ -491,7 +491,7 @@ def _run_queries_wand_forced(
         qmeta = (
             idx.pruned_blocks(qterms_list)
             .select("term", "block_id", "block_range", "block_max_score")
-            .coalesce(_width)
+            .coalesce(width)
         )
         if not _driver_phase2:
             qmeta = qmeta.persist()
@@ -605,6 +605,7 @@ def _run_queries_wand_forced(
                     "block_max_score",
                     f"explode(element_at({all_qids_map}, term)) AS query_id",
                 )
+                .repartition(width, "query_id", "x")
                 .groupBy("query_id", "x")
                 .agg(
                     F.expr(
@@ -616,16 +617,23 @@ def _run_queries_wand_forced(
                 .select("query_id", "x")
             )
             # active block of EVERY query term at each boundary; inner join drops terms
-            # with no block there (they contribute 0 to the sum — correct)
+            # with no block there (they contribute 0 to the sum — correct). Both
+            # sides are hashed at the width: a side left to the planner would
+            # take the session's.
             active = (
                 bounds.selectExpr(
                     "query_id", "x", f"explode(element_at({q2terms_lit}, query_id)) AS term"
                 )
                 .selectExpr("query_id", "x", "term", _block_of("x", range_of_term))
-                .join(block_meta.select("term", "block_id", "block_max_score"), _KEYS)
+                .repartition(width, *_KEYS)
+                .join(
+                    block_meta.select(*_KEYS, "block_max_score").repartition(width, *_KEYS),
+                    _KEYS,
+                )
             )
             surviving_x = (
-                active.groupBy("query_id", "x")
+                active.repartition(width, "query_id", "x")
+                .groupBy("query_id", "x")
                 .agg(F.expr("sum(block_max_score) AS s"))
                 .filter(f"s >= {theta_padded}")
             )
@@ -685,7 +693,7 @@ def _run_queries_wand_forced(
         ess_qids_map = _list_map(_ess_by_term)
         q2ess_terms_lit = _list_map(_ess_by_qid)
 
-        def _covering_keys(docs: DataFrame, q2terms: str) -> DataFrame:
+        def _covering_keys(docs: DataFrame, q2terms: str, n_parts: int) -> DataFrame:
             """(term, block_id) of every block that can hold a posting of a
             (query_id, doc_ord) row for the query's ``q2terms`` terms: block_id
             = doc_ord // the term's STORED range — valid even for blocks kept
@@ -693,6 +701,7 @@ def _run_queries_wand_forced(
             return (
                 docs.selectExpr("doc_ord", f"explode(element_at({q2terms}, query_id)) AS term")
                 .selectExpr("term", _block_of("doc_ord", range_of_term))
+                .repartition(n_parts, *_KEYS)
                 .dropDuplicates(_KEYS)
             )
 
@@ -749,6 +758,7 @@ def _run_queries_wand_forced(
                     "x", f"explode(element_at({q2ess_terms_lit}, query_id)) AS term"
                 )
                 .selectExpr("term", _block_of("x", range_of_term))
+                .repartition(width, *_KEYS)
                 .dropDuplicates(_KEYS)
             )
         if _surv_expr is not None:
@@ -762,80 +772,30 @@ def _run_queries_wand_forced(
             return keys.join(F.broadcast(surviving_keys), _KEYS, "left_anti")
 
         # ---- scoring-volume-aware width (r6: partitioning from data size) ----
-        # The session width was scoped to Σdf//1M for the METADATA jobs, which
-        # single-threads the unprunable/forced regime, where phase 3 scores
-        # ~every posting of the query terms. After driver-side phase 2 the
-        # survival is KNOWN: widen the score aggregation to the estimated
-        # volume. Posting rows are filtered in the scan's own partitions.
+        # The Σdf//1M width suits the METADATA jobs, but would single-thread
+        # the unprunable/forced regime, where phase 3 scores ~every posting of
+        # the query terms. After driver-side phase 2 the survival is KNOWN:
+        # widen phase 3's exchanges to the estimated volume. Posting rows are
+        # filtered in the scan's own partitions.
         if _blk_lists:
             if _full_survival:
                 _est_rows = sum(_df_by_term.get(t, 0) for t in _ess_terms_all)
             else:
                 _est_rows = _n_keys * cfg.block_size
-            _w2 = max(
-                _width,
+            width = max(
+                width,
                 min(spark.sparkContext.defaultParallelism, _est_rows // _SCORE_ROWS_PER_TASK),
             )
-            if _w2 > _width:
-                spark.conf.set("spark.sql.shuffle.partitions", str(_w2))
 
         # ---- phase 3a: candidates + exact ESSENTIAL score ----
-        # surviving's postings are persisted: they feed the candidate derivation
-        # AND are the bulk of the essential-rescore input — only the needed-but-
-        # not-surviving remainder is read on top (_not_surv drops surviving keys).
+        # The candidates are the surviving essential postings themselves: after
+        # either phase-2 branch, every essential block of a doc that can reach
+        # the k-th survived (module docstring, phase 3), so its s_ess over
+        # surv_post is exact. surv_post is persisted: 3b reads it again beside
+        # the non-essential blocks.
         surv_post = surviving.persist()
         _persisted.append(surv_post)
-        ess_completion = "skipped" if _blk_lists else "decoded"
-        if stats_out is not None:
-            stats_out["ess_completion"] = ess_completion
-        if ess_completion == "skipped":
-            # After driver phase 2 the covering-block completion cannot change
-            # the top-k, so it is not built (proof in-line):
-            # * driver phase 2 cuts each query's segments at every block start
-            #   of its terms, so inside a segment each term has one block: the
-            #   one holding any doc of that segment;
-            # * a doc d whose score reaches the k-th (≥ θ + 1e-6: θ is a k-th
-            #   block max minus the pad) has s_q(ord(d)) ≥ score(d), so its
-            #   segment survives, every essential block holding d is in
-            #   surviving, and s_ess(d) over surv_post is exact;
-            # * a candidate missing an essential block therefore sits in a
-            #   pruned segment: its true score is < θ − 1e-6, below the k-th,
-            #   and its partial s_ess is lower still. Only such candidates'
-            #   scores differ from the completed chain's, and they cannot
-            #   enter the top-k.
-            # Per query, so for the batch too (surv_by_term is a union over
-            # the batch; extra blocks only add candidates of the third kind).
-            # With one essential term per query, or full survival, no candidate
-            # misses a block at all. The candidate set {(q, d): d in a surviving
-            # block of a term essential to q} is exactly the (q, d) pairs that
-            # _score_postings_lit's explode over ess_qids_map generates from
-            # surv_post, so the dropDuplicates shuffle, the doc_ord equi-join
-            # and the left-semi are identities. Hence full_ess = surv_post
-            # (second persist skipped) and s_ess is the plain scored aggregate
-            # of surv_post. Distributed phase 2 (any batch over
-            # _PHASE2_DRIVER_CAP metadata rows) keeps the chain.
-            candidates = None
-            extra_keys = None
-            full_ess = surv_post
-            s_ess = _score_postings_lit(surv_post, ess_qids_map)
-        else:
-            # per-query candidates: docs in any surviving block of a term ESSENTIAL
-            # to that query. Lazily persisted (no eager count — VERDICT r1).
-            candidates = (
-                surv_post.selectExpr(
-                    f"explode(element_at({ess_qids_map}, term)) AS query_id", "doc_ord"
-                )
-                .dropDuplicates(["query_id", "doc_ord"])
-                .persist()
-            )
-            _persisted.append(candidates)
-            # blocks that can hold any essential posting of a candidate
-            extra_keys = _not_surv(_covering_keys(candidates, q2ess_terms_lit))
-            full_ess = surv_post.unionByName(_blocks_of(qpost, extra_keys)).persist()
-            _persisted.append(full_ess)
-            s_ess = _score_postings_lit(
-                full_ess.join(candidates.select("doc_ord").distinct(), "doc_ord"), ess_qids_map
-            ).join(candidates, ["query_id", "doc_ord"], "left_semi")
+        s_ess = _score_postings_lit(surv_post, ess_qids_map, width)
 
         # ---- θ-filter before the non-essential completion ----
         # score(d) = s_ess(d) + s_ness(d) ≤ s_ess(d) + Σ_{t non-ess} tmax(t), so a
@@ -852,24 +812,20 @@ def _run_queries_wand_forced(
         # WAND-routed shape — stopword-heavy queries where every term is
         # essential): the 3b subplan otherwise adds ~6 broadcast-exchange subjobs
         # and real Catalyst planning time for provably-empty relations, and
-        # s_ess over the essential completion IS the full exact score.
+        # s_ess IS the full exact score.
         non_keys = None
         strong = None
         if ness_pairs_rows:
             strong = s_ess.filter(_strong_cond).select("query_id", "doc_ord").persist()
             _persisted.append(strong)
-            needed_non = _covering_keys(strong, _list_map(_ness_by_qid))
+            needed_non = _covering_keys(strong, _list_map(_ness_by_qid), width)
             # a term can be essential for one query and non-essential for another —
-            # excluding EVERY block already read (surviving via _not_surv,
-            # extras via the anti-join) keeps postings duplicate-free (a
-            # duplicated posting would double-count in the fold)
+            # excluding every surviving block already read keeps postings
+            # duplicate-free (a duplicated posting would double-count in the fold)
             non_keys = _not_surv(needed_non)
-            if extra_keys is not None:
-                non_keys = non_keys.join(F.broadcast(extra_keys), _KEYS, "left_anti")
-            full = full_ess.unionByName(_blocks_of(qpost, non_keys))
-            scored = _score_postings_lit(
-                full.join(strong.select("doc_ord").distinct(), "doc_ord"), all_qids_map
-            )
+            full = surv_post.unionByName(_blocks_of(qpost, non_keys))
+            strong_ords = strong.select("doc_ord").repartition(width, "doc_ord").distinct()
+            scored = _score_postings_lit(full.join(strong_ords, "doc_ord"), all_qids_map, width)
             scored = scored.join(strong, ["query_id", "doc_ord"], "left_semi")
         else:
             # every term essential → s_ess is already the exact full score for
@@ -884,8 +840,12 @@ def _run_queries_wand_forced(
                 scored = scored.persist()
                 _persisted.append(scored)
 
-        # doc_id came with the postings: the top-k reads no docs relation
-        final_df = topk(scored, k)
+        # doc_id came with the postings: the top-k reads no docs relation. One
+        # query needs no window exchange (per-partition heap + driver merge).
+        if len(queries) == 1:
+            final_df = topk_single(scored, k)
+        else:
+            final_df = topk(scored.repartition(width, "query_id"), k)
         if stats_out is not None and stats_out.get("capture_plans"):
             # plan-audit hook (tools/explain_audit.py): the returned frame is
             # localCheckpointed below, so its own explain() is opaque — capture
@@ -893,7 +853,7 @@ def _run_queries_wand_forced(
             stats_out["plan_surviving"] = _fmt_plan(surviving)
             stats_out["plan_final"] = _fmt_plan(final_df)
         # Materialize the k·|q|-row result NOW (localCheckpoint is eager): the final
-        # job must run WHILE the surv_post/candidates caches are alive — an
+        # job must run WHILE the surv_post/strong caches are alive — an
         # unpersist before the caller's collect would silently recompute phase 3.
         # The returned frame reads the checkpointed rows, lineage-free.
         result = final_df.localCheckpoint(eager=True)
@@ -914,17 +874,13 @@ def _run_queries_wand_forced(
             else:
                 stats_out["blocks_total"] = qmeta.count()
                 stats_out["blocks_surviving"] = qmeta.join(surviving_keys, _KEYS, "left_semi").count()
-            # extra blocks READ; key relations may name absent blocks: count via qmeta
-            stats_out["blocks_extra_decoded"] = sum(
-                qmeta.join(keys, _KEYS, "left_semi").count()
-                for keys in (extra_keys, non_keys)
-                if keys is not None
+            # extra blocks READ (phase 3b's); key relations may name absent
+            # blocks: count via qmeta
+            stats_out["blocks_extra_decoded"] = (
+                qmeta.join(non_keys, _KEYS, "left_semi").count() if non_keys is not None else 0
             )
-            # full-survival fast path: candidates == s_ess's (q, d) pairs (the
-            # identity the fast path rests on) — count those instead.
-            stats_out["n_candidates"] = (
-                candidates.count() if candidates is not None else s_ess.count()
-            )
+            # the candidates are s_ess's (query_id, doc_ord) pairs
+            stats_out["n_candidates"] = s_ess.count()
             # strong is only materialized when phase 3b needs it; on the
             # all-essential path scored == the strong set and was persisted
             stats_out["n_strong"] = (

@@ -2,8 +2,8 @@
 
 After every ``merge_delta``:
   * ``run_queries`` answers like the pure-Python oracle over the union;
-  * forced WAND takes driver-side phase 2 (no covering-block completion) and
-    equals ``run_queries`` bit for bit;
+  * forced WAND takes driver-side phase 2 and equals ``run_queries`` bit for
+    bit;
   * every stored block max is the query expression's max over the block's
     postings, keyed by the STORED range: exactly for blocks the merge kept;
   * the driver-phase-2 gate's block estimate bounds every term's block rows.
@@ -86,8 +86,8 @@ def check_merged(spark, idx, rows, delta_rows, queries, k, distributed=False) ->
     stats: dict = {}
     wand = _collect(run_queries_wand(spark, idx, queries, k=k, force_wand=True, stats_out=stats))
     assert wand == exact  # (rank, doc_id, score), floats unrounded
-    # the key is absent only when no query term has a block
-    assert stats.get("ess_completion", "skipped") == "skipped"
+    # the key is absent only when no query term is in the index
+    assert stats.get("phase2", "driver") == "driver"
     if distributed:
         with _driver_cap(0):
             wand = _collect(run_queries_wand(spark, idx, queries, k=k, force_wand=True))

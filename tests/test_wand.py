@@ -204,16 +204,15 @@ def test_wand_one_doc_attains_every_term_max(spark):
 def test_block_max_theta_is_lossless(spark, skewed, q, k):
     """Fresh index: θ comes from block metadata alone (no block read before the θ
     collect), never exceeds the true k-th score, and forced WAND stays
-    bit-identical to the exact plan. Driver phase 2 builds no covering-block
-    completion, and block postings are read from the postings relation: no
-    plan runs a Python task. doc_id comes with the postings: the final plan
+    bit-identical to the exact plan. Phase 2 runs on the driver, and block
+    postings are read from the postings relation: no plan runs a Python task. doc_id comes with the postings: the final plan
     never reads the docs relation, and a batch of single-term queries (driver
     phase 2, literal relations only) broadcasts nothing."""
     stats: dict = {"capture_plans": True}
     wand = _collect(run_queries_wand(spark, skewed, q, k=k, force_wand=True, stats_out=stats))
     exact = _collect(run_queries(spark, skewed, q, k=k))
     assert wand == exact  # (rank, doc_id, score) per query, floats unrounded
-    assert stats["ess_completion"] == "skipped"
+    assert stats["phase2"] == "driver"
     assert not plan_runs(stats["plan_theta"], "MapInArrow")
     assert not plan_runs(stats["plan_theta"], "Window")  # driver phase 2: a plain scan
     assert not plan_runs(stats["plan_final"], "MapInArrow")
@@ -234,10 +233,10 @@ def test_block_max_theta_is_lossless(spark, skewed, q, k):
 
 def test_skipped_completion_with_pruned_essential_block(spark, monkeypatch):
     """Two essential terms, one of whose blocks is pruned while a candidate
-    from the other term's surviving block still holds a posting in it. The
-    distributed phase 2 reads that block in its covering-block completion;
-    driver phase 2 does not build the completion. Both stay bit-identical to
-    the exact plan, and neither runs a Python task.
+    from the other term's surviving block still holds a posting in it.
+    Neither phase-2 branch reads that block: the candidate cannot reach the
+    k-th score, so both branches keep the same candidates and strong
+    candidates, stay bit-identical to the exact plan, and run no Python task.
 
     block_size 2 over 16 docs (ordinal = rank of doc_id): "aa" (df 4) has
     blocks [0, 8) and [8, 16), "bb" (df 8) four blocks of 4. "bb"'s block
@@ -263,7 +262,8 @@ def test_skipped_completion_with_pruned_essential_block(spark, monkeypatch):
     idx = build_index(t, cfg=dataclasses.replace(DEFAULT_CONFIG, block_size=2), with_blocks=True)
     q = {1: "aa bb"}
     exact = _collect(run_queries(spark, idx, q, k=2))
-    for cap, completion, extra in ((wand_mod._PHASE2_DRIVER_CAP, "skipped", 0), (0, "decoded", 1)):
+    candidates = []
+    for cap, phase2 in ((wand_mod._PHASE2_DRIVER_CAP, "driver"), (0, "distributed")):
         monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", cap)
         stats: dict = {"capture_plans": True}
         wand = _collect(run_queries_wand(spark, idx, q, k=2, force_wand=True, stats_out=stats))
@@ -271,8 +271,10 @@ def test_skipped_completion_with_pruned_essential_block(spark, monkeypatch):
         assert not plan_runs(stats["plan_final"], "MapInArrow")
         assert stats["essential_terms"] == {1: ["aa", "bb"]}
         assert (stats["blocks_total"], stats["blocks_surviving"]) == (6, 5)
-        assert (stats["ess_completion"], stats["blocks_extra_decoded"]) == (completion, extra)
+        assert (stats["phase2"], stats["blocks_extra_decoded"]) == (phase2, 0)
+        candidates.append((stats["n_candidates"], stats["n_strong"]))
         assert wand == exact
+    assert candidates[0] == candidates[1]
 
 
 def test_essential_term_with_every_block_pruned(spark, monkeypatch):
@@ -314,8 +316,8 @@ def test_essential_term_with_every_block_pruned(spark, monkeypatch):
 
 def test_merged_index_takes_the_fresh_path(spark, skewed):
     """A merge leaves every block max the exact score of a real posting, so a
-    merged index takes the fresh path: metadata-only θ, driver phase 2 and no
-    covering-block completion. So does its compaction. Both stay exact, run
+    merged index takes the fresh path: metadata-only θ and driver phase 2.
+    So does its compaction. Both stay exact, run
     no Python task and read no docs relation."""
     from bge_m3_onnx_spark.sources.transcripts import synth_transcripts_skewed
     from bge_m3_onnx_spark.streaming.incremental import compact_index, merge_delta
@@ -330,7 +332,7 @@ def test_merged_index_takes_the_fresh_path(spark, skewed):
         for idx in (merged, compacted):
             stats: dict = {"capture_plans": True}
             wand = _collect(run_queries_wand(spark, idx, q, k=10, force_wand=True, stats_out=stats))
-            assert stats["ess_completion"] == "skipped"
+            assert stats["phase2"] == "driver"
             assert not plan_runs(stats["plan_theta"], "MapInArrow")
             assert not plan_runs(stats["plan_theta"], "Window")  # driver phase 2: a plain scan
             assert not plan_runs(stats["plan_final"], "MapInArrow")
@@ -389,7 +391,7 @@ def test_distributed_phase2_with_block_max_theta(spark, skewed, monkeypatch):
     assert plan_runs(stats["plan_theta"], "Window")  # per-term top-k, not a full collect
     assert not plan_runs(stats["plan_final"], "MapInArrow")
     assert not plan_reads(stats["plan_final"], skewed.docs)
-    assert stats["ess_completion"] == "decoded"  # the full chain, unchanged
+    assert stats["phase2"] == "distributed"
     assert wand == _collect(run_queries(spark, skewed, q, k=10))
 
 
@@ -425,3 +427,65 @@ def test_py4j_round_trips_do_not_grow_with_the_batch(spark, built):
     eight = round_trips({i + 1: t for i, t in enumerate(terms)})
     assert len(terms) == 8 and one > 0
     assert abs(eight - one) <= 10, (one, eight)
+
+
+def test_wand_writes_no_session_conf(spark, built, query_set, monkeypatch):
+    """Forced WAND gives each exchange its width as an argument: it writes no
+    session conf on either phase-2 branch, so queries sharing a session
+    cannot change each other's shuffle widths."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+
+    writes: list = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        writes.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    q = {qid: query_set[qid] for qid in (1, 2, 4, 9)}
+    exact = _collect(run_queries(spark, built, q, k=5))
+    for cap, phase2 in ((wand_mod._PHASE2_DRIVER_CAP, "driver"), (0, "distributed")):
+        monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", cap)
+        stats: dict = {}
+        wand = _collect(run_queries_wand(spark, built, q, k=5, force_wand=True, stats_out=stats))
+        assert stats["phase2"] == phase2
+        assert wand == exact
+    assert writes == []
+
+
+def test_wand_and_exact_share_a_session_concurrently(spark, skewed):
+    """A forced-WAND batch and an exact batch run at the same time on one
+    session, three rounds each: every answer equals its serial answer bit for
+    bit, and the session's shuffle width is what it was before."""
+    import threading
+
+    calls = {
+        "wand": lambda: run_queries_wand(
+            spark, skewed, {1: "the", 2: "iceberg3 the"}, k=10, force_wand=True
+        ),
+        "exact": lambda: run_queries(spark, skewed, {1: "the of", 2: "iceberg3"}, k=10),
+    }
+    serial = {name: _collect(call()) for name, call in calls.items()}
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    got: dict[str, list] = {name: [] for name in calls}
+    errors: list = []
+
+    def rounds(name):
+        try:
+            for _ in range(3):
+                got[name].append(_collect(calls[name]()))
+        except Exception as e:  # re-raised on the test's thread below
+            errors.append(e)
+
+    threads = [threading.Thread(target=rounds, args=(name,)) for name in calls]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == {name: [answer] * 3 for name, answer in serial.items()}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

@@ -187,7 +187,7 @@ def main() -> None:
     )
     sections.append(
         (
-            f"WAND final scoring plan (pre-checkpoint, ess_completion = {st['ess_completion']})",
+            f"WAND final scoring plan (pre-checkpoint, phase2 = {st['phase2']})",
             st["plan_final"],
             [
                 "Per-term qids/idf/range/θ lookups are literal maps, each parsed from ONE "
@@ -195,20 +195,23 @@ def main() -> None:
                 "[...]) below — zero broadcasts of query METADATA and one py4j call per "
                 "relation, not one per value",
                 "Every remaining BroadcastExchange carries a CANDIDATE-BOUNDED relation: "
-                "(term, block_id) surviving/needed keysets, (query_id, doc_ord) candidates, "
-                "strong doc_ords — all ≤ candidate volume, never corpus-sized",
+                "(term, block_id) surviving/needed keysets, strong (query_id, doc_ord) "
+                "pairs and doc_ords — all ≤ candidate volume, never corpus-sized",
+                "Every Exchange is sized by the query (hashpartitioning(..., n) or "
+                "SinglePartition with REPARTITION_BY_NUM, n from Σdf and the surviving "
+                "volume), not by the session's spark.sql.shuffle.partitions, which WAND "
+                "never writes",
                 "NO docs relation scan and no doc_id resolution join: doc_id is read with "
                 "the postings and carried through the (query_id, doc_ord, doc_id) fold",
                 "WindowGroupLimit pre-prunes each query's rows before the rank window — "
                 "no global sort",
                 "NO MapInArrow: every block is read from the postings relation. Phase "
                 "3b's non-essential blocks are a left-semi join of the postings against "
-                "a BROADCAST (term, block_id) keyset; no Exchange repartitions posting "
-                "rows before the score aggregation",
-                "After driver-side phase 2 (ess_completion = skipped) no covering-block "
-                "completion is built: it cannot change the top-k. Distributed phase 2 "
-                "(ess_completion = decoded, past the driver cap) adds one more such "
-                "semi-join for the needed blocks that did not survive phase 2",
+                "a BROADCAST (term, block_id) keyset; the only Exchange on posting rows "
+                "is the score aggregation's own, on (query_id, doc_ord)",
+                "No covering-block completion after either phase-2 branch: a doc that "
+                "can reach the k-th has every essential block among the survivors, so "
+                "phase 3a scores the surviving postings alone",
             ],
         )
     )
@@ -219,17 +222,19 @@ def main() -> None:
     sections.append(
         (
             "WAND final scoring plan, one essential term per query "
-            f"(ess_completion = {st1['ess_completion']})",
+            f"(phase2 = {st1['phase2']})",
             st1["plan_final"],
             [
                 "NO MapInArrow and ONE postings read (the cached surviving postings): "
-                "driver phase 2 builds no covering-block completion, and a single-term "
+                "phase 3a builds no covering-block completion, and a single-term "
                 "query has no non-essential term for phase 3b to read",
                 "No candidates dropDuplicates exchange, no needed-blocks semi-join, no "
                 "second persist: the essential score is the plain aggregate of the "
                 "surviving postings",
                 "NO BroadcastExchange at all: every driver-known relation is a literal, "
                 "and doc_id comes with the postings",
+                "One query takes its top-k as TakeOrderedAndProject (per-partition "
+                "heap + driver merge): the rank window runs over k rows only",
             ],
         )
     )

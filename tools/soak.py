@@ -11,7 +11,8 @@ once per round after the scorer/WAND/merge code changes:
 Checks (each asserts BIT-identical (rank, doc_id, score) between forced-WAND
 and the exact path — no rounding):
   1. flat corpus, materialized staged build → load → WAND == exact
-  2. Zipf-skewed corpus (real pruning regime) → WAND == exact + pruning stats
+  2. Zipf-skewed corpus (real pruning regime) → WAND == exact + pruning stats,
+     then again with phase 2 forced onto its distributed branch
   3. incremental merge (5% delta) → WAND == exact post-merge
   4. K_MERGES merges on the skewed corpus, no compaction → WAND == exact, and
      pruning within 5% + 4 blocks of a fresh build of the same corpus; then
@@ -35,6 +36,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bge_m3_onnx_spark.plans.wand as wand_mod  # noqa: E402
 from bge_m3_onnx_spark.plans.build_index import build_index  # noqa: E402
 from bge_m3_onnx_spark.plans.checkpoint import load_materialized, materialize_index  # noqa: E402
 from bge_m3_onnx_spark.plans.query import run_queries  # noqa: E402
@@ -93,7 +95,7 @@ def _assert_identical(spark, idx, queries, label, results: list):
     w = run_queries_wand(spark, idx, queries, k=10, force_wand=True, stats_out=st).collect()
     t_wand = time.monotonic() - t0
     assert sorted(map(_key, w)) == sorted(map(_key, e)), f"{label}: WAND != exact (bit compare)"
-    pruning = {k: v for k, v in st.items() if k in ("blocks_total", "blocks_surviving", "blocks_extra_decoded", "ess_completion")}
+    pruning = {k: v for k, v in st.items() if k in ("blocks_total", "blocks_surviving", "blocks_extra_decoded", "phase2")}
     print(f"PASS {label}: WAND == exact bit-identical ({len(e)} rows); pruning {pruning}")
     results.append(
         {
@@ -183,13 +185,24 @@ def main() -> int:
     finally:
         shutil.rmtree(mat_dir, ignore_errors=True)
 
-    # 2. skewed corpus: the regime where pruning actually fires
+    # 2. skewed corpus: the regime where pruning actually fires. The blocks
+    # are built before the timed calls, so wand_forced_sec is query time.
+    # The driver cap pinned to 0 runs the same batch through distributed
+    # phase 2, which must give the same bits.
     skew = build_index(
         synth_transcripts_skewed(spark, n_turns // 10, 10), with_ordinals=True, with_blocks=True
     )
-    _assert_identical(
-        spark, skew, {1: "the", 2: "the spark checkpoint", 3: "iceberg"}, f"skewed {n_turns}", results
-    )
+    skew.blocks.count()
+    skew_q = {1: "the", 2: "the spark checkpoint", 3: "iceberg"}
+    _assert_identical(spark, skew, skew_q, f"skewed {n_turns}", results)
+    _flush(json_out, n_turns, results, run)
+    driver_cap = wand_mod._PHASE2_DRIVER_CAP
+    wand_mod._PHASE2_DRIVER_CAP = 0
+    try:
+        _assert_identical(spark, skew, skew_q, f"skewed {n_turns}, distributed phase 2", results)
+    finally:
+        wand_mod._PHASE2_DRIVER_CAP = driver_cap
+    assert results[-1]["pruning"]["phase2"] == "distributed", results[-1]
     _flush(json_out, n_turns, results, run)
     skew.release()
 
@@ -206,6 +219,7 @@ def main() -> int:
         f"CAST(substr(conv_id, 6) AS BIGINT) >= {n_turns // 10}"
     )
     merged = merge_delta(spark, base, delta)
+    merged.blocks.count()
     _assert_identical(
         spark, merged, {1: "spark shuffle partition", 2: "the index"}, "post-merge", results
     )
@@ -264,7 +278,7 @@ def main() -> int:
         spark.sparkContext._jvm.System.gc()
     t_merges = time.monotonic() - t0
     frac_merged, st_m = pruning_fraction(cur, f"after {K_MERGES} merges")
-    assert st_m["ess_completion"] == "skipped", st_m  # driver phase 2, like a fresh index
+    assert st_m["phase2"] == "driver", st_m  # like a fresh index
     _assert_identical(spark, cur, probe, f"after {K_MERGES} merges", results)
     _flush(json_out, n_turns, results, run)
     full = build_index(
