@@ -106,13 +106,7 @@ from pyspark.sql.types import (
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
 from bge_m3_onnx_spark.functions.sql_literal import sql_in, sql_literal
 from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
-from bge_m3_onnx_spark.operators.bm25 import (
-    bm25_term_score,
-    idf_col,
-    sum_scores_deterministic,
-    topk,
-    topk_single,
-)
+from bge_m3_onnx_spark.operators.bm25 import bm25_term_score, idf_col, sum_scores_deterministic, topk
 from bge_m3_onnx_spark.plans.build_index import InvertedIndex
 
 _KEYS = ["term", "block_id"]
@@ -434,12 +428,12 @@ def _run_queries_wand_forced(
         "tf", "dl", idf_col(f"element_at({df_map_lit}, term)", n), avgdl, cfg
     )
 
-    def _score_postings_lit(postings: DataFrame, qids_map: str, n_parts: int) -> DataFrame:
+    def _score_postings_lit(postings: DataFrame, qids_map: str) -> DataFrame:
         """block postings (term, doc_id, doc_ord, tf, dl) × literal query-term
         map → per-doc sums, via explode instead of a broadcast join. doc_id
         rides along as a group key (it is a function of doc_ord), so no phase
         ever joins the docs relation. Summation stays the term-sorted
-        deterministic fold shared with the exact path, over ``n_parts``
+        deterministic fold shared with the exact path, over ``width``
         partitions hashed on (query_id, doc_ord): the fold and phase 3b's
         joins on those keys reuse that one exchange."""
         per_term = postings.selectExpr(
@@ -448,7 +442,7 @@ def _run_queries_wand_forced(
             "doc_id",
             "term",
             f"{score_sql} AS s",
-        ).repartition(n_parts, "query_id", "doc_ord")
+        ).repartition(width, "query_id", "doc_ord")
         return sum_scores_deterministic(per_term, ["query_id", "doc_ord", "doc_id"])
 
     # every block's postings ("Reading a block", module docstring); block_id
@@ -511,14 +505,17 @@ def _run_queries_wand_forced(
             # millions of block-metadata rows, and a plain partitionBy(term)
             # window would funnel them through ONE task. Phase A takes top-k
             # per (term, salt) — 32-way parallel per term; phase B re-ranks
-            # the ≤ 32·k survivors per term.
+            # the ≤ 32·k survivors per term. Each window's exchange is an
+            # explicit repartition at the width.
             order = (F.desc("block_max_score"), F.asc("block_id"))
             w_pre = Window.partitionBy("term", "__salt").orderBy(*order)
             w_top = Window.partitionBy("term").orderBy(*order)
             theta_df = (
                 qmeta.withColumn("__salt", F.pmod(F.xxhash64("block_id"), F.lit(32)))
+                .repartition(width, "term", "__salt")
                 .withColumn("rk", F.row_number().over(w_pre))
                 .filter(F.col("rk") <= k)
+                .repartition(width, "term")
                 .withColumn("rk", F.row_number().over(w_top))
                 .filter(F.col("rk") <= k)
                 .select("term", "block_id", "block_range", "block_max_score")
@@ -693,7 +690,7 @@ def _run_queries_wand_forced(
         ess_qids_map = _list_map(_ess_by_term)
         q2ess_terms_lit = _list_map(_ess_by_qid)
 
-        def _covering_keys(docs: DataFrame, q2terms: str, n_parts: int) -> DataFrame:
+        def _covering_keys(docs: DataFrame, q2terms: str) -> DataFrame:
             """(term, block_id) of every block that can hold a posting of a
             (query_id, doc_ord) row for the query's ``q2terms`` terms: block_id
             = doc_ord // the term's STORED range — valid even for blocks kept
@@ -701,7 +698,7 @@ def _run_queries_wand_forced(
             return (
                 docs.selectExpr("doc_ord", f"explode(element_at({q2terms}, query_id)) AS term")
                 .selectExpr("term", _block_of("doc_ord", range_of_term))
-                .repartition(n_parts, *_KEYS)
+                .repartition(width, *_KEYS)
                 .dropDuplicates(_KEYS)
             )
 
@@ -795,7 +792,7 @@ def _run_queries_wand_forced(
         # the non-essential blocks.
         surv_post = surviving.persist()
         _persisted.append(surv_post)
-        s_ess = _score_postings_lit(surv_post, ess_qids_map, width)
+        s_ess = _score_postings_lit(surv_post, ess_qids_map)
 
         # ---- θ-filter before the non-essential completion ----
         # score(d) = s_ess(d) + s_ness(d) ≤ s_ess(d) + Σ_{t non-ess} tmax(t), so a
@@ -818,14 +815,14 @@ def _run_queries_wand_forced(
         if ness_pairs_rows:
             strong = s_ess.filter(_strong_cond).select("query_id", "doc_ord").persist()
             _persisted.append(strong)
-            needed_non = _covering_keys(strong, _list_map(_ness_by_qid), width)
+            needed_non = _covering_keys(strong, _list_map(_ness_by_qid))
             # a term can be essential for one query and non-essential for another —
             # excluding every surviving block already read keeps postings
             # duplicate-free (a duplicated posting would double-count in the fold)
             non_keys = _not_surv(needed_non)
             full = surv_post.unionByName(_blocks_of(qpost, non_keys))
             strong_ords = strong.select("doc_ord").repartition(width, "doc_ord").distinct()
-            scored = _score_postings_lit(full.join(strong_ords, "doc_ord"), all_qids_map, width)
+            scored = _score_postings_lit(full.join(strong_ords, "doc_ord"), all_qids_map)
             scored = scored.join(strong, ["query_id", "doc_ord"], "left_semi")
         else:
             # every term essential → s_ess is already the exact full score for
@@ -840,12 +837,8 @@ def _run_queries_wand_forced(
                 scored = scored.persist()
                 _persisted.append(scored)
 
-        # doc_id came with the postings: the top-k reads no docs relation. One
-        # query needs no window exchange (per-partition heap + driver merge).
-        if len(queries) == 1:
-            final_df = topk_single(scored, k)
-        else:
-            final_df = topk(scored.repartition(width, "query_id"), k)
+        # doc_id came with the postings: the top-k reads no docs relation
+        final_df = topk(scored.repartition(width, "query_id"), k)
         if stats_out is not None and stats_out.get("capture_plans"):
             # plan-audit hook (tools/explain_audit.py): the returned frame is
             # localCheckpointed below, so its own explain() is opaque — capture

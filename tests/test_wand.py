@@ -457,25 +457,32 @@ def test_wand_writes_no_session_conf(spark, built, query_set, monkeypatch):
 
 
 def test_wand_and_exact_share_a_session_concurrently(spark, skewed):
-    """A forced-WAND batch and an exact batch run at the same time on one
+    """Two forced-WAND batches and an exact batch run at the same time on one
     session, three rounds each: every answer equals its serial answer bit for
-    bit, and the session's shuffle width is what it was before."""
+    bit, every round starts at the session's shuffle width, and the width is
+    what it was before (overlapping WAND calls that set and restored the
+    session width could leave it at the other call's width)."""
     import threading
 
     calls = {
         "wand": lambda: run_queries_wand(
             spark, skewed, {1: "the", 2: "iceberg3 the"}, k=10, force_wand=True
         ),
+        "wand_2": lambda: run_queries_wand(
+            spark, skewed, {1: "the of", 2: "iceberg3"}, k=10, force_wand=True
+        ),
         "exact": lambda: run_queries(spark, skewed, {1: "the of", 2: "iceberg3"}, k=10),
     }
     serial = {name: _collect(call()) for name, call in calls.items()}
     before = spark.conf.get("spark.sql.shuffle.partitions")
     got: dict[str, list] = {name: [] for name in calls}
+    widths: set = set()
     errors: list = []
 
     def rounds(name):
         try:
             for _ in range(3):
+                widths.add(spark.conf.get("spark.sql.shuffle.partitions"))
                 got[name].append(_collect(calls[name]()))
         except Exception as e:  # re-raised on the test's thread below
             errors.append(e)
@@ -488,4 +495,5 @@ def test_wand_and_exact_share_a_session_concurrently(spark, skewed):
     assert not any(t.is_alive() for t in threads)
     assert errors == []
     assert got == {name: [answer] * 3 for name, answer in serial.items()}
+    assert widths == {before}
     assert spark.conf.get("spark.sql.shuffle.partitions") == before

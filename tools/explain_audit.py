@@ -3,8 +3,9 @@
 Audit goals (SCALE.md): broadcast joins where intended, pushed filters on the
 blocks/postings scans, column pruning (no text column at query time, no varbyte
 payloads read by WAND), partial aggregation, no global sorts, no Python task
-(``MapInArrow``) and no read of the docs relation in any WAND query plan — the
-script exits 1 if one does.
+(``MapInArrow``), no read of the docs relation and no planner-inserted
+(session-width) Exchange in any WAND query plan — the script exits 1 if one
+does.
 
 Run: ``python tools/explain_audit.py`` (writes EXPLAIN.md at the repo root,
 stamped with the commit it was generated at).
@@ -200,7 +201,8 @@ def main() -> None:
                 "Every Exchange is sized by the query (hashpartitioning(..., n) or "
                 "SinglePartition with REPARTITION_BY_NUM, n from Σdf and the surviving "
                 "volume), not by the session's spark.sql.shuffle.partitions, which WAND "
-                "never writes",
+                "never writes; this script exits 1 on a planner-inserted "
+                "(ENSURE_REQUIREMENTS) Exchange in any WAND plan",
                 "NO docs relation scan and no doc_id resolution join: doc_id is read with "
                 "the postings and carried through the (query_id, doc_ord, doc_id) fold",
                 "WindowGroupLimit pre-prunes each query's rows before the rank window — "
@@ -233,8 +235,59 @@ def main() -> None:
                 "surviving postings",
                 "NO BroadcastExchange at all: every driver-known relation is a literal, "
                 "and doc_id comes with the postings",
-                "One query takes its top-k as TakeOrderedAndProject (per-partition "
-                "heap + driver merge): the rank window runs over k rows only",
+            ],
+        )
+    )
+
+    # The distributed phase-2 branch (batches past the driver cap), forced on
+    # the same index by pinning the cap to 0.
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+
+    std: dict = {"capture_plans": True}
+    cap = wand_mod._PHASE2_DRIVER_CAP
+    wand_mod._PHASE2_DRIVER_CAP = 0
+    try:
+        run_queries_wand(
+            spark, idx, {1: "spark shuffle partition", 2: "the index"}, k=10,
+            force_wand=True, stats_out=std,
+        ).collect()
+    finally:
+        wand_mod._PHASE2_DRIVER_CAP = cap
+    sections.append(
+        (
+            f"WAND θ collect, distributed phase 2 (phase2 = {std['phase2']})",
+            std["plan_theta"],
+            [
+                "Each term's top-k blocks by block max as a salted two-phase window: "
+                "Window over (term, __salt), then Window over term — no full metadata "
+                "collect, no single task per stopword term",
+                "Both window exchanges are explicit repartitions at the query's width "
+                "(REPARTITION_BY_NUM), not planner exchanges at the session's width",
+            ],
+        )
+    )
+    sections.append(
+        (
+            f"WAND surviving-block filter, distributed phase 2 (phase2 = {std['phase2']})",
+            std["plan_surviving"],
+            [
+                "Boundaries pre-filtered by the classic bound, then joined to the "
+                "metadata on (term, block_id) and summed per (query_id, x): every "
+                "Exchange of that tree, both join sides included, is an explicit "
+                "repartition at the query's width",
+                "The surviving keys (the essential terms' blocks at the surviving "
+                "boundaries) are BROADCAST into a left-semi join against the postings "
+                "scan — posting rows are not shuffled",
+            ],
+        )
+    )
+    sections.append(
+        (
+            f"WAND final scoring plan, distributed phase 2 (phase2 = {std['phase2']})",
+            std["plan_final"],
+            [
+                "Phase 3a scores the cached surviving postings alone, as after driver "
+                "phase 2: no covering-block completion on this branch either",
             ],
         )
     )
@@ -307,12 +360,16 @@ def main() -> None:
     wand = [(t, plan) for t, plan, _ in sections if t.startswith("WAND")]
     python_tasks = [t for t, plan in wand if plan_runs(plan, "MapInArrow")]
     docs_reads = [t for t, plan in wand if plan_reads(plan, idx.docs)]
+    # an Exchange the planner inserts takes the session's width
+    session_width = [t for t, plan in wand if "ENSURE_REQUIREMENTS" in plan]
     spark.stop()
     if python_tasks:
         print("WAND plans running a MapInArrow:", *python_tasks, sep="\n  ", file=sys.stderr)
     if docs_reads:
         print("WAND plans reading the docs relation:", *docs_reads, sep="\n  ", file=sys.stderr)
-    if python_tasks or docs_reads:
+    if session_width:
+        print("WAND plans with a planner-sized Exchange:", *session_width, sep="\n  ", file=sys.stderr)
+    if python_tasks or docs_reads or session_width:
         sys.exit(1)
 
 
