@@ -23,6 +23,7 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
+import threading
 import warnings
 from dataclasses import dataclass, field
 
@@ -32,6 +33,51 @@ from pyspark.sql import functions as F
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
 from bge_m3_onnx_spark.functions.sql_literal import sql_in
 from bge_m3_onnx_spark.operators import postings as P
+
+
+def block_meta_rows(rows) -> tuple[dict[str, list[tuple[int, float]]], dict[str, int]]:
+    """Collected :meth:`InvertedIndex.pruned_block_meta` rows → ({term:
+    [(block_id, block_max_score), ...] in row order}, {term: stored
+    block_range})."""
+    pairs: dict[str, list[tuple[int, float]]] = {}
+    ranges: dict[str, int] = {}
+    for t, bid, rng, bmax in rows:
+        pairs.setdefault(t, []).append((int(bid), float(bmax)))
+        ranges[t] = int(rng)
+    return pairs, ranges
+
+
+class _BlockMetaMemo:
+    """``entries``: {term: (stored block_range, ((block_id, block_max_score),
+    ...))}; ``rows``: their block rows, a term without blocks counting as one.
+    Writers hold ``lock``; readers take one entry with ``entries.get``. The
+    count travels with the entries, so an index re-based by
+    ``dataclasses.replace`` shares both."""
+
+    def __init__(self) -> None:
+        self.entries: dict = {}
+        self.rows = 0
+        self.lock = threading.Lock()
+
+    def clear(self) -> None:
+        with self.lock:
+            self.entries.clear()
+            self.rows = 0
+
+    def insert(self, new: dict, max_rows: int) -> None:
+        """Memoize ``new`` unless its rows alone pass ``max_rows``; clear
+        first when the memo would pass it."""
+        rows = sum(max(len(ps), 1) for _, ps in new.values())
+        if rows > max_rows:
+            return
+        with self.lock:
+            if self.rows + rows > max_rows:
+                self.entries.clear()
+                self.rows = 0
+            for t, e in new.items():
+                if t not in self.entries:  # a concurrent call may hold it already
+                    self.entries[t] = e
+                    self.rows += max(len(e[1]), 1)
 
 
 @dataclass
@@ -47,7 +93,19 @@ class InvertedIndex:
     # compressed blocks (set by the compress step); every block_max_score is
     # the exact score of a real posting under (n_docs, avgdl), merged or not
     blocks: DataFrame | None = None
+    # Driver-side memos of per-term facts that are fixed for the life of this
+    # index generation (indexes are immutable: merge_delta, compact_index and
+    # load_materialized build a NEW InvertedIndex, whose memos start empty).
+    # _df_memo: {term: df}, unbounded (one int per term).
+    # _block_meta: the block-metadata memo of block_meta_for_terms, bounded
+    # by the caller's max_rows block rows. Filled to WAND's 200k-row cap it
+    # holds ~23 MiB of Python objects on the driver when terms have ~200
+    # blocks each (~120 B per (block_id, block_max_score) row), and up to
+    # ~60 MiB when every term has a single block (key and entry per row);
+    # measured with tracemalloc on CPython 3.11. That cost applies to EVERY
+    # index generation the caller keeps alive.
     _df_memo: dict = field(default_factory=dict, repr=False)
+    _block_meta: _BlockMetaMemo = field(default_factory=_BlockMetaMemo, repr=False)
     # intermediate cached relations owned by this index generation (e.g. the
     # tokenized-delta relation a merge persisted); released with the index.
     _aux_cached: list = field(default_factory=list, repr=False)
@@ -78,6 +136,11 @@ class InvertedIndex:
         contract as :meth:`pruned_postings`."""
         assert self.blocks is not None
         return self._pruned(self.blocks, self.blocks_bucketed, terms)
+
+    def pruned_block_meta(self, terms: list[str]) -> DataFrame:
+        """The block metadata θ and WAND's phase 2 read: (term, block_id,
+        block_range, block_max_score) of :meth:`pruned_blocks`, no payload."""
+        return self.pruned_blocks(terms).select("term", "block_id", "block_range", "block_max_score")
 
     def _pruned(self, rel: DataFrame, bucketed: DataFrame | None, terms: list[str]) -> DataFrame:
         if not terms:
@@ -122,6 +185,40 @@ class InvertedIndex:
             for t in missing:
                 self._df_memo.setdefault(t, 0)
         return {t: self._df_memo[t] for t in term_list if self._df_memo[t] > 0}
+
+    def block_meta_for_terms(
+        self, term_list: list[str], max_rows: int, partitions: int
+    ) -> tuple[dict[str, tuple[int, tuple[tuple[int, float], ...]]], int]:
+        """Driver-side block metadata with a per-index memo, like
+        :meth:`df_for_terms`. Returns ``({term: (stored block_range,
+        ((block_id, block_max_score), ...) sorted by block_id)}, n_scanned)``
+        for the terms of ``term_list`` that have blocks; ``n_scanned`` is the
+        number of terms this call had to collect (0 when all were memoized).
+        The terms not yet memoized are collected in ONE pruned metadata scan
+        (:meth:`pruned_block_meta` coalesced to ``partitions``; no window, no
+        postings read).
+
+        The memo holds at most ``max_rows`` block rows (a term without blocks
+        counts as one). A scan larger than the bound is returned unmemoized
+        and leaves the memo as it is; an insert that would pass the bound
+        clears the memo first. Each entry is an immutable tuple read once with
+        ``.get``, so a concurrent clear can only turn a hit into a miss."""
+        memo = self._block_meta
+        out, missing = {}, []
+        for t in dict.fromkeys(term_list):
+            hit = memo.entries.get(t)
+            if hit is None:
+                missing.append(t)
+            elif hit[1]:
+                out[t] = hit
+        if missing:
+            pairs, ranges = block_meta_rows(
+                self.pruned_block_meta(missing).coalesce(partitions).collect()
+            )
+            new = {t: (ranges.get(t, 0), tuple(sorted(pairs.get(t, ())))) for t in missing}
+            memo.insert(new, max_rows)
+            out.update((t, e) for t, e in new.items() if e[1])
+        return out, len(missing)
 
 
 def build_index(

@@ -15,7 +15,13 @@ fixture):
     contributes nothing; a query where no term has k blocks gets θ = −inf (no
     pruning). This is the "safe cutoff from summary statistics before
     touching the payload" idea of External Merge Sort for Top-K Queries
-    (SIGMOD 2020), with the block-max list as the histogram.
+    (SIGMOD 2020), with the block-max list as the histogram. Those summaries
+    are fixed for the life of an index generation, so on driver phase 2 they
+    come from a per-index driver memo (InvertedIndex.block_meta_for_terms,
+    beside the df memo): only terms the index has not served before are
+    scanned, and a batch of seen terms runs no metadata job at all. The
+    distributed branch collects each term's top-k blocks instead, every
+    time, and never touches the memo.
 
   Phase 2 (block pruning): ordinal-aligned segment bound. Each term's blocks tile
     the doc-ordinal axis (block_id = ord // range_t), so the metadata upper bound
@@ -61,8 +67,10 @@ fixture):
     posting rows are first shuffled by the score aggregation.
 
 Driver/executor split: per-query scalars (term maxima, Σmax, θ, essential sets)
-are O(|q|·terms) rows — they are COLLECTED to the driver (ONE fused collect, r3)
-and re-enter the plan as literal relations, each ONE SQL expression rendered by
+are O(|q|·terms) rows derived on the driver from ONE metadata lookup — the
+memoized per-term block rows on driver phase 2 (a collect only for unseen
+terms), the per-term top-k collect on the distributed branch — and re-enter
+the plan as literal relations, each ONE SQL expression rendered by
 functions/sql_literal.py (one JVM call per relation, not one per value), so the
 distributed plan sees only: one metadata scan with a pushed bound filter,
 block-filtered postings scans, hash aggregations, one tiny window. Postings
@@ -70,9 +78,10 @@ carry dl and doc_id, so no phase joins the docs table: the fold groups by
 (query_id, doc_ord, doc_id) — doc_id is a function of doc_ord — and the top-k
 ranks (score DESC, doc_id ASC) on those rows directly.
 
-Routing (r2, calibrated r3): WAND's driver round-trips (2 jobs) only pay off
-when pruning skips far more scoring work than the round-trips cost. Σ df over the
-query terms is known on the driver after the FIRST metadata lookup; below
+Routing (r2, calibrated r3): WAND's driver round-trips (2 jobs, 1 once the
+index's memo holds the batch's terms) only pay off when pruning skips far more
+scoring work than the round-trips cost. Σ df over the query terms is known on
+the driver after the FIRST metadata lookup; below
 ``cfg.wand_route_min_postings`` the plan delegates to the exact one-job broadcast
 path (plans/query.py), which scans those same Σ df postings outright. Stopword
 queries at 10^12 scale clear the threshold instantly and take the pruning path.
@@ -107,7 +116,7 @@ from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
 from bge_m3_onnx_spark.functions.sql_literal import sql_in, sql_literal
 from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
 from bge_m3_onnx_spark.operators.bm25 import bm25_term_score, idf_col, sum_scores_deterministic, topk
-from bge_m3_onnx_spark.plans.build_index import InvertedIndex
+from bge_m3_onnx_spark.plans.build_index import InvertedIndex, block_meta_rows
 
 _KEYS = ["term", "block_id"]
 
@@ -115,6 +124,10 @@ _KEYS = ["term", "block_id"]
 # scoring-volume-aware width note in _run_queries_wand_forced). Module-level so
 # experiments/tests can pin it.
 _SCORE_ROWS_PER_TASK = 100_000
+# Query postings (Σdf) per partition of every WAND exchange's base width (see
+# run_queries_wand), capped by the session width. Module-level so tests can
+# pin it low and drive widths above 1 on small indexes.
+_POSTINGS_PER_PARTITION = 1_000_000
 # Estimated metadata rows (Σ_t blocks of t) up to which phase 2 runs on the
 # driver. Module-level so tests can pin it to 0 and force the distributed
 # branches.
@@ -190,6 +203,25 @@ def plan_runs(plan: str, node: str) -> bool:
     return False
 
 
+def planner_exchanges(plan: str, *sources: DataFrame) -> list[str]:
+    """The ``Arguments`` lines of the planner-inserted (ENSURE_REQUIREMENTS)
+    Exchanges in the formatted plan ``plan``. Such an exchange takes the
+    session's ``spark.sql.shuffle.partitions``, where every WAND exchange is
+    given the query's width. Exchanges listed in the plans of ``sources``
+    (e.g. the cached build lineage of an in-memory index's relations) are not
+    the query's own and are left out. The plan audits (tests,
+    tools/explain_audit.py) check that no WAND plan has one."""
+
+    def inserted(p: str) -> set[str]:
+        return {
+            line for line in p.splitlines()
+            if line.startswith("Arguments: ") and "ENSURE_REQUIREMENTS" in line
+        }
+
+    theirs = set().union(*(inserted(_fmt_plan(rel)) for rel in sources))
+    return sorted(inserted(plan) - theirs)
+
+
 def plan_reads(plan: str, rel: DataFrame) -> bool:
     """True iff the formatted plan ``plan`` scans the source of relation
     ``rel``: its cached relation (named by its attribute ids) or the files of
@@ -205,7 +237,7 @@ def plan_reads(plan: str, rel: DataFrame) -> bool:
 
 
 def _phase2_driver(
-    blk_lists: dict[str, list[tuple[int, float]]],
+    blk_lists: dict[str, tuple[tuple[int, float], ...]],
     range_by_term: dict[str, int],
     terms_by_qid: dict[int, list[str]],
     theta: dict[int, float],
@@ -220,8 +252,9 @@ def _phase2_driver(
     segment survives iff its bound clears θ (1e-6 pad — only ADMITS blocks,
     lossless); the surviving block keys are the ESSENTIAL terms' blocks at the
     surviving boundaries, restricted to blocks that exist. Inputs are the rows
-    already fused into the θ collect — Σ_t n_blocks(t) metadata rows, gated by
-    the caller to stay driver-sized. Term iteration is sorted so the float
+    θ was computed from — every block of every query term, sorted by block_id,
+    from the index's block-metadata memo (Σ_t n_blocks(t) rows, gated by the
+    caller to stay driver-sized). Term iteration is sorted so the float
     accumulation order is deterministic run-to-run.
 
     Returns {term: sorted surviving block_ids} unioned across queries."""
@@ -229,7 +262,6 @@ def _phase2_driver(
 
     arrs: dict[str, tuple] = {}
     for t, pairs in blk_lists.items():
-        pairs.sort()
         arrs[t] = (
             np.array([b for b, _ in pairs], dtype=np.int64),
             np.array([m for _, m in pairs], dtype=np.float64),
@@ -286,7 +318,11 @@ def run_queries_wand(
       blocks READ beyond the survivors — phase 3b's non-essential blocks; the
       key name predates reading blocks from the postings relation);
     - ``n_candidates``, ``n_strong``;
-    - ``t_theta_sec`` (the θ collect) and ``t_final_sec`` (everything after).
+    - ``block_meta_collected``: the number of query terms whose block metadata
+      this call scanned — on driver phase 2 the terms the index's memo did not
+      hold yet (0 on a full hit), on the distributed branch every term;
+    - ``t_theta_sec`` (the metadata lookup: ~0 on a full memo hit) and
+      ``t_final_sec`` (everything after).
 
     With ``stats_out["capture_plans"]`` set it also records the formatted
     plans ``plan_theta``, ``plan_surviving`` and ``plan_final``."""
@@ -353,17 +389,18 @@ def run_queries_wand(
     # measured ~10 s of fixed machinery cost at 100k turns before this. Each
     # exchange takes the width as an argument; the session conf is only read,
     # so queries sharing a session never change each other's widths.
-    # Width from Σdf/1M, not Σdf/100k: WAND's shuffles carry METADATA and
-    # PRUNED postings, which are normally ≪ Σdf — the exact path's
-    # rows-per-task model over-parallelizes every tiny stage here (worst case,
-    # an unprunable stopword batch, still gets ~1M scored postings per task).
+    # Width from Σdf/_POSTINGS_PER_PARTITION (1M), not Σdf/100k: WAND's
+    # shuffles carry METADATA and PRUNED postings, which are normally ≪ Σdf —
+    # the exact path's rows-per-task model over-parallelizes every tiny stage
+    # here (worst case, an unprunable stopword batch, still gets ~1M scored
+    # postings per task).
     try:
         _cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         # AQE-managed runtimes may set this to a non-numeric value ("auto");
         # fall back to the cluster's physical width (ADVICE r3).
         _cap = spark.sparkContext.defaultParallelism
-    width = max(1, min(_cap, sum(r["df"] for r in qt_rows) // 1_000_000))
+    width = max(1, min(_cap, sum(r["df"] for r in qt_rows) // _POSTINGS_PER_PARTITION))
     return _run_queries_wand_forced(spark, idx, queries, k, cfg, qt_rows, width, stats_out)
 
 
@@ -455,8 +492,8 @@ def _run_queries_wand_forced(
         # ---- driver-side phase 2 gate (r4) ----
         # Phase 2 is pure metadata math over Σ_t n_blocks(t) rows — bounded and
         # driver-estimable BEFORE any job (df is known; block_range_for_term is
-        # the deterministic cut rule). When it fits, the per-block metadata IS
-        # the θ collect and phase 2 runs in NumPy on the driver: the r4 profile
+        # the deterministic cut rule). When it fits, θ and phase 2 read the
+        # same memoized per-block metadata, in NumPy on the driver: the r4 profile
         # showed the distributed phase-2/3 tree cost ~2.9 s of pure Catalyst
         # planning plus ~10 broadcast-exchange subjobs per batch — none of
         # which touches data that isn't already driver-sized.
@@ -478,28 +515,37 @@ def _run_queries_wand_forced(
         if stats_out is not None:
             stats_out["phase2"] = "driver" if _driver_phase2 else "distributed"
 
-        # The query's only blocks relation, metadata columns alone, coalesced to
-        # the Σdf-sized width (the source keeps the BUILD's partitioning). The
-        # distributed phases make ~a dozen passes over it: cached then. Driver
-        # phase 2 reads it exactly once (the θ collect): no cache.
-        qmeta = (
-            idx.pruned_blocks(qterms_list)
-            .select("term", "block_id", "block_range", "block_max_score")
-            .coalesce(width)
-        )
+        # The query terms' block metadata, the only blocks relation the query
+        # reads, coalesced to the Σdf-sized width (the source keeps the
+        # BUILD's partitioning). Driver phase 2 takes each term's rows from
+        # the index's driver memo (InvertedIndex.block_meta_for_terms), which
+        # collects only the terms it has not seen, in one scan of this same
+        # plan: a batch of seen terms runs no metadata job at all. The
+        # relation itself is built only where something reads it: the
+        # distributed phases (~a dozen passes: cached), or stats_out's plan
+        # capture and block counts.
+        qmeta = None
+        if not _driver_phase2 or stats_out is not None:
+            qmeta = idx.pruned_block_meta(qterms_list).coalesce(width)
         if not _driver_phase2:
             qmeta = qmeta.persist()
             _persisted.append(qmeta)
 
-        # ---- phase 1: θ, the per-term maxima and the stored ranges in ONE
-        # driver round-trip (r2 measured ~9 s of fixed machinery cost, much of
+        # ---- phase 1: θ, the per-term maxima and the stored ranges from ONE
+        # metadata lookup (r2 measured ~9 s of fixed machinery cost, much of
         # it driver job latency) ----
-        # Metadata-only θ (module docstring): driver phase 2 collects every
+        # Metadata-only θ (module docstring): driver phase 2 reads every
         # query-term block row anyway; the distributed branch collects only
-        # each term's top-k. θ, tmax and ranges come from the same rows — no
-        # block read, no rescore.
-        theta_df = qmeta
-        if not _driver_phase2:
+        # each term's top-k and neither reads nor fills the memo. θ, tmax and
+        # ranges come from the same rows — no block read, no rescore.
+        if _driver_phase2:
+            if stats_out is not None and stats_out.get("capture_plans"):
+                stats_out["plan_theta"] = _fmt_plan(qmeta)
+            _t0_theta = time.monotonic()
+            meta, n_scanned = idx.block_meta_for_terms(qterms_list, _PHASE2_DRIVER_CAP, width)
+            by_term = {t: pairs for t, (_, pairs) in meta.items()}
+            range_by_term = {t: rng for t, (rng, _) in meta.items()}
+        else:
             # Each term's top-k blocks by block max, as a two-phase (salted)
             # top-k: past the driver cap a 10^12-scale stopword term has
             # millions of block-metadata rows, and a plain partitionBy(term)
@@ -520,17 +566,13 @@ def _run_queries_wand_forced(
                 .filter(F.col("rk") <= k)
                 .select("term", "block_id", "block_range", "block_max_score")
             )
-        if stats_out is not None and stats_out.get("capture_plans"):
-            stats_out["plan_theta"] = _fmt_plan(theta_df)
-        _t0_theta = time.monotonic()
-        collected = theta_df.collect()
+            if stats_out is not None and stats_out.get("capture_plans"):
+                stats_out["plan_theta"] = _fmt_plan(theta_df)
+            _t0_theta = time.monotonic()
+            by_term, range_by_term = block_meta_rows(theta_df.collect())
+            n_scanned = len(qterms_list)
         _t_theta = time.monotonic() - _t0_theta
         _t0_final = time.monotonic()
-        by_term: dict[str, list[tuple[int, float]]] = {}
-        range_by_term: dict[str, int] = {}
-        for t, bid, rng, bmax in collected:
-            by_term.setdefault(t, []).append((int(bid), float(bmax)))
-            range_by_term[t] = int(rng)
         tmax = {t: max(m for _, m in pairs) for t, pairs in by_term.items()}
         theta = _block_max_theta(by_term, _terms_by_qid, k)
         _blk_lists = by_term if _driver_phase2 else {}
@@ -769,7 +811,7 @@ def _run_queries_wand_forced(
             return keys.join(F.broadcast(surviving_keys), _KEYS, "left_anti")
 
         # ---- scoring-volume-aware width (r6: partitioning from data size) ----
-        # The Σdf//1M width suits the METADATA jobs, but would single-thread
+        # The Σdf-sized width suits the METADATA jobs, but would single-thread
         # the unprunable/forced regime, where phase 3 scores ~every posting of
         # the query terms. After driver-side phase 2 the survival is KNOWN:
         # widen phase 3's exchanges to the estimated volume. Posting rows are
@@ -883,6 +925,7 @@ def _run_queries_wand_forced(
                 qid: sorted(t for q2, t in ess_pairs_rows if q2 == qid) for qid in qids
             }
             stats_out["theta"] = dict(theta)
+            stats_out["block_meta_collected"] = n_scanned
             stats_out["t_theta_sec"] = round(_t_theta, 3)
             stats_out["t_final_sec"] = round(time.monotonic() - _t0_final, 3)
         return result

@@ -497,3 +497,219 @@ def test_wand_and_exact_share_a_session_concurrently(spark, skewed):
     assert got == {name: [answer] * 3 for name, answer in serial.items()}
     assert widths == {before}
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def _memo_rows(idx) -> int:
+    """The block-metadata memo's row count, checked against its entries."""
+    memo = idx._block_meta
+    assert memo.rows == sum(max(len(pairs), 1) for _, pairs in memo.entries.values())
+    return memo.rows
+
+
+def _jobs_of(spark, call):
+    """(call's result, the number of Spark jobs it ran), counted in a job
+    group of its own through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker reads the listener's state
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_block_meta_memo_skips_the_metadata_job(spark, skewed):
+    """Driver phase 2 takes each term's block metadata from the index's
+    memo: a second forced call with the same terms scans nothing, runs
+    exactly one Spark job fewer and returns the same bits."""
+    q = {1: "the", 2: "iceberg3 the"}
+    exact = _collect(run_queries(spark, skewed, q, k=10))  # also warms the df memo
+    # A first forced call builds any cache of the index's relations not yet
+    # built, which can add a job of its own: the counted calls start after it.
+    run_queries_wand(spark, skewed, q, k=10, force_wand=True).collect()
+    skewed._block_meta.clear()
+    calls = []
+    for _ in range(2):
+        stats: dict = {}
+        rows, jobs = _jobs_of(
+            spark,
+            lambda: _collect(
+                run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats)
+            ),
+        )
+        calls.append((rows, jobs, stats["block_meta_collected"], stats["phase2"]))
+    (first, jobs1, scanned1, phase1), (second, jobs2, scanned2, phase2) = calls
+    assert (phase1, phase2) == ("driver", "driver")
+    assert (scanned1, scanned2) == (2, 0)
+    assert jobs2 == jobs1 - 1, (jobs1, jobs2)
+    assert first == second == exact
+
+
+def test_block_meta_memo_collects_only_new_terms(spark, skewed):
+    """A batch mixing memoized and new terms scans only the new ones."""
+    q = {1: "spark3", 2: "shuffle5 spark3", 3: "partition3"}
+    exact = _collect(run_queries(spark, skewed, q, k=10))
+    skewed._block_meta.clear()
+    run_queries_wand(spark, skewed, {1: "spark3"}, k=10, force_wand=True).collect()
+    stats: dict = {}
+    wand = _collect(run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats))
+    assert stats["block_meta_collected"] == 2  # shuffle5, partition3
+    assert wand == exact
+    assert set(skewed._block_meta.entries) == {"spark3", "shuffle5", "partition3"}
+
+
+def test_block_meta_memo_stays_within_the_driver_cap(spark, skewed, monkeypatch):
+    """With the driver cap just above one batch's block rows, a run of
+    varied batches keeps clearing the memo: it never holds more rows than
+    the cap, and every answer stays exact."""
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+
+    batches = [
+        {1: f"spark{i} shuffle{i}"} if i % 2 else {1: f"spark{i}", 2: f"shuffle{i}"}
+        for i in range(12)
+    ]
+    queries = {qid: text for qid, text in enumerate((b[q] for b in batches for q in b), 1)}
+    exact = _collect(run_queries(spark, skewed, queries, k=5))
+    by_text = {queries[qid]: rows for qid, rows in exact.items()}
+    rows = {
+        r["term"]: r["n"]
+        for r in skewed.blocks.groupBy("term").agg(F.count("*").alias("n")).collect()
+    }
+    per_batch = [sum(rows[t] for text in b.values() for t in text.split()) for b in batches]
+    cap = max(per_batch) + 2
+    assert 2 * min(per_batch) > cap  # no two batches fit together
+    monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", cap)
+    skewed._block_meta.clear()
+    for batch in batches:
+        stats: dict = {}
+        wand = _collect(run_queries_wand(spark, skewed, batch, k=5, force_wand=True, stats_out=stats))
+        assert stats["phase2"] == "driver"
+        assert stats["block_meta_collected"] == len({t for text in batch.values() for t in text.split()})
+        assert 0 < _memo_rows(skewed) <= cap
+        assert wand == {qid: by_text[text] for qid, text in batch.items() if text in by_text}
+    # A scan whose own rows pass the cap is returned whole, unmemoized, and
+    # leaves the memo as it was (no clear that caches nothing in its place).
+    kept = dict(skewed._block_meta.entries)
+    big = sorted({t for b in batches[:2] for text in b.values() for t in text.split()})
+    meta, scanned = skewed.block_meta_for_terms(big, cap, 1)
+    assert scanned == len(big)
+    assert {t: len(pairs) for t, (_, pairs) in meta.items()} == {t: rows[t] for t in big}
+    assert sum(rows[t] for t in big) > cap
+    assert skewed._block_meta.entries == kept
+    assert _memo_rows(skewed) <= cap
+
+
+def test_block_meta_memo_at_cap_zero_stays_empty(spark, skewed, monkeypatch):
+    """At cap 0 forced WAND takes the distributed branch, which neither
+    reads nor fills the memo, and a direct lookup memoizes nothing."""
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+
+    q = {1: "the", 2: "iceberg3 the"}
+    exact = _collect(run_queries(spark, skewed, q, k=10))
+    skewed._block_meta.clear()
+    monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", 0)
+    for _ in range(2):
+        stats: dict = {}
+        wand = _collect(run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats))
+        assert (stats["phase2"], stats["block_meta_collected"]) == ("distributed", 2)
+        assert wand == exact
+    meta, scanned = skewed.block_meta_for_terms(["iceberg3", "the"], 0, 1)
+    assert scanned == 2 and sorted(meta) == ["iceberg3", "the"]
+    assert skewed._block_meta.entries == {}
+
+
+def test_merged_index_starts_with_an_empty_block_meta_memo(spark, built, query_set):
+    """merge_delta builds a new index: its memo starts empty, and its first
+    forced call scans every term and equals exact on the merged corpus."""
+    from bge_m3_onnx_spark.sources.transcripts import synth_transcripts
+    from bge_m3_onnx_spark.streaming.incremental import merge_delta
+
+    q = {qid: query_set[qid] for qid in (1, 3, 4)}
+    run_queries_wand(spark, built, q, k=5, force_wand=True).collect()
+    assert built._block_meta.entries
+    delta = synth_transcripts(spark, n_convs=21, turns_per_conv=10).filter("conv_id >= 'conv-000020'")
+    merged = merge_delta(spark, built, delta)
+    try:
+        assert merged._block_meta.entries == {}
+        stats: dict = {}
+        wand = _collect(run_queries_wand(spark, merged, q, k=5, force_wand=True, stats_out=stats))
+        assert stats["block_meta_collected"] == 3  # spark, the, varbyte
+        assert wand == _collect(run_queries(spark, merged, q, k=5))
+    finally:
+        merged.release()
+
+
+def test_wand_at_widths_above_one(spark, skewed, monkeypatch):
+    """Pinning the Σdf per partition to 1 gives every WAND exchange the
+    session's width (4) as its base width: on both phase-2 branches WAND
+    stays bit-identical to exact, and no WAND plan holds an Exchange the
+    planner inserted at the session's width (tools/explain_audit.py's check)."""
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 4
+    monkeypatch.setattr(wand_mod, "_POSTINGS_PER_PARTITION", 1)
+    q = {1: "the", 2: "iceberg3 the", 3: "the of", 4: "iceberg3"}
+    exact = _collect(run_queries(spark, skewed, q, k=10))
+    for cap, phase2 in ((wand_mod._PHASE2_DRIVER_CAP, "driver"), (0, "distributed")):
+        monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", cap)
+        stats: dict = {"capture_plans": True}
+        wand = _collect(run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats))
+        assert stats["phase2"] == phase2
+        assert wand == exact
+        assert ", 4), REPARTITION_BY_NUM" in stats["plan_final"]
+        for name in ("plan_theta", "plan_surviving", "plan_final"):
+            inserted = wand_mod.planner_exchanges(stats[name], skewed.postings, skewed.blocks)
+            assert inserted == [], (phase2, name, inserted)
+
+
+def test_block_meta_memo_under_concurrent_lookups(spark, built):
+    """Eight threads look up overlapping term sets on one index through a
+    memo bounded below their union, with a short interpreter switch
+    interval: every lookup returns each term's full metadata, and the memo
+    never holds more rows than the bound (inserts are serialized)."""
+    import random
+    import sys
+    import threading
+
+    blocks: dict[str, list] = {}
+    ranges: dict[str, int] = {}
+    for r in built.blocks.select("term", "block_id", "block_range", "block_max_score").collect():
+        blocks.setdefault(r["term"], []).append((int(r["block_id"]), float(r["block_max_score"])))
+        ranges[r["term"]] = int(r["block_range"])
+    terms = sorted(blocks, key=lambda t: (-len(blocks[t]), t))[:12]
+    want = {t: (ranges[t], tuple(sorted(blocks[t]))) for t in terms}
+    cap = sum(len(blocks[t]) for t in terms[:4])
+    built._block_meta.clear()
+    seen: list[int] = []
+    errors: list = []
+
+    def lookups(seed: int) -> None:
+        rnd = random.Random(seed)
+        try:
+            for _ in range(6):
+                ask = rnd.sample(terms, 3)
+                meta, _ = built.block_meta_for_terms(ask, cap, 1)
+                assert meta == {t: want[t] for t in ask}
+                with built._block_meta.lock:
+                    seen.append(_memo_rows(built))
+        except Exception as e:  # re-raised on the test's thread below
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=lookups, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(seen) == 48 and max(seen) <= cap
+    built._block_meta.clear()

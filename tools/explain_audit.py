@@ -24,7 +24,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from bge_m3_onnx_spark.plans.checkpoint import load_materialized, materialize_index  # noqa: E402
-from bge_m3_onnx_spark.plans.wand import plan_reads, plan_runs  # noqa: E402
+from bge_m3_onnx_spark.plans.wand import plan_reads, plan_runs, planner_exchanges  # noqa: E402
 from bge_m3_onnx_spark.session import get_spark  # noqa: E402
 from bge_m3_onnx_spark.sources.transcripts import synth_transcripts  # noqa: E402
 from tools.revision import source_revision  # noqa: E402
@@ -163,8 +163,10 @@ def main() -> None:
             [
                 "θ comes from block maxima alone — no postings read, no rescore join, "
                 "no window; the plan is the metadata scan the driver-side phase 2 reads "
-                "anyway. Every index takes this plan: a merge leaves each block max the "
-                "exact score of a real posting, as a fresh build does",
+                "anyway. It runs only for the terms the index's block-metadata memo "
+                "does not hold yet: a batch of seen terms runs no metadata job. Every "
+                "index takes this plan: a merge leaves each block max the exact score "
+                "of a real posting, as a fresh build does",
                 "ReadSchema contains ONLY term/block_id/block_range/block_max_score",
             ],
         )
@@ -360,8 +362,7 @@ def main() -> None:
     wand = [(t, plan) for t, plan, _ in sections if t.startswith("WAND")]
     python_tasks = [t for t, plan in wand if plan_runs(plan, "MapInArrow")]
     docs_reads = [t for t, plan in wand if plan_reads(plan, idx.docs)]
-    # an Exchange the planner inserts takes the session's width
-    session_width = [t for t, plan in wand if "ENSURE_REQUIREMENTS" in plan]
+    session_width = [t for t, plan in wand if planner_exchanges(plan, idx.postings, idx.blocks)]
     spark.stop()
     if python_tasks:
         print("WAND plans running a MapInArrow:", *python_tasks, sep="\n  ", file=sys.stderr)
