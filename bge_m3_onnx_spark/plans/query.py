@@ -24,6 +24,7 @@ from bge_m3_onnx_spark.operators.bm25 import (
     topk_single,
 )
 from bge_m3_onnx_spark.plans.build_index import InvertedIndex
+from bge_m3_onnx_spark.session import shuffle_width_cap
 
 QUERY_TERM_SCHEMA = StructType(
     [
@@ -156,8 +157,9 @@ def _agg_partitions(spark: SparkSession, qt_rows: list[tuple[int, str, int]]) ->
     (inner join on unique (term, doc) postings), so the exchange width scales
     with the actual candidate volume — a stopword query at 10^12 turns still
     fans wide, a selective query pays 1-2 tasks instead of a mostly-empty
-    session-default exchange. Never exceeds the session default."""
+    session-default exchange. Never exceeds the session width
+    (``shuffle_width_cap``)."""
     total = sum(df for _, _, df in qt_rows)
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    cap = shuffle_width_cap(spark)
     need = (total + _AGG_ROWS_PER_TASK - 1) // _AGG_ROWS_PER_TASK
     return max(1, min(cap, need))

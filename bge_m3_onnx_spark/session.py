@@ -48,3 +48,14 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def shuffle_width_cap(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions``, read (never written) as
+    the cap on every query exchange's width. AQE-managed runtimes may set it to
+    a non-numeric value ("auto"); the cap is then the cluster's physical
+    width."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism

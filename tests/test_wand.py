@@ -713,3 +713,92 @@ def test_block_meta_memo_under_concurrent_lookups(spark, built):
     assert errors == []
     assert len(seen) == 48 and max(seen) <= cap
     built._block_meta.clear()
+
+
+def test_forced_wand_on_a_memo_hit_is_one_lazy_job(spark, skewed):
+    """Forced WAND returns a lazy plan, as run_queries does: once the
+    index's memos hold the batch's terms, the call itself runs no Spark job
+    and the caller's collect runs the whole query as exactly one. (A batch
+    with a non-essential term adds the broadcast subjobs of phase 3b's
+    joins to the collect.)"""
+    q = {1: "the", 2: "iceberg3 the"}
+    exact = _collect(run_queries(spark, skewed, q, k=10))  # also warms the df memo
+    stats: dict = {}
+    run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats).collect()
+    assert stats["essential_terms"] == {1: ["the"], 2: ["iceberg3", "the"]}  # no phase 3b
+    res, call_jobs = _jobs_of(spark, lambda: run_queries_wand(spark, skewed, q, k=10, force_wand=True))
+    rows, collect_jobs = _jobs_of(spark, lambda: _collect(res))
+    assert (call_jobs, collect_jobs) == (0, 1)
+    assert rows == exact
+
+
+def test_forced_wand_leaves_no_cached_rdd(spark, skewed, monkeypatch):
+    """No cache outlives a forced call: three calls, each collected, on
+    both phase-2 branches and with a non-essential term, leave the
+    context's cached RDDs as they found them."""
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+
+    jsc = spark.sparkContext._jsc.sc()
+    run_queries_wand(spark, skewed, {1: "the"}, k=10, force_wand=True).collect()  # index caches
+    start = len(jsc.getRDDStorageInfo())
+    for q, cap in (
+        ({1: "the"}, wand_mod._PHASE2_DRIVER_CAP),
+        ({1: "iceberg3 the"}, wand_mod._PHASE2_DRIVER_CAP),
+        ({1: "the of", 2: "iceberg3"}, 0),
+    ):
+        monkeypatch.setattr(wand_mod, "_PHASE2_DRIVER_CAP", cap)
+        run_queries_wand(spark, skewed, q, k=10, force_wand=True).collect()
+        assert len(jsc.getRDDStorageInfo()) == start, q
+
+
+def test_two_collects_of_one_forced_frame_are_bit_identical(spark, skewed):
+    """Each action on the returned frame runs the query again, and every
+    run returns the same bits, equal to exact."""
+    q = {1: "the", 2: "iceberg3 the", 3: "spark3 iceberg7 the"}
+    res = run_queries_wand(spark, skewed, q, k=10, force_wand=True)
+    first, second = _collect(res), _collect(res)
+    assert first == second == _collect(run_queries(spark, skewed, q, k=10))
+
+
+def test_one_term_final_plan_at_width_one_has_one_exchange(spark, skewed):
+    """At width 1 the fold's exchange leaves the scored rows in one
+    partition, so the top-k window ranks them in place: a one-term
+    query's final plan holds the fold's Exchange and no other. Exchanges
+    are counted through every cached relation the query reads, less those
+    of the postings relation's own cached build lineage."""
+    from bge_m3_onnx_spark.plans.wand import _fmt_plan
+
+    def exchanges(plan: str) -> int:
+        return sum("Exchange" in line for line in plan.split("\n\n")[0].splitlines()[1:])
+
+    stats: dict = {"capture_plans": True}
+    run_queries_wand(spark, skewed, {1: "the"}, k=10, force_wand=True, stats_out=stats)
+    assert stats["phase2"] == "driver"
+    own = exchanges(stats["plan_final"]) - exchanges(_fmt_plan(skewed.postings))
+    assert own == 1, stats["plan_final"]
+    assert plan_runs(stats["plan_final"], "Window")
+
+
+def test_non_numeric_session_width_caps_both_plans(spark, built, query_set, monkeypatch):
+    """Both query plans read the session width through one helper: a
+    non-numeric spark.sql.shuffle.partitions ("auto", as AQE-managed
+    runtimes set it) caps their exchanges at the cluster's physical width,
+    and both still return the exact answer."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from bge_m3_onnx_spark.session import shuffle_width_cap
+
+    q = {qid: query_set[qid] for qid in (1, 2, 4)}
+    exact = _collect(run_queries(spark, built, q, k=5))
+    real_get = RuntimeConfig.get
+
+    def auto(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", auto)
+    assert shuffle_width_cap(spark) == spark.sparkContext.defaultParallelism
+    assert _collect(run_queries(spark, built, q, k=5)) == exact
+    assert _collect(run_queries(spark, built, {1: q[1]}, k=5)) == {1: exact[1]}
+    assert _collect(run_queries_wand(spark, built, q, k=5, force_wand=True)) == exact

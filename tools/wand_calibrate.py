@@ -13,7 +13,9 @@ exact first/WAND first alternated so VM drift cancels).
 Output: one row per query — Σdf, exact sec, wand sec, speedup, pruning stats —
 plus the measured break-even Σdf (geometric midpoint between the largest Σdf
 where exact wins and the smallest where WAND wins). Paste the table into
-SCALE.md and set wand_route_min_postings from the break-even.
+SCALE.md and set wand_route_min_postings from the break-even. The session is
+get_spark's default (master local[$SPARK_GRAFT_CPUS], else every core, and its
+shuffle width); the JSON records the master and the source revision.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from bge_m3_onnx_spark.plans.query import run_queries  # noqa: E402
 from bge_m3_onnx_spark.plans.wand import run_queries_wand  # noqa: E402
 from bge_m3_onnx_spark.session import get_spark  # noqa: E402
 from bge_m3_onnx_spark.sources.transcripts import synth_transcripts_skewed  # noqa: E402
+from tools.revision import source_revision  # noqa: E402
 
 # Queries chosen to span Σdf from ~10^3 (single rare tail variant) to ~10^7
 # (every hot stopword) on the skewed corpus. Tail terms there carry hashed
@@ -81,7 +84,7 @@ def main() -> int:
     queries = CONCENTRATED_QUERIES if concentrated else CAL_QUERIES
     n_turns = int(args[0]) if len(args) > 0 else 10_000_000
     json_out = args[1] if len(args) > 1 else None
-    spark = get_spark(app_name="wand-calibrate", master="local[32]", shuffle_partitions=64)
+    spark = get_spark(app_name="wand-calibrate")
 
     t0 = time.monotonic()
     idx = build_index(
@@ -105,9 +108,9 @@ def main() -> int:
             return run_queries(spark, idx, q, k=10).collect()
 
         def wand():
-            # NO stats_out in the timed runs: the diagnostic counts are 3 extra
-            # jobs (one recomputes the whole phase-2 metadata join) and would
-            # inflate the WAND side by seconds.
+            # NO stats_out in the timed runs: the diagnostic counts are extra
+            # jobs (on the distributed branch they recompute phase 2) and
+            # would inflate the WAND side.
             return run_queries_wand(spark, idx, q, k=10, force_wand=True).collect()
 
         def routed():
@@ -160,6 +163,8 @@ def main() -> int:
     else:
         crossover = None
     out = {
+        "master": spark.sparkContext.master,
+        "source_revision": source_revision(),
         "n_turns": n_turns,
         "build_sec": round(build_sec, 1),
         "rows": rows,
