@@ -854,12 +854,17 @@ def _run_queries_wand_forced(
     # essential): the 3b subplan otherwise adds ~6 broadcast-exchange subjobs
     # and real Catalyst planning time for provably-empty relations, and
     # s_ess IS the full exact score.
-    # 3b reads the surviving postings and ``strong`` twice each; nothing is
-    # cached, so each read re-scans the pruned postings (themselves cached or
-    # bucket-pruned).
+    # 3b reads the surviving postings twice and ``strong`` three times;
+    # nothing is cached, so the reads re-scan the pruned postings (themselves
+    # cached or bucket-pruned). ``doc_ord IS NOT NULL`` is the filter the
+    # optimizer infers for strong's doc_ord joins below; stated here, it gives
+    # all three readers the same phase-3a subtree, so ReuseExchange runs its
+    # scan and fold once per job instead of twice.
     non_keys = None
     if ness_pairs_rows:
-        strong = s_ess.filter(_strong_cond).select("query_id", "doc_ord")
+        strong = s_ess.filter(f"({_strong_cond}) AND doc_ord IS NOT NULL").select(
+            "query_id", "doc_ord"
+        )
         needed_non = _covering_keys(strong, _list_map(_ness_by_qid))
         # a term can be essential for one query and non-essential for another —
         # excluding every surviving block already read keeps postings

@@ -779,6 +779,20 @@ def test_one_term_final_plan_at_width_one_has_one_exchange(spark, skewed):
     assert plan_runs(stats["plan_final"], "Window")
 
 
+def test_phase_3b_folds_the_essential_scores_once(spark, skewed):
+    """Phase 3b reads the strong candidates three times (covering keys,
+    candidate ordinals, final semi-join). With nothing cached, all three
+    share one phase-3a subtree, so the plan folds the essential scores in
+    one Exchange and reuses it twice, and the answer stays exact."""
+    q = {1: "the of"}
+    stats: dict = {"capture_plans": True}
+    wand = _collect(run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats))
+    assert stats["essential_terms"] == {1: ["of"]}  # "the" is read by phase 3b
+    tree = stats["plan_final"].split("\n\n")[0]
+    assert tree.count("ReusedExchange") == 2, stats["plan_final"]
+    assert wand == _collect(run_queries(spark, skewed, q, k=10))
+
+
 def test_non_numeric_session_width_caps_both_plans(spark, built, query_set, monkeypatch):
     """Both query plans read the session width through one helper: a
     non-numeric spark.sql.shuffle.partitions ("auto", as AQE-managed

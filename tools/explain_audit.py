@@ -144,7 +144,9 @@ def main() -> None:
             "BM25F field-weighted scoring",
             fmt(plan_bm25f),
             [
-                "ArrowEvalPython appears once per field (SPIMI counting kernel) — no row-at-a-time Python",
+                "ArrowEvalPython runs the SPIMI counting kernel twice per field: once for "
+                "the field's counts and once more in the non-empty Filter the optimizer "
+                "pushes below that Project — no row-at-a-time Python",
                 "Two partial+final HashAggregate pairs (per-term pseudo-frequency, per-doc score)",
                 "Query-term side is a broadcast of a local relation",
             ],
@@ -346,8 +348,9 @@ def main() -> None:
             [
                 "Prefix relation (each query's n−m+1 rarest terms) and per-query term "
                 "arrays are broadcast — candidate generation never shuffles the probe",
-                "Data-sized exchanges are the candidate (doc_id, query_id) dedupe and "
-                "the doc-set agg, both candidate/vocab-bounded (hottest m−1 terms "
+                "Data-sized exchanges are the candidate (doc_id, query_id) dedupe, its "
+                "re-hash on doc_id for the SortMergeJoin, and the doc-set agg, all "
+                "candidate/vocab-bounded (hottest m−1 terms "
                 "never fan out); term_df/prefix prep shuffles are term-count-sized "
                 "after map-side partial agg",
             ],
