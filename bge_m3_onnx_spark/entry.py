@@ -18,11 +18,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG
-from bge_m3_onnx_spark.functions.tokenizer import tokenize_text, tokenize_udf
+from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
 from bge_m3_onnx_spark.operators.ordinals import assign_dense_ordinals
 from bge_m3_onnx_spark.operators.postings import build_postings, tokenized_docs
 from bge_m3_onnx_spark.plans.build_index import build_index
-from bge_m3_onnx_spark.plans.query import run_queries
+from bge_m3_onnx_spark.plans.query import run_queries, score_queries, score_rows
 from bge_m3_onnx_spark.sources.transcripts import (
     _CONVS_MOD,
     TRANSCRIPTS_FROM_DOCUMENTS_SQL,
@@ -112,7 +112,7 @@ def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, term) exploded token relation via the engine tokenizer UDF."""
+    """(doc_id, term) exploded token relation via the engine's token-array kernel."""
     return _tokenized(spark, sf_dir).select("doc_id", F.explode("terms").alias("term"))
 
 
@@ -425,13 +425,13 @@ _PREFIX = "s"
 def q_prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wildcard query 's*': expand against the term dictionary (bounded,
     df-DESC capped — operators/wildcard.py), then ordinary BM25 top-10. The
-    expansion relation stays driver-small → broadcast join into postings."""
-    from bge_m3_onnx_spark.operators.bm25 import score_postings, topk
+    ≤ 64-row expansion is collected to the driver and scored as driver rows."""
+    from bge_m3_onnx_spark.operators.bm25 import topk
     from bge_m3_onnx_spark.operators.wildcard import expand_prefix
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
     qt = expand_prefix(idx.terms, _PREFIX, query_id=1, max_expansions=64)
-    scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    scored = score_rows(spark, idx, qt.collect(), CFG)
     res = topk(scored, k=10)
     return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score_r"))
 
@@ -499,8 +499,7 @@ def q_recency_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus max ts (deterministic — no wall clock). The decay join touches only
     the candidate set (already bounded by the pushed query-term scan); doc ts
     rides the same docs-metadata relation as dl would on a materialized index."""
-    from bge_m3_onnx_spark.operators.bm25 import score_postings, topk
-    from bge_m3_onnx_spark.plans.query import query_terms_df
+    from bge_m3_onnx_spark.operators.bm25 import topk
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
     t = _transcripts(spark, sf_dir)
@@ -509,10 +508,7 @@ def q_recency_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_timestamp("ts").cast("double") / 86400.0).alias("ts_days"),
     )
     max_days = meta.agg(F.max("ts_days").alias("m"))
-    qt = query_terms_df(spark, _RECENCY_QUERY, CFG).join(
-        idx.terms, "term"
-    )  # (query_id, term, df)
-    base = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    base = score_queries(spark, idx, _RECENCY_QUERY, CFG)
     boosted = (
         base.join(meta, "doc_id")
         .crossJoin(F.broadcast(max_days))
@@ -562,9 +558,9 @@ def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     """More-like-this: take the longest document (dl DESC, doc_id ASC — a
     deterministic stand-in for 'the doc the user clicked'), extract its top-5
     terms by tf·idf, and run them as a BM25 query excluding the source doc.
-    Fully declarative — the seed doc and its term profile are 1-row/5-row
-    relations, broadcast into the scorer; no driver collect."""
-    from bge_m3_onnx_spark.operators.bm25 import idf_col, score_postings, topk
+    The 5-row term profile is collected to the driver and scored as driver
+    rows; the 1-row seed doc is broadcast into the exclusion."""
+    from bge_m3_onnx_spark.operators.bm25 import idf_col, topk
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
     src = idx.docs.orderBy(F.desc("dl"), F.asc("doc_id")).limit(1).select(
@@ -582,7 +578,7 @@ def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_MLT_TOP_TERMS)
     )
     qt = src_terms.select(F.lit(1).alias("query_id"), "term", F.col("df_t").alias("df"))
-    scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    scored = score_rows(spark, idx, qt.collect(), CFG)
     scored = scored.join(F.broadcast(src), F.col("doc_id") == F.col("src_doc"), "left_anti")
     res = topk(scored, k=10)
     return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score_r"))
@@ -864,12 +860,10 @@ def q_bm25_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean NOT: 'spark query data' NOT 'slow' — scored candidates minus
     docs containing the excluded term (left-anti on doc_id; exclusion scan is a
     pushed term-IN postings read — operators/bm25.py:exclude_docs_with_terms)."""
-    from bge_m3_onnx_spark.operators.bm25 import exclude_docs_with_terms, score_postings, topk
-    from bge_m3_onnx_spark.plans.query import query_terms_df
+    from bge_m3_onnx_spark.operators.bm25 import exclude_docs_with_terms, topk
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
-    qt = query_terms_df(spark, _NEG_QUERY, CFG).join(idx.terms, "term")
-    scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    scored = score_queries(spark, idx, _NEG_QUERY, CFG)
     kept = exclude_docs_with_terms(scored, idx.postings, _NEG_EXCLUDE)
     res = topk(kept, k=10)
     return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score_r"))
@@ -923,13 +917,13 @@ def q_score_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution) for the top-ranked doc of a query — what ES/Lucene expose for
     relevance debugging. Declarative: the 1-row top doc is broadcast back onto
     the per-term contribution relation."""
-    from bge_m3_onnx_spark.operators.bm25 import bm25_term_score, idf_col, score_postings, topk
-    from bge_m3_onnx_spark.plans.query import query_terms_df
+    from bge_m3_onnx_spark.operators.bm25 import bm25_term_score, idf_col, topk
+    from bge_m3_onnx_spark.plans.query import resolve_queries
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
-    qt = query_terms_df(spark, _EXPLAIN_QUERY, CFG).join(idx.terms, "term")
-    scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
-    top1 = topk(scored, k=1).select("doc_id")
+    _, rows = resolve_queries(idx, _EXPLAIN_QUERY, CFG)
+    top1 = topk(score_rows(spark, idx, rows, CFG), k=1).select("doc_id")
+    qt = spark.createDataFrame([(t, df) for _, t, df in rows], "term string, df long")
     qt2 = qt.selectExpr("term", f"{idf_col('CAST(df AS DOUBLE)', idx.n_docs)} AS idf", "df")
     per_term = idx.postings.join(F.broadcast(qt2), "term").join(F.broadcast(top1), "doc_id")
     return per_term.select(
@@ -971,12 +965,8 @@ def q_conv_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONVERSATIONS by their best-matching turn's BM25 score, with matched-turn
     counts. The turn→conversation rollup is one hash agg over the candidate set
     keyed by the doc_id prefix — no extra scan, no join back to transcripts."""
-    from bge_m3_onnx_spark.operators.bm25 import score_postings
-    from bge_m3_onnx_spark.plans.query import query_terms_df
-
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
-    qt = query_terms_df(spark, _EXPLAIN_QUERY, CFG).join(idx.terms, "term")
-    scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    scored = score_queries(spark, idx, _EXPLAIN_QUERY, CFG)
     conv = (
         scored.withColumn("conv_id", F.split(F.col("doc_id"), ":")[0])
         .groupBy("query_id", "conv_id")
@@ -1015,14 +1005,21 @@ def q_synonym_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synonym-expanded BM25: 'query table' expands one hop through a curated
     synonym relation (query→scan, table→row) then scores each expanded term
     with its own idf — operators/wildcard.py:expand_synonyms."""
-    from bge_m3_onnx_spark.operators.bm25 import score_postings, topk
+    from bge_m3_onnx_spark.operators.bm25 import topk
     from bge_m3_onnx_spark.operators.wildcard import expand_synonyms
-    from bge_m3_onnx_spark.plans.query import query_terms_df
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
     syn = spark.createDataFrame(_SYN_PAIRS, "term string, syn string")
-    qt = expand_synonyms(query_terms_df(spark, _SYN_QUERY, CFG), syn).join(idx.terms, "term")
-    scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    base = spark.createDataFrame(
+        [
+            (q, t)
+            for q, text in _SYN_QUERY.items()
+            for t in sorted(set(tokenize_text(text, CFG.max_tokens, CFG.special_terms)))
+        ],
+        "query_id int, term string",
+    )
+    qt = expand_synonyms(base, syn).join(idx.terms, "term").select("query_id", "term", "df")
+    scored = score_rows(spark, idx, qt.collect(), CFG)
     res = topk(scored, k=10)
     return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score_r"))
 
@@ -1134,13 +1131,11 @@ def q_snippet_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ±2-token window around the first 'spark' hit, joined back to the token
     arrays (k-row broadcast against tokenized docs — text is resliced for k
     docs only, never rescanned corpus-wide)."""
-    from bge_m3_onnx_spark.operators.bm25 import score_postings, topk
+    from bge_m3_onnx_spark.operators.bm25 import topk
     from bge_m3_onnx_spark.operators.positional import positional_postings
-    from bge_m3_onnx_spark.plans.query import query_terms_df
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
-    qt = query_terms_df(spark, _EXPLAIN_QUERY, CFG).join(idx.terms, "term")
-    scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    scored = score_queries(spark, idx, _EXPLAIN_QUERY, CFG)
     top = topk(scored, k=5).select("doc_id", "rank")
     pos = positional_postings(_tokenized(spark, sf_dir)).filter(F.col("term") == "spark")
     toks = _tokenized(spark, sf_dir).select("doc_id", "terms")
@@ -1415,10 +1410,10 @@ _FUZZY_SEARCH_Q = "quary tabel scann"  # 3 misspellings: query/table+tale?/scan
 def q_fuzzy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spell-corrected SEARCH: each misspelled query term expands through the
     SymSpell deletion-neighborhood (dist ≤ 1) into its dictionary matches, then
-    the expanded set scores as ordinary BM25 (compose fuzzy_term_match →
-    score_postings — the Lucene FuzzyQuery rewrite). Terms with no close
-    dictionary match contribute nothing."""
-    from bge_m3_onnx_spark.operators.bm25 import score_postings, topk
+    the expanded set, collected to the driver, scores as ordinary BM25
+    (compose fuzzy_term_match → score_rows — the Lucene FuzzyQuery rewrite).
+    Terms with no close dictionary match contribute nothing."""
+    from bge_m3_onnx_spark.operators.bm25 import topk
     from bge_m3_onnx_spark.operators.fuzzy import fuzzy_term_match
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
@@ -1429,7 +1424,7 @@ def q_fuzzy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "term", "df"
     ).distinct()
     qt = qt_raw.select("query_id").distinct().crossJoin(expanded)  # 1-row × matches
-    scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    scored = score_rows(spark, idx, qt.collect(), CFG)
     res = topk(scored, k=10)
     return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score_r"))
 
@@ -1456,12 +1451,10 @@ def q_quality_boosted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the Lucene per-doc boost / ES rank_feature shape). The boost joins only
     the candidate set; at scale it is a precomputed doc-feature column on the
     materialized index, exactly like dl."""
-    from bge_m3_onnx_spark.operators.bm25 import score_postings, topk
-    from bge_m3_onnx_spark.plans.query import query_terms_df
+    from bge_m3_onnx_spark.operators.bm25 import topk
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
-    qt = query_terms_df(spark, _EXPLAIN_QUERY, CFG).join(idx.terms, "term")
-    base = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    base = score_queries(spark, idx, _EXPLAIN_QUERY, CFG)
     t = _transcripts(spark, sf_dir)
     boost = t.select(
         F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("doc_id"),
@@ -1505,12 +1498,10 @@ def q_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the doc-metadata relation before the top-k window — scoring work is
     unchanged, losers are dropped pre-rank, and on a materialized index the
     role column is a doc-feature rider like dl (no text rescan)."""
-    from bge_m3_onnx_spark.operators.bm25 import score_postings, topk
-    from bge_m3_onnx_spark.plans.query import query_terms_df
+    from bge_m3_onnx_spark.operators.bm25 import topk
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
-    qt = query_terms_df(spark, _EXPLAIN_QUERY, CFG).join(idx.terms, "term")
-    scored = score_postings(idx.postings, qt, idx.n_docs, idx.avgdl, CFG)
+    scored = score_queries(spark, idx, _EXPLAIN_QUERY, CFG)
     t = _transcripts(spark, sf_dir)
     allowed = t.filter(F.col("role") == _FILTER_ROLE).select(
         F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("doc_id")

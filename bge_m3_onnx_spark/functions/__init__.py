@@ -1,3 +1,3 @@
-from bge_m3_onnx_spark.functions.tokenizer import tokenize_text, tokenize_udf
+from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
 
-__all__ = ["tokenize_text", "tokenize_udf"]
+__all__ = ["tokenize_text"]

@@ -5,7 +5,8 @@ Plays the role of the reference's ONNX-exported XLM-RoBERTa tokenizer
 bge-m3-to-onnx.ipynb cell-9 via ``gen_processing_models``), re-designed for a
 distributed engine: a self-contained BGE-M3-*style* normalizer + word splitter that is
 
-* identical between the Spark pandas UDF and the pure-Python oracle (same function),
+* identical between the Spark Arrow kernels and the pure-Python oracle
+  (:func:`tokenize_text`, which the kernels also run on non-ASCII rows),
 * NFKC + lowercase (SentencePiece-style normalization),
 * unicode word extraction (``[^\\W_]+``) so multilingual turns tokenize
   (the reference corpus includes 10-script lines and the empty string —
@@ -27,16 +28,6 @@ import re
 import unicodedata
 from typing import Iterable
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
 # \w includes underscore; BGE-M3's SentencePiece treats '_' as the word-boundary
 # marker, so we exclude it from tokens.
 TOKEN_PATTERN = r"[^\W_]+"
@@ -48,8 +39,8 @@ def tokenize_text(
     max_tokens: int = 8192,
     special_terms: frozenset[str] = frozenset(),
 ) -> list[str]:
-    """Single-string tokenizer — the oracle path. The Spark path
-    (:func:`tokenize_udf`) must produce exactly this, which tests assert."""
+    """Single-string tokenizer — the oracle path. The Spark kernels below
+    must produce exactly this, which tests assert."""
     if text is None:
         return []
     norm = unicodedata.normalize("NFKC", text).lower()
@@ -62,46 +53,17 @@ def tokenize_text(
     return toks
 
 
-def _tokenize_series(
-    s: pd.Series, max_tokens: int, special_terms: frozenset[str]
-) -> pd.Series:
-    """pandas-vectorized kernel: NFKC → lower → findall, all via pandas .str ops
-    (no per-row Python loop except the cheap special-term filter)."""
-    filled = s.fillna("")
-    toks = filled.str.normalize("NFKC").str.lower().str.findall(_TOKEN_RE)
-    if max_tokens is not None:
-        toks = toks.map(lambda xs: xs[:max_tokens] if len(xs) > max_tokens else xs)
-    if special_terms:
-        toks = toks.map(lambda xs: [t for t in xs if t not in special_terms])
-    return toks
-
-
-def tokenize_udf(max_tokens: int = 8192, special_terms: Iterable[str] = ()):  # noqa: ANN201
-    """Arrow-batched Series→Series pandas UDF: text → array<string> of terms.
-
-    This is the engine's ONE custom scalar op in the build path (SURVEY.md §2.10);
-    everything downstream is native Spark SQL.
-    """
-    specials = frozenset(special_terms)
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return _tokenize_series(s, max_tokens, specials)
-
-    return _tok
-
-
 # ---------------------------------------------------------------------------
-# Arrow-native batch kernels (r6, guide §4.2): the pandas_udf kernels above pay
-# two per-row Python conversions per batch — input strings materialize as
-# Python objects in the pandas Series, and the returned list-of-tuples column
-# is re-converted element-by-element into Arrow list<struct> by the UDF
-# serializer (measured: the conversion, not the tokenization, dominated the
-# fat kernel at ~6.5 s of an 11 s postings stage at 1M skewed turns). The
-# mapInArrow kernels below never materialize a Python string for ASCII text:
-# lower/split/filter run in Arrow C++, per-(doc, term) counting is one
-# np.unique over (row, dict-code) keys, and the output list<struct> array is
-# assembled from numpy offsets — zero per-row Python.
+# Arrow-native batch kernels (r6, guide §4.2): the pandas UDFs these replaced
+# paid two per-row Python conversions per batch — input strings materialized
+# as Python objects in a pandas Series, and the returned list column was
+# re-converted element-by-element into Arrow by the UDF serializer (measured:
+# the conversion, not the tokenization, dominated the fat kernel at ~6.5 s of
+# an 11 s postings stage at 1M skewed turns). The mapInArrow kernels below
+# never materialize a Python string for ASCII text: lower/split/filter run in
+# Arrow C++, per-(doc, term) counting is one np.unique over (row, dict-code)
+# keys, and the output list arrays are assembled from numpy offsets — zero
+# per-row Python.
 #
 # Arrow's RE2 regex is ASCII-only for \w (verified: '[^\W_]+' finds nothing in
 # 'Ελληνικά'), so the vectorized path handles ONLY rows string_is_ascii says
@@ -190,10 +152,62 @@ def _split_ascii(rb, text_col: str = "text"):
     return txt, isa
 
 
+def token_array_arrow_kernel(max_tokens: int = 8192, special_terms: Iterable[str] = ()):  # noqa: ANN201
+    """mapInArrow kernel: (doc_id, text) batches → (doc_id, terms, dl) batches,
+    terms = tokenize_text(text) in token order and dl its length. ASCII rows
+    are tokenized in Arrow C++; other rows take the Python oracle."""
+    import numpy as np
+    import pyarrow as pa
+
+    specials = frozenset(special_terms)
+    out_schema = pa.schema(
+        [("doc_id", pa.string()), ("terms", pa.list_(pa.string())), ("dl", pa.int32())]
+    )
+
+    def kernel(batches):
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
+                continue
+            txt, isa = _split_ascii(rb)
+            ia = np.flatnonzero(isa)
+            parn, toks = _ascii_token_stream(txt.take(pa.array(ia)), max_tokens, specials)
+            rows = ia[parn]  # back to original batch row indices
+            ib = np.flatnonzero(~isa)
+            if len(ib):
+                fb = [tokenize_text(txt[int(i)].as_py(), max_tokens, specials) for i in ib]
+                rows = np.concatenate([rows, np.repeat(ib, [len(x) for x in fb])])
+                # stable sort merges the two row-sorted token streams without
+                # disturbing token order within a row
+                perm = np.argsort(rows, kind="stable")
+                toks = pa.concat_arrays(
+                    [toks, pa.array([t for x in fb for t in x], type=pa.string())]
+                ).take(pa.array(perm))
+                rows = rows[perm]
+            dl = np.bincount(rows, minlength=n)
+            offs = np.zeros(n + 1, dtype=np.int64)
+            np.cumsum(dl, out=offs[1:])
+            lst = pa.ListArray.from_arrays(pa.array(offs).cast(pa.int32()), toks)
+            yield pa.record_batch(
+                [rb.column(rb.schema.get_field_index("doc_id")), lst, pa.array(dl.astype(np.int32))],
+                schema=out_schema,
+            )
+
+    return kernel
+
+
 def term_counts_arrow_kernel(max_tokens: int = 8192, special_terms: Iterable[str] = ()):  # noqa: ANN201
     """mapInArrow kernel: (doc_id, text) batches → (doc_id, term_tfs, dl)
-    batches — the SPIMI in-mapper combine of :func:`term_counts_udf` with the
-    Python boundary removed for ASCII rows (identical output; tests pin it)."""
+    batches, term_tfs = Counter(tokenize_text(text)) in first-occurrence order
+    and dl its Σtf.
+
+    SPIMI in-mapper combining: the reference's group-by-token dedupe
+    (bge_m3_embedder.py:140-143) is per-document, hence LOCAL — doing it inside
+    the kernel means the downstream postings relation needs NO aggregation
+    shuffle at all (measured: the (term, doc_id) hash agg over the exploded
+    relation was the build's dominant, anti-scaling cost — 32 concurrent hash
+    tables over ~tens of millions of mostly-unique groups spill against the
+    shared memory pool)."""
     import numpy as np
     import pyarrow as pa
 
@@ -311,35 +325,3 @@ def token_count_arrow_kernel(max_tokens: int = 8192, special_terms: Iterable[str
             )
 
     return kernel
-
-
-def term_counts_udf(max_tokens: int = 8192, special_terms: Iterable[str] = ()):  # noqa: ANN201
-    """text → array<struct<term, tf>> — tokenize AND count inside the kernel.
-
-    SPIMI in-mapper combining: the reference's group-by-token dedupe
-    (bge_m3_embedder.py:140-143) is per-document, hence LOCAL — doing it inside
-    the Arrow kernel means the downstream postings relation needs NO aggregation
-    shuffle at all (measured: the (term, doc_id) hash agg over the exploded
-    relation was the build's dominant, anti-scaling cost — 32 concurrent hash
-    tables over ~tens of millions of mostly-unique groups spill against the
-    shared memory pool). Term order within a doc is first-occurrence, which is
-    deterministic; downstream consumers never depend on it.
-    """
-    from collections import Counter
-
-    specials = frozenset(special_terms)
-    out_type = ArrayType(
-        StructType(
-            [StructField("term", StringType(), False), StructField("tf", IntegerType(), False)]
-        )
-    )
-
-    @F.pandas_udf(out_type)
-    def _tok_tf(s: pd.Series) -> pd.Series:
-        toks = _tokenize_series(s, max_tokens, specials)
-        # tuples, not dicts: Arrow's struct conversion accepts either, and tuple
-        # construction measured ~45% cheaper than dict-per-struct on this kernel
-        # (the counting step cost more than tokenization itself with dicts).
-        return toks.map(lambda xs: list(Counter(xs).items()))
-
-    return _tok_tf

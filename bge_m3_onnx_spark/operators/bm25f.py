@@ -19,9 +19,9 @@ scorer so BM25F with one field at weight 1.0 degenerates to exactly BM25 (a
 test asserts this).
 
 Scale shape (10^12 turns):
-* field tokenization reuses the SPIMI counting kernel (functions/tokenizer.py
-  term_counts_udf) — one Arrow pass per field, postings derive by pure explode,
-  NO aggregation shuffle on the fat relation.
+* field tokenization reuses the SPIMI counting kernel (operators/postings.py
+  counted_docs) — one mapInArrow pass per field, postings derive by pure
+  explode, NO aggregation shuffle on the fat relation.
 * per-field stats (avgdl_f) are a |fields|-row aggregate; document-level df is
   one (term, doc) dedupe + per-term count — the same two-phase shape as the
   single-field term_df (salted variant applies unchanged if a field has hot
@@ -39,9 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
-from bge_m3_onnx_spark.functions.tokenizer import term_counts_udf
 from bge_m3_onnx_spark.operators.bm25 import idf_col
-from bge_m3_onnx_spark.sources.transcripts import doc_id_col
+from bge_m3_onnx_spark.operators.postings import counted_docs
 
 DEFAULT_FIELD_WEIGHTS = {"text": 1.0, "tool": 2.0}
 
@@ -53,16 +52,13 @@ def fielded_counted(
 ) -> DataFrame:
     """(doc_id, field, term_tfs: array<struct<term,tf>>, dl) — one SPIMI-counted
     row per (doc, field); dl=0 when the field is null/empty (such rows carry no
-    terms and only feed the docs-with-field denominator in :func:`field_stats`)."""
-    tok = term_counts_udf(cfg.max_tokens, cfg.special_terms)
+    terms and only feed the docs-with-field denominator in :func:`field_stats`).
+    The kernel's output is the Python boundary, so the non-empty filter that
+    the optimizer infers from the explode stays above it: one kernel run per
+    field."""
     parts = [
-        transcripts.select(
-            doc_id_col().alias("doc_id"),
-            F.lit(fld).alias("field"),
-            tok(F.col(fld)).alias("term_tfs"),
-        ).withColumn(
-            "dl",
-            F.aggregate("term_tfs", F.lit(0), lambda acc, x: acc + x["tf"]).cast("int"),
+        counted_docs(transcripts.withColumn("text", F.col(fld)), cfg).select(
+            "doc_id", F.lit(fld).alias("field"), "term_tfs", "dl"
         )
         for fld in fields
     ]

@@ -34,14 +34,22 @@ from pyspark.sql.types import (
 
 from bge_m3_onnx_spark.functions.tokenizer import (
     term_counts_arrow_kernel,
+    token_array_arrow_kernel,
     token_count_arrow_kernel,
-    tokenize_udf,
 )
 from bge_m3_onnx_spark.sources.transcripts import doc_id_col
 
-# Output schemas of the mapInArrow kernels — nullability mirrors the historical
-# pandas_udf-derived relations exactly (schema parity is part of the driver's
-# correctness gate).
+# Output schemas of the mapInArrow kernels — nullability is exactly that of the
+# pandas-UDF relations the kernels replaced (schema parity is part of the
+# driver's correctness gate).
+TOKENIZED_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("terms", ArrayType(StringType(), True), True),
+        StructField("dl", IntegerType(), True),
+    ]
+)
+
 COUNTED_SCHEMA = StructType(
     [
         StructField("doc_id", StringType(), False),
@@ -77,15 +85,16 @@ class CorpusStats:
 
 
 def tokenized_docs(transcripts: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """(doc_id, terms: array<string>, dl: int) — one vectorized-UDF pass over text.
+    """(doc_id, terms: array<string>, dl: int) — one Arrow kernel pass over text
+    (ASCII rows never touch Python), terms in token order.
 
     Column pruning: only (conv_id, turn_idx, text) are read; at query time nothing
     rereads text at all.
     """
-    tok = tokenize_udf(cfg.max_tokens, cfg.special_terms)
+    kern = token_array_arrow_kernel(cfg.max_tokens, cfg.special_terms)
     return transcripts.select(
-        doc_id_col().alias("doc_id"), tok(F.col("text")).alias("terms")
-    ).withColumn("dl", F.size("terms"))
+        doc_id_col().alias("doc_id"), F.col("text")
+    ).mapInArrow(kern, TOKENIZED_SCHEMA)
 
 
 def counted_docs(transcripts: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:

@@ -16,9 +16,10 @@ Scale shape (10^12 turns, ~10^8-term vocabulary):
   fan-out deterministically (df DESC, term ASC — keep the most selective-to-
   score terms, Lucene's top-terms blended rewrite), so a pathological ``a*``
   cannot turn one query into a 10^6-way OR.
-* downstream scoring reuses :func:`operators.bm25.score_postings`: the expanded
-  (query_id, term, df) relation stays driver-small → broadcast join, pushed
-  ``term IN`` literal on the postings scan, one aggregate, one top-k window.
+* downstream scoring is the exact path's (plans/query.py:score_rows): the
+  capped (query_id, term, df) expansion is collected to the driver and enters
+  the plan as literal maps over a pushed ``term IN`` postings scan — one
+  aggregate, one top-k window, no join.
 """
 
 from __future__ import annotations

@@ -275,7 +275,7 @@ def build_index(
         posting = posting.persist()
     # terms and docs are SMALL relations (vocab-sized / one row per doc with 3
     # narrow columns) recomputed through the aggregation (terms) or the tokenizer
-    # UDF (docs) on every use — caching them makes the per-query df lookup and the
+    # kernel (docs) on every use — caching them makes the per-query df lookup and the
     # final ordinal→docID join read from memory instead of re-deriving the corpus.
     terms = P.term_stats(posting, cfg)
     docs = docs_light

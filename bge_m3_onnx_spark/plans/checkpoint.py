@@ -5,7 +5,7 @@ North rule: "resumable from checkpoint with per-partition lineage + metrics".
 The build is a linear DAG of stages, each materialized to Parquet under the index
 directory and recorded in ``_manifest/manifest.json``:
 
-    tokenized   (doc_id, doc_ord, dl, terms)   -- the one expensive UDF pass
+    tokenized   (doc_id, term_tfs, dl, doc_ord)-- the one Arrow counting-kernel pass
     docs        (doc_id, doc_ord, dl)          -- sorted by doc_ord (ord→id lookups prune)
     postings    (term, doc_id, doc_ord, tf, dl)-- bucket=pmod(xxhash64(term), B) dirs
     terms       (term, df)

@@ -112,19 +112,12 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
 from bge_m3_onnx_spark.functions.sql_literal import sql_in, sql_literal
-from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
-from bge_m3_onnx_spark.operators.bm25 import bm25_term_score, idf_col, sum_scores_deterministic, topk
+from bge_m3_onnx_spark.operators.bm25 import sum_scores_deterministic, term_scores, topk, topk_single
 from bge_m3_onnx_spark.plans.build_index import InvertedIndex, block_meta_rows
+from bge_m3_onnx_spark.plans.query import resolve_queries, score_rows
 from bge_m3_onnx_spark.session import shuffle_width_cap
 
 _KEYS = ["term", "block_id"]
@@ -348,21 +341,8 @@ def run_queries_wand(
 
     # idf per (query, term) — tiny, resolved through the index's driver-side df
     # memo (one pruned lookup per new term; free on repeats) and re-injected as
-    # literal relations.
-    all_qterms = sorted(
-        {
-            t
-            for qtext in queries.values()
-            for t in tokenize_text(qtext, cfg.max_tokens, cfg.special_terms)
-        }
-    )
-    df_map = idx.df_for_terms(all_qterms)
-    qt_rows = [
-        {"query_id": int(qid), "term": t, "df": int(df_map[t])}
-        for qid, qtext in queries.items()
-        for t in sorted(set(tokenize_text(qtext, cfg.max_tokens, cfg.special_terms)))
-        if t in df_map
-    ]
+    # literal relations; both the exact and the WAND plan take these rows.
+    _, qt_rows = resolve_queries(idx, queries, cfg)
     # ---- routing (calibrated, WAND_CAL_r04.json): take the exact one-job plan
     # unless BOTH hold —
     #   (a) Σdf ≥ wand_route_min_postings: below the measured ~10-12M crossover
@@ -376,26 +356,27 @@ def run_queries_wand(
     # (force_wand exists for tests/bench that measure the pruning machinery.)
     def _batch_prunable() -> bool:
         by_q: dict[int, list[int]] = {}
-        for r in qt_rows:
-            by_q.setdefault(r["query_id"], []).append(r["df"])
+        for qid, _, df in qt_rows:
+            by_q.setdefault(qid, []).append(df)
         return all(
             sum(dfs) - max(dfs) <= cfg.wand_route_max_residual_frac * sum(dfs)
             for dfs in by_q.values()
             if sum(dfs) > 0
         )
 
-    if not force_wand and (
-        sum(r["df"] for r in qt_rows) < cfg.wand_route_min_postings
-        or not _batch_prunable()
+    # (A batch without a single indexed term has nothing to prune: its empty
+    # answer comes from the exact path, forced or not.)
+    if not qt_rows or (
+        not force_wand
+        and (sum(df for _, _, df in qt_rows) < cfg.wand_route_min_postings or not _batch_prunable())
     ):
-        from bge_m3_onnx_spark.plans.query import run_queries
-
         if stats_out is not None:
             # historical flag: True == "routed AWAY to the exact path";
             # router_choice is the unambiguous spelling (WAND_CAL artifacts)
             stats_out["routed"] = True
             stats_out["router_choice"] = "exact"
-        return run_queries(spark, idx, queries, k=k, cfg=cfg)
+        scored = score_rows(spark, idx, qt_rows, cfg)
+        return topk_single(scored, k) if len(queries) == 1 else topk(scored, k)
     if stats_out is not None:
         stats_out["routed"] = False
         stats_out["router_choice"] = "wand"
@@ -411,7 +392,7 @@ def run_queries_wand(
     # here (worst case, an unprunable stopword batch, still gets ~1M scored
     # postings per task).
     width = max(
-        1, min(shuffle_width_cap(spark), sum(r["df"] for r in qt_rows) // _POSTINGS_PER_PARTITION)
+        1, min(shuffle_width_cap(spark), sum(df for _, _, df in qt_rows) // _POSTINGS_PER_PARTITION)
     )
     return _run_queries_wand_forced(spark, idx, queries, k, cfg, qt_rows, width, stats_out)
 
@@ -422,25 +403,12 @@ def _run_queries_wand_forced(
     queries: dict[int, str],
     k: int,
     cfg: EngineConfig,
-    qt_rows: list[dict],
+    qt_rows: list[tuple[int, str, int]],
     width: int,
     stats_out: dict | None,
 ) -> DataFrame:
-    if not qt_rows:
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("query_id", IntegerType()),
-                    StructField("rank", IntegerType()),
-                    StructField("doc_id", StringType()),
-                    StructField("score", DoubleType()),
-                ]
-            ),
-        )
-    n, avgdl = idx.n_docs, idx.avgdl
-    qt_stats_rows = [(r["query_id"], r["term"], int(r["df"])) for r in qt_rows]
-    qterms_list = sorted({t for _, t, _ in qt_stats_rows})
+    n = idx.n_docs
+    qterms_list = sorted({t for _, t, _ in qt_rows})
 
     # ---- driver-known LITERAL relations ----
     # Every relation already known on the driver (query terms, df, θ, ranges,
@@ -457,10 +425,10 @@ def _run_queries_wand_forced(
     _terms_by_qid: dict[int, list[str]] = {}
     _qids_by_term: dict[str, list[int]] = {}
     _df_by_term: dict[str, int] = {}
-    for _q, _t, _d in qt_stats_rows:
-        _terms_by_qid.setdefault(int(_q), []).append(_t)
-        _qids_by_term.setdefault(_t, []).append(int(_q))
-        _df_by_term[_t] = int(_d)
+    for _q, _t, _d in qt_rows:
+        _terms_by_qid.setdefault(_q, []).append(_t)
+        _qids_by_term.setdefault(_t, []).append(_q)
+        _df_by_term[_t] = _d
 
     def _list_map(by_key: dict) -> str:
         """{key: [values]} as one SQL map literal, keys and values sorted."""
@@ -468,30 +436,18 @@ def _run_queries_wand_forced(
 
     all_qids_map = _list_map(_qids_by_term)
     q2terms_lit = _list_map(_terms_by_qid)
-    # df as a DOUBLE literal per term: idf is then computed with the SAME
-    # Spark-side idf_col expression the exact path uses — java.lang.Math.log
-    # and Python math.log can disagree at the last ulp, and WAND's
-    # rank-identity with the exact plan must not depend on libm flavor.
-    df_map_lit = sql_literal({t: float(d) for t, d in sorted(_df_by_term.items())})
-    score_sql = bm25_term_score(
-        "tf", "dl", idf_col(f"element_at({df_map_lit}, term)", n), avgdl, cfg
-    )
 
-    def _score_postings_lit(postings: DataFrame, qids_map: str) -> DataFrame:
-        """block postings (term, doc_id, doc_ord, tf, dl) × literal query-term
-        map → per-doc sums, via explode instead of a broadcast join. doc_id
-        rides along as a group key (it is a function of doc_ord), so no phase
-        ever joins the docs relation. Summation stays the term-sorted
-        deterministic fold shared with the exact path, over ``width``
-        partitions hashed on (query_id, doc_ord): the fold and phase 3b's
-        joins on those keys reuse that one exchange."""
-        per_term = postings.selectExpr(
-            f"explode(element_at({qids_map}, term)) AS query_id",
-            "doc_ord",
-            "doc_id",
-            "term",
-            f"{score_sql} AS s",
-        ).repartition(width, "query_id", "doc_ord")
+    def _fold_scores(postings: DataFrame, qids_by_term: dict) -> DataFrame:
+        """block postings (term, doc_id, doc_ord, tf, dl) → per-doc sums
+        through the one scoring core (operators/bm25.py:term_scores), over
+        ``width`` partitions hashed on (query_id, doc_ord): the fold and phase
+        3b's joins on those keys reuse that one exchange. doc_id rides along
+        as a group key (it is a function of doc_ord), so no phase ever joins
+        the docs relation. Summation stays the term-sorted deterministic fold
+        shared with the exact path."""
+        per_term = term_scores(
+            postings, qids_by_term, _df_by_term, n, idx.avgdl, cfg, ["doc_ord", "doc_id"], width
+        )
         return sum_scores_deterministic(per_term, ["query_id", "doc_ord", "doc_id"])
 
     # every block's postings ("Reading a block", module docstring); block_id
@@ -604,7 +560,7 @@ def _run_queries_wand_forced(
     theta_map = sql_literal(
         {
             qid: float(theta.get(qid, float("-inf")))
-            for qid in sorted({q for q, _, _ in qt_stats_rows})
+            for qid in sorted({q for q, _, _ in qt_rows})
         }
     )
     # the stored ranges stay BIGINT, as the build's .cast("long") made them
@@ -638,8 +594,8 @@ def _run_queries_wand_forced(
         tmax_map = sql_literal({t: float(m) for t, m in sorted(tmax.items())})
         qsum_map = sql_literal(
             {
-                qid: float(sum(tmax.get(t, 0.0) for q2, t, _ in qt_stats_rows if q2 == qid))
-                for qid in sorted({q for q, _, _ in qt_stats_rows})
+                qid: float(sum(tmax.get(t, 0.0) for q2, t, _ in qt_rows if q2 == qid))
+                for qid in sorted({q for q, _, _ in qt_rows})
             }
         )
         bounds = (
@@ -695,12 +651,12 @@ def _run_queries_wand_forced(
     # wide tiles carry its high max into every segment (measured: 618/682
     # blocks survived for "iceberg3 the"; with MaxScore only the rare term's
     # blocks are candidate sources).
-    qids = sorted({q for q, _, _ in qt_stats_rows})
+    qids = sorted({q for q, _, _ in qt_rows})
     ess_pairs_rows: list[tuple[int, str]] = []
     ness_pairs_rows: list[tuple[int, str]] = []
     ness_sum: dict[int, float] = {}
     for qid in qids:
-        tq = sorted((tmax.get(t, 0.0), t) for q2, t, _ in qt_stats_rows if q2 == qid and t in tmax)
+        tq = sorted((tmax.get(t, 0.0), t) for q2, t, _ in qt_rows if q2 == qid and t in tmax)
         th = theta.get(qid, float("-inf"))
         cum, n_ness = 0.0, 0
         for m, t in tq:
@@ -734,7 +690,6 @@ def _run_queries_wand_forced(
     _ness_by_qid: dict[int, list[str]] = {}
     for _q, _t in ness_pairs_rows:
         _ness_by_qid.setdefault(_q, []).append(_t)
-    ess_qids_map = _list_map(_ess_by_term)
     q2ess_terms_lit = _list_map(_ess_by_qid)
 
     def _covering_keys(docs: DataFrame, q2terms: str) -> DataFrame:
@@ -836,7 +791,7 @@ def _run_queries_wand_forced(
     # either phase-2 branch, every essential block of a doc that can reach
     # the k-th survived (module docstring, phase 3), so its s_ess over the
     # surviving postings is exact.
-    s_ess = _score_postings_lit(surviving, ess_qids_map)
+    s_ess = _fold_scores(surviving, _ess_by_term)
 
     # ---- θ-filter before the non-essential completion ----
     # score(d) = s_ess(d) + s_ness(d) ≤ s_ess(d) + Σ_{t non-ess} tmax(t), so a
@@ -872,7 +827,7 @@ def _run_queries_wand_forced(
         non_keys = _not_surv(needed_non)
         full = surviving.unionByName(_blocks_of(qpost, non_keys))
         strong_ords = strong.select("doc_ord").repartition(width, "doc_ord").distinct()
-        scored = _score_postings_lit(full.join(strong_ords, "doc_ord"), all_qids_map)
+        scored = _fold_scores(full.join(strong_ords, "doc_ord"), _qids_by_term)
         scored = scored.join(strong, ["query_id", "doc_ord"], "left_semi")
     else:
         # every term essential → s_ess is already the exact full score for

@@ -46,11 +46,18 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id string, text string")
 
 
+def _tokenize(docs):
+    """(doc_id, terms) through the engine's tokenized_docs kernel, keeping the
+    fixture's doc ids (tokenized_docs names a doc conv_id:turn_idx)."""
+    tok = tokenized_docs(
+        docs.select(F.col("doc_id").alias("conv_id"), F.lit(0).alias("turn_idx"), "text")
+    )
+    return tok.select(F.substring_index("doc_id", ":", 1).alias("doc_id"), "terms")
+
+
 @pytest.fixture(scope="module")
 def doc_tok(spark, docs):
-    from bge_m3_onnx_spark.functions.tokenizer import tokenize_udf
-
-    return docs.select("doc_id", tokenize_udf()(F.col("text")).alias("terms"))
+    return _tokenize(docs)
 
 
 @pytest.fixture(scope="module")
@@ -97,9 +104,7 @@ def test_lsh_candidates_are_sparse(spark):
         if i < 5:  # plant a near-dup: one token changed
             rows.append((f"dup{i:03d}", text.replace(f"tok{i}x15", "changed")))
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    from bge_m3_onnx_spark.functions.tokenizer import tokenize_udf
-
-    tok = df.select("doc_id", tokenize_udf()(F.col("text")).alias("terms"))
+    tok = _tokenize(df)
     pairs = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(minhash_bands(tok)).collect()}
     n_docs = len(rows)
     all_pairs = n_docs * (n_docs - 1) / 2

@@ -3,15 +3,8 @@
 
 from __future__ import annotations
 
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-
-from bge_m3_onnx_spark.functions.tokenizer import (
-    _tokenize_series,
-    tokenize_text,
-    tokenize_udf,
-)
+from bge_m3_onnx_spark.config import EngineConfig
+from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
 
 EDGE_CASES = [
     "",
@@ -23,6 +16,24 @@ EDGE_CASES = [
     "  leading   spaces\t\ttabs\nnewlines  ",
     None,
 ]
+
+# EDGE_CASES plus a row long enough for every clamp below, and the kernel
+# configs: default, clamp only, ASCII and non-ASCII specials, and a clamp
+# before a special filter that drops a kept token.
+KERNEL_TEXTS = EDGE_CASES + [" ".join(f"w{i}" for i in range(100))]
+KERNEL_CONFIGS = [
+    (8192, frozenset()),
+    (10, frozenset()),
+    (8192, frozenset({"the", "12345", "中文"})),
+    (3, frozenset({"w1", "español"})),
+]
+
+
+def _edge_transcripts(spark):
+    rows = [(f"c{i}", 0, None, t, None, None) for i, t in enumerate(KERNEL_TEXTS)]
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
 
 
 def test_empty_and_none():
@@ -66,38 +77,55 @@ def test_nfkc_normalization():
     assert tokenize_text("ＨＥＬＬＯ") == ["hello"]
 
 
-def test_pandas_kernel_matches_scalar():
-    s = pd.Series(EDGE_CASES)
-    out = _tokenize_series(s, 8192, frozenset())
-    for text, got in zip(EDGE_CASES, out):
-        assert list(got) == tokenize_text(text)
+def test_tokenized_docs_matches_oracle(spark):
+    """tokenized_docs' token-array kernel (ASCII rows in Arrow C++, the rest
+    through the oracle) == tokenize_text per row, in token order, under every
+    kernel config; dl == the token count."""
+    from bge_m3_onnx_spark.operators.postings import tokenized_docs
+
+    t = _edge_transcripts(spark)
+    for max_tokens, specials in KERNEL_CONFIGS:
+        cfg = EngineConfig(max_tokens=max_tokens, special_terms=specials)
+        got = {r["doc_id"]: r for r in tokenized_docs(t, cfg).collect()}
+        for i, text in enumerate(KERNEL_TEXTS):
+            want = tokenize_text(text, max_tokens, specials)
+            r = got[f"c{i}:0"]
+            assert list(r["terms"]) == want, (max_tokens, specials, text)
+            assert r["dl"] == len(want)
 
 
-@pytest.mark.usefixtures("spark")
-def test_udf_matches_oracle(spark):
-    df = spark.createDataFrame([(t,) for t in EDGE_CASES], "text string")
-    rows = df.select(F.col("text"), tokenize_udf()(F.col("text")).alias("toks")).collect()
-    for r in rows:
-        assert list(r["toks"]) == tokenize_text(r["text"]), r["text"]
+def test_tokenized_docs_schema(spark):
+    """The relation's schema, nullability included, is that of the pandas UDF
+    it replaced: schema parity is part of the driver's correctness gate."""
+    from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
+
+    from bge_m3_onnx_spark.operators.postings import tokenized_docs
+
+    assert tokenized_docs(_edge_transcripts(spark)).schema == StructType(
+        [
+            StructField("doc_id", StringType(), False),
+            StructField("terms", ArrayType(StringType(), True), True),
+            StructField("dl", IntegerType(), True),
+        ]
+    )
 
 
-@pytest.mark.usefixtures("spark")
-def test_term_counts_udf_matches_counter(spark):
+def test_counted_docs_matches_counter(spark):
     """The SPIMI counting kernel == Counter(tokenize_text(...)) per document,
-    and Σtf == token count (dl consistency)."""
+    and dl == Σtf == token count, under every kernel config."""
     from collections import Counter
 
-    from bge_m3_onnx_spark.functions.tokenizer import term_counts_udf
+    from bge_m3_onnx_spark.operators.postings import counted_docs
 
-    df = spark.createDataFrame([(t,) for t in EDGE_CASES], "text string")
-    rows = df.select(
-        F.col("text"), term_counts_udf()(F.col("text")).alias("tts")
-    ).collect()
-    for r in rows:
-        got = {x["term"]: x["tf"] for x in r["tts"]}
-        want = dict(Counter(tokenize_text(r["text"])))
-        assert got == want, r["text"]
-        assert sum(got.values()) == len(tokenize_text(r["text"]))
+    t = _edge_transcripts(spark)
+    for max_tokens, specials in KERNEL_CONFIGS:
+        cfg = EngineConfig(max_tokens=max_tokens, special_terms=specials)
+        got = {r["doc_id"]: r for r in counted_docs(t, cfg).collect()}
+        for i, text in enumerate(KERNEL_TEXTS):
+            toks = tokenize_text(text, max_tokens, specials)
+            r = got[f"c{i}:0"]
+            assert {x["term"]: x["tf"] for x in r["term_tfs"]} == dict(Counter(toks)), text
+            assert r["dl"] == sum(x["tf"] for x in r["term_tfs"]) == len(toks)
 
 
 def test_token_count_kernel_matches_full_tokenizer():
@@ -109,14 +137,12 @@ def test_token_count_kernel_matches_full_tokenizer():
 
     from bge_m3_onnx_spark.functions.tokenizer import token_count_arrow_kernel
 
-    texts = EDGE_CASES + [" ".join(f"w{i}" for i in range(100))]
+    texts = KERNEL_TEXTS
     rb = pa.record_batch(
         [pa.array([f"d{i}" for i in range(len(texts))]), pa.array(texts, type=pa.string())],
         names=["doc_id", "text"],
     )
-    for max_tokens, specials in [(8192, frozenset()), (10, frozenset()),
-                                 (8192, frozenset({"the", "12345"})),
-                                 (3, frozenset({"w1"}))]:
+    for max_tokens, specials in KERNEL_CONFIGS:
         want = [len(tokenize_text(t, max_tokens, specials)) for t in texts]
         (out,) = token_count_arrow_kernel(max_tokens, specials)(iter([rb]))
         assert out.column(1).to_pylist() == want, (max_tokens, specials)
@@ -140,7 +166,6 @@ def test_arrow_kernels_match_oracle_with_config(spark):
     ASCII, multilingual, NFKC-foldable, empty and null rows in one batch."""
     from collections import Counter
 
-    from bge_m3_onnx_spark.config import EngineConfig
     from bge_m3_onnx_spark.operators.postings import counted_docs, doc_len_docs
 
     texts = [

@@ -1,7 +1,8 @@
 """Local replica of the driver's correctness gate: run every queries() entry on
 Spark and its oracle_sql() on DuckDB at a given sf_dir, compare row-count, column
 names, and order-insensitive values (floats rounded upstream by the queries
-themselves). Usage: python tools/check_oracles.py [sf_dir] [only_name...]"""
+themselves). The first line printed is the source revision the sweep ran.
+Usage: python tools/check_oracles.py [sf_dir] [only_name...]"""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
 from bge_m3_onnx_spark.session import get_spark  # noqa: E402
+from tools.revision import source_revision  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -34,6 +36,7 @@ def norm_rows(cols, rows):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    print(f"revision {source_revision()}", flush=True)
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:

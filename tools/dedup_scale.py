@@ -38,7 +38,7 @@ from bge_m3_onnx_spark.operators.dedup import (  # noqa: E402
     minhash_bands,
     shingles,
 )
-from bge_m3_onnx_spark.functions.tokenizer import tokenize_udf  # noqa: E402
+from bge_m3_onnx_spark.operators.postings import tokenized_docs  # noqa: E402
 from bge_m3_onnx_spark.session import get_spark  # noqa: E402
 from bge_m3_onnx_spark.sources.transcripts import synth_transcripts_skewed  # noqa: E402
 
@@ -67,11 +67,12 @@ def main() -> int:
     }
     print(json.dumps({"stage": "exact", **out["exact"]}), flush=True)
 
-    canon = docs.join(
-        ex.select(F.col("canonical_doc_id").alias("doc_id")), "doc_id", "left_semi"
+    tok = (
+        tokenized_docs(tr, DEFAULT_CONFIG)
+        .join(ex.select(F.col("canonical_doc_id").alias("doc_id")), "doc_id", "left_semi")
+        .select("doc_id", "terms")
+        .persist()
     )
-    tok_udf = tokenize_udf(DEFAULT_CONFIG.max_tokens, DEFAULT_CONFIG.special_terms)
-    tok = canon.select("doc_id", tok_udf(F.col("text")).alias("terms")).persist()
     n_canon = tok.count()
     ex.unpersist()
 

@@ -108,19 +108,24 @@ def main() -> None:
         )
     )
 
-    from bge_m3_onnx_spark.operators.bm25 import score_postings, topk
+    from bge_m3_onnx_spark.operators.bm25 import topk
     from bge_m3_onnx_spark.operators.wildcard import expand_prefix
+    from bge_m3_onnx_spark.plans.query import score_rows
 
     qt_prefix = expand_prefix(idx.terms, "sh", query_id=1, max_expansions=64)
-    plan_prefix = topk(score_postings(idx.postings, qt_prefix, idx.n_docs, idx.avgdl), k=10)
+    plan_prefix = topk(score_rows(spark, idx, qt_prefix.collect()), k=10)
     sections.append(
         (
             "Prefix search 'sh*' (expansion → BM25)",
             fmt(plan_prefix),
             [
-                "Terms scan: PushedFilters StringStartsWith(term,sh)",
-                "TakeOrderedAndProject caps the expansion (max_expansions) before BroadcastExchange",
-                "Postings side joins the broadcast expansion — no shuffle of postings",
+                "The capped expansion (df DESC, term ASC, max_expansions) is collected "
+                "to the driver: the plan is the exact path's literal-map plan, with no "
+                "terms scan and no join",
+                "Generate explode(element_at(map, term)) over the postings scan; the "
+                "expanded terms reach it as PushedFilters (EqualTo for the one term "
+                "'sh*' expands to here, In for more) and as bucket PartitionFilters",
+                "ONE driver-sized Exchange feeding the deterministic score fold",
             ],
         )
     )
@@ -144,9 +149,9 @@ def main() -> None:
             "BM25F field-weighted scoring",
             fmt(plan_bm25f),
             [
-                "ArrowEvalPython runs the SPIMI counting kernel twice per field: once for "
-                "the field's counts and once more in the non-empty Filter the optimizer "
-                "pushes below that Project — no row-at-a-time Python",
+                "MapInArrow runs the SPIMI counting kernel ONCE per field; the non-empty "
+                "Filter the optimizer infers from the explode stays above it — no "
+                "row-at-a-time Python",
                 "Two partial+final HashAggregate pairs (per-term pseudo-frequency, per-doc score)",
                 "Query-term side is a broadcast of a local relation",
             ],

@@ -23,12 +23,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG  # noqa: E402
-from bge_m3_onnx_spark.functions.tokenizer import tokenize_udf  # noqa: E402
 from bge_m3_onnx_spark.operators.percolate import (  # noqa: E402
     percolate,
     prefix_terms_df,
     rarest_terms_df,
 )
+from bge_m3_onnx_spark.operators.postings import tokenized_docs  # noqa: E402
 from bge_m3_onnx_spark.session import get_spark  # noqa: E402
 from bge_m3_onnx_spark.sources.transcripts import (  # noqa: E402
     _HOT_TERMS,
@@ -62,13 +62,7 @@ def main() -> int:
     t_saved = time.monotonic() - t0
 
     tr = synth_transcripts_skewed(spark, n_docs // 10, 10)
-    docs = tr.select(
-        F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("doc_id"), "text"
-    )
-    tok_udf = tokenize_udf(DEFAULT_CONFIG.max_tokens, DEFAULT_CONFIG.special_terms)
-    toks = docs.select("doc_id", tok_udf(F.col("text")).alias("terms")).select(
-        "doc_id", F.explode("terms").alias("term")
-    )
+    toks = tokenized_docs(tr, DEFAULT_CONFIG).select("doc_id", F.explode("terms").alias("term"))
 
     # materialize the probe tokens ONCE so both paths time matching, not the
     # shared tokenize pass (1M docs × ~50 distinct terms)

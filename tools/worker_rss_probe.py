@@ -1,10 +1,10 @@
 """Reproduce (and prove the bound for) Python-worker RSS growth across
-Arrow-UDF batches — the long-session failure mode that killed the r4 soak.
+Arrow batches — the long-session failure mode that killed the r4 soak.
 
 PySpark reuses Python worker processes across tasks
 (``spark.python.worker.reuse``, default true). Each Arrow batch a worker
-handles can leave memory behind (allocator fragmentation, pandas/pyarrow
-pools, object caches), so a reused worker's RSS is a high-water mark over
+handles can leave memory behind (allocator fragmentation, pyarrow pools,
+object caches), so a reused worker's RSS is a high-water mark over
 every task it has ever run. On a 32-slot local session driving a multi-hour
 merge chain, those workers plus a 48g driver JVM exhausted the box ~80 min
 into the r4 soak (`tools/soak_resume.py:1-20`). This is not a sandbox
@@ -36,43 +36,43 @@ import os
 import subprocess
 import sys
 
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 ROUNDS = 8
 CONVS = 60_000  # 600k turns/job through the tokenize+count Arrow kernel
 
 
-def _probe_udf():
-    """array<struct<term,tf>> work identical to term_counts_udf, but the batch
-    returns (pid, rss_kb) so the worker reports its own footprint."""
-    from pyspark.sql import functions as F
+def _probe_kernel():
+    """mapInArrow kernel: the build's counting kernel (functions/tokenizer.py
+    term_counts_arrow_kernel) over each (doc_id, text) batch, then one
+    (pid, rss_kb) row per batch so the worker reports its own footprint."""
+    from bge_m3_onnx_spark.functions.tokenizer import term_counts_arrow_kernel
 
-    from bge_m3_onnx_spark.functions.tokenizer import _tokenize_series
+    count = term_counts_arrow_kernel()
 
-    @F.pandas_udf("struct<pid: long, rss_kb: long>")
-    def _tok_probe(s: pd.Series) -> pd.DataFrame:
-        from collections import Counter
+    def kernel(batches):
+        import pyarrow as pa
 
-        toks = _tokenize_series(s, 8192, frozenset())
-        toks.map(lambda xs: list(Counter(xs).items()))  # the real kernel's work
-        rss = 0
-        with open("/proc/self/status") as f:
-            for line in f:
-                if line.startswith("VmRSS:"):
-                    rss = int(line.split()[1])
-                    break
-        return pd.DataFrame({"pid": [os.getpid()] * len(s), "rss_kb": [rss] * len(s)})
+        for _ in count(batches):  # the real kernel's work
+            rss = 0
+            with open("/proc/self/status") as f:
+                for line in f:
+                    if line.startswith("VmRSS:"):
+                        rss = int(line.split()[1])
+                        break
+            yield pa.record_batch(
+                [pa.array([os.getpid()], pa.int64()), pa.array([rss], pa.int64())],
+                names=["pid", "rss_kb"],
+            )
 
-    return _tok_probe
+    return kernel
 
 
 def run_mode(reuse: bool) -> list[dict]:
     from pyspark.sql import functions as F
 
     from bge_m3_onnx_spark.session import get_spark
-    from bge_m3_onnx_spark.sources.transcripts import synth_transcripts
+    from bge_m3_onnx_spark.sources.transcripts import doc_id_col, synth_transcripts
 
     spark = get_spark(
         app_name=f"rss_probe_{'reuse' if reuse else 'noreuse'}",
@@ -80,15 +80,16 @@ def run_mode(reuse: bool) -> list[dict]:
         shuffle_partitions=16,
         extra_conf={"spark.python.worker.reuse": str(reuse).lower()},
     )
-    probe = _probe_udf()
+    probe = _probe_kernel()
     rows = []
     seen_pids: set[int] = set()
     for i in range(ROUNDS):
         per_worker = (
             synth_transcripts(spark, CONVS, 10)
-            .select(probe(F.col("text")).alias("p"))
-            .groupBy(F.col("p.pid").alias("pid"))
-            .agg(F.max("p.rss_kb").alias("rss_kb"))
+            .select(doc_id_col().alias("doc_id"), "text")
+            .mapInArrow(probe, "pid long, rss_kb long")
+            .groupBy("pid")
+            .agg(F.max("rss_kb").alias("rss_kb"))
             .collect()
         )
         pids = {int(r["pid"]) for r in per_worker}
@@ -138,7 +139,7 @@ def main() -> int:
     summary = {
         "arrow_jobs_per_mode": ROUNDS,
         "turns_per_job": CONVS * 10,
-        "kernel": "functions/tokenizer _tokenize_series + Counter (the merge-chain kernel)",
+        "kernel": "functions/tokenizer term_counts_arrow_kernel (the build's counting kernel)",
         "reuse_true": _summ(out["reuse"]),
         "reuse_false": _summ(out["noreuse"]),
         "rounds": out,
