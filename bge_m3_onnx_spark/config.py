@@ -41,7 +41,8 @@ class EngineConfig:
     # --- query ---
     default_k: int = 10
     # Route to the exact path when the query terms' total posting count (Σ df,
-    # known on the driver after the first metadata lookup) is below this: WAND's
+    # known on the driver from the index's df memo, before any metadata
+    # lookup) is below this: WAND's
     # extra driver round-trips only pay off when pruning skips far more posting
     # decode work than the round-trips cost. At 10^12 turns any stopword query
     # clears this instantly; small/selective queries take the one-job exact plan.

@@ -19,10 +19,11 @@ from pyspark.sql import functions as F
 
 from bge_m3_onnx_spark.config import DEFAULT_CONFIG
 from bge_m3_onnx_spark.functions.tokenizer import tokenize_text
+from bge_m3_onnx_spark.operators.ivf import _dot
 from bge_m3_onnx_spark.operators.ordinals import assign_dense_ordinals
 from bge_m3_onnx_spark.operators.postings import build_postings, tokenized_docs
 from bge_m3_onnx_spark.plans.build_index import build_index
-from bge_m3_onnx_spark.plans.query import run_queries, score_queries, score_rows
+from bge_m3_onnx_spark.plans.query import query_terms, run_queries, score_queries, score_rows
 from bge_m3_onnx_spark.sources.transcripts import (
     _CONVS_MOD,
     TRANSCRIPTS_FROM_DOCUMENTS_SQL,
@@ -431,7 +432,7 @@ def q_prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
     qt = expand_prefix(idx.terms, _PREFIX, query_id=1, max_expansions=64)
-    scored = score_rows(spark, idx, qt.collect(), CFG)
+    scored = score_rows(spark, idx, query_terms(qt.collect()), CFG)
     res = topk(scored, k=10)
     return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score_r"))
 
@@ -578,7 +579,7 @@ def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_MLT_TOP_TERMS)
     )
     qt = src_terms.select(F.lit(1).alias("query_id"), "term", F.col("df_t").alias("df"))
-    scored = score_rows(spark, idx, qt.collect(), CFG)
+    scored = score_rows(spark, idx, query_terms(qt.collect()), CFG)
     scored = scored.join(F.broadcast(src), F.col("doc_id") == F.col("src_doc"), "left_anti")
     res = topk(scored, k=10)
     return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score_r"))
@@ -719,22 +720,15 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     cos = (
         e.crossJoin(F.broadcast(q))
         .select(
             F.col("vec_id").alias("id"),
             (
-                dot(F.col("embedding"), F.col("qv"))
+                _dot(F.col("embedding"), F.col("qv"))
                 / (
-                    F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                    * F.sqrt(dot(F.col("qv"), F.col("qv")))
+                    F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+                    * F.sqrt(_dot(F.col("qv"), F.col("qv")))
                 )
             ).alias("cos"),
         )
@@ -922,7 +916,7 @@ def q_score_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = build_index(_transcripts(spark, sf_dir), CFG, cache=False)
     _, rows = resolve_queries(idx, _EXPLAIN_QUERY, CFG)
-    top1 = topk(score_rows(spark, idx, rows, CFG), k=1).select("doc_id")
+    top1 = topk(score_rows(spark, idx, query_terms(rows), CFG), k=1).select("doc_id")
     qt = spark.createDataFrame([(t, df) for _, t, df in rows], "term string, df long")
     qt2 = qt.selectExpr("term", f"{idf_col('CAST(df AS DOUBLE)', idx.n_docs)} AS idf", "df")
     per_term = idx.postings.join(F.broadcast(qt2), "term").join(F.broadcast(top1), "doc_id")
@@ -1019,7 +1013,7 @@ def q_synonym_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id int, term string",
     )
     qt = expand_synonyms(base, syn).join(idx.terms, "term").select("query_id", "term", "df")
-    scored = score_rows(spark, idx, qt.collect(), CFG)
+    scored = score_rows(spark, idx, query_terms(qt.collect()), CFG)
     res = topk(scored, k=10)
     return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score_r"))
 
@@ -1424,7 +1418,7 @@ def q_fuzzy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "term", "df"
     ).distinct()
     qt = qt_raw.select("query_id").distinct().crossJoin(expanded)  # 1-row × matches
-    scored = score_rows(spark, idx, qt.collect(), CFG)
+    scored = score_rows(spark, idx, query_terms(qt.collect()), CFG)
     res = topk(scored, k=10)
     return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score_r"))
 
@@ -1968,20 +1962,13 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     scored = e.crossJoin(F.broadcast(q)).select(
         "vec_id",
         (
-            dot(F.col("embedding"), F.col("qv"))
+            _dot(F.col("embedding"), F.col("qv"))
             / (
-                F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                * F.sqrt(dot(F.col("qv"), F.col("qv")))
+                F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+                * F.sqrt(_dot(F.col("qv"), F.col("qv")))
             )
         ).alias("cos"),
     )
@@ -2029,22 +2016,15 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("qbucket"), F.col("embedding").alias("qv")
     )
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     scored = (
         eb.join(F.broadcast(qb), eb["bucket"] == qb["qbucket"])
         .select(
             "vec_id",
             (
-                dot(F.col("embedding"), F.col("qv"))
+                _dot(F.col("embedding"), F.col("qv"))
                 / (
-                    F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                    * F.sqrt(dot(F.col("qv"), F.col("qv")))
+                    F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+                    * F.sqrt(_dot(F.col("qv"), F.col("qv")))
                 )
             ).alias("cos"),
         )
@@ -2108,20 +2088,13 @@ def q_ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     probes = q.select(F.explode(F.array(*flips)).alias("bucket"), "qv")
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     scored = eb.join(F.broadcast(probes), "bucket").select(
         "vec_id",
         (
-            dot(F.col("embedding"), F.col("qv"))
+            _dot(F.col("embedding"), F.col("qv"))
             / (
-                F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                * F.sqrt(dot(F.col("qv"), F.col("qv")))
+                F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+                * F.sqrt(_dot(F.col("qv"), F.col("qv")))
             )
         ).alias("cos"),
     )
@@ -2265,13 +2238,6 @@ def q_embdup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = eb.select("bucket", F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
     b = eb.select("bucket", F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
 
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     pairs = (
         a.join(b, "bucket")
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -2279,8 +2245,8 @@ def q_embdup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_a",
             "vec_b",
             (
-                dot(F.col("ea"), F.col("eb"))
-                / (F.sqrt(dot(F.col("ea"), F.col("ea"))) * F.sqrt(dot(F.col("eb"), F.col("eb"))))
+                _dot(F.col("ea"), F.col("eb"))
+                / (F.sqrt(_dot(F.col("ea"), F.col("ea"))) * F.sqrt(_dot(F.col("eb"), F.col("eb"))))
             ).alias("cos"),
         )
     )

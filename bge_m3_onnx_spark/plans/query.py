@@ -8,6 +8,8 @@ window top-k. The WAND path (plans/wand.py) must return rank-identical results
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,38 +45,58 @@ def resolve_queries(
     return terms_by_qid, rows
 
 
+@dataclass(frozen=True)
+class QueryTerms:
+    """The driver-side description of a query batch, derived once from its
+    (query_id, term, df) rows by :func:`query_terms`."""
+
+    terms_by_qid: dict[int, list[str]]  # in row order
+    qids_by_term: dict[str, list[int]]
+    df_by_term: dict[str, int]
+    sum_df: int  # Σ df over the rows: exactly the postings the batch matches
+
+
+def query_terms(rows) -> QueryTerms:
+    """The :class:`QueryTerms` of (query_id, term, df) rows."""
+    terms_by_qid: dict[int, list[str]] = {}
+    qids_by_term: dict[str, list[int]] = {}
+    df_by_term: dict[str, int] = {}
+    sum_df = 0
+    for qid, t, df in rows:
+        terms_by_qid.setdefault(qid, []).append(t)
+        qids_by_term.setdefault(t, []).append(qid)
+        df_by_term[t] = df
+        sum_df += df
+    return QueryTerms(terms_by_qid, qids_by_term, df_by_term, sum_df)
+
+
 def score_rows(
     spark: SparkSession,
     idx: InvertedIndex,
-    qt_rows: list[tuple[int, str, int]],
+    q: QueryTerms,
     cfg: EngineConfig | None = None,
     need: dict[int, int] | None = None,
 ) -> DataFrame:
-    """(query_id, doc_id, score) for the driver rows (query_id, term, df), as
-    ONE job: pruned scan → literal-map fan-out → one driver-sized exchange →
-    agg. The rows are driver-known, so they enter the plan as map literals:
-    no terms-aggregation subjob and no broadcast-exchange subjob per query.
+    """(query_id, doc_id, score) for the batch ``q``, as ONE job: pruned scan
+    → literal-map fan-out → one driver-sized exchange → agg. The batch is
+    driver-known, so it enters the plan as map literals: no terms-aggregation
+    subjob and no broadcast-exchange subjob per query.
 
     With ``need`` ({query_id: term count}) a doc must match that many of the
     query's terms (AND semantics): the matched-term count rides the same
     aggregate as size(cs), so the filter adds no shuffle."""
     cfg = cfg or idx.cfg
-    if not qt_rows:
+    if not q.df_by_term:
         return spark.createDataFrame([], "query_id int, doc_id string, score double")
-    qids_by_term: dict[str, list[int]] = {}
-    df_by_term: dict[str, int] = {}
-    for qid, t, df in qt_rows:
-        qids_by_term.setdefault(t, []).append(qid)
-        df_by_term[t] = df
     per_term = term_scores(
-        idx.pruned_postings(sorted(df_by_term)),
-        qids_by_term,
-        df_by_term,
+        idx.pruned_postings(sorted(q.df_by_term)),
+        q.qids_by_term,
+        q.df_by_term,
         idx.n_docs,
         idx.avgdl,
         cfg,
         ["doc_id"],
-        _agg_partitions(spark, qt_rows),
+        _agg_partitions(spark, q.sum_df),
     )
     if need is None:
         return sum_scores_deterministic(per_term, ["query_id", "doc_id"])
@@ -100,7 +122,7 @@ def score_queries(
     cfg = cfg or idx.cfg
     terms_by_qid, rows = resolve_queries(idx, queries, cfg)
     need = {q: len(ts) for q, ts in terms_by_qid.items()} if conjunctive else None
-    return score_rows(spark, idx, rows, cfg, need)
+    return score_rows(spark, idx, query_terms(rows), cfg, need)
 
 
 def run_queries(
@@ -127,7 +149,7 @@ def run_queries(
 _AGG_ROWS_PER_TASK = 100_000
 
 
-def _agg_partitions(spark: SparkSession, qt_rows: list[tuple[int, str, int]]) -> int:
+def _agg_partitions(spark: SparkSession, sum_df: int) -> int:
     """Cost-based partition count for the score aggregate, from driver-known df:
     the matched-postings row count is EXACTLY Σ df over the (query, term) pairs
     (inner join on unique (term, doc) postings), so the exchange width scales
@@ -135,7 +157,4 @@ def _agg_partitions(spark: SparkSession, qt_rows: list[tuple[int, str, int]]) ->
     fans wide, a selective query pays 1-2 tasks instead of a mostly-empty
     session-default exchange. Never exceeds the session width
     (``shuffle_width_cap``)."""
-    total = sum(df for _, _, df in qt_rows)
-    cap = shuffle_width_cap(spark)
-    need = (total + _AGG_ROWS_PER_TASK - 1) // _AGG_ROWS_PER_TASK
-    return max(1, min(cap, need))
+    return max(1, min(shuffle_width_cap(spark), -(-sum_df // _AGG_ROWS_PER_TASK)))

@@ -44,7 +44,9 @@ fixture):
     top-k window. For "rare_term the"-shaped queries this is the difference
     between scoring ~all of "the" and scoring a handful of its blocks: the
     rare term's wide ordinal tiles otherwise carry its high max into every
-    segment.
+    segment (measured: 618/682 blocks survived for "iceberg3 the" on the
+    segment bound alone; with MaxScore only the rare term's blocks are
+    candidate sources).
     3a reads no block beyond the survivors, after either phase-2 branch. Both
     cut each query's segments at every block start of its terms (the
     distributed branch's classic-bound pre-filter drops only segments below
@@ -78,15 +80,13 @@ carry dl and doc_id, so no phase joins the docs table: the fold groups by
 (query_id, doc_ord, doc_id) — doc_id is a function of doc_ord — and the top-k
 ranks (score DESC, doc_id ASC) on those rows directly.
 
-Routing (r2, calibrated r3): WAND's driver round-trips (2 jobs, 1 once the
-index's memo holds the batch's terms) only pay off when pruning skips far more
-scoring work than the round-trips cost. Σ df over the query terms is known on
-the driver after the FIRST metadata lookup; below
-``cfg.wand_route_min_postings`` the plan delegates to the exact one-job broadcast
-path (plans/query.py), which scans those same Σ df postings outright. Stopword
-queries at 10^12 scale clear the threshold instantly and take the pruning path.
-The threshold comes from tools/wand_calibrate.py's measured exact-vs-WAND
-crossover (WAND_CAL_r03.json / SCALE.md).
+Routing (r2, re-fit r4): WAND's driver round-trips (2 jobs, 1 once the
+index's memo holds the batch's terms) pay off only when pruning skips far more
+scoring work than they cost. A batch takes the exact one-job plan
+(plans/query.py) unless its Σ df, known from the index's df memo before any
+metadata read, reaches ``cfg.wand_route_min_postings`` — tools/wand_calibrate.py's
+measured crossover (WAND_CAL_r04.json / SCALE.md) — and every query is
+prunable-shaped (``cfg.wand_route_max_residual_frac``).
 
 Result: a lazy plan, with the same contract as ``run_queries``. The call runs
 the driver-side phases (and a metadata collect only for terms the memo lacks);
@@ -95,10 +95,6 @@ job (plus the broadcast subjobs of phase 3b's joins, on a batch with a
 non-essential term). Nothing is cached or checkpointed, so no cache outlives
 the call, and a second action runs the query again: release the index only
 after the last action on the frame.
-
-Phase 3 uses the ``block_range`` stored IN the block rows (not recomputed from
-current corpus stats), so blocks written under an older (N, df) — kept across an
-incremental merge — still map candidate ordinals to the right block_id.
 
 At 10^12 scale: the blocks and postings scans are term-pruned by the bucketed
 layout (pushed isin); the postings scan covers the query terms' postings and
@@ -113,17 +109,17 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bge_m3_onnx_spark.config import DEFAULT_CONFIG, EngineConfig
+from bge_m3_onnx_spark.config import EngineConfig
 from bge_m3_onnx_spark.functions.sql_literal import sql_in, sql_literal
 from bge_m3_onnx_spark.operators.bm25 import sum_scores_deterministic, term_scores, topk, topk_single
 from bge_m3_onnx_spark.plans.build_index import InvertedIndex, block_meta_rows
-from bge_m3_onnx_spark.plans.query import resolve_queries, score_rows
+from bge_m3_onnx_spark.plans.query import QueryTerms, query_terms, resolve_queries, score_rows
 from bge_m3_onnx_spark.session import shuffle_width_cap
 
 _KEYS = ["term", "block_id"]
 
 # Target scored postings per task for the post-phase-2 width bump (see the
-# scoring-volume-aware width note in _run_queries_wand_forced). Module-level so
+# scoring-volume-aware width note in run_queries_wand). Module-level so
 # experiments/tests can pin it.
 _SCORE_ROWS_PER_TASK = 100_000
 # Query postings (Σdf) per partition of every WAND exchange's base width (see
@@ -247,17 +243,17 @@ def _phase2_driver(
 ) -> dict[str, list[int]]:
     """Phase 2 (ordinal-aligned segment pruning) computed on the driver.
 
-    Same semantics as the distributed branch (see the phase-2 comment in
-    ``_run_queries_wand_forced``): for each query, candidate boundaries are the
-    block starts of its terms; the metadata upper bound at boundary x is
-    Σ_t block_max(t, x // range_t) (terms with no block at x contribute 0); a
-    segment survives iff its bound clears θ (1e-6 pad — only ADMITS blocks,
-    lossless); the surviving block keys are the ESSENTIAL terms' blocks at the
-    surviving boundaries, restricted to blocks that exist. Inputs are the rows
-    θ was computed from — every block of every query term, sorted by block_id,
-    from the index's block-metadata memo (Σ_t n_blocks(t) rows, gated by the
-    caller to stay driver-sized). Term iteration is sorted so the float
-    accumulation order is deterministic run-to-run.
+    Same semantics as :func:`_phase2_distributed`: for each query, candidate
+    boundaries are the block starts of its terms; the metadata upper bound at
+    boundary x is Σ_t block_max(t, x // range_t) (terms with no block at x
+    contribute 0); a segment survives iff its bound clears θ (1e-6 pad — only
+    ADMITS blocks, lossless); the surviving block keys are the ESSENTIAL
+    terms' blocks at the surviving boundaries, restricted to blocks that
+    exist. Inputs are the rows θ was computed from — every block of every
+    query term, sorted by block_id, from the index's block-metadata memo
+    (Σ_t n_blocks(t) rows, gated by the caller to stay driver-sized). Term
+    iteration is sorted so the float accumulation order is deterministic
+    run-to-run.
 
     Returns {term: sorted surviving block_ids} unioned across queries."""
     import numpy as np
@@ -296,6 +292,32 @@ def _phase2_driver(
             if len(exist):  # an essential term may have no block left at all
                 keys.setdefault(t, set()).update(int(v) for v in exist)
     return {t: sorted(v) for t, v in keys.items()}
+
+
+# Every relation known on the driver (query terms, df, θ, ranges, maxima,
+# essential sets, surviving blocks) enters the plan as a literal, never as a
+# createDataFrame side: explode(element_at(map, key)) IS the inner join against
+# a driver-known relation, with no exchange and no subjob (the r3 profile,
+# WAND_CAL_r03.json, found ~25 such broadcast subjobs per batch). Built from
+# per-value F.lit calls, the same maps, Column trees and IN lists cost ~1,500
+# py4j round trips per request, most of a warm request's driver time.
+# (Measured anti-optimization note: coalesce(1) on parallelized tiny
+# relations REGRESSED the machinery 3x — literals sidestep that entirely.)
+def _list_map(by_key: dict) -> str:
+    """{key: [values]} as one SQL map literal, keys and values sorted."""
+    return sql_literal({key: sorted(vs) for key, vs in sorted(by_key.items())})
+
+
+def _float_map(by_key: dict) -> str:
+    """{key: number} as one SQL map literal of doubles, keys sorted."""
+    return sql_literal({key: float(v) for key, v in sorted(by_key.items())})
+
+
+def _range_of_term(range_by_term: dict[str, int]) -> str:
+    """SQL text of a row's term's STORED block range. The ranges stay BIGINT,
+    as the build's .cast("long") made them."""
+    ranges = sql_literal(dict(sorted(range_by_term.items())))
+    return f"element_at(CAST({ranges} AS MAP<STRING, BIGINT>), term)"
 
 
 def run_queries_wand(
@@ -341,8 +363,10 @@ def run_queries_wand(
 
     # idf per (query, term) — tiny, resolved through the index's driver-side df
     # memo (one pruned lookup per new term; free on repeats) and re-injected as
-    # literal relations; both the exact and the WAND plan take these rows.
-    _, qt_rows = resolve_queries(idx, queries, cfg)
+    # literal relations; both the exact and the WAND plan read this one
+    # description of the batch.
+    _, rows = resolve_queries(idx, queries, cfg)
+    q = query_terms(rows)
     # ---- routing (calibrated, WAND_CAL_r04.json): take the exact one-job plan
     # unless BOTH hold —
     #   (a) Σdf ≥ wand_route_min_postings: below the measured ~10-12M crossover
@@ -353,114 +377,109 @@ def run_queries_wand(
     #       size (measured: "a to and of" 0.32x, "the a to and of" 0.13x, and
     #       69k extra non-essential blocks decoded for "spark3 iceberg7 the") —
     #       those shapes NEVER benefit, so Σdf alone must not route them here.
-    # (force_wand exists for tests/bench that measure the pruning machinery.)
-    def _batch_prunable() -> bool:
-        by_q: dict[int, list[int]] = {}
-        for qid, _, df in qt_rows:
-            by_q.setdefault(qid, []).append(df)
-        return all(
-            sum(dfs) - max(dfs) <= cfg.wand_route_max_residual_frac * sum(dfs)
-            for dfs in by_q.values()
-            if sum(dfs) > 0
-        )
-
-    # (A batch without a single indexed term has nothing to prune: its empty
+    # (force_wand exists for tests/bench that measure the pruning machinery.
+    # A batch without a single indexed term has nothing to prune: its empty
     # answer comes from the exact path, forced or not.)
-    if not qt_rows or (
-        not force_wand
-        and (sum(df for _, _, df in qt_rows) < cfg.wand_route_min_postings or not _batch_prunable())
-    ):
+    routed = not force_wand and (
+        q.sum_df < cfg.wand_route_min_postings
+        or not _batch_prunable(q, cfg.wand_route_max_residual_frac)
+    )
+    if routed or not rows:
         if stats_out is not None:
             # historical flag: True == "routed AWAY to the exact path";
             # router_choice is the unambiguous spelling (WAND_CAL artifacts)
-            stats_out["routed"] = True
-            stats_out["router_choice"] = "exact"
-        scored = score_rows(spark, idx, qt_rows, cfg)
+            stats_out.update(routed=True, router_choice="exact")
+        scored = score_rows(spark, idx, q, cfg)
         return topk_single(scored, k) if len(queries) == 1 else topk(scored, k)
-    if stats_out is not None:
-        stats_out["routed"] = False
-        stats_out["router_choice"] = "wand"
     # Size EVERY internal shuffle from driver-known Σdf: WAND's phases are
     # metadata-sized jobs, and running their ~dozen shuffles at the session
     # default (e.g. 64) puts hundreds of near-empty tasks on the latency path —
     # measured ~10 s of fixed machinery cost at 100k turns before this. Each
-    # exchange takes the width as an argument; the session conf is only read,
-    # so queries sharing a session never change each other's widths.
-    # Width from Σdf/_POSTINGS_PER_PARTITION (1M), not Σdf/100k: WAND's
-    # shuffles carry METADATA and PRUNED postings, which are normally ≪ Σdf —
-    # the exact path's rows-per-task model over-parallelizes every tiny stage
-    # here (worst case, an unprunable stopword batch, still gets ~1M scored
-    # postings per task).
-    width = max(
-        1, min(shuffle_width_cap(spark), sum(df for _, _, df in qt_rows) // _POSTINGS_PER_PARTITION)
+    # exchange takes the width as an argument, capped at the session width; the
+    # session conf is only read, so queries sharing a session never change each
+    # other's widths. Width from Σdf/_POSTINGS_PER_PARTITION (1M), not
+    # Σdf/100k: WAND's shuffles carry METADATA and PRUNED postings, which are
+    # normally ≪ Σdf — the exact path's rows-per-task model over-parallelizes
+    # every tiny stage here (worst case, an unprunable stopword batch, still
+    # gets ~1M scored postings per task).
+    cap = shuffle_width_cap(spark)
+    width = max(1, min(cap, q.sum_df // _POSTINGS_PER_PARTITION))
+    driver = _phase2_fits_driver(q, idx.n_docs, cfg)
+    if stats_out is not None:
+        phase2 = "driver" if driver else "distributed"
+        stats_out.update(routed=False, router_choice="wand", phase2=phase2)
+    # The query terms' block metadata, the only blocks relation the query
+    # reads, coalesced to the Σdf-sized width (the source keeps the BUILD's
+    # partitioning). It is built only where something reads it: the
+    # distributed phases (the θ collect, then the final job, which re-scans
+    # the pruned metadata), or stats_out's plan capture and block counts.
+    qmeta = None if driver and stats_out is None else (
+        idx.pruned_block_meta(sorted(q.df_by_term)).coalesce(width)
     )
-    return _run_queries_wand_forced(spark, idx, queries, k, cfg, qt_rows, width, stats_out)
-
-
-def _run_queries_wand_forced(
-    spark: SparkSession,
-    idx: InvertedIndex,
-    queries: dict[int, str],
-    k: int,
-    cfg: EngineConfig,
-    qt_rows: list[tuple[int, str, int]],
-    width: int,
-    stats_out: dict | None,
-) -> DataFrame:
-    n = idx.n_docs
-    qterms_list = sorted({t for _, t, _ in qt_rows})
-
-    # ---- driver-known LITERAL relations ----
-    # Every relation already known on the driver (query terms, df, θ, ranges,
-    # maxima, essential sets, surviving blocks) enters the plan as a literal,
-    # never as a createDataFrame side: explode(element_at(map, key)) IS the
-    # inner join against a driver-known relation, with no exchange and no
-    # subjob (the r3 profile, WAND_CAL_r03.json, found ~25 such broadcast
-    # subjobs per batch). Each literal relation is ONE SQL expression rendered
-    # by functions/sql_literal.py and parsed in one JVM call: built from
-    # per-value F.lit calls, the same maps, Column trees and IN lists cost ~1,500
-    # py4j round trips per request, most of a warm request's driver time.
-    # (Measured anti-optimization note: coalesce(1) on parallelized tiny
-    # relations REGRESSED the machinery 3x — literals sidestep that entirely.)
-    _terms_by_qid: dict[int, list[str]] = {}
-    _qids_by_term: dict[str, list[int]] = {}
-    _df_by_term: dict[str, int] = {}
-    for _q, _t, _d in qt_rows:
-        _terms_by_qid.setdefault(_q, []).append(_t)
-        _qids_by_term.setdefault(_t, []).append(_q)
-        _df_by_term[_t] = _d
-
-    def _list_map(by_key: dict) -> str:
-        """{key: [values]} as one SQL map literal, keys and values sorted."""
-        return sql_literal({key: sorted(vs) for key, vs in sorted(by_key.items())})
-
-    all_qids_map = _list_map(_qids_by_term)
-    q2terms_lit = _list_map(_terms_by_qid)
-
-    def _fold_scores(postings: DataFrame, qids_by_term: dict) -> DataFrame:
-        """block postings (term, doc_id, doc_ord, tf, dl) → per-doc sums
-        through the one scoring core (operators/bm25.py:term_scores), over
-        ``width`` partitions hashed on (query_id, doc_ord): the fold and phase
-        3b's joins on those keys reuse that one exchange. doc_id rides along
-        as a group key (it is a function of doc_ord), so no phase ever joins
-        the docs relation. Summation stays the term-sorted deterministic fold
-        shared with the exact path."""
-        per_term = term_scores(
-            postings, qids_by_term, _df_by_term, n, idx.avgdl, cfg, ["doc_ord", "doc_id"], width
+    blocks, range_by_term, tmax, theta, n_scanned, t_theta = _phase1(
+        idx, q, k, driver, qmeta, width, stats_out
+    )
+    t0_final = time.monotonic()
+    if not blocks:  # no query term has any block → empty result
+        return spark.createDataFrame([], "query_id int, rank int, doc_id string, score double")
+    ess_by_qid, ness_by_qid, ness_sum = _maxscore_partition(q.terms_by_qid, tmax, theta)
+    if driver:
+        surv_by_term = _phase2_driver(blocks, range_by_term, q.terms_by_qid, theta, ess_by_qid)
+        known_blocks = (sum(map(len, blocks.values())), sum(map(len, surv_by_term.values())))
+        surv, est_rows = _driver_survivors(
+            spark, q, cfg, blocks, ess_by_qid, surv_by_term, known_blocks[1]
         )
-        return sum_scores_deterministic(per_term, ["query_id", "doc_ord", "doc_id"])
+        # Scoring-volume-aware width (r6: partitioning from data size): the
+        # Σdf-sized width suits the METADATA jobs, but would single-thread the
+        # unprunable/forced regime, where phase 3 scores ~every posting of the
+        # query terms. After driver phase 2 the survival is KNOWN: widen phase
+        # 3's exchanges to the estimated volume, within the same session cap.
+        width = max(width, min(cap, est_rows // _SCORE_ROWS_PER_TASK))
+    else:
+        surv = _phase2_distributed(qmeta, q, theta, tmax, range_by_term, ess_by_qid, width)
+        known_blocks = None
+    # θ-filter before the non-essential completion: score(d) = s_ess(d) +
+    # s_ness(d) ≤ s_ess(d) + Σ_{t non-ess} tmax(t), so a candidate below θ on
+    # that bound can never reach the top-k; only the survivors pay the
+    # non-essential read. ε pads the float comparison (scores are O(10); 1e-6
+    # admits a few extra candidates, never drops one).
+    strong_cond = (
+        f"score + element_at({_float_map(ness_sum)}, query_id)"
+        f" >= element_at({_float_map(theta)}, query_id) - {sql_literal(1e-6)}"
+    )
+    final_df, surviving, s_ess, non_keys = _phase3(
+        idx, q, k, cfg, range_by_term, surv, ess_by_qid, ness_by_qid, strong_cond, width
+    )
+    if stats_out is not None:
+        _fill_stats(
+            stats_out, qmeta, known_blocks, surv, surviving, final_df, s_ess, non_keys, strong_cond,
+            essential_terms={qid: sorted(ess_by_qid.get(qid, [])) for qid in sorted(theta)},
+            theta=theta, block_meta_collected=n_scanned, t_theta_sec=round(t_theta, 3),
+        )
+        stats_out["t_final_sec"] = round(time.monotonic() - t0_final, 3)
+    return final_df
 
-    # every block's postings ("Reading a block", module docstring); block_id
-    # is attached once the stored ranges are known
-    qpostings = idx.pruned_postings(qterms_list)
-    # ---- driver-side phase 2 gate (r4) ----
-    # Phase 2 is pure metadata math over Σ_t n_blocks(t) rows — bounded and
-    # driver-estimable BEFORE any job (df is known; block_range_for_term is
-    # the deterministic cut rule). When it fits, θ and phase 2 read the
-    # same memoized per-block metadata, in NumPy on the driver: the r4 profile
+
+def _batch_prunable(q: QueryTerms, max_residual_frac: float) -> bool:
+    """Router gate (b) of :func:`run_queries_wand`: in every query of the
+    batch, the residual df (Σdf less the heaviest term's df) is at most
+    ``max_residual_frac`` of the query's Σdf."""
+    return all(
+        sum(dfs) - max(dfs) <= max_residual_frac * sum(dfs)
+        for dfs in ([q.df_by_term[t] for t in ts] for ts in q.terms_by_qid.values())
+    )
+
+
+def _phase2_fits_driver(q: QueryTerms, n: int, cfg: EngineConfig) -> bool:
+    """The driver-side phase 2 gate (r4): True when the batch's estimated
+    block-metadata rows, Σ_t n_blocks(t), stay within ``_PHASE2_DRIVER_CAP``."""
+    # Phase 2 is pure metadata math over those rows — bounded and
+    # driver-estimable BEFORE any job (df is known; block_range_for_term is the
+    # deterministic cut rule). When it fits, θ and phase 2 read the same
+    # memoized per-block metadata, in NumPy on the driver: the r4 profile
     # showed the distributed phase-2/3 tree cost ~2.9 s of pure Catalyst
-    # planning plus ~10 broadcast-exchange subjobs per batch — none of
-    # which touches data that isn't already driver-sized.
+    # planning plus ~10 broadcast-exchange subjobs per batch — none of which
+    # touches data that isn't already driver-sized.
     # Per-term non-empty block count is bounded by BOTH the postings count d
     # (each non-empty block holds ≥1 posting) and the ordinal-space tiling
     # ceil(n / range) (blocks tile [0, n)). ceil(d / range) alone assumes
@@ -471,49 +490,39 @@ def _run_queries_wand_forced(
     # A merge keeps untouched terms' blocks at the range they were cut at,
     # floor(n_cut·block_size/df) ≤ the current range, over ordinals
     # [0, n_cut): at most ~1/block_size more blocks than this estimate.
-    _est_blocks = sum(
-        min(d, -(-n // max(cfg.block_range_for_term(d, n), 1)))
-        for d in _df_by_term.values()
+    est_blocks = sum(
+        min(d, -(-n // max(cfg.block_range_for_term(d, n), 1))) for d in q.df_by_term.values()
     )
-    _driver_phase2 = _est_blocks <= _PHASE2_DRIVER_CAP
-    if stats_out is not None:
-        stats_out["phase2"] = "driver" if _driver_phase2 else "distributed"
+    return est_blocks <= _PHASE2_DRIVER_CAP
 
-    # The query terms' block metadata, the only blocks relation the query
-    # reads, coalesced to the Σdf-sized width (the source keeps the
-    # BUILD's partitioning). Driver phase 2 takes each term's rows from
-    # the index's driver memo (InvertedIndex.block_meta_for_terms), which
-    # collects only the terms it has not seen, in one scan of this same
-    # plan: a batch of seen terms runs no metadata job at all. The
-    # relation itself is built only where something reads it: the
-    # distributed phases (the θ collect, then the final job, which re-scans
-    # the pruned metadata), or stats_out's plan capture and block counts.
-    qmeta = None
-    if not _driver_phase2 or stats_out is not None:
-        qmeta = idx.pruned_block_meta(qterms_list).coalesce(width)
 
-    # ---- phase 1: θ, the per-term maxima and the stored ranges from ONE
-    # metadata lookup (r2 measured ~9 s of fixed machinery cost, much of
-    # it driver job latency) ----
-    # Metadata-only θ (module docstring): driver phase 2 reads every
-    # query-term block row anyway; the distributed branch collects only
-    # each term's top-k and neither reads nor fills the memo. θ, tmax and
-    # ranges come from the same rows — no block read, no rescore.
-    if _driver_phase2:
-        if stats_out is not None and stats_out.get("capture_plans"):
+def _phase1(
+    idx: InvertedIndex, q: QueryTerms, k: int, driver: bool, qmeta: DataFrame | None,
+    width: int, stats_out: dict | None,
+) -> tuple[dict, dict[str, int], dict[str, float], dict[int, float], int, float]:
+    """Phase 1 (module docstring): ({term: [(block_id, block_max_score)]},
+    {term: stored range}, {term: tmax}, {query_id: θ}, the number of terms
+    scanned, the lookup's seconds) from ONE metadata lookup."""
+    # (r2 measured ~9 s of fixed machinery cost, much of it driver job
+    # latency, before one lookup served θ, tmax and the ranges)
+    capture = stats_out is not None and stats_out.get("capture_plans")
+    terms = sorted(q.df_by_term)
+    if driver:
+        # every block row of every query term, from the index's memo, which
+        # collects only the terms it lacks, in one scan of qmeta's plan
+        if capture:
             stats_out["plan_theta"] = _fmt_plan(qmeta)
-        _t0_theta = time.monotonic()
-        meta, n_scanned = idx.block_meta_for_terms(qterms_list, _PHASE2_DRIVER_CAP, width)
-        by_term = {t: pairs for t, (_, pairs) in meta.items()}
-        range_by_term = {t: rng for t, (rng, _) in meta.items()}
+        t0 = time.monotonic()
+        meta, n_scanned = idx.block_meta_for_terms(terms, _PHASE2_DRIVER_CAP, width)
+        blocks = {t: pairs for t, (_, pairs) in meta.items()}
+        ranges = {t: rng for t, (rng, _) in meta.items()}
     else:
         # Each term's top-k blocks by block max, as a two-phase (salted)
-        # top-k: past the driver cap a 10^12-scale stopword term has
-        # millions of block-metadata rows, and a plain partitionBy(term)
-        # window would funnel them through ONE task. Phase A takes top-k
-        # per (term, salt) — 32-way parallel per term; phase B re-ranks
-        # the ≤ 32·k survivors per term. Each window's exchange is an
-        # explicit repartition at the width.
+        # top-k: past the driver cap a 10^12-scale stopword term has millions
+        # of block-metadata rows, and a plain partitionBy(term) window would
+        # funnel them through ONE task. Phase A takes top-k per (term, salt) —
+        # 32-way parallel per term; phase B re-ranks the ≤ 32·k survivors per
+        # term. Each window's exchange is an explicit repartition at the width.
         order = (F.desc("block_max_score"), F.asc("block_id"))
         w_pre = Window.partitionBy("term", "__salt").orderBy(*order)
         w_top = Window.partitionBy("term").orderBy(*order)
@@ -527,140 +536,34 @@ def _run_queries_wand_forced(
             .filter(F.col("rk") <= k)
             .select("term", "block_id", "block_range", "block_max_score")
         )
-        if stats_out is not None and stats_out.get("capture_plans"):
+        if capture:
             stats_out["plan_theta"] = _fmt_plan(theta_df)
-        _t0_theta = time.monotonic()
-        by_term, range_by_term = block_meta_rows(theta_df.collect())
-        n_scanned = len(qterms_list)
-    _t_theta = time.monotonic() - _t0_theta
-    _t0_final = time.monotonic()
-    tmax = {t: max(m for _, m in pairs) for t, pairs in by_term.items()}
-    theta = _block_max_theta(by_term, _terms_by_qid, k)
-    _blk_lists = by_term if _driver_phase2 else {}
+        t0 = time.monotonic()
+        blocks, ranges = block_meta_rows(theta_df.collect())
+        n_scanned = len(terms)
+    t_lookup = time.monotonic() - t0
+    tmax = {t: max(m for _, m in pairs) for t, pairs in blocks.items()}
+    theta = _block_max_theta(blocks, q.terms_by_qid, k)
+    return blocks, ranges, tmax, theta, n_scanned, t_lookup
 
-    # ---- phase 2: ordinal-aligned segment pruning (exact, lossless) ----
-    # Every term's blocks TILE the doc-ordinal axis (block_id = ord // range), so
-    # the tightest metadata upper bound at ordinal x is
-    #     s_q(x) = Σ_{t ∈ q} block_max(t, x // range_t)
-    # — piecewise constant, changing only at block starts. A block of t survives
-    # for q iff some segment it overlaps has s_q ≥ θ_q. This strictly dominates
-    # the classic  block_max(t,b) + Σ_{t'≠t} global_max(t')  bound (which prunes
-    # NOTHING when per-term maxima come from short spike docs that cannot
-    # co-occur: global maxima sum to far above any real doc's score).
-    # Safety: score(d) ≤ s_q(ord(d)) for every doc d, so any top-k doc's segment
-    # clears θ and every block containing d overlaps that segment.
-    # All joins below are EQUI-joins on metadata relations (O(Σ blocks · |q|)):
-    # boundaries → active block per (boundary, term) via x // range — no range
-    # join, no window, safe for stopword terms with millions of blocks.
-    if not tmax:  # no query term has any block → empty result
-        return spark.createDataFrame(
-            [],
-            "query_id int, rank int, doc_id string, score double",
-        )
-    theta_map = sql_literal(
-        {
-            qid: float(theta.get(qid, float("-inf")))
-            for qid in sorted({q for q, _, _ in qt_rows})
-        }
-    )
-    # the stored ranges stay BIGINT, as the build's .cast("long") made them
-    range_map = (
-        f"CAST({sql_literal(dict(sorted(range_by_term.items())))} AS MAP<STRING, BIGINT>)"
-    )
-    range_of_term = f"element_at({range_map}, term)"
-    # the query terms' postings keyed by their block under the stored range
-    qpost = qpostings.selectExpr(
-        "term", "doc_id", "doc_ord", "tf", "dl", _block_of("doc_ord", range_of_term)
-    )
-    if not _blk_lists:
-        block_meta = qmeta.selectExpr(
-            "term", "block_id", "block_id * block_range AS x", "block_max_score"
-        )
-        # Same 1e-6 pad as the driver branch: θ is a block max from the
-        # build's NumPy kernel, which can sit an ulp above the query
-        # plan's score of the same posting, and the distributed sum's
-        # order is nondeterministic at the last ulp. The pad only admits
-        # blocks — lossless.
-        theta_padded = f"element_at({theta_map}, query_id) - {sql_literal(1e-6)}"
-        # distinct segment boundaries per query (starts of any query term's blocks),
-        # PRE-FILTERED by the classic bound before the ×|q| fan-out (r2 advisor: a
-        # stopword term contributes millions of boundaries, and expanding every one
-        # against every query term made the metadata job O(|boundaries|·|q|)).
-        # For a boundary x contributed by term t:
-        #     s_q(x) ≤ block_max(t, x) + Σ_{t'≠t} global_max(t')   (classic bound)
-        # so s_q(x) ≥ θ implies EVERY contributing term's classic bound clears θ —
-        # filtering on min(classic) ≥ θ is lossless and removes the fan-out for
-        # segments only a weak stopword block opened.
-        tmax_map = sql_literal({t: float(m) for t, m in sorted(tmax.items())})
-        qsum_map = sql_literal(
-            {
-                qid: float(sum(tmax.get(t, 0.0) for q2, t, _ in qt_rows if q2 == qid))
-                for qid in sorted({q for q, _, _ in qt_rows})
-            }
-        )
-        bounds = (
-            block_meta.selectExpr(
-                "term",
-                "x",
-                "block_max_score",
-                f"explode(element_at({all_qids_map}, term)) AS query_id",
-            )
-            .repartition(width, "query_id", "x")
-            .groupBy("query_id", "x")
-            .agg(
-                F.expr(
-                    f"min(block_max_score + element_at({qsum_map}, query_id)"
-                    f" - element_at({tmax_map}, term)) AS classic_bound"
-                )
-            )
-            .filter(f"classic_bound >= {theta_padded}")
-            .select("query_id", "x")
-        )
-        # active block of EVERY query term at each boundary; inner join drops terms
-        # with no block there (they contribute 0 to the sum — correct). Both
-        # sides are hashed at the width: a side left to the planner would
-        # take the session's.
-        active = (
-            bounds.selectExpr(
-                "query_id", "x", f"explode(element_at({q2terms_lit}, query_id)) AS term"
-            )
-            .selectExpr("query_id", "x", "term", _block_of("x", range_of_term))
-            .repartition(width, *_KEYS)
-            .join(
-                block_meta.select(*_KEYS, "block_max_score").repartition(width, *_KEYS),
-                _KEYS,
-            )
-        )
-        surviving_x = (
-            active.repartition(width, "query_id", "x")
-            .groupBy("query_id", "x")
-            .agg(F.expr("sum(block_max_score) AS s"))
-            .filter(f"s >= {theta_padded}")
-        )
-    # ---- MaxScore essential-term partition (driver-side, from θ + tmax) ----
-    # Sort each query's terms by global max ascending; the maximal prefix whose
-    # cumulative Σtmax stays BELOW θ is NON-ESSENTIAL: those terms alone cannot
-    # lift any doc to θ, so every top-k doc contains ≥1 essential term.
-    # Candidates therefore come from ESSENTIAL surviving blocks only, and
-    # non-essential terms are read later, only for candidates that can still
-    # clear θ. This is what makes mixed rare+hot queries cheap: for
-    # "rare_term the", θ (driven by the rare term's idf) exceeds tmax("the"),
-    # so "the" is non-essential and its millions of postings are read only
-    # for the handful of rare-term candidates within reach of θ — the
-    # ordinal-tiled segment bound alone cannot do this, because the rare term's
-    # wide tiles carry its high max into every segment (measured: 618/682
-    # blocks survived for "iceberg3 the"; with MaxScore only the rare term's
-    # blocks are candidate sources).
-    qids = sorted({q for q, _, _ in qt_rows})
-    ess_pairs_rows: list[tuple[int, str]] = []
-    ness_pairs_rows: list[tuple[int, str]] = []
+
+def _maxscore_partition(
+    terms_by_qid: dict[int, list[str]], tmax: dict[str, float], theta: dict[int, float]
+) -> tuple[dict[int, list[str]], dict[int, list[str]], dict[int, float]]:
+    """MaxScore essential-term partition (module docstring, phase 3), on the
+    driver from θ and tmax: each query's terms sorted by global max
+    ascending, the maximal prefix whose Σtmax stays BELOW θ is non-essential.
+    Returns ({query_id: essential terms}, {query_id: non-essential terms},
+    {query_id: Σ non-essential tmax}); the two term maps leave out queries
+    with no term of their kind."""
+    ess: dict[int, list[str]] = {}
+    ness: dict[int, list[str]] = {}
     ness_sum: dict[int, float] = {}
-    for qid in qids:
-        tq = sorted((tmax.get(t, 0.0), t) for q2, t, _ in qt_rows if q2 == qid and t in tmax)
-        th = theta.get(qid, float("-inf"))
+    for qid in sorted(terms_by_qid):
+        tq = sorted((tmax[t], t) for t in terms_by_qid[qid] if t in tmax)
         cum, n_ness = 0.0, 0
-        for m, t in tq:
-            if cum + m < th:
+        for m, _ in tq:
+            if cum + m < theta[qid]:
                 cum += m
                 n_ness += 1
             else:
@@ -675,208 +578,235 @@ def _run_queries_wand_forced(
             n_ness -= 1
             cum -= tq[-1][0]
         ness_sum[qid] = cum
-        ness_pairs_rows += [(qid, t) for _, t in tq[:n_ness]]
-        ess_pairs_rows += [(qid, t) for _, t in tq[n_ness:]]
-    ness_map = sql_literal({qid: float(ness_sum[qid]) for qid in qids})
-    # essential/non-essential sets as LITERALS (driver-computed above):
-    # term → qids it is essential for; qid → its essential terms. With the
-    # range map, the covering-block derivations below are pure
-    # projections, not joins.
-    _ess_by_term: dict[str, list[int]] = {}
-    _ess_by_qid: dict[int, list[str]] = {}
-    for _q, _t in ess_pairs_rows:
-        _ess_by_term.setdefault(_t, []).append(_q)
-        _ess_by_qid.setdefault(_q, []).append(_t)
-    _ness_by_qid: dict[int, list[str]] = {}
-    for _q, _t in ness_pairs_rows:
-        _ness_by_qid.setdefault(_q, []).append(_t)
-    q2ess_terms_lit = _list_map(_ess_by_qid)
+        if n_ness:
+            ness[qid] = [t for _, t in tq[:n_ness]]
+        if n_ness < len(tq):
+            ess[qid] = [t for _, t in tq[n_ness:]]
+    return ess, ness, ness_sum
 
-    def _covering_keys(docs: DataFrame, q2terms: str) -> DataFrame:
-        """(term, block_id) of every block that can hold a posting of a
-        (query_id, doc_ord) row for the query's ``q2terms`` terms: block_id
-        = doc_ord // the term's STORED range — valid even for blocks kept
-        across incremental merges under older corpus stats."""
-        return (
-            docs.selectExpr("doc_ord", f"explode(element_at({q2terms}, query_id)) AS term")
+
+def _driver_survivors(
+    spark: SparkSession, q: QueryTerms, cfg: EngineConfig, blocks: dict[str, tuple],
+    ess_by_qid: dict[int, list[str]], surv_by_term: dict[str, list[int]], n_keys: int,
+) -> tuple[str | DataFrame, int]:
+    """Driver phase 2's ``n_keys`` surviving blocks in the form phase 3
+    filters the postings by, and the number of postings they hold (estimated)."""
+    # Full survival (r6): when EVERY block of EVERY essential term survived
+    # (the unprunable regime — e.g. forced WAND on a corpus where each block
+    # max equals θ), the filter collapses to a term IN predicate.
+    ess_terms = sorted({t for ts in ess_by_qid.values() for t in ts if t in blocks})
+    if ess_terms and all(len(surv_by_term.get(t, ())) == len(blocks[t]) for t in ess_terms):
+        return sql_in("term", ess_terms), sum(q.df_by_term.get(t, 0) for t in ess_terms)
+    # literal IN-filters (no join, no broadcast-exchange subjob) only while the
+    # predicate stays small: a measured 15k-key isin (unprunable stopword
+    # batch) bloated every task binary to ~1MB and wrecked codegen — past the
+    # cap a broadcast semi-join against a driver-built relation is one cheap
+    # subjob instead.
+    if n_keys <= 2_000:
+        return " OR ".join(
+            f"(term = {sql_literal(t)} AND {sql_in('block_id', ids)})"
+            for t, ids in sorted(surv_by_term.items())
+        ) or "false", n_keys * cfg.block_size
+    keys = spark.createDataFrame(
+        [(t, int(b)) for t, ids in sorted(surv_by_term.items()) for b in ids],
+        "term string, block_id long",
+    )
+    return keys, n_keys * cfg.block_size
+
+
+def _phase2_distributed(
+    qmeta: DataFrame, q: QueryTerms, theta: dict[int, float], tmax: dict[str, float],
+    range_by_term: dict[str, int], ess_by_qid: dict[int, list[str]], width: int,
+) -> DataFrame:
+    """Phase 2 (module docstring) as Spark jobs over the query terms' block
+    metadata ``qmeta``: the surviving (term, block_id) keys, i.e. the
+    ESSENTIAL terms' blocks at the surviving segment boundaries."""
+    # All joins are EQUI-joins on metadata relations (O(Σ blocks · |q|)):
+    # boundaries → active block per (boundary, term) via x // range — no range
+    # join, no window, safe for stopword terms with millions of blocks. Every
+    # exchange is hashed at the width: a side left to the planner would take
+    # the session's.
+    range_of_term = _range_of_term(range_by_term)
+    block_meta = qmeta.selectExpr(
+        "term", "block_id", "block_id * block_range AS x", "block_max_score"
+    )
+    # Same 1e-6 pad as the driver branch: θ is a block max from the build's
+    # NumPy kernel, which can sit an ulp above the query plan's score of the
+    # same posting, and the distributed sum's order is nondeterministic at
+    # the last ulp. The pad only admits blocks — lossless.
+    theta_padded = f"element_at({_float_map(theta)}, query_id) - {sql_literal(1e-6)}"
+    # distinct segment boundaries per query (starts of any query term's
+    # blocks), PRE-FILTERED by the classic bound before the ×|q| fan-out (r2
+    # advisor: a stopword term contributes millions of boundaries, and
+    # expanding every one against every query term made the metadata job
+    # O(|boundaries|·|q|)). For a boundary x contributed by term t:
+    #     s_q(x) ≤ block_max(t, x) + Σ_{t'≠t} global_max(t')   (classic bound)
+    # so s_q(x) ≥ θ implies EVERY contributing term's classic bound clears θ —
+    # filtering on min(classic) ≥ θ is lossless and removes the fan-out for
+    # segments only a weak stopword block opened.
+    qsum = {qid: sum(tmax.get(t, 0.0) for t in ts) for qid, ts in q.terms_by_qid.items()}
+    bounds = (
+        block_meta.selectExpr(
+            "term",
+            "x",
+            "block_max_score",
+            f"explode(element_at({_list_map(q.qids_by_term)}, term)) AS query_id",
+        )
+        .repartition(width, "query_id", "x")
+        .groupBy("query_id", "x")
+        .agg(
+            F.expr(
+                f"min(block_max_score + element_at({_float_map(qsum)}, query_id)"
+                f" - element_at({_float_map(tmax)}, term)) AS classic_bound"
+            )
+        )
+        .filter(f"classic_bound >= {theta_padded}")
+        .select("query_id", "x")
+    )
+    # active block of EVERY query term at each boundary; the inner join drops
+    # terms with no block there (they contribute 0 to the sum — correct)
+    active = (
+        bounds.selectExpr(
+            "query_id", "x", f"explode(element_at({_list_map(q.terms_by_qid)}, query_id)) AS term"
+        )
+        .selectExpr("query_id", "x", "term", _block_of("x", range_of_term))
+        .repartition(width, *_KEYS)
+        .join(block_meta.select(*_KEYS, "block_max_score").repartition(width, *_KEYS), _KEYS)
+    )
+    surviving_x = (
+        active.repartition(width, "query_id", "x")
+        .groupBy("query_id", "x")
+        .agg(F.expr("sum(block_max_score) AS s"))
+        .filter(f"s >= {theta_padded}")
+    )
+    # back to block keys: the boundary x lies in block x // range_t of each
+    # ESSENTIAL term (non-essential blocks are never candidate sources)
+    return (
+        surviving_x.selectExpr(
+            "x", f"explode(element_at({_list_map(ess_by_qid)}, query_id)) AS term"
+        )
+        .selectExpr("term", _block_of("x", range_of_term))
+        .repartition(width, *_KEYS)
+        .dropDuplicates(_KEYS)
+    )
+
+
+def _fold_scores(
+    postings: DataFrame, qids_by_term: dict[str, list[int]], idx: InvertedIndex, q: QueryTerms,
+    cfg: EngineConfig, width: int,
+) -> DataFrame:
+    """block postings (term, doc_id, doc_ord, tf, dl) → per-doc sums through
+    the one scoring core (operators/bm25.py:term_scores), over ``width``
+    partitions hashed on (query_id, doc_ord): the fold and phase 3b's joins on
+    those keys reuse that one exchange. doc_id rides along as a group key (it
+    is a function of doc_ord), so no phase ever joins the docs relation.
+    Summation stays the term-sorted deterministic fold shared with the exact
+    path."""
+    keys = ["doc_ord", "doc_id"]
+    per_term = term_scores(
+        postings, qids_by_term, q.df_by_term, idx.n_docs, idx.avgdl, cfg, keys, width
+    )
+    return sum_scores_deterministic(per_term, ["query_id", "doc_ord", "doc_id"])
+
+
+def _phase3(
+    idx: InvertedIndex, q: QueryTerms, k: int, cfg: EngineConfig, range_by_term: dict[str, int],
+    surv: str | DataFrame, ess_by_qid: dict[int, list[str]], ness_by_qid: dict[int, list[str]],
+    strong_cond: str, width: int,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame | None]:
+    """Phase 3 (module docstring) over phase 2's survivors ``surv`` (a
+    predicate on (term, block_id), or the keys relation): (the top-k frame,
+    the surviving postings, the essential scores, phase 3b's keys or None)."""
+    # the query terms' postings keyed by their block under the stored range
+    # ("Reading a block", module docstring)
+    range_of_term = _range_of_term(range_by_term)
+    qpost = idx.pruned_postings(sorted(q.df_by_term)).selectExpr(
+        "term", "doc_id", "doc_ord", "tf", "dl", _block_of("doc_ord", range_of_term)
+    )
+    surviving = qpost.filter(surv) if isinstance(surv, str) else _blocks_of(qpost, surv)
+    # ---- 3a: the candidates are the surviving essential postings themselves:
+    # after either phase-2 branch, every essential block of a doc that can
+    # reach the k-th survived, so its s_ess over the surviving postings is exact
+    ess_by_term: dict[str, list[int]] = {}
+    for qid, terms in ess_by_qid.items():
+        for t in terms:
+            ess_by_term.setdefault(t, []).append(qid)
+    s_ess = _fold_scores(surviving, ess_by_term, idx, q, cfg, width)
+    non_keys = None
+    if ness_by_qid:
+        # ---- 3b: non-essential completion for the strong candidates. It
+        # reads the surviving postings twice and ``strong`` three times;
+        # nothing is cached, so the reads re-scan the pruned postings
+        # (themselves cached or bucket-pruned). ``doc_ord IS NOT NULL`` is the
+        # filter the optimizer infers for strong's doc_ord joins below; stated
+        # here, it gives all three readers the same phase-3a subtree, so
+        # ReuseExchange runs its scan and fold once per job instead of twice.
+        strong = s_ess.filter(f"({strong_cond}) AND doc_ord IS NOT NULL").select(
+            "query_id", "doc_ord"
+        )
+        # (term, block_id) of every block that can hold a non-essential
+        # posting of a strong candidate: block_id = doc_ord // the term's
+        # STORED range — valid even for blocks kept across merges
+        needed_non = (
+            strong.selectExpr(
+                "doc_ord", f"explode(element_at({_list_map(ness_by_qid)}, query_id)) AS term"
+            )
             .selectExpr("term", _block_of("doc_ord", range_of_term))
             .repartition(width, *_KEYS)
             .dropDuplicates(_KEYS)
         )
-
-    # back to block keys: the boundary x lies in block x // range_t of each
-    # ESSENTIAL term (candidate sources; non-essential blocks are never
-    # candidate sources — see the MaxScore argument above)
-    _full_survival = False
-    _surv_expr = None  # literal surviving-block predicate, else surviving_keys
-    if _blk_lists:
-        # ---- phase 2 on the driver (NumPy over the collected metadata) ----
-        # Semantics identical to the distributed branch below: per query,
-        # boundaries = block starts of its terms; upper bound at x =
-        # Σ_t block_max(t, x // range_t); blocks of ESSENTIAL terms that
-        # overlap a surviving segment are candidate sources. The surviving
-        # filter carries a 1e-6 pad (admits blocks — lossless; the
-        # distributed sum's order is nondeterministic at the same ulp).
-        surv_by_term = _phase2_driver(
-            _blk_lists, range_by_term, _terms_by_qid, theta, _ess_by_qid
-        )
-        _n_keys = sum(len(v) for v in surv_by_term.values())
-        # Full-survival detection (r6, driver-side — the metadata is already
-        # here): when EVERY block of EVERY essential term survived phase 2
-        # (the unprunable regime — e.g. forced WAND on a corpus where each
-        # block max equals θ), the surviving set is exactly "all blocks of
-        # the essential terms", so the block-key filter collapses to a
-        # term IN predicate.
-        _ess_terms_all = sorted(
-            {t for ts in _ess_by_qid.values() for t in ts if t in _blk_lists}
-        )
-        _full_survival = bool(_ess_terms_all) and all(
-            len(surv_by_term.get(t, ())) == len(_blk_lists[t])
-            for t in _ess_terms_all
-        )
-        # literal-IN only while the predicate stays small: a measured 15k-key
-        # isin (unprunable stopword batch) bloated every task binary to ~1MB
-        # and wrecked codegen — past the cap a broadcast semi-join against a
-        # driver-built relation is one cheap subjob instead.
-        if _full_survival:
-            _surv_expr = sql_in("term", _ess_terms_all)
-        elif _n_keys <= 2_000:
-            # literal IN-filters: no join, no broadcast-exchange subjob
-            _surv_expr = " OR ".join(
-                f"(term = {sql_literal(_t2)} AND {sql_in('block_id', _ids)})"
-                for _t2, _ids in sorted(surv_by_term.items())
-            ) or "false"
-        else:
-            surviving_keys = spark.createDataFrame(
-                [(t2, int(b2)) for t2, ids2 in sorted(surv_by_term.items()) for b2 in ids2],
-                "term string, block_id long",
-            )
-    else:
-        surviving_keys = (
-            surviving_x.selectExpr(
-                "x", f"explode(element_at({q2ess_terms_lit}, query_id)) AS term"
-            )
-            .selectExpr("term", _block_of("x", range_of_term))
-            .repartition(width, *_KEYS)
-            .dropDuplicates(_KEYS)
-        )
-    if _surv_expr is not None:
-        surviving = qpost.filter(_surv_expr)
-    else:
-        surviving = _blocks_of(qpost, surviving_keys)
-
-    def _not_surv(keys: DataFrame) -> DataFrame:
-        if _surv_expr is not None:
-            return keys.filter(f"NOT ({_surv_expr})")
-        return keys.join(F.broadcast(surviving_keys), _KEYS, "left_anti")
-
-    # ---- scoring-volume-aware width (r6: partitioning from data size) ----
-    # The Σdf-sized width suits the METADATA jobs, but would single-thread
-    # the unprunable/forced regime, where phase 3 scores ~every posting of
-    # the query terms. After driver-side phase 2 the survival is KNOWN:
-    # widen phase 3's exchanges to the estimated volume. Posting rows are
-    # filtered in the scan's own partitions.
-    if _blk_lists:
-        if _full_survival:
-            _est_rows = sum(_df_by_term.get(t, 0) for t in _ess_terms_all)
-        else:
-            _est_rows = _n_keys * cfg.block_size
-        width = max(
-            width,
-            min(spark.sparkContext.defaultParallelism, _est_rows // _SCORE_ROWS_PER_TASK),
-        )
-
-    # ---- phase 3a: candidates + exact ESSENTIAL score ----
-    # The candidates are the surviving essential postings themselves: after
-    # either phase-2 branch, every essential block of a doc that can reach
-    # the k-th survived (module docstring, phase 3), so its s_ess over the
-    # surviving postings is exact.
-    s_ess = _fold_scores(surviving, _ess_by_term)
-
-    # ---- θ-filter before the non-essential completion ----
-    # score(d) = s_ess(d) + s_ness(d) ≤ s_ess(d) + Σ_{t non-ess} tmax(t), so a
-    # candidate below θ on that bound can never reach the top-k; only the
-    # survivors pay the non-essential read. ε pads the float comparison
-    # (scores are O(10); 1e-6 admits a few extra candidates, never drops one).
-    _strong_cond = (
-        f"score + element_at({ness_map}, query_id)"
-        f" >= element_at({theta_map}, query_id) - {sql_literal(1e-6)}"
-    )
-
-    # ---- phase 3b: non-essential completion for the strong candidates ----
-    # Skipped entirely when no query has a non-essential term (the common
-    # WAND-routed shape — stopword-heavy queries where every term is
-    # essential): the 3b subplan otherwise adds ~6 broadcast-exchange subjobs
-    # and real Catalyst planning time for provably-empty relations, and
-    # s_ess IS the full exact score.
-    # 3b reads the surviving postings twice and ``strong`` three times;
-    # nothing is cached, so the reads re-scan the pruned postings (themselves
-    # cached or bucket-pruned). ``doc_ord IS NOT NULL`` is the filter the
-    # optimizer infers for strong's doc_ord joins below; stated here, it gives
-    # all three readers the same phase-3a subtree, so ReuseExchange runs its
-    # scan and fold once per job instead of twice.
-    non_keys = None
-    if ness_pairs_rows:
-        strong = s_ess.filter(f"({_strong_cond}) AND doc_ord IS NOT NULL").select(
-            "query_id", "doc_ord"
-        )
-        needed_non = _covering_keys(strong, _list_map(_ness_by_qid))
         # a term can be essential for one query and non-essential for another —
         # excluding every surviving block already read keeps postings
         # duplicate-free (a duplicated posting would double-count in the fold)
-        non_keys = _not_surv(needed_non)
+        if isinstance(surv, str):
+            non_keys = needed_non.filter(f"NOT ({surv})")
+        else:
+            non_keys = needed_non.join(F.broadcast(surv), _KEYS, "left_anti")
         full = surviving.unionByName(_blocks_of(qpost, non_keys))
         strong_ords = strong.select("doc_ord").repartition(width, "doc_ord").distinct()
-        scored = _fold_scores(full.join(strong_ords, "doc_ord"), _qids_by_term)
+        scored = _fold_scores(
+            full.join(strong_ords, "doc_ord"), q.qids_by_term, idx, q, cfg, width
+        )
         scored = scored.join(strong, ["query_id", "doc_ord"], "left_semi")
     else:
-        # every term essential → s_ess is already the exact full score for
-        # every candidate, and the left-semi of s_ess against its own
-        # θ-filter IS that filter — apply it directly: no broadcast-join
-        # subjob (r6; plan: 1 join removed).
-        scored = s_ess.filter(_strong_cond)
-
+        # Skipped when no query has a non-essential term (the common
+        # WAND-routed shape — stopword-heavy queries where every term is
+        # essential): s_ess IS the full exact score, and the left-semi of
+        # s_ess against its own θ-filter IS that filter — no 3b subplan, no
+        # broadcast-join subjob (r6).
+        scored = s_ess.filter(strong_cond)
     # doc_id came with the postings: the top-k reads no docs relation. At
     # width 1 the fold's exchange already left every scored row in ONE
     # partition, which the rank window's per-query distribution accepts as
     # is; a wider fold is hashed on (query_id, doc_ord) and needs its own
     # per-query exchange at the width.
     final_df = topk(scored if width == 1 else scored.repartition(width, "query_id"), k)
-    if stats_out is not None:
-        if stats_out.get("capture_plans"):
-            # plan-audit hook (tools/explain_audit.py)
-            stats_out["plan_surviving"] = _fmt_plan(surviving)
-            stats_out["plan_final"] = _fmt_plan(final_df)
-        # Diagnostic counts: each one is a job of its own that recomputes its
-        # relation (nothing is cached), and none sits in the returned plan.
-        # block totals/survivors are DRIVER-KNOWN when phase 2 ran on the
-        # driver (the metadata was collected): no count job at all; the
-        # .count() fallbacks serve the distributed-phase-2 path only.
-        if _blk_lists:
-            stats_out["blocks_total"] = sum(len(v) for v in _blk_lists.values())
-            stats_out["blocks_surviving"] = (
-                sum(len(_blk_lists[t]) for t in _ess_terms_all)
-                if _full_survival
-                else sum(len(v) for v in surv_by_term.values())
-            )
-        else:
-            stats_out["blocks_total"] = qmeta.count()
-            stats_out["blocks_surviving"] = qmeta.join(surviving_keys, _KEYS, "left_semi").count()
-        # extra blocks READ (phase 3b's); key relations may name absent
-        # blocks: count via qmeta
-        stats_out["blocks_extra_decoded"] = (
-            qmeta.join(non_keys, _KEYS, "left_semi").count() if non_keys is not None else 0
-        )
-        # the candidates are s_ess's (query_id, doc_ord) pairs, the strong
-        # ones those passing the θ-filter: both in one phase-3a job
-        counts = s_ess.selectExpr("count(*) AS n", f"count_if({_strong_cond}) AS n_strong").first()
-        stats_out["n_candidates"] = counts["n"]
-        stats_out["n_strong"] = counts["n_strong"]
-        stats_out["essential_terms"] = {
-            qid: sorted(t for q2, t in ess_pairs_rows if q2 == qid) for qid in qids
-        }
-        stats_out["theta"] = dict(theta)
-        stats_out["block_meta_collected"] = n_scanned
-        stats_out["t_theta_sec"] = round(_t_theta, 3)
-        stats_out["t_final_sec"] = round(time.monotonic() - _t0_final, 3)
-    return final_df
+    return final_df, surviving, s_ess, non_keys
+
+
+def _fill_stats(
+    stats_out: dict, qmeta: DataFrame, known_blocks: tuple[int, int] | None,
+    surv: str | DataFrame, surviving: DataFrame, final_df: DataFrame, s_ess: DataFrame,
+    non_keys: DataFrame | None, strong_cond: str, **driver_known,
+) -> None:
+    """The plans and pruning counts of ``stats_out`` (run_queries_wand), then
+    the ``driver_known`` values."""
+    # Each count is a job of its own that recomputes its relation (nothing is
+    # cached), and none sits in the returned plan. Block totals and survivors
+    # are DRIVER-KNOWN after driver phase 2 (known_blocks): no count job; the
+    # distributed branch counts them on qmeta.
+    if stats_out.get("capture_plans"):  # plan-audit hook (tools/explain_audit.py)
+        stats_out["plan_surviving"] = _fmt_plan(surviving)
+        stats_out["plan_final"] = _fmt_plan(final_df)
+    if known_blocks is None:
+        known_blocks = (qmeta.count(), qmeta.join(surv, _KEYS, "left_semi").count())
+    stats_out["blocks_total"], stats_out["blocks_surviving"] = known_blocks
+    # extra blocks READ (phase 3b's); key relations may name absent blocks:
+    # count via qmeta
+    stats_out["blocks_extra_decoded"] = (
+        qmeta.join(non_keys, _KEYS, "left_semi").count() if non_keys is not None else 0
+    )
+    # the candidates are s_ess's (query_id, doc_ord) pairs, the strong ones
+    # those passing the θ-filter: both in one phase-3a job
+    n = s_ess.selectExpr("count(*) AS n", f"count_if({strong_cond}) AS n_strong").first()
+    stats_out.update(n_candidates=n["n"], n_strong=n["n_strong"], **driver_known)

@@ -395,6 +395,34 @@ def test_distributed_phase2_with_block_max_theta(spark, skewed, monkeypatch):
     assert wand == _collect(run_queries(spark, skewed, q, k=10))
 
 
+@pytest.mark.parametrize("k", [1, 10])
+@pytest.mark.parametrize("text", ["the", "iceberg3 the", "iceberg3", "the of"])
+def test_both_phase2_branches_keep_the_same_blocks(spark, skewed, text, k):
+    """Given the same block metadata, θ and essential sets, driver phase 2
+    (NumPy) and distributed phase 2 (Spark jobs) return the same surviving
+    (term, block_id) set, and it is a subset of the essential terms' blocks."""
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+    from bge_m3_onnx_spark.plans.query import query_terms, resolve_queries
+
+    _, rows = resolve_queries(skewed, {1: text}, skewed.cfg)
+    q = query_terms(rows)
+    terms = sorted(q.df_by_term)
+    meta, _ = skewed.block_meta_for_terms(terms, wand_mod._PHASE2_DRIVER_CAP, 1)
+    blocks = {t: pairs for t, (_, pairs) in meta.items()}
+    ranges = {t: rng for t, (rng, _) in meta.items()}
+    tmax = {t: max(m for _, m in pairs) for t, pairs in blocks.items()}
+    theta = wand_mod._block_max_theta(blocks, q.terms_by_qid, k)
+    ess, _, _ = wand_mod._maxscore_partition(q.terms_by_qid, tmax, theta)
+    on_driver = wand_mod._phase2_driver(blocks, ranges, q.terms_by_qid, theta, ess)
+    driver_keys = {(t, b) for t, ids in on_driver.items() for b in ids}
+    keys = wand_mod._phase2_distributed(
+        skewed.pruned_block_meta(terms), q, theta, tmax, ranges, ess, 4
+    )
+    assert {(r["term"], r["block_id"]) for r in keys.collect()} == driver_keys
+    essential_blocks = {(t, b) for t in ess[1] for b, _ in blocks[t]}
+    assert driver_keys and driver_keys <= essential_blocks
+
+
 def test_py4j_round_trips_do_not_grow_with_the_batch(spark, built):
     """Every driver-known relation enters the WAND plan as one SQL expression,
     so the JVM round trips a forced request makes do not grow with the number
@@ -664,6 +692,33 @@ def test_wand_at_widths_above_one(spark, skewed, monkeypatch):
         for name in ("plan_theta", "plan_surviving", "plan_final"):
             inserted = wand_mod.planner_exchanges(stats[name], skewed.postings, skewed.blocks)
             assert inserted == [], (phase2, name, inserted)
+
+
+def test_phase3_width_stays_within_the_session_width(spark, skewed, monkeypatch):
+    """After driver phase 2, phase 3 widens its exchanges to the estimated
+    scoring volume, but no further than the session width that caps every
+    other exchange: on this local[8] session with 4 shuffle partitions, and
+    one posting per task, the final plan's own exchanges hash nothing wider
+    than 4 (the postings relation's cached build lineage is not the
+    query's), and the answer stays exact."""
+    import re
+
+    import bge_m3_onnx_spark.plans.wand as wand_mod
+
+    def hashed(plan: str) -> set[str]:
+        return {line for line in plan.splitlines() if "hashpartitioning(" in line}
+
+    assert spark.sparkContext.defaultParallelism > 4
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 4
+    monkeypatch.setattr(wand_mod, "_SCORE_ROWS_PER_TASK", 1)
+    q = {1: "the", 2: "iceberg3 the"}
+    stats: dict = {"capture_plans": True}
+    wand = _collect(run_queries_wand(spark, skewed, q, k=10, force_wand=True, stats_out=stats))
+    assert stats["phase2"] == "driver"
+    own = hashed(stats["plan_final"]) - hashed(wand_mod._fmt_plan(skewed.postings))
+    widths = [int(re.search(r"hashpartitioning\(.*?, (\d+)\)", line)[1]) for line in own]
+    assert widths and max(widths) == 4, own
+    assert wand == _collect(run_queries(spark, skewed, q, k=10))
 
 
 def test_block_meta_memo_under_concurrent_lookups(spark, built):

@@ -46,7 +46,7 @@ from bge_m3_onnx_spark.sources.transcripts import synth_transcripts_skewed  # no
 def main() -> int:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     json_out = sys.argv[2] if len(sys.argv) > 2 else None
-    spark = get_spark(app_name="dedup-scale", master="local[32]", shuffle_partitions=64)
+    spark = get_spark(app_name="dedup-scale")
     out: dict = {"n_docs": n_docs}
 
     t_all = time.monotonic()

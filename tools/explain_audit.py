@@ -110,10 +110,10 @@ def main() -> None:
 
     from bge_m3_onnx_spark.operators.bm25 import topk
     from bge_m3_onnx_spark.operators.wildcard import expand_prefix
-    from bge_m3_onnx_spark.plans.query import score_rows
+    from bge_m3_onnx_spark.plans.query import query_terms, score_rows
 
     qt_prefix = expand_prefix(idx.terms, "sh", query_id=1, max_expansions=64)
-    plan_prefix = topk(score_rows(spark, idx, qt_prefix.collect()), k=10)
+    plan_prefix = topk(score_rows(spark, idx, query_terms(qt_prefix.collect())), k=10)
     sections.append(
         (
             "Prefix search 'sh*' (expansion → BM25)",

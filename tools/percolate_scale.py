@@ -54,7 +54,7 @@ def main() -> int:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_queries = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
     json_out = sys.argv[3] if len(sys.argv) > 3 else None
-    spark = get_spark(app_name="percolate-scale", master="local[32]", shuffle_partitions=64)
+    spark = get_spark(app_name="percolate-scale")
 
     t0 = time.monotonic()
     saved_rows = synth_saved_queries(n_queries)
