@@ -295,10 +295,11 @@ def _phase2_driver(
 
 
 # Every relation known on the driver (query terms, df, θ, ranges, maxima,
-# essential sets, surviving blocks) enters the plan as a literal, never as a
-# createDataFrame side: explode(element_at(map, key)) IS the inner join against
-# a driver-known relation, with no exchange and no subjob (the r3 profile,
-# WAND_CAL_r03.json, found ~25 such broadcast subjobs per batch). Built from
+# essential sets, surviving blocks up to 2,000 keys) enters the plan as a
+# literal, not as a createDataFrame side: explode(element_at(map, key)) IS the
+# inner join against a driver-known relation, with no exchange and no subjob
+# (the r3 profile, WAND_CAL_r03.json, found ~25 such broadcast subjobs per
+# batch). Built from
 # per-value F.lit calls, the same maps, Column trees and IN lists cost ~1,500
 # py4j round trips per request, most of a warm request's driver time.
 # (Measured anti-optimization note: coalesce(1) on parallelized tiny
